@@ -21,12 +21,42 @@ from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
 
+#: ``localCheckpoint`` results handed back by operators. Their RDD is
+#: persisted outside the SQL cache manager, so ``DataFrame.unpersist``
+#: never reaches it; :func:`release_checkpoint` unpersists it directly.
+_LIVE_CHECKPOINTS: list[DataFrame] = []
+
+#: Per-thread owner of checkpoints registered while a
+#: :func:`persist_shared` build runs: the shared relation's lineage
+#: ends in them, so they live (and die) with the shared entry rather
+#: than with the per-query registry.
+_BUILDING = threading.local()
+
 
 def persist(df: DataFrame) -> DataFrame:
     """Persist (memory-and-disk, spill-safe) and register for cleanup."""
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(out)
     return out
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint`` DataFrame. Only
+    once nothing still reads it: its lineage is truncated, so a lost
+    block cannot be recomputed."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:  # noqa: BLE001 — session may already be gone
+        pass
+
+
+def register_checkpoint(df: DataFrame) -> DataFrame:
+    """Register a ``localCheckpoint`` DataFrame an operator returns:
+    released by :func:`clear_shared` when built inside a
+    :func:`persist_shared` build, else by :func:`clear_all`."""
+    owner = getattr(_BUILDING, "checkpoints", None)
+    (_LIVE_CHECKPOINTS if owner is None else owner).append(df)
+    return df
 
 
 def clear_all() -> int:
@@ -39,6 +69,9 @@ def clear_all() -> int:
             n += 1
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
+    while _LIVE_CHECKPOINTS:
+        release_checkpoint(_LIVE_CHECKPOINTS.pop())
+        n += 1
     return n
 
 
@@ -56,6 +89,8 @@ def clear_all() -> int:
 # convention before, and nothing ever evicted dead-session entries).
 
 _SHARED: dict[tuple[str, str], DataFrame] = {}
+#: checkpoints registered by each shared entry's build
+_SHARED_CHECKPOINTS: dict[tuple[str, str], list[DataFrame]] = {}
 #: bench.py drives QUERIES through 8 worker threads; the miss path
 #: (stale-entry eviction + build + insert) must be serialized or two
 #: concurrent misses pop the same stale key (KeyError) and double-build
@@ -86,27 +121,34 @@ def persist_shared(key: str, build) -> DataFrame:
             df = _SHARED.get(full)  # double-checked: a racer may have built
             if df is None:
                 for stale_key in [k for k in _SHARED if k[0] != app_id]:
-                    stale = _SHARED.pop(stale_key, None)
-                    if stale is None:
-                        continue
-                    try:
-                        stale.unpersist(False)
-                    except Exception:  # noqa: BLE001 — session already gone
-                        pass
-                df = build().persist(StorageLevel.MEMORY_AND_DISK)
+                    _drop_shared(stale_key)
+                outer = getattr(_BUILDING, "checkpoints", None)
+                _BUILDING.checkpoints = checkpoints = []
+                try:
+                    df = build().persist(StorageLevel.MEMORY_AND_DISK)
+                finally:
+                    _BUILDING.checkpoints = outer
                 _SHARED[full] = df
+                _SHARED_CHECKPOINTS[full] = checkpoints
     return df
+
+
+def _drop_shared(key: tuple[str, str]) -> bool:
+    """Unpersist one shared entry and its build's checkpoints (caller
+    holds ``_SHARED_LOCK``); returns whether the entry existed."""
+    for ckpt in _SHARED_CHECKPOINTS.pop(key, ()):
+        release_checkpoint(ckpt)
+    df = _SHARED.pop(key, None)
+    if df is None:
+        return False
+    try:
+        df.unpersist(False)
+    except Exception:  # noqa: BLE001 — session may already be gone
+        pass
+    return True
 
 
 def clear_shared() -> int:
     """Unpersist every shared relation; returns how many."""
-    n = 0
     with _SHARED_LOCK:
-        for df in list(_SHARED.values()):
-            try:
-                df.unpersist(False)
-                n += 1
-            except Exception:  # noqa: BLE001
-                pass
-        _SHARED.clear()
-    return n
+        return sum(_drop_shared(k) for k in list(_SHARED))

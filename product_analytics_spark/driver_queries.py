@@ -53,6 +53,7 @@ from product_analytics_spark.qcommon import (  # noqa: F401
     _money_out,
     _t,
     local_rows_df,
+    spread_by,
 )
 
 
@@ -729,7 +730,7 @@ def q20_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet split locally, which would otherwise serialize the whole
     hash pipeline on a single task (at 100 TB the scan has thousands
     of splits and the repartition is a no-op cost-wise)."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     return text.minhash_near_dup_pairs(d, threshold=0.5)
 
 
@@ -934,7 +935,7 @@ def q25_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5-based) and the bitwise-majority simhash are reproduced
     exactly by the DuckDB SQL in _q25_sql(). See operators/text.py:
     simhash_near_dup_pairs for the 100 TB notes."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     return text.simhash_near_dup_pairs(d, hamming_max=8)
 
 
@@ -992,7 +993,7 @@ def q26_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket size tracks duplicate-cluster size, not corpus size. The
     banding and the exact-Jaccard verify are reproduced bit-for-bit
     by the DuckDB oracle (portable md5-based hashing)."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     return text.jaccard_near_dup_pairs(d, threshold=NGRAM_JACCARD_THRESHOLD)
 
 
@@ -2080,9 +2081,7 @@ def q54_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet otherwise pins the whole screen to one task (39s -> ~2s
     # at sf0.1). On a real cluster the scan parallelizes naturally and
     # this also pre-balances document-length skew across tasks.
-    train = d.filter(F.col("source") != BENCHMARK_SOURCE).repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    train = spread_by(d.filter(F.col("source") != BENCHMARK_SOURCE), "doc_id")
     flagged = corpus.contamination_screen(train, bench, ngram=CONTAM_NGRAM)
     return flagged.join(d.select("doc_id", "lang"), "doc_id").select("doc_id", "lang")
 
@@ -2154,7 +2153,7 @@ def _dup_clusters_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark import cache
 
     def build() -> DataFrame:
-        d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+        d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
         pairs = text.minhash_near_dup_pairs(d, threshold=0.5)
         return graph.dup_clusters(d.select("doc_id"), pairs)
 
@@ -3583,7 +3582,7 @@ def q88_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the full q20 machinery; cross-boundary pairs only). Returns
     (doc_id, status) for the incoming batch; statuses are disjoint
     with exact taking precedence."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     flags = d.select("doc_id", "source", norm.alias("_nt"), "text").withColumn(
         "_is_old", F.col("source").isin(*OLD_SRCS)

@@ -129,14 +129,14 @@ FP_MAX_HAMMING = FP_BANDS * (FP_BALL + 1) - 1  # = 7
 def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-parity fingerprint near-dup — the perceptual-hash (pHash)
     pipeline shape applied to the text corpus: each document folds to
-    a 36-bit fingerprint (one parity bit per proportional chunk, via
+    a 60-bit fingerprint (one parity bit per proportional chunk, via
     the engine-portable md5-based hash), candidates come from banded
-    Hamming-ball probing (3 bands x 12 bits; each band also probes its
-    12 single-bit flips, so a pair within Hamming distance 5 — which
-    leaves <= floor(5/3)=1 errors in SOME band, pigeonhole — always
-    collides), and the exact Hamming distance (bit_count of xor)
-    verifies. Chunks are PROPORTIONAL
-    (i-th 36th of the document), so same-content-different-length
+    Hamming-ball probing (4 bands x 15 bits; each band also probes its
+    15 single-bit flips, so a pair within Hamming distance
+    FP_MAX_HAMMING = 7 — which leaves <= floor(7/4)=1 errors in SOME
+    band, pigeonhole — always collides), and the exact Hamming
+    distance (bit_count of xor) verifies. Chunks are PROPORTIONAL
+    (i-th 60th of the document), so same-content-different-length
     docs align positionally — the locality a raw content digest
     lacks. For real media the chunk parity becomes a DCT-coefficient
     sign over decoded frames (q32/q133's Arrow plumbing); everything
@@ -146,24 +146,24 @@ def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original 15-bit/5-bit-band shape at 121x on a 10x corpus):
       * band width: 5-bit bands give only 32 bucket values, so bucket
         occupancy grows LINEARLY with the corpus and candidate pairs
-        quadratically — a fixed-capacity flaw. 12-bit bands (4096
-        values) keep expected occupancy ~|corpus|/4096 per band; the
+        quadratically — a fixed-capacity flaw. 15-bit bands (32768
+        values) keep expected occupancy ~|corpus|/32768 per band; the
         parameter is what you grow (with log N) at larger corpora.
       * ball-1 probing instead of narrower bands: widening the hamming
         tolerance by SHRINKING bands re-creates the capacity flaw;
-        probing 12 flip values per band costs 13x probe-side rows
-        (linear) while keeping the 4096-value bucket space.
+        probing 15 flip values per band costs 16x probe-side rows
+        (linear) while keeping the 32768-value bucket space.
       * exact-dup collapse (q20's mega-bucket idiom): the banded join
         runs over DISTINCT fingerprints, so N exact copies of one
         document cost one row in the join; doc pairs are re-expanded
         afterwards by two equi-joins (cross-fp) plus a per-fp
         self-join (intra-fp, hamming 0 — quadratic only in OUTPUT
         size, which all-pairs-of-duplicates inherently is).
-    The shuffled payload stays (band_id, 12-bit value, 36-bit fp) —
+    The shuffled payload stays (band_id, 15-bit value, 60-bit fp) —
     fixed width; verification is one integer xor."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    # proportional chunk boundaries: chunk i covers (floor((i-1)n/36),
-    # floor(in/36)] in 1-based substring coordinates — all-integer
+    # proportional chunk boundaries: chunk i covers (floor((i-1)n/60),
+    # floor(in/60)] in 1-based substring coordinates — all-integer
     # `div` arithmetic so both engines cut identical chunks
     bit_cols = []
     for i in range(1, FP_BITS + 1):
@@ -178,7 +178,7 @@ def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp_col = fp_col + c
     from product_analytics_spark import cache as _cache
 
-    # The 36-chunk md5 projection feeds FIVE plan branches (distinct,
+    # The 60-chunk md5 projection feeds FIVE plan branches (distinct,
     # both expansion joins, both sides of the intra self-join) —
     # persist it once or the hash work runs 5x (measured 3.6 s -> ~1 s
     # at sf0.1). At corpus scale this is a materialized signatures

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from product_analytics_spark.qcommon import _t
+from product_analytics_spark.qcommon import _t, spread_by
 
 # ------------------------------------------------------------- q206
 
@@ -34,7 +34,7 @@ def q206_dedup_method_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     relations sized by |near-dup pairs|, not corpus size."""
     from product_analytics_spark.operators import text as tx
 
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     pred = tx.minhash_near_dup_pairs(d, threshold=EVAL_THRESHOLD).select(
         "id_a", "id_b", F.lit(True).alias("in_pred")
     )

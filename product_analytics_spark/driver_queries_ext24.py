@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from product_analytics_spark.qcommon import _t
+from product_analytics_spark.qcommon import _t, spread_by
 from product_analytics_spark.driver_queries_ext import _morton_terms
 
 # ------------------------------------------------------------- q214
@@ -187,7 +187,7 @@ def q215_content_defined_chunking(spark: SparkSession, sf_dir: str) -> DataFrame
     # work across the cluster before the explode (doc_id keyed — the
     # same key the chunk window shuffles on anyway).
     interior = (
-        d.repartition(32, "doc_id")
+        spread_by(d, "doc_id")
         .filter(F.col("n_chars") >= CDC_W + 1)
         .select(
             "doc_id",

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from product_analytics_spark.operators import text
-from product_analytics_spark.qcommon import _t
+from product_analytics_spark.qcommon import _t, spread_by
 
 # ------------------------------------------------------------- q274
 
@@ -144,7 +144,7 @@ def q275_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     no corpus-linear block); the sweep adds only conditional
     aggregates over one candidate relation; doc metadata joins in by
     broadcast."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     iu = text.jaccard_band_candidates_iu(d)
     meta_a = d.select(F.col("doc_id").alias("id_a"), F.col("n_chars").alias("ca"))
     meta_b = d.select(F.col("doc_id").alias("id_b"), F.col("n_chars").alias("cb"))

@@ -21,6 +21,7 @@ from product_analytics_spark.qcommon import (
     _hash60_sql,
     _money_cents,
     _t,
+    spread_by,
 )
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -584,7 +585,7 @@ def q146_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoted inside a long document; containment is the measure
     decontamination and quote-dedup actually need. Oracle replays the
     banding and the exact set arithmetic bit-for-bit."""
-    d = _t(spark, sf_dir, "documents").repartition(32, "doc_id")
+    d = spread_by(_t(spark, sf_dir, "documents"), "doc_id")
     return text.containment_pairs(d, threshold=CONTAINMENT_THRESHOLD)
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from product_analytics_spark.operators import text
-from product_analytics_spark.qcommon import _hash60_sql, _money_cents, _t
+from product_analytics_spark.qcommon import _hash60_sql, _money_cents, _t, spread_by
 
 # ------------------------------------------------------------- q325
 
@@ -251,13 +251,15 @@ def q328_bootstrap_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no 1-row cross join — that would plan as the banned
     # BroadcastNestedLoopJoin); repartition spreads the generated grid
     # before the hash/median work.
-    draws = (
+    grid = (
         idx.filter(F.col("idx") == 1)
         .select("n", F.explode(F.sequence(F.lit(1), F.lit(BOOT_B))).alias("b"))
         .select(
             "n", "b", F.explode(F.sequence(F.lit(1), F.lit(BOOT_M))).alias("i")
         )
-        .repartition(32, "b")
+    )
+    draws = (
+        spread_by(grid, "b")
         .select(
             "b",
             (

@@ -20,6 +20,7 @@ from product_analytics_spark.qcommon import (
     _t,
     combine_single_rows,
     local_rows_df,
+    spread_by,
 )
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -115,16 +116,14 @@ def q342_decontaminate_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = SnapshotStore(spark, Q342_WAREHOUSE)
     d = _t(spark, sf_dir, "documents")
     bench = d.filter(F.col("source") == Q342_BENCH_SOURCE)
-    train = d.filter(F.col("source") != Q342_BENCH_SOURCE).repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    train = spread_by(d.filter(F.col("source") != Q342_BENCH_SOURCE), "doc_id")
     flagged = corpus.contamination_screen(train, bench, ngram=Q342_NGRAM)
     clean = train.join(flagged.select("doc_id"), "doc_id", "left_anti")
     store.overwrite("clean_corpus", clean.select("doc_id", "lang", "text"))
 
     committed = store.read("clean_corpus")
     rescreen = corpus.contamination_screen(
-        committed.repartition(spark.sparkContext.defaultParallelism, "doc_id"),
+        spread_by(committed, "doc_id"),
         bench,
         ngram=Q342_NGRAM,
     )

@@ -37,6 +37,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
+
+
+def _checkpoint_over(prev: DataFrame | None, df: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df``, then release ``prev``, the
+    checkpoint it supersedes: once the new one is materialized nothing
+    reads the old one, which would otherwise stay persisted until the
+    JVM collector happens to run Spark's context cleaner."""
+    out = df.localCheckpoint(eager=True)
+    if prev is not None:
+        cache.release_checkpoint(prev)
+    return out
+
 
 def connected_components(
     edges: DataFrame,
@@ -70,7 +83,8 @@ def connected_components(
         # action — the full-relation aggregate computes (and caches)
         # every checkpoint partition, so pin + probe cost ONE job per
         # round instead of the old eager-checkpoint-then-agg two; the
-        # next round's join reads the same materialized labels.
+        # next round's join reads the same materialized labels, and
+        # the superseded round's checkpoint is released right after.
         labels = (
             e.groupBy("src")
             .agg(F.min("dst").alias("_mdst"))
@@ -100,11 +114,14 @@ def connected_components(
                 .groupBy("id")
                 .agg(F.min("component").alias("component"))
             )
-            labels = prop.localCheckpoint(eager=False)
-            cur = label_sum(labels)
+            nxt = prop.localCheckpoint(eager=False)
+            cur = label_sum(nxt)
+            cache.release_checkpoint(labels)
+            labels = nxt
             if cur == prev:
-                return labels
+                return cache.register_checkpoint(labels)
             prev = cur
+        cache.release_checkpoint(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} rounds — "
             "pathological chain graph; switch to large-star/small-star"
@@ -205,7 +222,7 @@ def triangle_counts(
             .agg(F.count(F.lit(1)).alias("n_triangles"))
         )
         # Materialize before unpersist: callers get a plain DataFrame.
-        return per_vertex.localCheckpoint(eager=True)
+        return cache.register_checkpoint(per_vertex.localCheckpoint(eager=True))
     finally:
         e.unpersist()
         und.unpersist()
@@ -237,6 +254,7 @@ def bfs_hops(
     )
     try:
         reached = source_ids.select(F.col(id_col).alias("id"), F.lit(0).alias("hops"))
+        ckpt = None
         for i in range(max_hops):
             expanded = (
                 e.join(reached, e.s == reached.id)
@@ -249,11 +267,11 @@ def bfs_hops(
             # convergence probe — the hop bound is fixed — so rounds
             # compose into ONE job; checkpoint only every few rounds
             # to truncate lineage on deep searches.
-            reached = (
-                expanded.localCheckpoint(eager=True) if (i + 1) % 5 == 0 else expanded
-            )
+            reached = expanded
+            if (i + 1) % 5 == 0:
+                reached = ckpt = _checkpoint_over(ckpt, expanded)
         # Materialize while the edge relation is still cached.
-        return reached.localCheckpoint(eager=True)
+        return cache.register_checkpoint(_checkpoint_over(ckpt, reached))
     finally:
         e.unpersist()
 
@@ -287,8 +305,6 @@ def pagerank(
     the pre-partitioned src column so iterations reuse one exchange;
     ``localCheckpoint`` every ~5 rounds truncates lineage growth.
     """
-    from product_analytics_spark import cache
-
     w = F.col(weight_col) if weight_col else F.lit(1).cast("long")
     e = edges.select(
         F.col(src_col).alias("_src"),
@@ -377,6 +393,7 @@ def bellman_ford(
         dist = source_ids.select(
             F.col(id_col).alias("id"), F.lit(0).cast("bigint").alias("dist")
         )
+        ckpt = None
         for i in range(rounds):
             relaxed = (
                 e.join(dist, e.s == dist.id)
@@ -385,9 +402,9 @@ def bellman_ford(
                 .groupBy("id")
                 .agg(F.min("dist").alias("dist"))
             )
-            dist = (
-                relaxed.localCheckpoint(eager=True) if (i + 1) % 5 == 0 else relaxed
-            )
-        return dist.localCheckpoint(eager=True)
+            dist = relaxed
+            if (i + 1) % 5 == 0:
+                dist = ckpt = _checkpoint_over(ckpt, relaxed)
+        return cache.register_checkpoint(_checkpoint_over(ckpt, dist))
     finally:
         e.unpersist()

@@ -31,13 +31,15 @@ def sessionize(
     """
     order = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
     w = Window.partitionBy(user_col).orderBy(*order)
-    gap_s = gap_minutes * 60
-    prev_ts = F.lag(ts_col).over(w)
-    is_new = F.when(
-        prev_ts.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts)) > gap_s),
-        1,
-    ).otherwise(0)
+    # The gap test runs in microseconds, the precision of the q23
+    # oracle and of streaming/ops.py: whole seconds (unix_timestamp)
+    # would keep a gap of 30 min + < 1 s inside one session. The cast
+    # admits TIMESTAMP_NTZ; the session timezone is UTC (session.py),
+    # so it keeps every instant.
+    gap_us = gap_minutes * 60_000_000
+    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    prev_us = F.lag(ts_us).over(w)
+    is_new = F.when(prev_us.isNull() | ((ts_us - prev_us) > gap_us), 1).otherwise(0)
     running = Window.partitionBy(user_col).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

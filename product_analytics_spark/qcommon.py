@@ -124,6 +124,24 @@ def widen_if_narrow(df: DataFrame, factor: int = 2) -> DataFrame:
     return df
 
 
+def spread_by(df: DataFrame, *cols) -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` to ``defaultParallelism``
+    partitions: the one fan-out policy for CPU-heavy per-row stages
+    (shingle explode + hashing, MinHash/SimHash signatures, md5
+    chunking, generated bootstrap grids) that would otherwise run on
+    the few tasks a single small parquet split scans as.
+
+    ``defaultParallelism`` is N under ``local[N]`` and the total
+    executor core count on a cluster, so every core gets one task and
+    the stage runs in one wave at any size. A literal count pins the
+    stage to one host's cores: extra task waves (and per-task
+    scheduling and deserialization cost) on a smaller host, a capped
+    fan-out on a larger cluster. Key on the column the next per-key
+    stage groups by (the document id, the replicate id), so that stage
+    can reuse the partitioning."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
+
+
 def combine_single_rows(*dfs: DataFrame) -> DataFrame:
     """Fold K SINGLE-ROW aggregate frames into one row WITHOUT a join:
     1-row cross joins compile to BroadcastNestedLoopJoin, which the

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from product_analytics_spark import streaming as st
 from product_analytics_spark.catalog import read_parquet
 from product_analytics_spark.operators import windows
+from product_analytics_spark.streaming.ops import run_available_now_stateful
 from tests.conftest import SF_SMALL
 
 
@@ -137,6 +138,40 @@ class TestStatefulSessionizer:
         assert s.session_end == base + dt.timedelta(minutes=10)
         assert s.n_events == 3
         assert s.total_value == 3.0
+
+    def test_sub_second_gap_overrun_splits_batch_and_stream(self, spark, tmp_path):
+        """A gap of 30 min + 0.5 s starts a new session (the q23
+        oracle compares microseconds); exactly 30 min does not. Batch
+        sessionize and the stateful streaming sessionizer agree."""
+        base = dt.datetime(2024, 1, 1, 0, 0, 0)
+        over = base + dt.timedelta(minutes=30, microseconds=500_000)
+        late = base + dt.timedelta(hours=3)
+        rows = [
+            (7, 1, base, 1.0), (7, 2, over, 2.0), (7, 3, late, 4.0),
+            (8, 4, base, 1.0), (8, 5, base + dt.timedelta(minutes=30), 2.0), (8, 6, late, 4.0),
+        ]
+        schema = "user_id long, event_id long, ts timestamp, value double"
+
+        batch = windows.sessionize(spark.createDataFrame(rows, schema), gap_minutes=30)
+        got = {r.event_id: r.session_id for r in batch.collect()}
+        assert got == {1: 1, 2: 2, 3: 3, 4: 1, 5: 1, 6: 2}
+
+        src = str(tmp_path / "sess_subsec")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        stream = st.sessionize_stateful(
+            st.stream_table(spark, src, spark.read.parquet(src).schema), gap_minutes=30
+        )
+        run_available_now_stateful(stream, "stateful_subsec_sink")
+        closed = sorted(
+            (r.user_id, r.session_start, r.session_end, r.n_events)
+            for r in spark.table("stateful_subsec_sink").collect()
+        )
+        # the late events keep the last session of each user open
+        assert closed == [
+            (7, base, base, 1),
+            (7, over, over, 1),
+            (8, base, base + dt.timedelta(minutes=30), 2),
+        ]
 
 
 class TestIntervalJoinStream:
