@@ -24,6 +24,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
 from product_analytics_spark.qcommon import _money_cents, _t
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -62,10 +63,6 @@ def _top_candidates(advice: dict, table: str, kind: str, k: int = 2) -> list[str
 Q393_BUCKETS = 8
 Q393_DIR = os.path.join(_REPO, ".fixtures", ".q393_bucketed")
 
-#: (sf_dir, table) pairs materialized THIS session — the catalog is
-#: session-scoped, so tableExists is the real gate (q360's discipline).
-_Q393_READY: set[tuple[str, str]] = set()
-
 
 def _q393_bucketed(
     spark: SparkSession, sf_dir: str, src: str, tbl_stem: str, key: str, cols: list[str]
@@ -73,12 +70,13 @@ def _q393_bucketed(
     """Materialize ``src`` as a parquet table bucketed by ``key`` —
     executing LAYOUT_ADVICE.json's bucket advice. One bucket-aligned
     write, then every same-session join/agg on the key reads pre-hashed
-    buckets instead of shuffling."""
+    buckets instead of shuffling. The catalog is session-scoped, so
+    tableExists is the real gate (q360's discipline)."""
     tag = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/")))
     tbl = f"{tbl_stem}_{tag}"
     path = os.path.join(Q393_DIR, tag, tbl_stem)
-    memo_key = (sf_dir, tbl)
-    if memo_key not in _Q393_READY or not spark.catalog.tableExists(tbl):
+
+    def write():
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(path, ignore_errors=True)
         (
@@ -91,7 +89,9 @@ def _q393_bucketed(
             .option("path", path)
             .saveAsTable(tbl)
         )
-        _Q393_READY.add(memo_key)
+        return tbl
+
+    cache.memo("materialized", (sf_dir, tbl), write, valid=lambda: spark.catalog.tableExists(tbl))
     return spark.table(tbl)
 
 
@@ -186,8 +186,6 @@ GROUP BY o_custkey ORDER BY custkey
 
 Q394_WH = os.path.join(_REPO, ".fixtures", ".q394_warehouse")
 
-_Q394_READY: set[tuple[str, str]] = set()
-
 
 def _q394_store_and_table(spark: SparkSession, sf_dir: str):
     from product_analytics_spark.sources.sinks import SnapshotStore
@@ -195,8 +193,8 @@ def _q394_store_and_table(spark: SparkSession, sf_dir: str):
     tag = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/")))
     name = f"events_by_type_{tag}"
     store = SnapshotStore(spark, Q394_WH)
-    key = (sf_dir, name)
-    if key not in _Q394_READY or not store.exists(name):
+
+    def write():
         ev = _t(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -205,7 +203,9 @@ def _q394_store_and_table(spark: SparkSession, sf_dir: str):
             _money_cents("value").alias("cents"),
         )
         store.overwrite(name, ev, partition_by=["event_type"], cluster_by=["ts"])
-        _Q394_READY.add(key)
+        return name
+
+    cache.memo("materialized", (sf_dir, name), write, valid=lambda: store.exists(name))
     return store, name
 
 

@@ -61,11 +61,12 @@ import os
 import re
 import threading
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass, field
 from datetime import date, datetime
 from decimal import Decimal
 from pathlib import PurePath
+
+from product_analytics_spark import cache
 
 LOG_DIR = "_delta_log"
 #: sidecar shard directory of v2 checkpoints, relative to the log dir
@@ -426,25 +427,12 @@ ROW_TRACKING_DOMAIN = "delta.rowTracking"
 MATERIALIZED_ROW_ID_COL = "_pa_row_id_m"
 MATERIALIZED_ROW_COMMIT_COL = "_pa_row_commit_m"
 
-# ---------------------------------------------------------------
-# Snapshot memoization (see DeltaLog.snapshot): commit files are
-# immutable once hardlinked, so (log dir, version, head-file
-# identity) fully determines the reconstruction. Module-wide so the
-# cache survives across the throwaway DeltaLog(...) instances every
-# call site creates. Entries are stored AND returned as copies with
-# fresh top-level containers — callers may pop/assign on
-# files/domains without poisoning the cache.
-_SNAP_CACHE: OrderedDict = OrderedDict()
-_SNAP_CACHE_LOCK = threading.Lock()
-_SNAP_CACHE_MAX = 256
-_SNAP_STATS = {"hits": 0, "misses": 0}
-
 
 def _snap_copy(s: "DeltaSnapshot") -> "DeltaSnapshot":
-    """Copy a snapshot for cache store/return. The inner add/domain
+    """Copy a cached snapshot for a caller. The inner add/domain
     dicts are copied ONE LEVEL too (round-11 verdict hardening): a
     caller doing ``add["stats"] = ...`` in place can no longer poison
-    the module-wide cache — previously that discipline was
+    the snapshot cache — previously that discipline was
     convention-only (every mutation site copied first, but one slip
     would corrupt every later reader silently). Nested containers
     (partitionValues, deletionVector) stay shared — copying them
@@ -467,18 +455,14 @@ def clear_snapshot_cache() -> None:
     fault-injection tests (a cached snapshot legitimately survives
     out-of-band file corruption, exactly like real Delta's snapshot
     cache; clearing simulates a new process discovering the log)."""
-    with _SNAP_CACHE_LOCK:
-        _SNAP_CACHE.clear()
+    cache.clear("snapshots")
 
 
 def snapshot_cache_stats(reset: bool = False) -> dict:
     """Test/diagnostic hook: cumulative snapshot-cache hits/misses
     (a miss = one full checkpoint+tail reconstruction from disk)."""
-    out = dict(_SNAP_STATS)
-    if reset:
-        _SNAP_STATS["hits"] = 0
-        _SNAP_STATS["misses"] = 0
-    return out
+    st = cache.stats("snapshots", reset)
+    return {"hits": st.get("hits", 0), "misses": st.get("misses", 0)}
 
 
 def merge_protocol(prev: dict, need: dict) -> dict:
@@ -1806,8 +1790,11 @@ class DeltaLog:
         MEMOIZED: commit files are immutable once linked into the log
         (the hardlink putIfAbsent), so a snapshot at a version is
         fully determined by the identity of that version's head
-        commit file — reconstructions are cached module-wide keyed by
-        (log dir, version, head-file inode/mtime/size), the way real
+        commit file — reconstructions are cached process-wide (the
+        registry's ``snapshots`` namespace, so the cache survives the
+        throwaway DeltaLog(...) instances every call site creates)
+        keyed by (log dir, version, head-file inode/mtime/size); callers
+        only ever get copies (:func:`_snap_copy`), the way real
         Delta caches Snapshot objects per version. A new commit is a
         new key (no explicit invalidation needed); a recreated table
         at the same path is a new inode (test warehouses never alias);
@@ -1834,21 +1821,10 @@ class DeltaLog:
                 )
             except OSError:
                 key = None
-        if key is not None:
-            with _SNAP_CACHE_LOCK:
-                hit = _SNAP_CACHE.get(key)
-                if hit is not None:
-                    _SNAP_CACHE.move_to_end(key)
-                    _SNAP_STATS["hits"] += 1
-                    return _snap_copy(hit)
-        snap = self._reconstruct(version, commits)
-        if key is not None:
-            with _SNAP_CACHE_LOCK:
-                _SNAP_STATS["misses"] += 1
-                _SNAP_CACHE[key] = _snap_copy(snap)
-                while len(_SNAP_CACHE) > _SNAP_CACHE_MAX:
-                    _SNAP_CACHE.popitem(last=False)
-        return snap
+        if key is None:
+            return self._reconstruct(version, commits)
+        build = lambda: self._reconstruct(version, commits)  # noqa: E731
+        return _snap_copy(cache.memo("snapshots", key, build))
 
     def _pointer_checkpoint(
         self, version: int
@@ -3499,9 +3475,6 @@ def _load_with_partitions(
 #: reader's file_path -> version map relies on exact string equality
 #: with Spark's `_metadata.file_path`, so any path outside this set
 #: falls back to the per-version reader.
-#: last ineligibility reason recorded by _table_changes_fused (debug aid)
-_FUSED_LAST_BAIL: str | None = None
-
 _URI_SAFE = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
     "/._-="
@@ -3518,8 +3491,8 @@ def _table_changes_fused(spark, table_dir: str, specs):
     O(N x kinds x partitions), which also shrinks every downstream
     action's plan.
 
-    Returns the fused DataFrame, or ``None`` (reason recorded in
-    ``_FUSED_LAST_BAIL``) when the feed is not provably equivalent
+    Returns the fused DataFrame, or ``None`` (one count per reason
+    in the registry's ``cdf_fused`` namespace) when the feed is not provably equivalent
     under fusion — different partition columns/types across versions,
     mixed footer schemas within one version's (kind, partition)
     group (the legacy reader forces the first file's footer there),
@@ -3533,12 +3506,8 @@ def _table_changes_fused(spark, table_dir: str, specs):
     """
     from pyspark.sql import functions as F
 
-    global _FUSED_LAST_BAIL
-    _FUSED_LAST_BAIL = None
-
     def _bail(reason):
-        global _FUSED_LAST_BAIL
-        _FUSED_LAST_BAIL = reason
+        cache.count("cdf_fused", reason)
         return None
 
     if not specs:
@@ -3575,9 +3544,9 @@ def _table_changes_fused(spark, table_dir: str, specs):
         pv_order: list[tuple] = []
         for rel, pv in files_pv:
             if not set(rel) <= _URI_SAFE:
-                return _bail(f"unsafe path {rel!r}")
+                return _bail("unsafe path")
             if rel in seen_rels.setdefault(kind, set()):
-                return _bail(f"duplicate rel {rel!r}")
+                return _bail("duplicate rel")
             seen_rels[kind].add(rel)
             p = resolve_path(table_dir, rel)
             if not os.path.isfile(p):
@@ -3601,7 +3570,7 @@ def _table_changes_fused(spark, table_dir: str, specs):
                 )
                 fp = str(sch_obj)
             except Exception:  # noqa: BLE001 — unreadable: legacy path
-                return _bail(f"footer unreadable {rel!r}")
+                return _bail("footer unreadable")
             if (kind, fp) not in fp_schema:
                 if any(
                     "timestamp[ns" in str(fld.type) for fld in sch_obj
@@ -3629,15 +3598,12 @@ def _table_changes_fused(spark, table_dir: str, specs):
                 # the legacy reader forces the FIRST file's footer on
                 # every file of this group — fusing per-fp would read
                 # the others differently; not provably equivalent
-                return _bail(
-                    f"mixed schemas within one version group "
-                    f"(v{v}, {kind})"
-                )
+                return _bail("mixed schemas within one version group")
             fp = fps.pop()
             names = list(fp_schema[(kind, fp)].names)
             for c, vv in zip(part_cols, pv_key):
                 if vv is None and c not in names:
-                    return _bail(f"missing partition literal {c!r}")
+                    return _bail("missing partition literal")
             _extend(
                 frame_cols,
                 names + [c for c in part_cols if c not in names],

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from product_analytics_spark import cache
 from product_analytics_spark.operators.incremental import merge_upsert
 
 try:  # delta-spark is optional; everything falls back to parquet.
@@ -68,22 +69,6 @@ _ROW_TRACKING = "_ROW_TRACKING"
 #: Sentinel default for ``expected_version`` — distinct from None,
 #: which is a MEANINGFUL expectation (first write: no pointer yet).
 UNCHECKED = object()
-
-#: Read schema per immutable version dir (see _read_version_dir):
-#: metadata-only memo — (abs dir, mergeSchema flag) -> StructType.
-_VERSION_DIR_SCHEMAS: dict[tuple[str, bool], object] = {}
-
-#: Resolved-DataFrame memo per store directory (see _read_version_dir,
-#: round-13): (applicationId, abs dir, mergeSchema, content signature)
-#: -> DataFrame. Holds the LAZY resolved plan only — every action
-#: still scans the parquet files; NOT result caching. The signature
-#: (relpath, size, mtime_ns per data file) guards the two mutable-dir
-#: cases (append writes into the live data dir; MoR DMLs add _dv
-#: files): any file change produces a new key and the stale plan is
-#: evicted. ~15 ms of py4j reader resolution per call removed (q428
-#: paid it 66×).
-_VERSION_DIR_PLANS: dict[tuple, DataFrame] = {}
-_VERSION_DIR_PLANS_LOCK = __import__("threading").Lock()
 
 
 def _dir_signature(d: str) -> tuple:
@@ -1160,54 +1145,20 @@ class SnapshotStore:
     def _read_version_dir(
         self, data_dir: str, merge_schema: bool = False
     ) -> DataFrame:
-        """Parquet read of an IMMUTABLE store directory with the read
-        schema memoized per (dir, mergeSchema) for the life of the
-        process (round-12, guide §1.2/§6): version dirs are
-        ``v_<uuid>``-named and written exactly once before their
-        commit, so the schema inference every repeated read paid
-        (~70-80 ms of footer resolution per ``spark.read.parquet``
-        call; the DML certs re-read the same version several times
-        per op) resolves once and is forced thereafter. The memo
-        holds METADATA only (StructType per dir) — never rows — and
-        uuid naming means a rebuilt table can never collide with a
-        stale entry."""
-        key = (os.path.abspath(data_dir), bool(merge_schema))
-        # Resolved-plan memo (round-13, guide §1.2): even with the
-        # schema memoized, every call paid ~15 ms of py4j reader
-        # resolution (file listing + relation construction). The
-        # RESOLVED DataFrame is immutable and reusable; the content
-        # signature in the key catches in-place mutation (append into
-        # the live dir, a new _dv file) and evicts the stale plan.
-        app_id = self.spark.sparkContext.applicationId
-        pkey = (app_id, *key, _dir_signature(data_dir))
-        cached = _VERSION_DIR_PLANS.get(pkey)
-        if cached is not None:
-            return cached
-        sch = _VERSION_DIR_SCHEMAS.get(key)
-        if sch is not None:
-            base = self.spark.read.schema(sch).parquet(data_dir)
-        else:
+        """Parquet read of a store directory, its resolved lazy plan
+        memoized per (dir, mergeSchema, content signature): the DML
+        certs re-read one version many times per op (q428: 66×, ~90
+        ms each). The signature catches in-place changes (append into
+        the live data dir, a new _dv file)."""
+
+        def read():
             reader = self.spark.read
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
-            base = reader.parquet(data_dir)
-            _VERSION_DIR_SCHEMAS[key] = base.schema
-        with _VERSION_DIR_PLANS_LOCK:
-            # evict superseded signatures of this dir and entries from
-            # stopped sessions so the memo stays bounded
-            for k in [
-                k
-                for k in _VERSION_DIR_PLANS
-                if k[:3] == pkey[:3] or k[0] != app_id
-            ]:
-                _VERSION_DIR_PLANS.pop(k, None)
-            # hard cap (FIFO): a long sweep touches thousands of
-            # version dirs and each entry pins a JVM plan — the memo
-            # only needs to span one operator's handful of re-reads.
-            while len(_VERSION_DIR_PLANS) >= 256:
-                _VERSION_DIR_PLANS.pop(next(iter(_VERSION_DIR_PLANS)))
-            _VERSION_DIR_PLANS[pkey] = base
-        return base
+            return reader.parquet(data_dir)
+
+        key = (os.path.abspath(data_dir), bool(merge_schema), _dir_signature(data_dir))
+        return cache.memo("version_dirs", key, read, spark=self.spark)
 
     def _apply_dv(
         self, data_dir: str, merge_schema: bool = False

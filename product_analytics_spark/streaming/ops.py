@@ -268,9 +268,9 @@ def run_available_now(
     so both ``awaitTermination()`` and ``processAllAvailable()`` block
     indefinitely. We instead poll until at least one trigger has
     committed and the source reports no unprocessed data — the
-    batch-equivalent point — then stop."""
-    import time
-
+    batch-equivalent point — then stop. Raises ``TimeoutError`` past
+    ``timeout_s``, like :func:`run_available_now_stateful`: a silent
+    partial read would surface as a wrong answer downstream."""
     q = (
         stream.writeStream.format("memory")
         .queryName(sink_name)
@@ -279,19 +279,32 @@ def run_available_now(
         .start()
     )
     try:
-        deadline = time.time() + timeout_s
-        while q.isActive and time.time() < deadline:
-            status = q.status
-            if (
-                q.lastProgress is not None
-                and not status["isDataAvailable"]
-                and not status["isTriggerActive"]
-            ):
-                break
-            time.sleep(0.1)
+        _poll_idle(q, timeout_s, sink_name)
     finally:
         q.stop()
     q.awaitTermination()
+
+
+def _poll_idle(q, timeout_s: float, sink_name: str, sleep_s: float = 0.1) -> None:
+    """:func:`_poll_drained` for :func:`run_available_now`: return once
+    a trigger has committed and the source is idle (or the query has
+    terminated); raise TimeoutError otherwise."""
+    import time
+
+    deadline = time.time() + timeout_s
+    while q.isActive and time.time() < deadline:
+        status = q.status
+        if (
+            q.lastProgress is not None
+            and not status["isDataAvailable"]
+            and not status["isTriggerActive"]
+        ):
+            return
+        time.sleep(sleep_s)
+    if q.isActive:
+        raise TimeoutError(
+            f"run_available_now({sink_name!r}): source not idle after {timeout_s}s"
+        )
 
 
 def run_available_now_stateful(

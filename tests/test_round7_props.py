@@ -1,10 +1,12 @@
 """Round-7 fixes, pinned (round-6 verdict ADVICE items).
 
 - persist_shared keys by applicationId internally and prunes entries
-  left by stopped sessions (cache.py).
+  left by stopped sessions (cache.py); so do the other session-scoped
+  registry namespaces.
 - run_available_now_stateful requires a data batch before accepting
   "drained" and raises on timeout (streaming/ops.py) — see
-  test_streaming.py for its happy path.
+  test_streaming.py for its happy path; run_available_now raises on
+  timeout too.
 """
 
 from __future__ import annotations
@@ -12,6 +14,14 @@ from __future__ import annotations
 import pytest
 
 from product_analytics_spark import cache
+
+
+class _DeadSession:
+    """Stands in for a stopped session: an applicationId no live
+    session can have."""
+
+    class sparkContext:
+        applicationId = "app-from-a-stopped-session"
 
 
 class TestPersistShared:
@@ -32,25 +42,30 @@ class TestPersistShared:
     def test_key_is_scoped_to_application_id(self, spark):
         cache.persist_shared("r7_scope_key", lambda: spark.range(3))
         app_id = spark.sparkContext.applicationId
-        assert ("", "r7_scope_key") not in cache._SHARED
-        assert (app_id, "r7_scope_key") in cache._SHARED
+        assert ("", "r7_scope_key") not in cache.keys("shared")
+        assert (app_id, "r7_scope_key") in cache.keys("shared")
         cache.clear_shared()
 
-    def test_dead_session_entries_pruned_on_miss(self, spark):
-        # Simulate a leftover from a stopped session: an entry whose
-        # applicationId can never match the live session's.
-        cache._SHARED[("app-from-a-stopped-session", "old")] = spark.range(1)
-        cache.persist_shared("r7_prune_key", lambda: spark.range(2))
-        assert ("app-from-a-stopped-session", "old") not in cache._SHARED
+    @pytest.mark.parametrize("namespace", ["shared", "base_tables", "version_dirs"])
+    def test_dead_session_entries_pruned_on_miss(self, spark, namespace):
+        def build(n):
+            df = spark.range(n)
+            return (df, []) if namespace == "shared" else df
+
+        cache.memo(namespace, "old", lambda: build(1), spark=_DeadSession)
+        dead = ("app-from-a-stopped-session", "old")
+        assert dead in cache.keys(namespace)
+        cache.memo(namespace, "r7_prune_key", lambda: build(2), spark=spark)
+        assert dead not in cache.keys(namespace)
         app_id = spark.sparkContext.applicationId
-        assert (app_id, "r7_prune_key") in cache._SHARED
-        cache.clear_shared()
+        assert (app_id, "r7_prune_key") in cache.keys(namespace)
+        cache.clear(namespace)
 
     def test_clear_shared_empties_registry(self, spark):
         cache.persist_shared("r7_clear_key", lambda: spark.range(2))
         n = cache.clear_shared()
         assert n >= 1
-        assert not cache._SHARED
+        assert not cache.keys("shared")
 
 
 class TestCalendarNameLocale:
@@ -160,6 +175,22 @@ class _StubQuery:
         if self._frames:
             return self._frames.pop(0)
         return {"numInputRows": 0}
+
+
+class TestPollIdle:
+    def test_timeout_raises_instead_of_silent_partial(self):
+        from product_analytics_spark.streaming.ops import _poll_idle
+
+        # The source keeps reporting data (a stateful plan with a
+        # processing-time timeout never goes idle): raise at the
+        # deadline rather than stop and return a partial sink.
+        class _Busy:
+            isActive = True
+            lastProgress = {"numInputRows": 1}
+            status = {"isDataAvailable": True, "isTriggerActive": False}
+
+        with pytest.raises(TimeoutError, match="not idle"):
+            _poll_idle(_Busy(), timeout_s=0.2, sink_name="s", sleep_s=0.01)
 
 
 class TestPollDrained:

@@ -129,7 +129,7 @@ class TestStatefulSessionizer:
         stream = st.sessionize_stateful(
             st.stream_table(spark, src, schema), gap_minutes=30
         )
-        st.run_available_now(stream, "stateful_sink", output_mode="append")
+        run_available_now_stateful(stream, "stateful_sink")
         out = spark.table("stateful_sink").collect()
         assert len(out) == 1
         (s,) = out
