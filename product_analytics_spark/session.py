@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def get_spark(
@@ -32,10 +32,10 @@ def get_spark(
     typical star-schema ratios) stay under it and AQE upgrades joins
     to broadcast at runtime when a side turns out small.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -55,6 +55,20 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             os.environ.get("SPARK_GRAFT_LIST_JOB_THRESHOLD", "1024"),
         )
+        # Generated-class cache (static conf, sized once per JVM at the
+        # first compile). Spark's default keeps 100 classes, fewer than
+        # this engine's working sets: the 18 analyst_mix keys fill 298
+        # entries, the CDC DAG's full refresh and first incremental run
+        # 122 (seed 7). At 100, a warm replay of the analyst keys
+        # compiled 436 classes again and each warm CDC run 28-57; at
+        # 1024 they compile 0 and 8 (new code: README "Generated code").
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Keep the whole-stage codegen stage id out of the generated
+        # class name. AQE numbers stages in the order they are planned,
+        # which varies run to run, so with the id in the name the same
+        # stage code misses the cache (q123: 8 classes per re-run); the
+        # same code at another position in another query shares it too.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
