@@ -11,7 +11,7 @@ Reference mapping (SURVEY.md §2.1):
   S8 schema evolution    on_schema_change='sync_all_columns'
 
 Commit protocol (no delta-spark in this container — fallback is the
-tested path): every overwrite/merge writes a fresh immutable version
+tested path): every writer writes a fresh immutable version
 directory ``<table>/v_<uuid>/`` and then commits by atomically
 replacing the one-line pointer file ``<table>/_CURRENT`` via
 ``os.replace`` (POSIX-atomic). A crash at ANY point leaves the
@@ -20,6 +20,14 @@ still see the old version; after, the new one. Superseded versions
 are garbage-collected on the next successful commit. This is the
 classic table-format commit (Delta/Iceberg do the same with a
 transaction log instead of a pointer file).
+
+Every writer runs through one optimistic transaction,
+``SnapshotStore._transact``: snapshot read, version-dir allocation,
+settling the overlapped cdc/validation/DV jobs, the commit, telling a
+conflict from a failure, cleanup and retry live there once. Inside
+the commit lock the order is: OCC check, ``_delta_log`` commit (with
+``delta_log=True``), pointer, ``_LOG`` — so a refused log commit
+leaves the pointer, ``_LOG`` and the log exactly as they were.
 
 Object-store caveat: ``os.replace`` atomicity holds on POSIX
 filesystems (local disk, NFS, HDFS via mounts). On S3-like stores
@@ -69,6 +77,9 @@ _ROW_TRACKING = "_ROW_TRACKING"
 #: Sentinel default for ``expected_version`` — distinct from None,
 #: which is a MEANINGFUL expectation (first write: no pointer yet).
 UNCHECKED = object()
+#: ``_transact``'s default expectation: read ``current_version`` at
+#: the start of every attempt.
+_READ = object()
 
 
 def _dir_signature(d: str) -> tuple:
@@ -136,6 +147,37 @@ class ConstraintViolationError(RuntimeError):
     """A write contained rows violating a declared CHECK constraint
     (Delta ``delta.constraints.<name>``). NOTHING commits — the
     constraint is enforced at write time, never repaired after."""
+
+
+class _Attempt:
+    """One attempt of :meth:`SnapshotStore._transact`: the snapshot
+    version it presents at commit, the version dir it writes, and the
+    work the loop settles on every exit."""
+
+    def __init__(self, table: str, expected):
+        self.table = table
+        self.expected = expected
+        #: the version dir the attempt commits; a writer that lets
+        #: ``_write_version`` allocate stores that name here instead
+        self.version: str | None = f"v_{uuid.uuid4().hex[:12]}"
+        #: overlapped cdc stage (``_stage_cdc_async``): adopted by the
+        #: commit, discarded on every other exit
+        self.cdc = None
+        #: overlapped validation / DV-write futures (None entries are
+        #: skipped): joined in order before the commit, so a failure
+        #: refuses it; awaited and swallowed on every other exit
+        self.jobs: list = []
+        #: zero-arg callables run last on every exit (cache releases)
+        self.releases: list = []
+
+    @property
+    def vdir(self) -> str:
+        return os.path.join(self.table, self.version)
+
+    def no_commit(self, result):
+        """End the attempt with ``result`` and nothing to commit."""
+        self.version = None
+        return lambda: result
 
 
 class SnapshotStore:
@@ -320,7 +362,9 @@ class SnapshotStore:
             # next data commit (metaData-only commit, like Delta's
             # ALTER TABLE)
             with self._commit_lock(name):
-                self._delta_commit(name, operation="ADD CONSTRAINT")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation="ADD CONSTRAINT"
+                )
 
     def drop_constraint(self, name: str, cname: str) -> None:
         cons = self.constraints(name)
@@ -328,7 +372,9 @@ class SnapshotStore:
         self._write_constraints(name, cons)
         if self.delta_log and self.current_data_dir(name) is not None:
             with self._commit_lock(name):
-                self._delta_commit(name, operation="DROP CONSTRAINT")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation="DROP CONSTRAINT"
+                )
 
     def _assert_satisfies(
         self, df: DataFrame, cname: str, expr_sql: str
@@ -464,7 +510,9 @@ class SnapshotStore:
         os.replace(tmp, os.path.join(self.path(name), _PROPS))
         if self.delta_log and self.current_data_dir(name) is not None:
             with self._commit_lock(name):
-                self._delta_commit(name, operation="SET TBLPROPERTIES")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation="SET TBLPROPERTIES"
+                )
 
     def set_append_only(self, name: str, enabled: bool = True) -> None:
         """Activate Delta's **append-only** writer feature
@@ -555,7 +603,9 @@ class SnapshotStore:
         os.replace(tmp, os.path.join(self.path(name), _INVARIANTS))
         if self.delta_log and self.current_data_dir(name) is not None:
             with self._commit_lock(name):
-                self._delta_commit(name, operation="ALTER TABLE")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation="ALTER TABLE"
+                )
 
     # --------------------------------------------- generated columns
 
@@ -1038,11 +1088,55 @@ class SnapshotStore:
         self, name: str, data_dir: str, scan: DataFrame, base_df=None
     ):
         """Tag a raw scan with the stable ``_pa_row_id_m`` /
-        ``_pa_row_commit_m`` columns: materialized values (from a
-        prior rewrite) win; otherwise ``baseRowId + row_index``. Must
-        be applied directly on the scan (``_metadata`` is a scan
-        pseudo-column). Pass a precomputed ``base_df`` when calling
-        in a loop — it costs one log-snapshot replay per build."""
+        ``_pa_row_commit_m`` columns (see ``_rt_ids``). Must be applied
+        directly on the scan (``_metadata`` is a scan pseudo-column).
+        Pass a precomputed ``base_df`` when calling in a loop — it
+        costs one log-snapshot replay per build."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        logical = [
+            c
+            for c in scan.columns
+            if c not in (dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL)
+        ]
+        return self._rt_ids(
+            name,
+            data_dir,
+            self._tag_positions(scan, data_dir),
+            logical,
+            scan.columns,
+            base_df,
+        )
+
+    @staticmethod
+    def _rt_split(live: DataFrame, rt: bool) -> tuple[tuple, list[str]]:
+        """(materialized row-id columns, logical columns) of a live
+        relation; no id columns unless the table is row-tracked."""
+        if not rt:
+            return (), list(live.columns)
+        from product_analytics_spark.sources import delta_log as dl
+
+        rt_cols = (
+            dl.MATERIALIZED_ROW_ID_COL,
+            dl.MATERIALIZED_ROW_COMMIT_COL,
+        )
+        return rt_cols, [c for c in live.columns if c not in rt_cols]
+
+    def _rt_ids(
+        self,
+        name: str,
+        data_dir: str,
+        tagged: DataFrame,
+        cols: Sequence[str],
+        source_cols: Sequence[str],
+        base_df=None,
+    ) -> DataFrame:
+        """``cols`` of a ``_tag_positions``-tagged relation plus its
+        stable row ids: materialized values (from a prior rewrite;
+        present when ``source_cols``, the untagged relation's columns,
+        carry them) win; otherwise ``baseRowId + row_index`` from the
+        snapshot's broadcast file map. The one id-inheritance join the
+        scan tagger and the MoR DMLs share."""
         from product_analytics_spark.sources import delta_log as dl
 
         rt_id, rt_cv = (
@@ -1051,37 +1145,24 @@ class SnapshotStore:
         )
         if base_df is None:
             base_df = self._rt_base_df(name, data_dir)
-        mat_id = (
-            F.col(rt_id)
-            if rt_id in scan.columns
-            else F.lit(None).cast("long")
-        )
-        mat_cv = (
-            F.col(rt_cv)
-            if rt_cv in scan.columns
-            else F.lit(None).cast("long")
-        )
-        logical = [c for c in scan.columns if c not in (rt_id, rt_cv)]
-        return (
-            scan.select(
-                "*",
-                self._rel_path_col(data_dir).alias("__rt_relp"),
-                F.col("_metadata.row_index").alias("__rt_ri"),
+
+        def materialized(c: str):
+            return (
+                F.col(c) if c in source_cols else F.lit(None).cast("long")
             )
-            .join(
-                F.broadcast(base_df),
-                F.col("__rt_relp") == F.col("__rt_p"),
-                "left",
-            )
-            .select(
-                *logical,
-                F.coalesce(mat_id, F.col("__rt_base") + F.col("__rt_ri"))
-                .cast("long")
-                .alias(rt_id),
-                F.coalesce(mat_cv, F.col("__rt_cv"))
-                .cast("long")
-                .alias(rt_cv),
-            )
+
+        return tagged.join(
+            F.broadcast(base_df),
+            F.col("__pos_f") == F.col("__rt_p"),
+            "left",
+        ).select(
+            *cols,
+            F.coalesce(materialized(rt_id), F.col("__rt_base") + F.col("__pos_ri"))
+            .cast("long")
+            .alias(rt_id),
+            F.coalesce(materialized(rt_cv), F.col("__rt_cv"))
+            .cast("long")
+            .alias(rt_cv),
         )
 
     #: Target bytes per written file/task (guide §6: output files in
@@ -1189,6 +1270,40 @@ class SnapshotStore:
             .select(*cols)
         )
 
+    def _tag_positions(self, df: DataFrame, data_dir: str) -> DataFrame:
+        """``df`` (a scan of ``data_dir``) plus each row's DV key:
+        ``__pos_f`` (version-relative path) and ``__pos_ri`` (row
+        index)."""
+        return df.select(
+            "*",
+            self._rel_path_col(data_dir).alias("__pos_f"),
+            F.col("_metadata.row_index").alias("__pos_ri"),
+        )
+
+    def _merged_dv(self, data_dir: str, matched: DataFrame) -> DataFrame:
+        """The next version's deletion vector: ``data_dir``'s
+        outstanding DV ∪ the positions of ``matched`` (rows tagged by
+        ``_tag_positions``), distinct."""
+        new_pos = matched.select(
+            F.col("__pos_f").alias("path"),
+            F.col("__pos_ri").alias("row_index"),
+        )
+        old_dv_dir = self._dv_dir(data_dir)
+        if os.path.isdir(old_dv_dir):
+            return (
+                self._read_version_dir(old_dv_dir)
+                .unionByName(new_pos)
+                .distinct()
+            )
+        return new_pos.distinct()
+
+    def _write_dv_async(self, vdir: str, merged_dv: DataFrame):
+        """Write ``merged_dv`` as ``vdir``'s one-file deletion vector
+        on an overlapped job; returns its Future."""
+        return _submit_inheritable(
+            lambda: merged_dv.coalesce(1).write.parquet(self._dv_dir(vdir))
+        )
+
     def delete_where_mor(
         self,
         name: str,
@@ -1215,108 +1330,57 @@ class SnapshotStore:
         see ``sources/deletion_vectors.py``), so log consumers
         (``read_delta``/``read_pruned``) see exactly the live rows."""
         self._assert_appendable(name, "DELETE (merge-on-read)")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
-            cdc_fut = None
-            try:
-                data = self.current_data_dir(name)
-                if data is None:
-                    raise ValueError(f"unknown table {name!r}")
-                # positions of matching rows among LIVE rows only.
-                # With CDF on, the matched rows feed BOTH the change
-                # file and the deletion vector — one persisted
-                # O(matched) intermediate instead of two full scans
-                # of the live relation (round-12 optimization, guide
-                # §1.2: every extra consumer re-ran the scan + DV
-                # anti-join).
-                live = self._apply_dv(data)
-                matched = live.where(predicate).select(
-                    "*",
-                    self._rel_path_col(data).alias("__pos_f"),
-                    F.col("_metadata.row_index").alias("__pos_ri"),
+
+        def attempt(txn: _Attempt):
+            data = self.current_data_dir(name)
+            if data is None:
+                raise ValueError(f"unknown table {name!r}")
+            # positions of matching rows among LIVE rows only.
+            # With CDF on, the matched rows feed BOTH the change
+            # file and the deletion vector — one persisted
+            # O(matched) intermediate instead of two full scans
+            # of the live relation (round-12 optimization, guide
+            # §1.2: every extra consumer re-ran the scan + DV
+            # anti-join).
+            matched = self._tag_positions(
+                self._apply_dv(data).where(predicate), data
+            )
+            if self.cdf:
+                matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
+                txn.releases.append(lambda: matched.unpersist(False))
+            merged_dv = self._merged_dv(data, matched)
+            if post_scan is not None:
+                post_scan()
+            # Materialize-then-fork (round-13, VERDICT r12
+            # item 2, guide §2.6): the round-12 async attempt
+            # lost because the cdc and DV jobs raced to fill
+            # the `matched` cache. Materializing the persisted
+            # intermediate FIRST (one cheap count — the scan
+            # that one consumer was paying anyway) lets the
+            # cdc stage overlap the hardlink pass and the DV
+            # write, both now pure cache readers.
+            if self.cdf:
+                matched.count()
+                txn.cdc = self._stage_cdc_async(
+                    name,
+                    matched.drop("__pos_f", "__pos_ri").withColumn(
+                        "_change_type", F.lit("delete")
+                    ),
                 )
-                if self.cdf:
-                    matched = matched.persist(
-                        StorageLevel.MEMORY_AND_DISK
-                    )
-                try:
-                    new_pos = matched.select(
-                        F.col("__pos_f").alias("path"),
-                        F.col("__pos_ri").alias("row_index"),
-                    )
-                    old_dv_dir = self._dv_dir(data)
-                    if os.path.isdir(old_dv_dir):
-                        merged_dv = (
-                            self._read_version_dir(old_dv_dir)
-                            .unionByName(new_pos)
-                            .distinct()
-                        )
-                    else:
-                        merged_dv = new_pos.distinct()
-                    if post_scan is not None:
-                        post_scan()
-                    # Materialize-then-fork (round-13, VERDICT r12
-                    # item 2, guide §2.6): the round-12 async attempt
-                    # lost because the cdc and DV jobs raced to fill
-                    # the `matched` cache. Materializing the persisted
-                    # intermediate FIRST (one cheap count — the scan
-                    # that one consumer was paying anyway) lets the
-                    # cdc stage overlap the hardlink pass and the DV
-                    # write, both now pure cache readers.
-                    if self.cdf:
-                        matched.count()
-                        cdc_fut = self._stage_cdc_async(
-                            name,
-                            matched.drop("__pos_f", "__pos_ri").withColumn(
-                                "_change_type", F.lit("delete")
-                            ),
-                        )
-                    n_link = 0
-                    for rel, files in self._partition_dirs(data):
-                        out_dir = (
-                            vdir if rel == "." else os.path.join(vdir, rel)
-                        )
-                        os.makedirs(out_dir, exist_ok=True)
-                        for f in files:
-                            os.link(
-                                f, os.path.join(out_dir, os.path.basename(f))
-                            )
-                            n_link += 1
-                    merged_dv.coalesce(1).write.parquet(self._dv_dir(vdir))
-                    self._adopt_cdc(name, cdc_fut)
-                    self._commit(
-                        name, version, expected_version=expected,
-                        operation="DELETE",
-                    )
-                finally:
-                    if self.cdf:
-                        matched.unpersist(False)
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                self._abort_cdc(name, cdc_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception:
-                self._abort_cdc(name, cdc_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under MoR delete"
-                )
-                continue
-            return {
+            n_link = sum(
+                self._link_files(txn.vdir, rel, files)
+                for rel, files in self._partition_dirs(data)
+            )
+            merged_dv.coalesce(1).write.parquet(self._dv_dir(txn.vdir))
+            return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(
-                    os.path.join(self.path(name), version)
-                ),
+                "dv_rows": self._dv_file_rows(txn.vdir),
             }
-        assert last_err is not None
-        raise last_err
+
+        return self._transact(
+            name, attempt, "MoR delete", "DELETE", max_retries
+        )
 
     def update_where_mor(
         self,
@@ -1339,232 +1403,93 @@ class SnapshotStore:
         ``deletionVector`` descriptors like ``delete_where_mor``."""
         data0 = self.current_data_dir(name)
         if data0 is not None:
-            part_cols = {
-                c
-                for rel, _fs in self._partition_dirs(data0)
-                for c, _v in self._partition_literals(rel)
-            }
-            bad = part_cols & set(assignments)
+            bad = set(
+                self._partition_cols(self._partition_dirs(data0))
+            ) & set(assignments)
             if bad:
                 raise ValueError(
                     f"update_where_mor cannot reassign partition columns "
                     f"{sorted(bad)}"
                 )
         self._assert_appendable(name, "UPDATE (merge-on-read)")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
-            cdc_fut = None
-            val_fut = None
-            dv_fut = None
-            try:
-                data = self.current_data_dir(name)
-                if data is None:
-                    raise ValueError(f"unknown table {name!r}")
-                rt = self._row_tracking(name)
-                live = self._apply_dv(data, merge_schema=rt)
-                if rt:
-                    from product_analytics_spark.sources import (
-                        delta_log as dl,
-                    )
 
-                    rt_cols = (
-                        dl.MATERIALIZED_ROW_ID_COL,
-                        dl.MATERIALIZED_ROW_COMMIT_COL,
-                    )
-                    logical_cols = [
-                        c for c in live.columns if c not in rt_cols
-                    ]
-                else:
-                    rt_cols = ()
-                    logical_cols = list(live.columns)
-                part_cols_now = [
-                    c
-                    for rel, _fs in self._partition_dirs(data)
-                    for c, _v in self._partition_literals(rel)
-                ]
-                part_cols_now = list(dict.fromkeys(part_cols_now))
-                # ONE scan finds the matched rows WITH their positions;
-                # everything downstream (deletion vector, rewritten
-                # rows, constraint validation, CDF pre/post images)
-                # derives from this persisted O(matched) intermediate.
-                # The per-consumer form re-ran the live scan + DV
-                # anti-join up to 4x per UPDATE (round-12 optimization,
-                # guide §1.2).
-                matched = live.where(predicate).select(
-                    "*",
-                    self._rel_path_col(data).alias("__pos_f"),
-                    F.col("_metadata.row_index").alias("__pos_ri"),
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    new_pos = matched.select(
-                        F.col("__pos_f").alias("path"),
-                        F.col("__pos_ri").alias("row_index"),
-                    )
-                    old_dv_dir = self._dv_dir(data)
-                    if os.path.isdir(old_dv_dir):
-                        merged_dv = (
-                            self._read_version_dir(old_dv_dir)
-                            .unionByName(new_pos)
-                            .distinct()
-                        )
-                    else:
-                        merged_dv = new_pos.distinct()
-                    # Row tracking: the rewritten rows carry their OLD
-                    # ids in the materialized columns, so identity
-                    # survives the tombstone-and-rewrite (Delta's exact
-                    # mechanism). The position tags double as the
-                    # row-id join key — no second scan.
-                    if rt:
-                        from product_analytics_spark.sources import (
-                            delta_log as dl,
-                        )
-
-                        rt_id, rt_cv = (
-                            dl.MATERIALIZED_ROW_ID_COL,
-                            dl.MATERIALIZED_ROW_COMMIT_COL,
-                        )
-                        base_df = self._rt_base_df(name, data)
-                        mat_id = (
-                            F.col(rt_id)
-                            if rt_id in live.columns
-                            else F.lit(None).cast("long")
-                        )
-                        mat_cv = (
-                            F.col(rt_cv)
-                            if rt_cv in live.columns
-                            else F.lit(None).cast("long")
-                        )
-                        updated = matched.join(
-                            F.broadcast(base_df),
-                            F.col("__pos_f") == F.col("__rt_p"),
-                            "left",
-                        ).select(
-                            *logical_cols,
-                            F.coalesce(
-                                mat_id,
-                                F.col("__rt_base") + F.col("__pos_ri"),
-                            )
-                            .cast("long")
-                            .alias(rt_id),
-                            F.coalesce(mat_cv, F.col("__rt_cv"))
-                            .cast("long")
-                            .alias(rt_cv),
-                        )
-                    else:
-                        updated = matched.drop("__pos_f", "__pos_ri")
-                    for col, expr_sql in assignments.items():
-                        updated = updated.withColumn(
-                            col,
-                            F.expr(expr_sql).cast(live.schema[col].dataType),
-                        )
-                    updated = updated.select(*logical_cols, *rt_cols)
-                    # Materialize-then-fork (round-13, VERDICT r12
-                    # item 2, guide §2.6): fill the shared `matched`
-                    # cache with ONE count — the scan its first
-                    # consumer was paying anyway — then run the
-                    # validation probe, the cdc stage and the DV write
-                    # as overlapped cache readers alongside the
-                    # hardlink pass and the rewrite write. The
-                    # round-12 fork-without-materialize attempt lost
-                    # exactly because the forks raced to fill this
-                    # cache.
-                    matched.count()
-                    val_fut = self._validate_async(
-                        name, updated.select(*logical_cols)
-                    )
-                    if post_scan is not None:
-                        post_scan()
-                    if self.cdf:
-                        cdc_fut = self._stage_cdc_async(
-                            name,
-                            matched.select(*logical_cols)
-                            .withColumn(
-                                "_change_type", F.lit("update_preimage")
-                            )
-                            .unionByName(
-                                updated.select(*logical_cols).withColumn(
-                                    "_change_type",
-                                    F.lit("update_postimage"),
-                                )
-                            ),
-                        )
-                    n_link = 0
-                    for rel, files in self._partition_dirs(data):
-                        out_dir = (
-                            vdir if rel == "." else os.path.join(vdir, rel)
-                        )
-                        os.makedirs(out_dir, exist_ok=True)
-                        for f in files:
-                            os.link(
-                                f, os.path.join(out_dir, os.path.basename(f))
-                            )
-                            n_link += 1
-                    dv_fut = _submit_inheritable(
-                        lambda: merged_dv.coalesce(1)
-                        .write.parquet(self._dv_dir(vdir))
-                    )
-                    if part_cols_now:
-                        # size-adaptive keyed repartition: keep the
-                        # partitioned write parallel under AQE
-                        # coalescing without 32-task overhead on an
-                        # O(matched)-row rewrite (same rationale as
-                        # _write_version, round-12).
-                        updated = updated.repartition(
-                            self._n_write_tasks(updated),
-                            *part_cols_now,
-                        )
-                    writer = updated.write.mode("append")
-                    if part_cols_now:
-                        writer = writer.partitionBy(*part_cols_now)
-                    writer.parquet(vdir)
-                    dv_fut.result()
-                    if val_fut is not None:
-                        val_fut.result()
-                    self._adopt_cdc(name, cdc_fut)
-                    self._commit(
-                        name, version, expected_version=expected,
-                        operation="UPDATE",
-                    )
-                finally:
-                    matched.unpersist(False)
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except ConstraintViolationError:
-                # the violation must surface as such, never be
-                # reclassified as a concurrency conflict below
-                # (same rule as merge/_rewrite_where, ADVICE r12)
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
-            except Exception:
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under MoR update"
+        def attempt(txn: _Attempt):
+            data = self.current_data_dir(name)
+            if data is None:
+                raise ValueError(f"unknown table {name!r}")
+            rt = self._row_tracking(name)
+            live = self._apply_dv(data, merge_schema=rt)
+            rt_cols, logical_cols = self._rt_split(live, rt)
+            part_cols = self._partition_cols(self._partition_dirs(data))
+            # ONE scan finds the matched rows WITH their positions;
+            # everything downstream (deletion vector, rewritten
+            # rows, constraint validation, CDF pre/post images)
+            # derives from this persisted O(matched) intermediate.
+            # The per-consumer form re-ran the live scan + DV
+            # anti-join up to 4x per UPDATE (round-12 optimization,
+            # guide §1.2).
+            matched = self._tag_positions(
+                live.where(predicate), data
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            txn.releases.append(lambda: matched.unpersist(False))
+            merged_dv = self._merged_dv(data, matched)
+            # Row tracking: the rewritten rows carry their OLD ids in
+            # the materialized columns, so identity survives the
+            # tombstone-and-rewrite (Delta's exact mechanism). The
+            # position tags double as the row-id join key — no second
+            # scan.
+            if rt:
+                updated = self._rt_ids(
+                    name, data, matched, logical_cols, live.columns
                 )
-                continue
-            return {
+            else:
+                updated = matched.drop("__pos_f", "__pos_ri")
+            for col, expr_sql in assignments.items():
+                updated = updated.withColumn(
+                    col,
+                    F.expr(expr_sql).cast(live.schema[col].dataType),
+                )
+            updated = updated.select(*logical_cols, *rt_cols)
+            # Materialize-then-fork (round-13, VERDICT r12 item 2,
+            # guide §2.6): fill the shared `matched` cache with ONE
+            # count — the scan its first consumer was paying anyway —
+            # then run the validation probe, the cdc stage and the DV
+            # write as overlapped cache readers alongside the hardlink
+            # pass and the rewrite write. The round-12
+            # fork-without-materialize attempt lost exactly because
+            # the forks raced to fill this cache.
+            matched.count()
+            txn.jobs.append(
+                self._validate_async(name, updated.select(*logical_cols))
+            )
+            if post_scan is not None:
+                post_scan()
+            if self.cdf:
+                txn.cdc = self._stage_cdc_async(
+                    name,
+                    matched.select(*logical_cols)
+                    .withColumn("_change_type", F.lit("update_preimage"))
+                    .unionByName(
+                        updated.select(*logical_cols).withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    ),
+                )
+            n_link = sum(
+                self._link_files(txn.vdir, rel, files)
+                for rel, files in self._partition_dirs(data)
+            )
+            txn.jobs.append(self._write_dv_async(txn.vdir, merged_dv))
+            self._write_appended(txn.vdir, updated, part_cols)
+            return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(
-                    os.path.join(self.path(name), version)
-                ),
+                "dv_rows": self._dv_file_rows(txn.vdir),
             }
-        assert last_err is not None
-        raise last_err
+
+        return self._transact(
+            name, attempt, "MoR update", "UPDATE", max_retries
+        )
 
     def merge_mor(
         self,
@@ -1599,267 +1524,129 @@ class SnapshotStore:
         ``deletionVector`` descriptors like the other MoR ops."""
         self._assert_appendable(name, "MERGE (merge-on-read)")
         keys = [key] if isinstance(key, str) else list(key)
-        last_err: ConcurrentWriteError | None = None
         batch = self._apply_generated(name, batch)
-        for _ in range(max_retries):
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
-            cdc_fut = None
-            val_fut = None
-            dv_fut = None
-            try:
-                data = self.current_data_dir(name)
-                if data is None:
-                    raise ValueError(f"unknown table {name!r}")
-                rt = self._row_tracking(name)
-                live = self._apply_dv(data, merge_schema=rt)
-                if rt:
-                    from product_analytics_spark.sources import (
-                        delta_log as dl,
-                    )
 
-                    rt_cols = (
-                        dl.MATERIALIZED_ROW_ID_COL,
-                        dl.MATERIALIZED_ROW_COMMIT_COL,
-                    )
-                    logical_cols = [
-                        c for c in live.columns if c not in rt_cols
-                    ]
-                else:
-                    rt_cols = ()
-                    logical_cols = list(live.columns)
-                batch_eff = (
-                    self._identity_merge_batch(name, live, batch, keys)
-                    if self.identity_columns(name)
-                    else batch
+        def attempt(txn: _Attempt):
+            data = self.current_data_dir(name)
+            if data is None:
+                raise ValueError(f"unknown table {name!r}")
+            rt = self._row_tracking(name)
+            live = self._apply_dv(data, merge_schema=rt)
+            rt_cols, logical_cols = self._rt_split(live, rt)
+            batch_eff = (
+                self._identity_merge_batch(name, live, batch, keys)
+                if self.identity_columns(name)
+                else batch
+            )
+            missing = set(logical_cols) - set(batch_eff.columns)
+            extra = set(batch_eff.columns) - set(logical_cols)
+            if missing or extra:
+                raise ValueError(
+                    f"merge_mor requires identical column sets "
+                    f"(missing={sorted(missing)}, extra="
+                    f"{sorted(extra)}); use merge() for schema "
+                    f"evolution"
                 )
-                missing = set(logical_cols) - set(batch_eff.columns)
-                extra = set(batch_eff.columns) - set(logical_cols)
-                if missing or extra:
-                    raise ValueError(
-                        f"merge_mor requires identical column sets "
-                        f"(missing={sorted(missing)}, extra="
-                        f"{sorted(extra)}); use merge() for schema "
-                        f"evolution"
-                    )
-                aligned = batch_eff.select(
-                    *[
-                        F.col(c).cast(live.schema[c].dataType).alias(c)
-                        for c in logical_cols
-                    ]
-                )
-                part_cols_now = [
-                    c
-                    for rel, _fs in self._partition_dirs(data)
-                    for c, _v in self._partition_literals(rel)
+            aligned = batch_eff.select(
+                *[
+                    F.col(c).cast(live.schema[c].dataType).alias(c)
+                    for c in logical_cols
                 ]
-                part_cols_now = list(dict.fromkeys(part_cols_now))
-                # ONE live scan: the semi-join against the batch keys
-                # finds every matched row WITH its position, the
-                # logical columns (CDF preimages) and — on row-tracked
-                # tables — the materialized id columns. The deletion
-                # vector, the CDF classification (matched keys stand
-                # in for "batch keys present in live") and the
-                # inherited row ids all derive from this persisted
-                # O(matched) intermediate; the per-consumer form
-                # re-scanned live + DV anti-join up to 4x per MERGE
-                # (round-12 optimization, guide §1.2). The batch side
-                # is persisted too — it feeds the key broadcast, the
-                # CDF post/insert images and the data write.
-                aligned = aligned.persist(StorageLevel.MEMORY_AND_DISK)
-                matched = live.select(
-                    "*",
-                    self._rel_path_col(data).alias("__pos_f"),
-                    F.col("_metadata.row_index").alias("__pos_ri"),
-                ).join(
-                    F.broadcast(aligned.select(*keys).distinct()),
-                    on=keys,
-                    how="left_semi",
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    new_pos = matched.select(
-                        F.col("__pos_f").alias("path"),
-                        F.col("__pos_ri").alias("row_index"),
+            )
+            part_cols = self._partition_cols(self._partition_dirs(data))
+            # ONE live scan: the semi-join against the batch keys
+            # finds every matched row WITH its position, the logical
+            # columns (CDF preimages) and — on row-tracked tables —
+            # the materialized id columns. The deletion vector, the
+            # CDF classification (matched keys stand in for "batch
+            # keys present in live") and the inherited row ids all
+            # derive from this persisted O(matched) intermediate; the
+            # per-consumer form re-scanned live + DV anti-join up to
+            # 4x per MERGE (round-12 optimization, guide §1.2). The
+            # batch side is persisted too — it feeds the key
+            # broadcast, the CDF post/insert images and the data
+            # write.
+            aligned = aligned.persist(StorageLevel.MEMORY_AND_DISK)
+            matched = self._tag_positions(live, data).join(
+                F.broadcast(aligned.select(*keys).distinct()),
+                on=keys,
+                how="left_semi",
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            txn.releases += [
+                lambda: matched.unpersist(False),
+                lambda: aligned.unpersist(False),
+            ]
+            merged_dv = self._merged_dv(data, matched)
+            # Materialize-then-fork (round-13, VERDICT r12 item 2,
+            # guide §2.6): one count fills BOTH caches (computing
+            # `matched` builds the broadcast over `aligned`, so the
+            # batch cache fills as a side effect); the validation
+            # probe, cdc stage and DV write then overlap the hardlink
+            # pass and the data write as pure cache readers. CHECK
+            # constraints gate the NEW rows only — the hardlinked
+            # side was validated when it committed.
+            matched.count()
+            txn.jobs.append(self._validate_async(name, aligned))
+            if post_scan is not None:
+                post_scan()
+            # batch keys that matched a live row — O(matched),
+            # broadcastable; "batch ∩ live" == "batch ∩ matched" by
+            # construction, so CDF classification needs no further
+            # live scan.
+            mkeys = matched.select(*keys).distinct()
+            if self.cdf:
+                ct = "_change_type"
+                txn.cdc = self._stage_cdc_async(
+                    name,
+                    matched.select(*logical_cols)
+                    .withColumn(ct, F.lit("update_preimage"))
+                    .unionByName(
+                        aligned.join(
+                            F.broadcast(mkeys), keys, "left_semi"
+                        ).withColumn(ct, F.lit("update_postimage"))
                     )
-                    old_dv_dir = self._dv_dir(data)
-                    if os.path.isdir(old_dv_dir):
-                        merged_dv = (
-                            self._read_version_dir(old_dv_dir)
-                            .unionByName(new_pos)
-                            .distinct()
-                        )
-                    else:
-                        merged_dv = new_pos.distinct()
-                    # Materialize-then-fork (round-13, VERDICT r12
-                    # item 2, guide §2.6): one count fills BOTH caches
-                    # (computing `matched` builds the broadcast over
-                    # `aligned`, so the batch cache fills as a side
-                    # effect); the validation probe, cdc stage and DV
-                    # write then overlap the hardlink pass and the
-                    # data write as pure cache readers. CHECK
-                    # constraints gate the NEW rows only — the
-                    # hardlinked side was validated when it committed.
-                    matched.count()
-                    val_fut = self._validate_async(name, aligned)
-                    if post_scan is not None:
-                        post_scan()
-                    # batch keys that matched a live row — O(matched),
-                    # broadcastable; "batch ∩ live" == "batch ∩ matched"
-                    # by construction, so CDF classification needs no
-                    # further live scan.
-                    mkeys = matched.select(*keys).distinct()
-                    if self.cdf:
-                        ct = "_change_type"
-                        cdc_fut = self._stage_cdc_async(
-                            name,
-                            matched.select(*logical_cols)
-                            .withColumn(ct, F.lit("update_preimage"))
-                            .unionByName(
-                                aligned.join(
-                                    F.broadcast(mkeys), keys, "left_semi"
-                                ).withColumn(ct, F.lit("update_postimage"))
-                            )
-                            .unionByName(
-                                aligned.join(
-                                    F.broadcast(mkeys), keys, "left_anti"
-                                ).withColumn(ct, F.lit("insert"))
-                            ),
-                        )
-                    # Row tracking: matched batch rows INHERIT the live
-                    # row's id via the materialized columns (O(matched)
-                    # map, broadcast onto the batch); inserts carry
-                    # NULL and read back as fresh baseRowId+index ids.
-                    if rt:
-                        from product_analytics_spark.sources import (
-                            delta_log as dl,
-                        )
-
-                        rt_id, rt_cv_c = (
-                            dl.MATERIALIZED_ROW_ID_COL,
-                            dl.MATERIALIZED_ROW_COMMIT_COL,
-                        )
-                        base_df = self._rt_base_df(name, data)
-                        mat_id = (
-                            F.col(rt_id)
-                            if rt_id in live.columns
-                            else F.lit(None).cast("long")
-                        )
-                        mat_cv = (
-                            F.col(rt_cv_c)
-                            if rt_cv_c in live.columns
-                            else F.lit(None).cast("long")
-                        )
-                        # One id per key: the live side may hold
-                        # duplicate keys (e.g. appended dups) — a left
-                        # join against per-row ids would emit the batch
-                        # row once per duplicate, breaking the
-                        # merge_upsert contract. The replacement row
-                        # inherits the smallest (oldest) matched row
-                        # id, deterministically.
-                        matched_ids = (
-                            matched.join(
-                                F.broadcast(base_df),
-                                F.col("__pos_f") == F.col("__rt_p"),
-                                "left",
-                            )
-                            .select(
-                                *keys,
-                                F.coalesce(
-                                    mat_id,
-                                    F.col("__rt_base")
-                                    + F.col("__pos_ri"),
-                                )
-                                .cast("long")
-                                .alias(rt_id),
-                                F.coalesce(mat_cv, F.col("__rt_cv"))
-                                .cast("long")
-                                .alias(rt_cv_c),
-                            )
-                            .groupBy(*keys)
-                            .agg(
-                                *[
-                                    F.min(F.col(c)).alias(c)
-                                    for c in rt_cols
-                                ]
-                            )
-                        )
-                        to_write = aligned.join(
-                            F.broadcast(matched_ids), keys, "left"
-                        ).select(*logical_cols, *rt_cols)
-                    else:
-                        to_write = aligned
-                    n_link = 0
-                    for rel, files in self._partition_dirs(data):
-                        out_dir = (
-                            vdir if rel == "." else os.path.join(vdir, rel)
-                        )
-                        os.makedirs(out_dir, exist_ok=True)
-                        for f in files:
-                            os.link(
-                                f, os.path.join(out_dir, os.path.basename(f))
-                            )
-                            n_link += 1
-                    if part_cols_now:
-                        # size-adaptive keyed repartition (same
-                        # rationale as _write_version, round-12).
-                        to_write = to_write.repartition(
-                            self._n_write_tasks(to_write),
-                            *part_cols_now,
-                        )
-                    dv_fut = _submit_inheritable(
-                        lambda: merged_dv.coalesce(1)
-                        .write.parquet(self._dv_dir(vdir))
-                    )
-                    writer = to_write.write.mode("append")
-                    if part_cols_now:
-                        writer = writer.partitionBy(*part_cols_now)
-                    writer.parquet(vdir)
-                    dv_fut.result()
-                    if val_fut is not None:
-                        val_fut.result()
-                    self._adopt_cdc(name, cdc_fut)
-                    self._commit(
-                        name, version, expected_version=expected,
-                        operation="MERGE",
-                    )
-                finally:
-                    matched.unpersist(False)
-                    aligned.unpersist(False)
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except ConstraintViolationError:
-                # surface the violation itself (same rule as merge/
-                # _rewrite_where, ADVICE r12)
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
-            except Exception:
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under MoR merge"
+                    .unionByName(
+                        aligned.join(
+                            F.broadcast(mkeys), keys, "left_anti"
+                        ).withColumn(ct, F.lit("insert"))
+                    ),
                 )
-                continue
-            return {
+            # Row tracking: matched batch rows INHERIT the live row's
+            # id via the materialized columns (O(matched) map,
+            # broadcast onto the batch); inserts carry NULL and read
+            # back as fresh baseRowId+index ids.
+            if rt:
+                # One id per key: the live side may hold duplicate
+                # keys (e.g. appended dups) — a left join against
+                # per-row ids would emit the batch row once per
+                # duplicate, breaking the merge_upsert contract. The
+                # replacement row inherits the smallest (oldest)
+                # matched row id, deterministically.
+                matched_ids = (
+                    self._rt_ids(name, data, matched, keys, live.columns)
+                    .groupBy(*keys)
+                    .agg(*[F.min(F.col(c)).alias(c) for c in rt_cols])
+                )
+                to_write = aligned.join(
+                    F.broadcast(matched_ids), keys, "left"
+                ).select(*logical_cols, *rt_cols)
+            else:
+                to_write = aligned
+            n_link = sum(
+                self._link_files(txn.vdir, rel, files)
+                for rel, files in self._partition_dirs(data)
+            )
+            txn.jobs.append(self._write_dv_async(txn.vdir, merged_dv))
+            self._write_appended(txn.vdir, to_write, part_cols)
+            return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(
-                    os.path.join(self.path(name), version)
-                ),
+                "dv_rows": self._dv_file_rows(txn.vdir),
             }
-        assert last_err is not None
-        raise last_err
+
+        return self._transact(
+            name, attempt, "MoR merge", "MERGE", max_retries
+        )
 
     def purge_dv(self, name: str, max_retries: int = 3) -> bool:
         """Materialize outstanding deletion vectors: rewrite the table
@@ -1867,11 +1654,10 @@ class SnapshotStore:
         so the new version has plain files and no ``_dv`` — what Delta
         does when OPTIMIZE or a rewrite touches DV'd files. Returns
         True if a purge happened. OCC with retry."""
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
+
+        def attempt(txn: _Attempt):
             if not self._has_dv(name):
-                return False
-            expected = self.current_version(name)
+                return txn.no_commit(False)
             layout = self.layout(name)
             if self._row_tracking(name):
                 # Row tracking: the rewrite must MATERIALIZE every
@@ -1886,27 +1672,30 @@ class SnapshotStore:
             else:
                 df = self.read(name)
             assert df is not None
-            try:
-                self.overwrite(
-                    name,
-                    df,
-                    partition_by=tuple(layout.get("partition_by") or ()),
-                    cluster_by=tuple(layout.get("cluster_by") or ()),
-                    zorder_by=tuple(layout.get("zorder_by") or ()),
-                    zorder_depth=bool(layout.get("zorder_depth")),
-                    expected_version=expected,
-                    # Materializing ALREADY-COMMITTED logical deletes
-                    # moves no rows: like OPTIMIZE, the log commit
-                    # must carry dataChange=false on both sides or
-                    # the change feed would re-report every row.
-                    operation="OPTIMIZE",
-                )
+            finish = self._stage_overwrite(
+                txn,
+                name,
+                df,
+                partition_by=tuple(layout.get("partition_by") or ()),
+                cluster_by=tuple(layout.get("cluster_by") or ()),
+                zorder_by=tuple(layout.get("zorder_by") or ()),
+                zorder_depth=bool(layout.get("zorder_depth")),
+                # Materializing ALREADY-COMMITTED logical deletes
+                # moves no rows: like OPTIMIZE, the log commit must
+                # carry dataChange=false on both sides or the change
+                # feed would re-report every row.
+                operation="OPTIMIZE",
+            )
+
+            def done() -> bool:
+                finish()
                 return True
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                continue
-        assert last_err is not None
-        raise last_err
+
+            return done
+
+        return self._transact(
+            name, attempt, "purge_dv", "OPTIMIZE", max_retries
+        )
 
     def restore(
         self, name: str, version: int | str, max_retries: int = 3
@@ -1953,42 +1742,21 @@ class SnapshotStore:
                 f"table {name!r}: version {version!r} is not on disk "
                 "(GC'd past the retention window?)"
             )
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            expected = self.current_version(name)
-            new_version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(table, new_version)
+
+        def attempt(txn: _Attempt):
             n_link = 0
-            try:
-                for root, _dirs, files in os.walk(src):
-                    rel = os.path.relpath(root, src)
-                    out = vdir if rel == "." else os.path.join(vdir, rel)
-                    os.makedirs(out, exist_ok=True)
-                    for f in files:
-                        os.link(
-                            os.path.join(root, f), os.path.join(out, f)
-                        )
-                        n_link += 1
-                self._commit(
-                    name, new_version,
-                    expected_version=expected,
-                    operation="RESTORE",
-                )
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception:
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under restore"
-                )
-                continue
-            return {"restored_to": version, "files_linked": n_link}
-        assert last_err is not None
-        raise last_err
+            for root, _dirs, files in os.walk(src):
+                rel = os.path.relpath(root, src)
+                out = txn.vdir if rel == "." else os.path.join(txn.vdir, rel)
+                os.makedirs(out, exist_ok=True)
+                for f in files:
+                    os.link(os.path.join(root, f), os.path.join(out, f))
+                    n_link += 1
+            return lambda: {"restored_to": version, "files_linked": n_link}
+
+        return self._transact(
+            name, attempt, "restore", "RESTORE", max_retries
+        )
 
     # -------------------------------------------------- commit protocol
 
@@ -2135,9 +1903,13 @@ class SnapshotStore:
         expected_version=UNCHECKED,
         operation: str = "WRITE",
     ) -> None:
-        """Atomically point ``_CURRENT`` at ``version`` (the commit
-        point), append it to the commit log, then garbage-collect
-        versions that fell off the retention window.
+        """Commit the written version ``version``, then
+        garbage-collect versions that fell off the retention window.
+        Inside the commit lock the order is: OCC check, ``_delta_log``
+        commit (``delta_log=True``; reconciled against ``version``'s
+        dir), pointer flip (the commit point), ``_LOG`` append. A
+        refused log commit therefore leaves the pointer, ``_LOG`` and
+        the log as they were.
 
         Optimistic concurrency: with ``expected_version`` set (the
         version the transaction READ — ``current_version()`` at its
@@ -2150,15 +1922,27 @@ class SnapshotStore:
         with open(tmp, "w", encoding="utf-8") as fh:
             fh.write(version)
         with self._commit_lock(name):
-            if expected_version is not UNCHECKED:
-                cur = self.current_version(name)
-                if cur != expected_version:
-                    os.unlink(tmp)
-                    raise ConcurrentWriteError(
-                        f"table {name!r}: committed version moved "
-                        f"{expected_version!r} -> {cur!r} since this "
-                        "transaction's snapshot read; re-read and retry"
+            try:
+                if expected_version is not UNCHECKED:
+                    cur = self.current_version(name)
+                    if cur != expected_version:
+                        raise ConcurrentWriteError(
+                            f"table {name!r}: committed version moved "
+                            f"{expected_version!r} -> {cur!r} since this "
+                            "transaction's snapshot read; re-read and retry"
+                        )
+                if self.delta_log:
+                    # Inside the lock and BEFORE the pointer, so
+                    # delta-log version order matches pointer-commit
+                    # order exactly (the log's own putIfAbsent is a
+                    # second, independent guard) and a refused log
+                    # commit moves nothing.
+                    self._delta_commit(
+                        name, os.path.join(table, version), operation=operation
                     )
+            except BaseException:
+                os.unlink(tmp)
+                raise
             os.replace(tmp, self._pointer_path(name))  # POSIX-atomic
             log = self._log_path(name)
             committed: list[str] = []
@@ -2183,11 +1967,6 @@ class SnapshotStore:
             with open(log_tmp, "w", encoding="utf-8") as fh:
                 fh.write("".join(v + "\n" for v in retained_list))
             os.replace(log_tmp, log)
-            if self.delta_log:
-                # Inside the lock so delta-log version order matches
-                # pointer-commit order exactly (the log's own
-                # putIfAbsent is a second, independent guard).
-                self._delta_commit(name, operation=operation)
         # GC deletes ONLY previously COMMITTED versions that fell off
         # the retention window. A bare "every v_ dir not retained"
         # sweep (the old rule) could destroy a CONCURRENT writer's
@@ -2226,6 +2005,101 @@ class SnapshotStore:
             except OSError:
                 pass
 
+    def _transact(
+        self,
+        name: str,
+        attempt,
+        what: str,
+        operation: str,
+        max_retries: int = 3,
+        expected=_READ,
+        materialize_dv: bool = False,
+    ):
+        """The one optimistic transaction every writer commits through
+        (Delta's one transaction around one log commit). Per attempt
+        the loop reads the snapshot version the commit will present
+        (``expected``: read fresh by default; ``overwrite`` passes its
+        caller's, ``UNCHECKED`` is last-writer-wins), allocates a
+        fresh ``v_<uuid>`` (``txn.vdir``) and calls ``attempt(txn)``.
+        The attempt plans against the snapshot, writes the version
+        dir, registers its overlapped futures and cache releases on
+        ``txn`` and returns a zero-arg callable that yields the
+        writer's result once the commit landed (or ends through
+        ``txn.no_commit``). The loop then joins the futures, adopts
+        the cdc stage and commits ``operation``.
+
+        Every failure first settles the futures and discards staged
+        change files; the releases run last on every exit. Then:
+
+        * an attempt whose version the pointer already names has
+          committed — it is never deleted or retried;
+        * otherwise its uncommitted dir is removed, and
+          ConstraintViolationError re-raises unchanged;
+        * ConcurrentWriteError, or any failure while the pointer moved
+          off the snapshot (a concurrent commit may have GC'd the
+          files the attempt was reading — ``snapshot GC'd under
+          <what>``), is a conflict: retry, up to ``max_retries``;
+        * anything else is a genuine error and re-raises unchanged.
+
+        ``materialize_dv`` (the raw-file rewriters): purge a pending
+        deletion vector before each attempt — those paths read data
+        files directly, so committing without applying the DV would
+        resurrect MoR-deleted rows (and the new version drops the
+        ``_dv``)."""
+        last_err: ConcurrentWriteError | None = None
+        for _ in range(max_retries):
+            if materialize_dv and self._has_dv(name):
+                self.purge_dv(name)
+            txn = _Attempt(
+                self.path(name),
+                self.current_version(name) if expected is _READ else expected,
+            )
+            try:
+                done = attempt(txn)
+                if txn.version is not None:
+                    for fut in filter(None, txn.jobs):
+                        fut.result()
+                    self._adopt_cdc(name, txn.cdc)
+                    self._commit(
+                        name, txn.version,
+                        expected_version=txn.expected,
+                        operation=operation,
+                    )
+            except Exception as exc:
+                # Settle every overlapped job first (ADVICE r12): none
+                # may run on beside the cleanup or the retry, and their
+                # own errors never shadow the one being handled.
+                self._abort_cdc(name, txn.cdc)
+                for fut in filter(None, txn.jobs):
+                    try:
+                        fut.result()
+                    except Exception:  # noqa: BLE001 — the primary error wins
+                        pass
+                cur = self.current_version(name)
+                if txn.version is not None:
+                    if cur == txn.version:
+                        raise
+                    shutil.rmtree(txn.vdir, ignore_errors=True)
+                if isinstance(exc, ConcurrentWriteError):
+                    last_err = exc
+                    continue
+                if (
+                    isinstance(exc, ConstraintViolationError)
+                    or txn.expected is UNCHECKED
+                    or cur == txn.expected
+                ):
+                    raise
+                last_err = ConcurrentWriteError(
+                    f"table {name!r}: snapshot GC'd under {what}"
+                )
+                continue
+            finally:
+                for release in txn.releases:
+                    release()
+            return done()
+        assert last_err is not None
+        raise last_err
+
     # ------------------------------------------- Delta transaction log
 
     def _cdc_pending(self, name: str) -> list[str]:
@@ -2258,11 +2132,12 @@ class SnapshotStore:
         independent consumers of the same pinned inputs, so their
         jobs back-fill each other's task tails instead of running
         back to back). Returns a Future of the staged rel paths, or
-        None when CDF is off. The caller MUST settle the future
-        before its commit: ``_adopt_cdc`` on the success path (the
-        commit adopts the files), ``_abort_cdc`` in every failure
-        handler (waits, then unlinks). Pending-list bookkeeping stays
-        in the CALLER's thread — ``_cdc_pending`` is thread-local."""
+        None when CDF is off. A writer hands it to its ``_transact``
+        attempt (``txn.cdc``), which settles it on every exit:
+        ``_adopt_cdc`` before the commit (the commit adopts the
+        files), ``_abort_cdc`` otherwise (waits, then unlinks).
+        Pending-list bookkeeping stays in the CALLER's thread —
+        ``_cdc_pending`` is thread-local."""
         if not self.cdf:
             return None
         return _submit_inheritable(self._stage_cdc_files, name, cdc_df)
@@ -2284,26 +2159,14 @@ class SnapshotStore:
                 pass
         self._discard_cdc(name)
 
-    @staticmethod
-    def _abort_validation(fut) -> None:
-        """Failure-path settle for an overlapped validation probe
-        (ADVICE r12 — the _abort_cdc analog): wait for the in-flight
-        job and swallow its outcome, so it never runs concurrently
-        with the caller's cleanup/retry and its own exception never
-        shadows the failure being handled."""
-        if fut is not None:
-            try:
-                fut.result()
-            except Exception:  # noqa: BLE001 — the primary error wins
-                pass
-
     def _validate_async(self, name: str, df: DataFrame):
         """Run the fused CHECK/invariant probe as an OVERLAPPED job
         (guide §2.6): the probe and the version write scan the same
         pinned input, so running them back to back serialized two
         full-parallel jobs. Returns a Future (or None when the table
-        declares no rules); the caller MUST join it before its commit
-        — a violation then still refuses the write before anything
+        declares no rules); a writer registers it on its ``_transact``
+        attempt (``txn.jobs``), which joins it before the commit — a
+        violation then still refuses the write before anything
         becomes visible, with the just-written uncommitted version
         dir dropped like a lost commit."""
         if not (self.constraints(name) or self.invariants(name)):
@@ -2369,11 +2232,15 @@ class SnapshotStore:
                 pass
         pending.clear()
 
-    def _delta_commit(self, name: str, operation: str = "WRITE") -> None:
+    def _delta_commit(
+        self, name: str, data: str | None, operation: str = "WRITE"
+    ) -> None:
         """Emit one protocol-conformant ``_delta_log`` commit
-        reconciling the log's live file set against the CURRENT data
-        dir (called inside the commit lock, right after the pointer
-        flip, so log order == commit order):
+        reconciling the log's live file set against the data dir
+        ``data`` — the version being committed, or the current one for
+        appends and metadata-only commits (called inside the commit
+        lock, before the pointer flip, so log order == commit order
+        and a refused log commit moves nothing):
 
         * adds    = files on disk the log doesn't know (stats from one
                     footer read each — or REUSED from the prior add
@@ -2393,7 +2260,6 @@ class SnapshotStore:
         from product_analytics_spark.sources import delta_log as dl
 
         table = self.path(name)
-        data = self.current_data_dir(name)
         if data is None:
             return
         log = dl.DeltaLog(table, owner=self.commit_owner)
@@ -2401,11 +2267,7 @@ class SnapshotStore:
         prev = log.snapshot(latest) if latest is not None else None
 
         parts = self._partition_dirs(data)
-        part_cols = []
-        for rel, _fs in parts:
-            for c, _v in self._partition_literals(rel):
-                if c not in part_cols:
-                    part_cols.append(c)
+        part_cols = self._partition_cols(parts)
         disk: dict[str, str] = {}  # rel path from TABLE root -> abs
         for _rel, files in parts:
             for f in files:
@@ -2818,7 +2680,6 @@ class SnapshotStore:
                         }
                     }
                 )
-            self._cdc_pending(name).clear()
         if prev is not None and not any(
             k in a for a in actions for k in ("add", "remove", "metaData", "cdc")
         ):
@@ -2828,6 +2689,10 @@ class SnapshotStore:
             version=0 if latest is None else latest + 1,
             operation=operation,
         )
+        # Only a landed commit adopts the staged change files: after a
+        # refused one they stay pending, so the writer's abort unlinks
+        # them instead of leaving orphans for VACUUM.
+        self._cdc_pending(name).clear()
 
     def delta_snapshot(self, name: str, version: int | None = None):
         """The table's Delta snapshot (live file set + metadata) at a
@@ -2915,7 +2780,6 @@ class SnapshotStore:
         operation: str = "WRITE",
         _validate: bool = True,
         _generated_applied: bool = False,
-        _pre_commit=None,
     ) -> None:
         """Atomic full replace: write a version dir, commit the pointer.
 
@@ -2933,6 +2797,46 @@ class SnapshotStore:
         z-order key flips the write to equal-DEPTH quantile lanes; the
         RESOLVED boolean is what gets recorded in the layout, so a
         later ``optimize()`` reclusters with the same scheme."""
+        return self._transact(
+            name,
+            lambda txn: self._stage_overwrite(
+                txn,
+                name,
+                df,
+                partition_by,
+                cluster_by,
+                zorder_by,
+                n_files,
+                zorder_depth,
+                operation,
+                _validate,
+                _generated_applied,
+            ),
+            "overwrite",
+            operation,
+            max_retries=1,
+            expected=expected_version,
+        )
+
+    def _stage_overwrite(
+        self,
+        txn: _Attempt,
+        name: str,
+        df: DataFrame,
+        partition_by: Sequence[str] = (),
+        cluster_by: Sequence[str] = (),
+        zorder_by: Sequence[str] = (),
+        n_files: int | None = None,
+        zorder_depth: bool | str = False,
+        operation: str = "WRITE",
+        validate: bool = True,
+        generated_applied: bool = False,
+    ):
+        """``overwrite``'s attempt body, shared by ``merge`` and
+        ``purge_dv``: write ``df`` as ``txn``'s version (validation
+        overlapped on ``txn``); returns the post-commit step that
+        records the layout and advances the identity high-water
+        mark."""
         if operation != "OPTIMIZE" and self.current_data_dir(name) is not None:
             # Replacing an EXISTING table's rows removes data —
             # forbidden on an append-only table (PROTOCOL.md). The
@@ -2949,25 +2853,27 @@ class SnapshotStore:
             # their ids; the user-facing insert paths (append/merge)
             # enforce GENERATED ALWAYS refusal.
             df = self._apply_identity(name, df)
-        # _generated_applied (round-13, guide §1.2 — the constraint-
+        # generated_applied (round-13, guide §1.2 — the constraint-
         # validation induction, applied to generated columns): merge
         # computes/validates the BATCH's generated columns up front,
         # and the kept prev-side rows were computed-or-validated by
         # their own commits, so re-probing the whole merged relation
         # here was a redundant full-scan job per merge.
-        if not _generated_applied:
+        if not generated_applied:
             df = self._apply_generated(name, df)
         # Validation rides ALONGSIDE the version write (guide §2.6 —
-        # _validate_async); joined in the pre-commit window below, so
-        # a violating write still commits nothing and leaves nothing.
-        val_fut = self._validate_async(name, df) if _validate else None
+        # _validate_async); the commit loop joins it before the
+        # commit, so a violating write still commits nothing and
+        # leaves nothing.
+        if validate:
+            txn.jobs.append(self._validate_async(name, df))
         if zorder_by and zorder_depth == "auto":
             from product_analytics_spark.functions.zorder import (
                 choose_equal_depth,
             )
 
             zorder_depth = choose_equal_depth(df, list(zorder_by))
-        version = self._write_version(
+        txn.version = self._write_version(
             name,
             df,
             partition_by=partition_by,
@@ -2976,45 +2882,24 @@ class SnapshotStore:
             n_files=n_files,
             zorder_depth=zorder_depth,
         )
-        if val_fut is not None or _pre_commit is not None:
-            # Join the overlapped validation probe and (merge seam)
-            # the overlapped cdc stage so the commit below adopts
-            # only validated, fully-staged state; on failure drop the
-            # just-written uncommitted version dir like a lost commit.
-            try:
-                if val_fut is not None:
-                    val_fut.result()
-                if _pre_commit is not None:
-                    _pre_commit()
-            except Exception:
-                shutil.rmtree(
-                    os.path.join(self.path(name), version),
-                    ignore_errors=True,
-                )
-                raise
-        try:
-            self._commit(
-                name, version,
-                expected_version=expected_version,
-                operation=operation,
+        version = txn.version
+
+        def finish() -> None:
+            # Record the layout declaration only AFTER the commit
+            # succeeds (ADVICE r8): a transaction that loses the OCC
+            # race committed nothing, so it must not redefine the
+            # clustering a later optimize() applies either.
+            self._record_layout(
+                name, partition_by, cluster_by, zorder_by,
+                zorder_depth=zorder_depth,
             )
-        except ConcurrentWriteError:
-            shutil.rmtree(
-                os.path.join(self.path(name), version), ignore_errors=True
-            )
-            raise
-        # Record the layout declaration only AFTER the commit succeeds
-        # (ADVICE r8): a transaction that loses the OCC race committed
-        # nothing, so it must not redefine the clustering a later
-        # optimize() applies either.
-        self._record_layout(
-            name, partition_by, cluster_by, zorder_by, zorder_depth=zorder_depth
-        )
-        if ident_supplied:
-            # A full refresh carrying ids above the HWM must advance
-            # it, or later appends would allocate duplicates of
-            # existing keys (ADVICE r9).
-            self._advance_identity_hwm(name, version)
+            if ident_supplied:
+                # A full refresh carrying ids above the HWM must
+                # advance it, or later appends would allocate
+                # duplicates of existing keys (ADVICE r9).
+                self._advance_identity_hwm(name, version)
+
+        return finish
 
     def append(self, name: str, df: DataFrame, partition_by: Sequence[str] = ()) -> None:
         """S5: plain append materialization.
@@ -3054,7 +2939,9 @@ class SnapshotStore:
             # An append IS a commit in Delta terms: add actions for the
             # new files (reconciled: disk minus log-live), no removes.
             with self._commit_lock(name):
-                self._delta_commit(name, operation="WRITE")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation="WRITE"
+                )
         self._maybe_auto_compact(name)
 
     def _assert_coordinator_routed(self, name: str) -> None:
@@ -3157,17 +3044,14 @@ class SnapshotStore:
         the exact window the OCC check must catch.
         """
         self._assert_appendable(name, "MERGE")
-        attempts = max_retries if isolated else 1
-        last_err: ConcurrentWriteError | None = None
         # Generated columns: a batch that omits them gets them
         # computed HERE (absent-vs-null matters — after the upsert
         # union the distinction is gone and validation would reject
         # the nulls).
         batch = self._apply_generated(name, batch)
         keys_l = [key] if isinstance(key, str) else list(key)
-        for _ in range(attempts):
-            snapshot_version = self.current_version(name) if isolated else UNCHECKED
-            cdc_fut = None
+
+        def attempt(txn: _Attempt):
             prev = self.read(name)
             batch_eff = (
                 self._identity_merge_batch(name, prev, batch, keys_l)
@@ -3184,7 +3068,6 @@ class SnapshotStore:
             # aligned to the merged schema first (batch rows acquire
             # typed NULLs for prev-only columns in the union, and an
             # invariant on such a column must still see them).
-            val_fut = None
             if prev is not None and (
                 self.constraints(name) or self.invariants(name)
             ):
@@ -3197,9 +3080,9 @@ class SnapshotStore:
                             F.lit(None).cast(fld.dataType),
                         )
                 # Overlapped with the cdc stage + version write below
-                # (guide §2.6); joined in overwrite's pre-commit
-                # window, so a violating batch still commits nothing.
-                val_fut = self._validate_async(name, val_df)
+                # (guide §2.6); joined before the commit, so a
+                # violating batch still commits nothing.
+                txn.jobs.append(self._validate_async(name, val_df))
             if post_scan is not None:
                 post_scan()
             if self.cdf and prev is not None:
@@ -3210,13 +3093,13 @@ class SnapshotStore:
                 bkeys = batch_eff.select(*keys_l).distinct()
                 pkeys = prev.select(*keys_l).distinct()
                 ct = "_change_type"
-                # Overlapped cdc write (guide §2.6): runs while
-                # overwrite() below writes the merged version —
-                # independent consumers of the same immutable prev
-                # files + pinned batch (identity ids localCheckpoint'd
-                # in _identity_merge_batch). The commit adopts the
-                # staged files via the _pre_commit join below.
-                cdc_fut = self._stage_cdc_async(
+                # Overlapped cdc write (guide §2.6): runs while the
+                # merged version is written below — independent
+                # consumers of the same immutable prev files + pinned
+                # batch (identity ids localCheckpoint'd in
+                # _identity_merge_batch). The commit adopts the staged
+                # files.
+                txn.cdc = self._stage_cdc_async(
                     name,
                     prev.join(bkeys, keys_l, "left_semi")
                     .withColumn(ct, F.lit("update_preimage"))
@@ -3233,80 +3116,49 @@ class SnapshotStore:
                         allowMissingColumns=True,
                     ),
                 )
-            def _join_pre_commit(vf=None, cf=None):
-                if vf is not None:
-                    vf.result()
-                self._adopt_cdc(name, cf)
+            finish = self._stage_overwrite(
+                txn,
+                name,
+                merged,
+                partition_by=partition_by,
+                cluster_by=cluster_by,
+                validate=prev is None,
+                # The batch's generated columns were computed/validated
+                # at the top of this merge and the kept prev-side rows
+                # by their own commits (round-13, guide §1.2) — skip
+                # the full-relation re-probe. Only safe when prev
+                # actually CARRIES every declared column (a
+                # declare-after-data table that was never rewritten
+                # must still fail the probe on its NULL prev side).
+                generated_applied=(
+                    prev is None
+                    or all(
+                        c in prev.columns
+                        for c in self.generated_columns(name)
+                    )
+                ),
+            )
 
-            try:
-                self.overwrite(
-                    name,
-                    merged,
-                    partition_by=partition_by,
-                    cluster_by=cluster_by,
-                    expected_version=snapshot_version,
-                    _validate=prev is None,
-                    # The batch's generated columns were computed/
-                    # validated at the top of this merge and the kept
-                    # prev-side rows by their own commits (round-13,
-                    # guide §1.2) — skip overwrite's full-relation
-                    # re-probe. Only safe when prev actually CARRIES
-                    # every declared column (a declare-after-data
-                    # table that was never rewritten must still fail
-                    # the probe on its NULL prev side).
-                    _generated_applied=(
-                        prev is None
-                        or all(
-                            c in prev.columns
-                            for c in self.generated_columns(name)
-                        )
-                    ),
-                    _pre_commit=(
-                        (
-                            lambda vf=val_fut, cf=cdc_fut: _join_pre_commit(
-                                vf, cf
-                            )
-                        )
-                        if (cdc_fut is not None or val_fut is not None)
-                        else None
-                    ),
-                )
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                continue
-            except ConstraintViolationError:
-                # A violating batch must surface as such (ADVICE r12):
-                # since the validation probe joined inside overwrite's
-                # try, the generic handler below would reclassify the
-                # violation as a concurrency conflict whenever another
-                # writer committed during the attempt — masking the
-                # real error and paying a full version write per retry.
-                self._abort_cdc(name, cdc_fut)
-                raise
-            except Exception:
-                # A concurrent commit may have GC'd the snapshot this
-                # merge's plan lazily reads (retention window) — with
-                # isolation on, that is the same conflict surfaced
-                # during the write instead of at the pointer compare.
-                # Version unmoved ⇒ genuine failure: re-raise.
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                if (
-                    not isolated
-                    or self.current_version(name) == snapshot_version
-                ):
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under merge"
-                )
-                continue
-            out = self.read(name)
-            assert out is not None
-            return out
-        assert last_err is not None
-        raise last_err
+            def done() -> DataFrame:
+                finish()
+                out = self.read(name)
+                assert out is not None
+                return out
+
+            return done
+
+        # A concurrent commit may GC the snapshot this merge's plan
+        # lazily reads (retention window): with isolation on, the loop
+        # classifies that as the same conflict surfaced during the
+        # write. Without it the merge is last-writer-wins, one attempt.
+        return self._transact(
+            name,
+            attempt,
+            "merge",
+            "WRITE",
+            max_retries if isolated else 1,
+            expected=_READ if isolated else UNCHECKED,
+        )
 
     # ----------------------------------------------------- compaction
 
@@ -3428,105 +3280,70 @@ class SnapshotStore:
         point fired after each attempt's manifest plan and before its
         commit — interleaving tests use it to land a concurrent commit
         inside the window the OCC check must catch."""
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            # A pending deletion vector must be MATERIALIZED before a
-            # raw-file rewrite: these paths read data files directly,
-            # so committing without applying the DV would resurrect
-            # MoR-deleted rows (and the new version drops the _dv).
-            if self._has_dv(name):
-                self.purge_dv(name)
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
-            # The try covers the SCAN phase too (plan_compaction's
+
+        def attempt(txn: _Attempt):
+            # The attempt covers the SCAN phase too (plan_compaction's
             # getsize walk), not just the rewrite: with a small
             # retention window a concurrent commit can GC the scanned
             # version mid-plan, and that must surface as a conflict
             # retry, not a raw OSError (ADVICE r8).
-            try:
-                plan = self.plan_compaction(name, target_bytes)
-                if post_scan is not None:
-                    post_scan()
-                if not plan:
-                    return {"files_before": 0, "files_after": 0, "groups": 0}
-                data = self.current_data_dir(name)
-                assert data is not None  # plan non-empty ⇒ data exists
-                rt = self._row_tracking(name)
-                rt_base = self._rt_base_df(name, data) if rt else None
-                n_before = sum(len(g) for g in plan)
+            plan = self.plan_compaction(name, target_bytes)
+            if post_scan is not None:
+                post_scan()
+            if not plan:
+                return txn.no_commit(
+                    {"files_before": 0, "files_after": 0, "groups": 0}
+                )
+            data = self.current_data_dir(name)
+            assert data is not None  # plan non-empty ⇒ data exists
+            rt = self._row_tracking(name)
+            rt_base = self._rt_base_df(name, data) if rt else None
+            vdir = txn.vdir
 
-                def _rewrite_group(group: list[str]) -> None:
-                    rel = os.path.relpath(
-                        os.path.dirname(group[0]), data
-                    )
-                    out_dir = (
-                        vdir if rel == "." else os.path.join(vdir, rel)
-                    )
-                    reader = self.spark.read
-                    if rt:
-                        reader = reader.option("mergeSchema", "true")
-                    df = reader.parquet(*group)
-                    if rt:
-                        # materialize ids so the merged file keeps them
-                        # (fresh baseRowIds on the new file lose to the
-                        # materialized column via coalesce at read)
-                        df = self._rt_attach_ids(
-                            name, data, df, base_df=rt_base
+            def _rewrite_group(group: list[str]) -> None:
+                rel = os.path.relpath(os.path.dirname(group[0]), data)
+                out_dir = vdir if rel == "." else os.path.join(vdir, rel)
+                reader = self.spark.read
+                if rt:
+                    reader = reader.option("mergeSchema", "true")
+                df = reader.parquet(*group)
+                if rt:
+                    # materialize ids so the merged file keeps them
+                    # (fresh baseRowIds on the new file lose to the
+                    # materialized column via coalesce at read)
+                    df = self._rt_attach_ids(name, data, df, base_df=rt_base)
+                # Groups of one directory share out_dir, and two
+                # concurrent append jobs into one directory race on
+                # the commit protocol's shared _temporary/0 staging
+                # dir — write each group into its own staging dir and
+                # rename the parquet in (the _stage_cdc pattern;
+                # rename is same-fs atomic).
+                tmp = os.path.join(vdir, f"_grp_{uuid.uuid4().hex[:8]}")
+                df.coalesce(1).write.parquet(tmp)
+                os.makedirs(out_dir, exist_ok=True)
+                for f in sorted(os.listdir(tmp)):
+                    if f.endswith(".parquet") and not f.startswith((".", "_")):
+                        os.rename(
+                            os.path.join(tmp, f), os.path.join(out_dir, f)
                         )
-                    # Groups of one directory share out_dir, and two
-                    # concurrent append jobs into one directory race
-                    # on the commit protocol's shared _temporary/0
-                    # staging dir — write each group into its own
-                    # staging dir and rename the parquet in (the
-                    # _stage_cdc pattern; rename is same-fs atomic).
-                    tmp = os.path.join(
-                        vdir, f"_grp_{uuid.uuid4().hex[:8]}"
-                    )
-                    df.coalesce(1).write.parquet(tmp)
-                    os.makedirs(out_dir, exist_ok=True)
-                    for f in sorted(os.listdir(tmp)):
-                        if f.endswith(".parquet") and not f.startswith(
-                            (".", "_")
-                        ):
-                            os.rename(
-                                os.path.join(tmp, f),
-                                os.path.join(out_dir, f),
-                            )
-                    shutil.rmtree(tmp, ignore_errors=True)
+                shutil.rmtree(tmp, ignore_errors=True)
 
-                # independent per-group rewrites overlap (guide §2.6)
-                self._parallel_jobs(
-                    [
-                        (lambda g: lambda: _rewrite_group(g))(group)
-                        for group in plan
-                    ]
-                )
-                self._commit(name, version, expected_version=expected, operation="OPTIMIZE")
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception:
-                # A concurrent commit may have GC'd this attempt's
-                # snapshot mid-rewrite (retention window) — same
-                # conflict, detected one step earlier. Anything with
-                # the version UNMOVED is a real error: re-raise.
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under compaction"
-                )
-                continue
-            n_after = sum(len(fs) for _r, fs in self._partition_dirs(vdir))
-            return {
-                "files_before": n_before,
-                "files_after": n_after,
+            # independent per-group rewrites overlap (guide §2.6)
+            self._parallel_jobs(
+                [(lambda g: lambda: _rewrite_group(g))(group) for group in plan]
+            )
+            return lambda: {
+                "files_before": sum(len(g) for g in plan),
+                "files_after": sum(
+                    len(fs) for _r, fs in self._partition_dirs(vdir)
+                ),
                 "groups": len(plan),
             }
-        assert last_err is not None
-        raise last_err
+
+        return self._transact(
+            name, attempt, "compaction", "OPTIMIZE", max_retries,
+            materialize_dv=True,
+        )
 
     def optimize(
         self,
@@ -3593,135 +3410,137 @@ class SnapshotStore:
             bool(liquid_keys) and len(keys) >= 2
         )
         zdepth = bool(layout.get("zorder_depth"))
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            # A pending deletion vector must be MATERIALIZED before a
-            # raw-file rewrite: these paths read data files directly,
-            # so committing without applying the DV would resurrect
-            # MoR-deleted rows (and the new version drops the _dv).
-            if self._has_dv(name):
-                self.purge_dv(name)
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
-            # Scan phase inside the try: getsize/walk over a snapshot a
-            # concurrent commit may GC mid-scan must become a conflict
-            # retry, not a raw OSError (ADVICE r8).
-            try:
-                data = self.current_data_dir(name)
-                if data is None:
-                    raise ValueError(f"unknown table {name!r}")
-                parts = self._partition_dirs(data)
-                if not parts:
-                    return {
-                        "files_before": 0,
-                        "files_after": 0,
-                        "reclustered": False,
-                    }
-                rt = self._row_tracking(name)
-                rt_base = self._rt_base_df(name, data) if rt else None
-                n_before = sum(len(fs) for _r, fs in parts)
 
-                def _recluster_dir(rel: str, files: list[str]) -> None:
-                    out_dir = (
-                        vdir if rel == "." else os.path.join(vdir, rel)
-                    )
-                    n_files = max(
-                        1,
-                        -(-sum(os.path.getsize(f) for f in files) // target_bytes),
-                    )
-                    reader = self.spark.read
-                    if rt:
-                        reader = reader.option("mergeSchema", "true")
-                    df = reader.parquet(*files)
-                    if rt:
-                        # recluster preserves row identity by
-                        # materializing ids into the rewritten files
-                        df = self._rt_attach_ids(
-                            name, data, df, base_df=rt_base
-                        )
-                    if zorder:
-                        from product_analytics_spark.functions.zorder import (
-                            morton_zvalue,
-                        )
-
-                        df = df.withColumn(
-                            "__zval",
-                            morton_zvalue(df, keys, equal_depth=zdepth),
-                        )
-                        sort_keys = ["__zval"]
-                    else:
-                        sort_keys = keys
-                    if sort_keys:
-                        df = df.repartitionByRange(
-                            n_files, *sort_keys
-                        ).sortWithinPartitions(*sort_keys)
-                    else:
-                        # no declared clustering (WHERE-scoped
-                        # compaction of an unclustered table):
-                        # plain bin-pack
-                        df = df.repartition(n_files)
-                    if zorder:
-                        df = df.drop("__zval")
-                    df.write.mode("append").parquet(out_dir)
-
-                rewrites = []
-                for rel, files in parts:
-                    out_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                    if where is not None and not all(
-                        (k, str(v)) in self._partition_literals(rel)
-                        for k, v in where.items()
-                    ):
-                        # OPTIMIZE ... WHERE: partitions outside the
-                        # predicate are carried by HARDLINK — zero
-                        # bytes moved, same inodes (Delta skips
-                        # untouched partitions the same way; at
-                        # 100 TB you compact the hot day's
-                        # partition, never the table)
-                        os.makedirs(out_dir, exist_ok=True)
-                        for f in files:
-                            os.link(
-                                f,
-                                os.path.join(
-                                    out_dir, os.path.basename(f)
-                                ),
-                            )
-                        continue
-                    rewrites.append(
-                        (lambda r, fs: lambda: _recluster_dir(r, fs))(
-                            rel, list(files)
-                        )
-                    )
-                # per-directory stats pass + sorted rewrite are
-                # independent jobs — overlap them (guide §2.6); the
-                # per-directory z-value/lane stats are unchanged, so
-                # file layouts and skipping stats stay identical.
-                self._parallel_jobs(rewrites)
-                self._commit(name, version, expected_version=expected, operation="OPTIMIZE")
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except Exception:
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under optimize"
+        def attempt(txn: _Attempt):
+            # Scan phase inside the attempt: getsize/walk over a
+            # snapshot a concurrent commit may GC mid-scan must become
+            # a conflict retry, not a raw OSError (ADVICE r8).
+            data = self.current_data_dir(name)
+            if data is None:
+                raise ValueError(f"unknown table {name!r}")
+            parts = self._partition_dirs(data)
+            if not parts:
+                return txn.no_commit(
+                    {"files_before": 0, "files_after": 0, "reclustered": False}
                 )
-                continue
-            n_after = sum(
-                len(fs) for _r, fs in self._partition_dirs(vdir)
-            )
-            return {
-                "files_before": n_before,
-                "files_after": n_after,
+            rt = self._row_tracking(name)
+            rt_base = self._rt_base_df(name, data) if rt else None
+            vdir = txn.vdir
+
+            def _recluster_dir(rel: str, files: list[str]) -> None:
+                out_dir = vdir if rel == "." else os.path.join(vdir, rel)
+                n_files = max(
+                    1,
+                    -(-sum(os.path.getsize(f) for f in files) // target_bytes),
+                )
+                reader = self.spark.read
+                if rt:
+                    reader = reader.option("mergeSchema", "true")
+                df = reader.parquet(*files)
+                if rt:
+                    # recluster preserves row identity by
+                    # materializing ids into the rewritten files
+                    df = self._rt_attach_ids(name, data, df, base_df=rt_base)
+                if zorder:
+                    from product_analytics_spark.functions.zorder import (
+                        morton_zvalue,
+                    )
+
+                    df = df.withColumn(
+                        "__zval",
+                        morton_zvalue(df, keys, equal_depth=zdepth),
+                    )
+                    sort_keys = ["__zval"]
+                else:
+                    sort_keys = keys
+                if sort_keys:
+                    df = df.repartitionByRange(
+                        n_files, *sort_keys
+                    ).sortWithinPartitions(*sort_keys)
+                else:
+                    # no declared clustering (WHERE-scoped compaction
+                    # of an unclustered table): plain bin-pack
+                    df = df.repartition(n_files)
+                if zorder:
+                    df = df.drop("__zval")
+                df.write.mode("append").parquet(out_dir)
+
+            rewrites = []
+            for rel, files in parts:
+                if where is not None and not all(
+                    (k, str(v)) in self._partition_literals(rel)
+                    for k, v in where.items()
+                ):
+                    # OPTIMIZE ... WHERE: partitions outside the
+                    # predicate are carried by HARDLINK — zero bytes
+                    # moved, same inodes (Delta skips untouched
+                    # partitions the same way; at 100 TB you compact
+                    # the hot day's partition, never the table)
+                    self._link_files(vdir, rel, files)
+                    continue
+                rewrites.append(
+                    (lambda r, fs: lambda: _recluster_dir(r, fs))(
+                        rel, list(files)
+                    )
+                )
+            # per-directory stats pass + sorted rewrite are independent
+            # jobs — overlap them (guide §2.6); the per-directory
+            # z-value/lane stats are unchanged, so file layouts and
+            # skipping stats stay identical.
+            self._parallel_jobs(rewrites)
+            return lambda: {
+                "files_before": sum(len(fs) for _r, fs in parts),
+                "files_after": sum(
+                    len(fs) for _r, fs in self._partition_dirs(vdir)
+                ),
                 "reclustered": bool(keys),
             }
-        assert last_err is not None
-        raise last_err
+
+        return self._transact(
+            name, attempt, "optimize", "OPTIMIZE", max_retries,
+            materialize_dv=True,
+        )
 
     # ------------------------------------------- copy-on-write DML
+
+    @classmethod
+    def _partition_cols(cls, parts) -> list[str]:
+        """Hive partition columns of a ``_partition_dirs`` listing, in
+        first-seen order ([] for a flat table)."""
+        return list(
+            dict.fromkeys(
+                c for rel, _fs in parts for c, _v in cls._partition_literals(rel)
+            )
+        )
+
+    @staticmethod
+    def _link_files(vdir: str, rel: str, files: Sequence[str]) -> int:
+        """Hardlink ``files`` (same basenames) into the ``rel`` subdir
+        of version dir ``vdir``, creating it even when ``files`` is
+        empty: an untouched data file carried into a new version costs
+        one metadata op, zero bytes. Returns the link count."""
+        out_dir = vdir if rel == "." else os.path.join(vdir, rel)
+        os.makedirs(out_dir, exist_ok=True)
+        for f in files:
+            os.link(f, os.path.join(out_dir, os.path.basename(f)))
+        return len(files)
+
+    def _write_appended(
+        self, vdir: str, df: DataFrame, part_cols: Sequence[str]
+    ) -> None:
+        """Append ``df`` as new files of version dir ``vdir``
+        (hive-partitioned by ``part_cols`` when given) — the MoR DMLs'
+        O(changed rows) data write."""
+        if part_cols:
+            # size-adaptive keyed repartition: keep the partitioned
+            # write parallel under AQE coalescing without 32-task
+            # overhead on an O(matched)-row rewrite (same rationale as
+            # _write_version, round-12).
+            df = df.repartition(self._n_write_tasks(df), *part_cols)
+        writer = df.write.mode("append")
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(vdir)
 
     @staticmethod
     def _partition_literals(rel: str) -> list[tuple[str, str]]:
@@ -3779,234 +3598,197 @@ class SnapshotStore:
         there to exercise the conflict-and-retry path deterministically.
         """
         self._assert_appendable(name, "DELETE/UPDATE (COW rewrite)")
-        last_err: ConcurrentWriteError | None = None
-        for _ in range(max_retries):
-            # A pending deletion vector must be MATERIALIZED before a
-            # raw-file rewrite: these paths read data files directly,
-            # so committing without applying the DV would resurrect
-            # MoR-deleted rows (and the new version drops the _dv).
-            if self._has_dv(name):
-                self.purge_dv(name)
-            expected = self.current_version(name)
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path(name), version)
+
+        def attempt(txn: _Attempt):
+            # Scan phase inside the attempt (ADVICE r8): the
+            # full.count() and input_file_name() collect read a
+            # snapshot a concurrent commit can GC mid-scan under a
+            # small retention window — that must take the
+            # version-moved ⇒ retry path, not surface as a raw
+            # Spark/OS error.
+            vdir = txn.vdir
+            data = self.current_data_dir(name)
+            if data is None:
+                raise ValueError(f"unknown table {name!r}")
+            parts = self._partition_dirs(data)
+            all_files = [f for _rel, fs in parts for f in fs]
+            manifest_local = {os.path.normpath(f) for f in all_files}
+            # basePath == the dir itself ⇒ identical to a plain
+            # dir read; route through the schema memo.
+            full = self._read_version_dir(data)
+            # ONE scan yields both the row count and the touched-
+            # file manifest (round-12 optimization, guide §1.2:
+            # these were two full passes). collect_set over the
+            # conditional file name is |touched files|-sized —
+            # still the documented driver-scalar manifest collect,
+            # never data. input_file_name() is PROJECTED first:
+            # the analyzer refuses non-deterministic expressions
+            # as direct aggregate arguments
+            # (AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION);
+            # over the projected attribute the aggregate is legal.
+            agg_row = (
+                full.select(
+                    F.when(
+                        F.expr(predicate), F.input_file_name()
+                    ).alias("__f")
+                )
+                .select(
+                    F.count(F.lit(1)).alias("__n"),
+                    F.collect_set("__f").alias("__files"),
+                )
+                .collect()[0]
+            )
+            rows_before = agg_row["__n"]
+            touched = set(agg_row["__files"])
+
+            def _local(p: str) -> str:
+                # input_file_name() yields a percent-encoded file:
+                # URI; decode it or paths/hive values with encoded
+                # chars (space, %, #, non-ASCII) never match the
+                # os.walk manifest and their files silently escape
+                # the rewrite.
+                from urllib.parse import unquote, urlparse
+
+                parsed = urlparse(p)
+                return unquote(parsed.path) if parsed.scheme else unquote(p)
+
+            touched_local = {os.path.normpath(_local(p)) for p in touched}
+            if post_scan is not None:
+                post_scan()
+            stray = touched_local - manifest_local
+            if stray:
+                raise RuntimeError(
+                    f"COW rewrite of {name!r}: {len(stray)} scanned "
+                    f"file(s) missing from the on-disk manifest (URI "
+                    f"decode mismatch?): {sorted(stray)[:3]}"
+                )
+            if cdc_build is not None and self.cdf:
+                # Change feed BEFORE the rewrite: ``cdc_build`` reads
+                # the matching rows of THIS attempt's snapshot
+                # (``full`` carries the hive partition columns via
+                # basePath), so the staged change files pair with
+                # this attempt's commit; a lost race discards them.
+                # Overlapped with the hardlink pass + rewrite write
+                # below (guide §2.6) — both read the same immutable
+                # snapshot files; joined before the commit.
+                txn.cdc = self._stage_cdc_async(
+                    name, cdc_build(full, F.expr(predicate))
+                )
+            touched_by_rel: list[tuple[str, list[str]]] = []
             n_link = n_rewrite = 0
-            cdc_fut = None
-            val_fut = None
-            # Scan phase inside the try (ADVICE r8): the full.count()
-            # and input_file_name() collect read a snapshot a concurrent
-            # commit can GC mid-scan under a small retention window —
-            # that must take the version-moved ⇒ retry path, not
-            # surface as a raw Spark/OS error.
-            try:
-                data = self.current_data_dir(name)
-                if data is None:
-                    raise ValueError(f"unknown table {name!r}")
-                parts = self._partition_dirs(data)
-                all_files = [f for _rel, fs in parts for f in fs]
-                manifest_local = {os.path.normpath(f) for f in all_files}
-                # basePath == the dir itself ⇒ identical to a plain
-                # dir read; route through the schema memo.
-                full = self._read_version_dir(data)
-                # ONE scan yields both the row count and the touched-
-                # file manifest (round-12 optimization, guide §1.2:
-                # these were two full passes). collect_set over the
-                # conditional file name is |touched files|-sized —
-                # still the documented driver-scalar manifest collect,
-                # never data. input_file_name() is PROJECTED first:
-                # the analyzer refuses non-deterministic expressions
-                # as direct aggregate arguments
-                # (AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION);
-                # over the projected attribute the aggregate is legal.
-                agg_row = (
-                    full.select(
-                        F.when(
-                            F.expr(predicate), F.input_file_name()
-                        ).alias("__f")
-                    )
-                    .select(
-                        F.count(F.lit(1)).alias("__n"),
-                        F.collect_set("__f").alias("__files"),
-                    )
-                    .collect()[0]
+            for rel, files in parts:
+                dir_touched = [
+                    f for f in files if os.path.normpath(f) in touched_local
+                ]
+                n_link += self._link_files(
+                    vdir,
+                    rel,
+                    [f for f in files if os.path.normpath(f) not in touched_local],
                 )
-                rows_before = agg_row["__n"]
-                touched = set(agg_row["__files"])
-
-                def _local(p: str) -> str:
-                    # input_file_name() yields a percent-encoded file:
-                    # URI; decode it or paths/hive values with encoded
-                    # chars (space, %, #, non-ASCII) never match the
-                    # os.walk manifest and their files silently escape
-                    # the rewrite.
-                    from urllib.parse import unquote, urlparse
-
-                    parsed = urlparse(p)
-                    return unquote(parsed.path) if parsed.scheme else unquote(p)
-
-                touched_local = {os.path.normpath(_local(p)) for p in touched}
-                if post_scan is not None:
-                    post_scan()
-                stray = touched_local - manifest_local
-                if stray:
-                    raise RuntimeError(
-                        f"COW rewrite of {name!r}: {len(stray)} scanned "
-                        f"file(s) missing from the on-disk manifest (URI "
-                        f"decode mismatch?): {sorted(stray)[:3]}"
+                if dir_touched:
+                    touched_by_rel.append((rel, dir_touched))
+                    n_rewrite += len(dir_touched)
+            # ONE rewrite pass over every touched file (round-12,
+            # guide §1.2/§6): the per-directory loop paid one
+            # schema resolution, one constraint probe and one
+            # write JOB per touched hive dir, serially — a
+            # partitioned table whose predicate touched every
+            # partition serialized 3×|dirs| tiny jobs. One
+            # hive-aware read (partition columns attached by the
+            # scan; type inference disabled so they arrive as the
+            # same STRINGS the literal injection produced), one
+            # transform, one validation probe, one partitioned
+            # write clustered by the partition key (1 file per
+            # touched dir, matching the old per-dir output).
+            if touched_by_rel and touched_by_rel[0][0] == ".":
+                df = self.spark.read.parquet(*touched_by_rel[0][1])
+                replaced = transform(df, F.expr(predicate))
+                # COW UPDATE can mint violating rows — gate the
+                # rewritten rows (DELETE only removes, but the
+                # check is one fused predicate either way).
+                # Overlapped with the rewrite write (guide §2.6);
+                # joined before the commit below.
+                txn.jobs.append(self._validate_async(name, replaced))
+                replaced.write.mode("append").parquet(vdir)
+            elif touched_by_rel:
+                part_cols = [
+                    c
+                    for c, _v in self._partition_literals(
+                        touched_by_rel[0][0]
                     )
-                if cdc_build is not None and self.cdf:
-                    # Change feed BEFORE the rewrite: the builder reads
-                    # the matching rows of THIS attempt's snapshot
-                    # (``full`` carries the hive partition columns via
-                    # basePath), so the staged change files pair with
-                    # this attempt's commit; a lost race discards them.
-                    # Overlapped with the hardlink pass + rewrite write
-                    # below (guide §2.6) — both read the same immutable
-                    # snapshot files; joined before the commit.
-                    cdc_fut = self._stage_cdc_async(
-                        name, cdc_build(full, F.expr(predicate))
-                    )
-                touched_by_rel: list[tuple[str, list[str]]] = []
-                for rel, files in parts:
-                    out_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                    os.makedirs(out_dir, exist_ok=True)
-                    dir_touched = [
-                        f for f in files if os.path.normpath(f) in touched_local
-                    ]
-                    for f in files:
-                        if os.path.normpath(f) not in touched_local:
-                            os.link(
-                                f, os.path.join(out_dir, os.path.basename(f))
-                            )
-                            n_link += 1
-                    if dir_touched:
-                        touched_by_rel.append((rel, dir_touched))
-                        n_rewrite += len(dir_touched)
-                # ONE rewrite pass over every touched file (round-12,
-                # guide §1.2/§6): the per-directory loop paid one
-                # schema resolution, one constraint probe and one
-                # write JOB per touched hive dir, serially — a
-                # partitioned table whose predicate touched every
-                # partition serialized 3×|dirs| tiny jobs. One
-                # hive-aware read (partition columns attached by the
-                # scan; type inference disabled so they arrive as the
-                # same STRINGS the literal injection produced), one
-                # transform, one validation probe, one partitioned
-                # write clustered by the partition key (1 file per
-                # touched dir, matching the old per-dir output).
-                if touched_by_rel and touched_by_rel[0][0] == ".":
-                    df = self.spark.read.parquet(*touched_by_rel[0][1])
-                    replaced = transform(df, F.expr(predicate))
-                    # COW UPDATE can mint violating rows — gate the
-                    # rewritten rows (DELETE only removes, but the
-                    # check is one fused predicate either way).
-                    # Overlapped with the rewrite write (guide §2.6);
-                    # joined before the commit below.
-                    val_fut = self._validate_async(name, replaced)
-                    replaced.write.mode("append").parquet(vdir)
-                elif touched_by_rel:
-                    part_cols = [
-                        c
-                        for c, _v in self._partition_literals(
-                            touched_by_rel[0][0]
-                        )
-                    ]
-                    all_touched = sorted(
-                        f for _rel, fs in touched_by_rel for f in fs
-                    )
-                    # Partition values must arrive as the same STRINGS
-                    # the literal injection produced ("03" stays "03",
-                    # never int 3). The old form toggled the session
-                    # conf partitionColumnTypeInference.enabled, a
-                    # cross-thread mutation of shared SQLConf while
-                    # the overlapped cdc job may still run (ADVICE
-                    # r12). An explicit read schema with STRING
-                    # partition columns is the per-reader equivalent:
-                    # user-specified partition types take the raw
-                    # unescaped directory value (verified identical
-                    # rows + schema to the conf-off read).
-                    from pyspark.sql import types as T
-
-                    part_set = set(part_cols)
-                    rd_schema = T.StructType(
-                        [
-                            T.StructField(f.name, T.StringType(), True)
-                            if f.name in part_set
-                            else f
-                            for f in full.schema.fields
-                        ]
-                    )
-                    df = (
-                        self.spark.read.schema(rd_schema)
-                        .option("basePath", data)
-                        .parquet(*all_touched)
-                    )
-                    replaced = transform(df, F.expr(predicate))
-                    # Overlapped validation (guide §2.6), joined
-                    # before the commit below.
-                    val_fut = self._validate_async(name, replaced)
-                    (
-                        replaced.repartition(
-                            max(len(touched_by_rel), 1), *part_cols
-                        )
-                        .write.mode("append")
-                        .partitionBy(*part_cols)
-                        .parquet(vdir)
-                    )
-                if val_fut is not None:
-                    val_fut.result()
-                self._adopt_cdc(name, cdc_fut)
-                self._commit(name, version, expected_version=expected, operation="DML")
-            except ConcurrentWriteError as exc:
-                last_err = exc
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                continue
-            except ConstraintViolationError:
-                # Same as merge (ADVICE r12): a COW UPDATE that mints
-                # violating rows must raise the violation, not be
-                # retried as a concurrency conflict when another
-                # writer happened to commit during the attempt.
-                self._abort_cdc(name, cdc_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
-            except Exception:
-                # A concurrent commit may have GC'd this attempt's
-                # snapshot mid-rewrite (hardlink source vanished) —
-                # same conflict, surfaced earlier. Version unmoved ⇒
-                # genuine failure: re-raise.
-                self._abort_cdc(name, cdc_fut)
-                self._abort_validation(val_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
-                if self.current_version(name) == expected:
-                    raise
-                last_err = ConcurrentWriteError(
-                    f"table {name!r}: snapshot GC'd under COW rewrite"
+                ]
+                all_touched = sorted(
+                    f for _rel, fs in touched_by_rel for f in fs
                 )
-                continue
-            # rows_after from the committed version's parquet footers
-            # (round-13, guide §1.2): this was a full count JOB per
-            # DML (`self.read(name).count()`). The committed version
-            # is exactly ``vdir`` (hardlinks + rewritten files, no
-            # _dv — a pending deletion vector was purged before the
-            # scan), so the footers' num_rows sum IS the live row
-            # count — O(|files|) driver metadata reads, zero jobs.
-            import pyarrow.parquet as pq
+                # Partition values must arrive as the same STRINGS
+                # the literal injection produced ("03" stays "03",
+                # never int 3). The old form toggled the session
+                # conf partitionColumnTypeInference.enabled, a
+                # cross-thread mutation of shared SQLConf while
+                # the overlapped cdc job may still run (ADVICE
+                # r12). An explicit read schema with STRING
+                # partition columns is the per-reader equivalent:
+                # user-specified partition types take the raw
+                # unescaped directory value (verified identical
+                # rows + schema to the conf-off read).
+                from pyspark.sql import types as T
 
-            rows_after = 0
-            for _rel, fs in self._partition_dirs(vdir):
-                for f in fs:
-                    rows_after += pq.ParquetFile(f).metadata.num_rows
-            return {
-                "files_total": len(all_files),
-                "files_rewritten": n_rewrite,
-                "files_linked": n_link,
-                "rows_before": rows_before,
-                "rows_after": rows_after,
-            }
-        assert last_err is not None
-        raise last_err
+                part_set = set(part_cols)
+                rd_schema = T.StructType(
+                    [
+                        T.StructField(f.name, T.StringType(), True)
+                        if f.name in part_set
+                        else f
+                        for f in full.schema.fields
+                    ]
+                )
+                df = (
+                    self.spark.read.schema(rd_schema)
+                    .option("basePath", data)
+                    .parquet(*all_touched)
+                )
+                replaced = transform(df, F.expr(predicate))
+                # Overlapped validation (guide §2.6), joined
+                # before the commit.
+                txn.jobs.append(self._validate_async(name, replaced))
+                (
+                    replaced.repartition(
+                        max(len(touched_by_rel), 1), *part_cols
+                    )
+                    .write.mode("append")
+                    .partitionBy(*part_cols)
+                    .parquet(vdir)
+                )
+
+            def done() -> dict:
+                # rows_after from the committed version's parquet
+                # footers (round-13, guide §1.2): this was a full
+                # count JOB per DML (`self.read(name).count()`). The
+                # committed version is exactly ``vdir`` (hardlinks +
+                # rewritten files, no _dv — a pending deletion vector
+                # was purged before the scan), so the footers'
+                # num_rows sum IS the live row count — O(|files|)
+                # driver metadata reads, zero jobs.
+                import pyarrow.parquet as pq
+
+                rows_after = 0
+                for _rel, fs in self._partition_dirs(vdir):
+                    for f in fs:
+                        rows_after += pq.ParquetFile(f).metadata.num_rows
+                return {
+                    "files_total": len(all_files),
+                    "files_rewritten": n_rewrite,
+                    "files_linked": n_link,
+                    "rows_before": rows_before,
+                    "rows_after": rows_after,
+                }
+
+            return done
+
+        return self._transact(
+            name, attempt, "COW rewrite", "DML", max_retries,
+            materialize_dv=True,
+        )
 
     def delete_where(self, name: str, predicate: str, post_scan=None) -> dict:
         """Copy-on-write DELETE (Delta ``DELETE FROM t WHERE``): drop
@@ -4042,12 +3824,9 @@ class SnapshotStore:
         delete+insert for that too)."""
         data = self.current_data_dir(name)
         if data is not None:
-            part_cols = {
-                c
-                for rel, _fs in self._partition_dirs(data)
-                for c, _v in self._partition_literals(rel)
-            }
-            bad = part_cols & set(assignments)
+            bad = set(
+                self._partition_cols(self._partition_dirs(data))
+            ) & set(assignments)
             if bad:
                 raise ValueError(
                     f"update_where cannot reassign partition columns {sorted(bad)}; "

@@ -2,15 +2,15 @@
 
 The COW merge and _rewrite_where DML paths stage their change files
 as a concurrent Spark job (_stage_cdc_async, guide §2.6) and join it
-just before the commit (_adopt_cdc / overwrite's _pre_commit). These
+just before the commit (the commit loop's settle step). These
 tests pin the seam's contract:
 
 * value identity — the feed a commit serves is byte-for-byte the same
   whether the stage ran overlapped or inline;
 * failure hygiene — a DML that dies after the overlapped stage
   started leaves NO change file behind (the abort waits for the
-  in-flight write, then unlinks), and a _pre_commit failure drops the
-  just-written uncommitted version dir.
+  in-flight write, then unlinks), and a failure while the loop joins
+  the overlapped work drops the just-written uncommitted version dir.
 """
 
 from __future__ import annotations
@@ -212,20 +212,28 @@ def test_merge_violation_not_masked_by_concurrent_commit(spark, store):
     assert st._cdc_pending("t") == []
 
 
-def test_pre_commit_failure_drops_uncommitted_version(spark, store):
-    """overwrite(_pre_commit=...) failure must remove the version dir
-    it just wrote (a lost commit leaves no residue)."""
+def test_pre_commit_failure_drops_uncommitted_version(
+    spark, store, monkeypatch
+):
+    """A failure while the commit loop joins an attempt's overlapped
+    work (here the validation probe) must remove the version dir it
+    just wrote (a lost commit leaves no residue)."""
+    from concurrent.futures import Future
+
     st = store
     st.overwrite("t", _base(spark))
     before = {
         d for d in os.listdir(st.path("t")) if d.startswith("v_")
     }
 
-    def boom():
-        raise RuntimeError("pre-commit veto")
+    def vetoed(self, name, df):
+        fut: Future = Future()
+        fut.set_exception(RuntimeError("pre-commit veto"))
+        return fut
 
+    monkeypatch.setattr(SnapshotStore, "_validate_async", vetoed)
     with pytest.raises(RuntimeError, match="pre-commit veto"):
-        st.overwrite("t", _base(spark, 10), _pre_commit=boom)
+        st.overwrite("t", _base(spark, 10))
     after = {
         d for d in os.listdir(st.path("t")) if d.startswith("v_")
     }
