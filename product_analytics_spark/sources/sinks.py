@@ -10,32 +10,24 @@ Reference mapping (SURVEY.md §2.1):
   S7 ZORDER post-hook    OPTIMIZE ... ZORDER BY (customers_latest.sql:7 etc.)
   S8 schema evolution    on_schema_change='sync_all_columns'
 
-Commit protocol (no delta-spark in this container — fallback is the
-tested path): every writer writes a fresh immutable version
-directory ``<table>/v_<uuid>/`` and then commits by atomically
-replacing the one-line pointer file ``<table>/_CURRENT`` via
-``os.replace`` (POSIX-atomic). A crash at ANY point leaves the
-pointer naming a fully-written version: before the replace, readers
-still see the old version; after, the new one. Superseded versions
-are garbage-collected on the next successful commit. This is the
-classic table-format commit (Delta/Iceberg do the same with a
-transaction log instead of a pointer file).
+Commit protocol: the table's Delta log (``<table>/_delta_log/``,
+sources/delta_log.py) is its one commit record. Every writer writes a
+fresh immutable version directory ``<table>/v_<uuid>/`` and then
+commits one log entry whose adds name that directory's files and whose
+removes name the previous version's; the log's putIfAbsent of the
+next entry is the commit point. A crash at ANY point before it leaves
+the log on the prior version; after it, readers see the new one. The
+committed version, the retained version list, time travel and GC are
+all derived from the log. Superseded versions are garbage-collected on
+the next successful commit.
 
 Every writer runs through one optimistic transaction,
 ``SnapshotStore._transact``: snapshot read, version-dir allocation,
 settling the overlapped cdc/validation/DV jobs, the commit, telling a
 conflict from a failure, cleanup and retry live there once. Inside
-the commit lock the order is: OCC check, ``_delta_log`` commit (with
-``delta_log=True``), pointer, ``_LOG`` — so a refused log commit
-leaves the pointer, ``_LOG`` and the log exactly as they were.
-
-Object-store caveat: ``os.replace`` atomicity holds on POSIX
-filesystems (local disk, NFS, HDFS via mounts). On S3-like stores
-there is no atomic rename — swap this pointer for a real table format
-(Delta/Iceberg), whose log commit plays the same role; nothing above
-this class changes. With delta-spark installed, ``DeltaTable.merge``
-replaces the anti-join merge and ``OPTIMIZE ZORDER`` replaces the
-cluster pass (HAVE_DELTA gates it).
+the commit lock the order is: OCC check, log commit, the retained
+list for GC — so a refused log commit leaves the table exactly as it
+was.
 
 The ZORDER analog is repartitionByRange + sortWithinPartitions: same
 data-skipping effect (clustered min/max ranges per file) from OSS
@@ -57,15 +49,6 @@ from pyspark.storagelevel import StorageLevel
 from product_analytics_spark import cache
 from product_analytics_spark.operators.incremental import merge_upsert
 
-try:  # delta-spark is optional; everything falls back to parquet.
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except Exception:  # pragma: no cover
-    HAVE_DELTA = False
-
-_POINTER = "_CURRENT"
-_LOG = "_LOG"
 _LAYOUT = "_LAYOUT"
 _CONSTRAINTS = "_CONSTRAINTS"
 _GENERATED = "_GENERATED"
@@ -75,7 +58,7 @@ _INVARIANTS = "_INVARIANTS"
 _ROW_TRACKING = "_ROW_TRACKING"
 
 #: Sentinel default for ``expected_version`` — distinct from None,
-#: which is a MEANINGFUL expectation (first write: no pointer yet).
+#: which is a MEANINGFUL expectation (first write: no commit yet).
 UNCHECKED = object()
 #: ``_transact``'s default expectation: read ``current_version`` at
 #: the start of every attempt.
@@ -182,12 +165,12 @@ class _Attempt:
 
 class SnapshotStore:
     """Keyed SCD-1 snapshots in a warehouse directory, one table per
-    model, with atomic pointer-commit replace and merge/upsert.
+    model, with atomic Delta-log-commit replace and merge/upsert.
 
-    At 100 TB the same interface maps onto Delta/Iceberg tables: the
-    pointer commit becomes the table format's log commit and merge
-    becomes MERGE INTO with file pruning on the unique key; nothing
-    above this class changes.
+    At 100 TB the same interface maps onto Delta/Iceberg tables on an
+    object store: the log commit is already the table format's, and
+    merge becomes MERGE INTO with file pruning on the unique key;
+    nothing above this class changes.
     """
 
     def __init__(
@@ -195,44 +178,47 @@ class SnapshotStore:
         spark: SparkSession,
         warehouse_dir: str,
         retain_versions: int = 1,
-        delta_log: bool = False,
+        delta_log: bool = True,
         cdf: bool = False,
         commit_owner=None,
     ):
         """``retain_versions`` — how many committed versions to keep on
         disk (≥1). With >1, superseded versions stay readable via
-        ``read(name, version=...)`` — the pointer-file analog of
-        Delta/Iceberg time travel; GC drops versions that fall off the
-        retention window at the next commit (VACUUM analog).
+        ``read(name, version=...)`` — Delta time travel within the
+        window; GC drops versions that fall off the retention window
+        at the next commit (VACUUM analog).
 
-        ``delta_log=True`` additionally emits a protocol-conformant
-        Delta Lake ``_delta_log/`` (sources/delta_log.py) inside every
-        commit's locked section: JSON commits with protocol/metaData/
-        add/remove actions and per-file ``stats`` (numRecords +
-        min/max/nullCount collected once from the parquet footer at
-        write time). Readers — including scan planning via
-        ``scan_files``/``read_pruned`` and any independent protocol
-        parser — then plan from the log with ZERO parquet footer
-        opens. Files a COW rewrite hardlinks into the new version
-        reuse their previous add action's stats (same inode, same
-        content — no footer re-read). History older than the
-        retention window references GC'd files, exactly like Delta
-        history after VACUUM.
+        Every commit is one protocol-conformant Delta Lake
+        ``_delta_log/`` entry (sources/delta_log.py), written inside
+        the commit's locked section: JSON commits with protocol/
+        metaData/add/remove actions and per-file ``stats``
+        (numRecords + min/max/nullCount collected once from the
+        parquet footer at write time). Readers — including scan
+        planning via ``scan_files``/``read_pruned`` and any
+        independent protocol parser — plan from the log with ZERO
+        parquet footer opens. Files a COW rewrite hardlinks into the
+        new version reuse their previous add action's stats (same
+        inode, same content — no footer re-read). History older than
+        the retention window references GC'd files, exactly like
+        Delta history after VACUUM. ``delta_log`` is accepted for
+        older callers; ``False`` raises, since the log is the store's
+        only commit record.
 
-        ``cdf=True`` (requires ``delta_log=True``) enables the Change
-        Data Feed: every DML path (merge / delete / update, COW and
-        MoR alike) writes its row-level changes to
-        ``_change_data/cdc-*.parquet`` and references them with
-        ``cdc`` actions in the same commit, per Delta's
-        ``delta.enableChangeDataFeed`` contract;
+        ``cdf=True`` enables the Change Data Feed: every DML path
+        (merge / delete / update, COW and MoR alike) writes its
+        row-level changes to ``_change_data/cdc-*.parquet`` and
+        references them with ``cdc`` actions in the same commit, per
+        Delta's ``delta.enableChangeDataFeed`` contract;
         ``delta_log.table_changes`` reads them back with
         ``_change_type``/``_commit_version`` columns."""
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.retain_versions = max(1, retain_versions)
-        self.delta_log = bool(delta_log)
-        if cdf and not delta_log:
-            raise ValueError("cdf=True requires delta_log=True")
+        if not delta_log:
+            raise ValueError(
+                "SnapshotStore commits through the Delta log; "
+                "delta_log=False is not supported"
+            )
         self.cdf = bool(cdf)
         #: CommitOwner for the table's _delta_log commits (None =
         #: hardlink putIfAbsent). A registry/catalog owner makes the
@@ -251,26 +237,50 @@ class SnapshotStore:
     def path(self, name: str) -> str:
         return os.path.join(self.warehouse_dir, name)
 
-    def _pointer_path(self, name: str) -> str:
-        return os.path.join(self.path(name), _POINTER)
+    def _read_sidecar(self, name: str, sidecar: str) -> dict:
+        """A table's JSON sidecar (``_LAYOUT``, ``_CONSTRAINTS``, ...);
+        empty dict if never written."""
+        import json
 
-    def _log_path(self, name: str) -> str:
-        return os.path.join(self.path(name), _LOG)
+        p = os.path.join(self.path(name), sidecar)
+        if not os.path.isfile(p):
+            return {}
+        with open(p, encoding="utf-8") as fh:
+            return json.load(fh)
+
+    def _write_sidecar(
+        self, name: str, sidecar: str, obj: dict, sort_keys: bool = True
+    ) -> None:
+        """Atomically replace a table's JSON sidecar (tmp write, then
+        ``os.replace``)."""
+        import json
+
+        os.makedirs(self.path(name), exist_ok=True)
+        tmp = os.path.join(
+            self.path(name), f"{sidecar}_{uuid.uuid4().hex[:8]}"
+        )
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(obj, fh, sort_keys=sort_keys)
+        os.replace(tmp, os.path.join(self.path(name), sidecar))
+
+    def _metadata_commit(self, name: str, operation: str) -> None:
+        """A metaData-only log commit, so a changed sidecar reaches the
+        log without waiting for the next data commit (like Delta's
+        ALTER TABLE); nothing to do before the table's first commit."""
+        if self.exists(name):
+            with self._commit_lock(name):
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation=operation
+                )
 
     # ---------------------------------------------- layout metadata
 
     def layout(self, name: str) -> dict:
         """The table's declared physical layout (partition/cluster/
-        zorder keys), recorded at write time — the pointer-file analog
-        of Delta's table properties. ``optimize`` consumes it to
-        restore clustering; empty dict if never declared."""
-        import json
-
-        p = os.path.join(self.path(name), _LAYOUT)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
+        zorder keys), recorded at write time — the engine-local
+        analog of Delta's table properties. ``optimize`` consumes it
+        to restore clustering; empty dict if never declared."""
+        return self._read_sidecar(name, _LAYOUT)
 
     def _record_layout(
         self,
@@ -280,8 +290,6 @@ class SnapshotStore:
         zorder_by: Sequence[str],
         zorder_depth: bool = False,
     ) -> None:
-        import json
-
         meta = {
             "partition_by": list(partition_by),
             "cluster_by": list(cluster_by),
@@ -294,37 +302,15 @@ class SnapshotStore:
             # keeps the standing declaration — dbt model config is
             # constant across runs, not per-write.
             return
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(self.path(name), f"_layout_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self.path(name), _LAYOUT))
+        self._write_sidecar(name, _LAYOUT, meta, sort_keys=False)
 
     # --------------------------------------------- CHECK constraints
 
     def constraints(self, name: str) -> dict[str, str]:
-        """Declared CHECK constraints, name -> SQL expression — the
-        pointer-file analog of Delta's ``delta.constraints.<name>``
-        table properties (mirrored into the delta log's metaData when
-        ``delta_log=True``)."""
-        import json
-
-        p = os.path.join(self.path(name), _CONSTRAINTS)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
-
-    def _write_constraints(self, name: str, cons: dict[str, str]) -> None:
-        import json
-
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(
-            self.path(name), f"_cons_{uuid.uuid4().hex[:8]}"
-        )
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(cons, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path(name), _CONSTRAINTS))
+        """Declared CHECK constraints, name -> SQL expression — Delta's
+        ``delta.constraints.<name>`` table properties, mirrored into
+        the log's metaData."""
+        return self._read_sidecar(name, _CONSTRAINTS)
 
     def add_constraint(self, name: str, cname: str, expr_sql: str) -> None:
         """``ALTER TABLE t ADD CONSTRAINT cname CHECK (expr)`` —
@@ -338,11 +324,11 @@ class SnapshotStore:
           :class:`ConstraintViolationError` with NOTHING committed;
         * NULL evaluates as satisfied (SQL CHECK semantics — use
           ``x IS NOT NULL`` to forbid nulls);
-        * under ``delta_log=True`` the constraint lands in metaData
-          configuration as ``delta.constraints.<cname>`` and the
-          protocol is upgraded to writer version ≥ 3 (the legacy
-          checkConstraints writer feature), so any protocol-aware
-          writer knows it must enforce or refuse.
+        * the constraint lands in the log's metaData configuration
+          as ``delta.constraints.<cname>`` and the protocol is
+          upgraded to writer version ≥ 3 (the legacy checkConstraints
+          writer feature), so any protocol-aware writer knows it must
+          enforce or refuse.
 
         RESTORE is exempt: a restored version was validated under
         the constraints in force when it committed.
@@ -353,46 +339,37 @@ class SnapshotStore:
         df = self.read(name)
         if df is None:
             raise ValueError(f"unknown table {name!r}")
-        self._assert_satisfies(df, cname, expr_sql)
-        cons = self.constraints(name)
-        cons[cname] = expr_sql
-        self._write_constraints(name, cons)
-        if self.delta_log and self.current_data_dir(name) is not None:
-            # surface the property in the log without waiting for the
-            # next data commit (metaData-only commit, like Delta's
-            # ALTER TABLE)
-            with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation="ADD CONSTRAINT"
-                )
-
-    def drop_constraint(self, name: str, cname: str) -> None:
-        cons = self.constraints(name)
-        cons.pop(cname, None)
-        self._write_constraints(name, cons)
-        if self.delta_log and self.current_data_dir(name) is not None:
-            with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation="DROP CONSTRAINT"
-                )
-
-    def _assert_satisfies(
-        self, df: DataFrame, cname: str, expr_sql: str
-    ) -> None:
-        # agg(first) instead of take(1): in the no-violation case
-        # take(1) runs up to 4 escalating jobs (1/4/20/... partitions)
-        # and still ends up scanning everything; one aggregate scans
-        # once, fully parallel, in a single job (round-12, guide §1.2).
-        bad = (
-            df.where(~F.coalesce(F.expr(expr_sql), F.lit(True)))
-            .agg(F.first(F.struct(*df.columns)))
-            .collect()[0][0]
+        bad = self._first_violation(
+            df, ~F.coalesce(F.expr(expr_sql), F.lit(True))
         )
         if bad is not None:
             raise ConstraintViolationError(
                 f"CHECK constraint {cname!r} ({expr_sql}) violated, "
                 f"e.g. by row {bad.asDict()!r}; nothing committed"
             )
+        cons = self.constraints(name)
+        cons[cname] = expr_sql
+        self._write_sidecar(name, _CONSTRAINTS, cons)
+        self._metadata_commit(name, "ADD CONSTRAINT")
+
+    def drop_constraint(self, name: str, cname: str) -> None:
+        cons = self.constraints(name)
+        cons.pop(cname, None)
+        self._write_sidecar(name, _CONSTRAINTS, cons)
+        self._metadata_commit(name, "DROP CONSTRAINT")
+
+    @staticmethod
+    def _first_violation(df: DataFrame, violates):
+        """The first row of ``df`` where ``violates`` holds, or None.
+        agg(first) instead of take(1): in the no-violation case
+        take(1) runs up to 4 escalating jobs (1/4/20/... partitions)
+        and still ends up scanning everything; one aggregate scans
+        once, fully parallel, in a single job (round-12, guide §1.2)."""
+        return (
+            df.where(violates)
+            .agg(F.first(F.struct(*df.columns)))
+            .collect()[0][0]
+        )
 
     def _validate_constraints(self, name: str, df: DataFrame) -> None:
         """Validate a write's rows against every declared CHECK
@@ -483,36 +460,19 @@ class SnapshotStore:
 
     def table_properties(self, name: str) -> dict[str, str]:
         """Declared table properties (``delta.appendOnly``, ...) —
-        the pointer-file analog of Delta's TBLPROPERTIES, mirrored
-        into the delta log's metaData configuration when
-        ``delta_log=True``."""
-        import json
-
-        p = os.path.join(self.path(name), _PROPS)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
+        Delta's TBLPROPERTIES, mirrored into the log's metaData
+        configuration."""
+        return self._read_sidecar(name, _PROPS)
 
     def set_table_property(self, name: str, key: str, value: str) -> None:
         """``ALTER TABLE t SET TBLPROPERTIES (key = value)`` — one
-        sidecar write plus (under ``delta_log=True``) a metaData-only
-        log commit so protocol-aware readers see the property
-        immediately, like Delta's ALTER TABLE."""
-        import json
-
+        sidecar write plus a metaData-only log commit so
+        protocol-aware readers see the property immediately, like
+        Delta's ALTER TABLE."""
         props = self.table_properties(name)
         props[str(key)] = str(value)
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(self.path(name), f"_props_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(props, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path(name), _PROPS))
-        if self.delta_log and self.current_data_dir(name) is not None:
-            with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation="SET TBLPROPERTIES"
-                )
+        self._write_sidecar(name, _PROPS, props)
+        self._metadata_commit(name, "SET TBLPROPERTIES")
 
     def set_append_only(self, name: str, enabled: bool = True) -> None:
         """Activate Delta's **append-only** writer feature
@@ -555,14 +515,8 @@ class SnapshotStore:
         (Delta's ``delta.invariants`` field metadata, the legacy
         writer-version-2 feature) — enforced on every write by
         ``_validate_constraints``; mirrored into the log metaData's
-        schemaString field metadata when ``delta_log=True``."""
-        import json
-
-        p = os.path.join(self.path(name), _INVARIANTS)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
+        schemaString field metadata."""
+        return self._read_sidecar(name, _INVARIANTS)
 
     def set_invariant(self, name: str, col: str, expr_sql: str) -> None:
         """Declare a column invariant: existing data must already
@@ -570,19 +524,14 @@ class SnapshotStore:
         invariant the table breaks is a lie), then every subsequent
         write validates its rows and raises
         :class:`ConstraintViolationError` with NOTHING committed."""
-        import json
-
         df = self.read(name)
         if df is None:
             raise ValueError(f"unknown table {name!r}")
         if col.split(".", 1)[0] not in df.columns:
             raise ValueError(f"no column {col!r} in table {name!r}")
         try:
-            # agg(first) not take(1): one job (round-12, guide §1.2).
-            bad = (
-                df.where(~F.coalesce(F.expr(expr_sql), F.lit(False)))
-                .agg(F.first(F.struct(*df.columns)))
-                .collect()[0][0]
+            bad = self._first_violation(
+                df, ~F.coalesce(F.expr(expr_sql), F.lit(False))
             )
         except AnalysisException:
             raise ValueError(
@@ -596,16 +545,8 @@ class SnapshotStore:
             )
         invs = self.invariants(name)
         invs[col] = expr_sql
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(self.path(name), f"_invs_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(invs, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path(name), _INVARIANTS))
-        if self.delta_log and self.current_data_dir(name) is not None:
-            with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation="ALTER TABLE"
-                )
+        self._write_sidecar(name, _INVARIANTS, invs)
+        self._metadata_commit(name, "ALTER TABLE")
 
     # --------------------------------------------- generated columns
 
@@ -613,13 +554,7 @@ class SnapshotStore:
         """Declared generated columns, column -> SQL generation
         expression (Delta's ``delta.generationExpression`` field
         metadata, the writer-version-4 generatedColumns feature)."""
-        import json
-
-        p = os.path.join(self.path(name), _GENERATED)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
+        return self._read_sidecar(name, _GENERATED)
 
     def set_generated(self, name: str, col: str, expr_sql: str) -> None:
         """Declare ``col`` GENERATED ALWAYS AS (expr) — Delta's
@@ -630,24 +565,18 @@ class SnapshotStore:
         * a write that SUPPLIES it is validated — any row where the
           supplied value differs from the expression (null-safe) is
           a ConstraintViolationError with nothing committed;
-        * under ``delta_log=True`` the expression lands in the
-          field's metadata as ``delta.generationExpression`` and the
-          protocol floor moves to writer ≥ 4.
+        * the expression lands in the log schema's field metadata
+          as ``delta.generationExpression`` and the protocol floor
+          moves to writer ≥ 4.
 
         Declare BEFORE the first write that should carry the column
         (the canonical use: a partition column derived from an event
         timestamp, so writers can't desynchronize the partition key
         from the data — at 100 TB a mispartitioned day is a silent
         full-scan tax on every downstream query until repaired)."""
-        import json
-
         gens = self.generated_columns(name)
         gens[col] = expr_sql
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(self.path(name), f"_gen_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(gens, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path(name), _GENERATED))
+        self._write_sidecar(name, _GENERATED, gens)
 
     def _apply_generated(self, name: str, df: DataFrame) -> DataFrame:
         """Compute absent generated columns; validate supplied ones
@@ -657,13 +586,8 @@ class SnapshotStore:
             if col not in df.columns:
                 df = df.withColumn(col, F.expr(expr_sql))
             else:
-                # agg(first) not take(1): one job in the all-pass case
-                # (round-12, guide §1.2 — same rationale as
-                # _validate_constraints).
-                bad = (
-                    df.where(~F.col(col).eqNullSafe(F.expr(expr_sql)))
-                    .agg(F.first(F.struct(*df.columns)))
-                    .collect()[0][0]
+                bad = self._first_violation(
+                    df, ~F.col(col).eqNullSafe(F.expr(expr_sql))
                 )
                 if bad is not None:
                     raise ConstraintViolationError(
@@ -679,22 +603,7 @@ class SnapshotStore:
         """Declared identity columns, column -> {start, step,
         high_water_mark} (Delta's ``delta.identity.*`` field
         metadata, the writer-version-6 identityColumns feature)."""
-        import json
-
-        p = os.path.join(self.path(name), _IDENTITY)
-        if not os.path.isfile(p):
-            return {}
-        with open(p, encoding="utf-8") as fh:
-            return json.load(fh)
-
-    def _write_identity(self, name: str, ids: dict[str, dict]) -> None:
-        import json
-
-        os.makedirs(self.path(name), exist_ok=True)
-        tmp = os.path.join(self.path(name), f"_id_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(ids, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path(name), _IDENTITY))
+        return self._read_sidecar(name, _IDENTITY)
 
     def set_identity(
         self, name: str, col: str, start: int = 1, step: int = 1
@@ -723,7 +632,7 @@ class SnapshotStore:
         ids = self.identity_columns(name)
         ids[col] = {"start": int(start), "step": int(step),
                     "high_water_mark": None}
-        self._write_identity(name, ids)
+        self._write_sidecar(name, _IDENTITY, ids)
 
     def _identity_lock(self, name: str):
         """Serializes the identity read-allocate-persist cycle
@@ -807,7 +716,7 @@ class SnapshotStore:
                     spec["high_water_mark"] = int(v)
                     changed = True
             if changed:
-                self._write_identity(name, ids)
+                self._write_sidecar(name, _IDENTITY, ids)
         return df
 
     def _advance_identity_hwm(self, name: str, version: str) -> None:
@@ -867,7 +776,7 @@ class SnapshotStore:
                     spec["high_water_mark"] = v
                     changed = True
             if changed:
-                self._write_identity(name, ids)
+                self._write_sidecar(name, _IDENTITY, ids)
 
     def _identity_merge_batch(
         self, name: str, prev: DataFrame | None, batch: DataFrame,
@@ -900,43 +809,66 @@ class SnapshotStore:
         )
         return existing.unionByName(fresh.select(*existing.columns))
 
+    @staticmethod
+    def _version_of(rel: str) -> str | None:
+        """The version dir a table-relative log path sits in (None for
+        a file at the table root or in a root hive dir — a table whose
+        first write was an ``append``)."""
+        head = rel.split("/", 1)[0]
+        return head if head.startswith("v_") and "=" not in head else None
+
     def versions(self, name: str) -> list[str]:
-        """Committed versions still on disk, oldest→newest (the
-        retention window's tail of the commit log)."""
-        log = self._log_path(name)
-        if not os.path.isfile(log):
-            return []
-        with open(log, encoding="utf-8") as fh:
-            committed = [ln.strip() for ln in fh if ln.strip()]
-        return [
-            v for v in committed if os.path.isdir(os.path.join(self.path(name), v))
-        ]
+        """Committed version dirs still on disk, oldest→newest: the
+        dirs the log's data commits name, walked newest first back to
+        the first one GC dropped (the retention window)."""
+        import json
+
+        from product_analytics_spark.sources import delta_log as dl
+
+        table = self.path(name)
+        out: list[str] = []
+        for _v, path in reversed(dl.DeltaLog(table)._commits()):
+            with open(path, encoding="utf-8") as fh:
+                adds = (
+                    a["add"]["path"]
+                    for a in map(json.loads, filter(str.strip, fh))
+                    if a.get("add")
+                )
+                v = self._version_of(next(adds, ""))
+            if v is None or (out and out[-1] == v):
+                continue  # metadata-only, append, or root-dir commit
+            if not os.path.isdir(os.path.join(table, v)):
+                break
+            out.append(v)
+        return out[::-1]
 
     def current_data_dir(self, name: str) -> str | None:
-        """Directory of the committed version, or None if absent.
+        """Directory of the committed version, from the log's current
+        snapshot; None before the first commit. Every committed
+        version's live files sit under one ``v_<uuid>`` dir, so any
+        one of them names it. A table whose first write was an
+        ``append`` keeps its files at the table root until a rewrite."""
+        from product_analytics_spark.sources import delta_log as dl
 
-        Pointer layout if present; otherwise a plain parquet dir
-        (append-only tables, pre-existing data) is its own version.
-        """
-        table = self.path(name)
-        ptr = self._pointer_path(name)
-        if os.path.isfile(ptr):
-            with open(ptr, encoding="utf-8") as fh:
-                version = fh.read().strip()
-            vdir = os.path.join(table, version)
-            return vdir if os.path.isdir(vdir) else None
-        return table if os.path.isdir(table) else None
+        log = dl.DeltaLog(self.path(name))
+        try:
+            files = log.snapshot().files
+        except dl.DeltaProtocolError:
+            if log.latest_version() is None:
+                return None  # no commit yet
+            raise
+        if not files:
+            return None
+        v = self._version_of(next(iter(files)))
+        return os.path.join(self.path(name), v) if v else self.path(name)
 
     def current_version(self, name: str) -> str | None:
-        """The committed version id (pointer contents) — the snapshot
-        identity an optimistic transaction reads and later presents as
+        """The committed version dir name — the snapshot identity an
+        optimistic transaction reads and later presents as
         ``expected_version`` at commit. None before the first commit
-        (and for plain pre-existing dirs, which have no pointer)."""
-        ptr = self._pointer_path(name)
-        if not os.path.isfile(ptr):
-            return None
-        with open(ptr, encoding="utf-8") as fh:
-            return fh.read().strip()
+        (and for a table whose files sit at its root)."""
+        data = self.current_data_dir(name)
+        return data and self._version_of(os.path.relpath(data, self.path(name)))
 
     def exists(self, name: str) -> bool:
         return self.current_data_dir(name) is not None
@@ -946,9 +878,10 @@ class SnapshotStore:
 
         ``version`` time-travels within the retention window: an int
         indexes ``versions()`` (0 = oldest retained, -1 = current), a
-        str names a version directory directly. Requires the store to
-        have been created with ``retain_versions > 1`` for anything
-        but the current version to still exist.
+        str names a retained version directory; None for anything
+        else (a GC'd version, or a dir no commit named). Requires the
+        store to have been created with ``retain_versions > 1`` for
+        anything but the current version to still exist.
 
         If the version carries a deletion vector (``_dv/`` — written
         by ``delete_where_mor``), the tombstoned row positions are
@@ -974,14 +907,14 @@ class SnapshotStore:
             if data is None:
                 return None
             return _hide_rt(self._apply_dv(data, merge_schema=rt))
+        vs = self.versions(name)
         if isinstance(version, int):
-            vs = self.versions(name)
             if not vs:
                 return None
             version = vs[version]
-        vdir = os.path.join(self.path(name), version)
-        if not os.path.isdir(vdir):
+        elif version not in vs:
             return None
+        vdir = os.path.join(self.path(name), version)
         return _hide_rt(self._apply_dv(vdir, merge_schema=rt))
 
     # ------------------------------------------ deletion vectors (MoR)
@@ -1033,16 +966,13 @@ class SnapshotStore:
         return os.path.isfile(os.path.join(self.path(name), _ROW_TRACKING))
 
     def enable_row_tracking(self, name: str) -> int:
-        """Enable the Delta row-tracking writer feature on this table
-        (requires ``delta_log=True``): protocol upgrade + per-file
-        ``baseRowId`` backfill + ``delta.rowTracking`` domainMetadata
-        high-water mark (see ``delta_log.enable_row_tracking``). From
+        """Enable the Delta row-tracking writer feature on this table:
+        protocol upgrade + per-file ``baseRowId`` backfill +
+        ``delta.rowTracking`` domainMetadata high-water mark (see ``delta_log.enable_row_tracking``). From
         then on every commit allocates fresh id ranges for new files,
         and the MoR DML paths PRESERVE matched rows' ids by
         materializing them into the rewritten files. Read ids back
         with ``delta_log.read_row_ids``."""
-        if not self.delta_log:
-            raise ValueError("row tracking requires delta_log=True")
         from product_analytics_spark.sources import delta_log as dl
 
         v = dl.enable_row_tracking(self.path(name))
@@ -1323,11 +1253,10 @@ class SnapshotStore:
         the DV. Optimistic transaction like the COW paths
         (``post_scan`` = the same fault-injection window).
 
-        With ``delta_log=True`` the commit additionally emits
-        protocol-v3 ``deletionVector`` descriptors on the affected
-        adds (roaring-bitmap sidecar per commit, protocol upgraded to
-        reader 3 / writer 7 with the deletionVectors table feature —
-        see ``sources/deletion_vectors.py``), so log consumers
+        The commit emits protocol-v3 ``deletionVector`` descriptors on
+        the affected adds (roaring-bitmap sidecar per commit, protocol
+        upgraded to reader 3 / writer 7 with the deletionVectors table
+        feature — see ``sources/deletion_vectors.py``), so log consumers
         (``read_delta``/``read_pruned``) see exactly the live rows."""
         self._assert_appendable(name, "DELETE (merge-on-read)")
 
@@ -1398,9 +1327,9 @@ class SnapshotStore:
         ``assignments`` maps column -> SQL expression (cast back to the
         column's original type, same schema-enforcement rule as the
         COW update). Partition-column reassignment is refused (it
-        would move rows across hive directories). Under
-        ``delta_log=True`` the commit carries protocol-v3
-        ``deletionVector`` descriptors like ``delete_where_mor``."""
+        would move rows across hive directories). The commit carries
+        protocol-v3 ``deletionVector`` descriptors like
+        ``delete_where_mor``."""
         data0 = self.current_data_dir(name)
         if data0 is not None:
             bad = set(
@@ -1520,8 +1449,8 @@ class SnapshotStore:
         ``sync_all_columns`` schema evolution); values are cast to the
         table's column types. OCC transaction with the same
         ``post_scan`` fault-injection window as the other DML paths.
-        Under ``delta_log=True`` the commit carries protocol-v3
-        ``deletionVector`` descriptors like the other MoR ops."""
+        The commit carries protocol-v3 ``deletionVector`` descriptors
+        like the other MoR ops."""
         self._assert_appendable(name, "MERGE (merge-on-read)")
         keys = [key] if isinstance(key, str) else list(key)
         batch = self._apply_generated(name, batch)
@@ -1705,18 +1634,19 @@ class SnapshotStore:
         NEW commit — history above the restore point is preserved
         (the restore is itself just another version; time travel to
         the pre-restore state still works within retention), which is
-        what distinguishes RESTORE from rolling back the pointer.
+        what distinguishes RESTORE from rolling back the log.
 
-        ``version`` is a committed version dir name (``v_...``) or an
-        index into :meth:`versions` (negative = from the end, like
-        ``read``). Every file of the target version — data files,
+        ``version`` is a retained version dir name (``v_...``, one of
+        :meth:`versions`) or an index into :meth:`versions` (negative
+        = from the end, like ``read``); anything else raises
+        ValueError. Every file of the target version — data files,
         hive subdirs, and an outstanding ``_dv`` deletion vector — is
         HARDLINKED into the new version dir: zero data movement, cost
         O(|files|) metadata ops, exactly how Delta's RESTORE re-adds
-        the old snapshot's files by reference. The delta log (if
-        enabled) reconciles automatically: the restored files are
-        re-added (stats reused by inode — no footer re-reads) and the
-        abandoned version's files removed, with ``dataChange: true``
+        the old snapshot's files by reference. The log reconciles
+        automatically: the restored files are re-added (stats reused
+        by inode — no footer re-reads) and the abandoned version's
+        files removed, with ``dataChange: true``
         (rows DID change — streams and the change feed correctly see
         the restore as delete-all + insert-all of the delta, Delta's
         own RESTORE semantics).
@@ -1730,18 +1660,17 @@ class SnapshotStore:
         this removes at scale is "full-refresh back to yesterday":
         RESTORE is a metadata operation, the refresh is a rewrite."""
         self._assert_appendable(name, "RESTORE")
-        table = self.path(name)
+        vs = self.versions(name)
         if isinstance(version, int):
-            vs = self.versions(name)
             if not vs:
                 raise ValueError(f"unknown table {name!r}")
             version = vs[version]
-        src = os.path.join(table, version)
-        if not os.path.isdir(src):
+        if version not in vs:
             raise ValueError(
-                f"table {name!r}: version {version!r} is not on disk "
-                "(GC'd past the retention window?)"
+                f"table {name!r}: unknown version {version!r} (never "
+                "committed, or GC'd past the retention window)"
             )
+        src = os.path.join(self.path(name), version)
 
         def attempt(txn: _Attempt):
             n_link = 0
@@ -1903,82 +1832,46 @@ class SnapshotStore:
         expected_version=UNCHECKED,
         operation: str = "WRITE",
     ) -> None:
-        """Commit the written version ``version``, then
+        """Commit the written version dir ``version``, then
         garbage-collect versions that fell off the retention window.
-        Inside the commit lock the order is: OCC check, ``_delta_log``
-        commit (``delta_log=True``; reconciled against ``version``'s
-        dir), pointer flip (the commit point), ``_LOG`` append. A
-        refused log commit therefore leaves the pointer, ``_LOG`` and
-        the log as they were.
+        Inside the commit lock the order is: OCC check, the log commit
+        (``_delta_commit``, reconciled against ``version``'s dir — its
+        putIfAbsent is the commit point), the retained list. A refused
+        log commit therefore leaves the table as it was.
 
         Optimistic concurrency: with ``expected_version`` set (the
         version the transaction READ — ``current_version()`` at its
-        start, None for first-write), the pointer must still name it
+        start, None for first-write), the log must still name it
         inside the locked section, or ConcurrentWriteError is raised
         and NOTHING commits — the Delta/Iceberg conflict check. The
         default stays last-writer-wins (dbt full-refresh semantics)."""
         table = self.path(name)
-        tmp = os.path.join(table, f"_ptr_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version)
         with self._commit_lock(name):
-            try:
-                if expected_version is not UNCHECKED:
-                    cur = self.current_version(name)
-                    if cur != expected_version:
-                        raise ConcurrentWriteError(
-                            f"table {name!r}: committed version moved "
-                            f"{expected_version!r} -> {cur!r} since this "
-                            "transaction's snapshot read; re-read and retry"
-                        )
-                if self.delta_log:
-                    # Inside the lock and BEFORE the pointer, so
-                    # delta-log version order matches pointer-commit
-                    # order exactly (the log's own putIfAbsent is a
-                    # second, independent guard) and a refused log
-                    # commit moves nothing.
-                    self._delta_commit(
-                        name, os.path.join(table, version), operation=operation
+            if expected_version is not UNCHECKED:
+                cur = self.current_version(name)
+                if cur != expected_version:
+                    raise ConcurrentWriteError(
+                        f"table {name!r}: committed version moved "
+                        f"{expected_version!r} -> {cur!r} since this "
+                        "transaction's snapshot read; re-read and retry"
                     )
-            except BaseException:
-                os.unlink(tmp)
-                raise
-            os.replace(tmp, self._pointer_path(name))  # POSIX-atomic
-            log = self._log_path(name)
-            committed: list[str] = []
-            if os.path.isfile(log):
-                with open(log, encoding="utf-8") as fh:
-                    committed = [ln.strip() for ln in fh if ln.strip()]
-            committed.append(version)
-            live = [
-                v
-                for v in committed
-                if os.path.isdir(os.path.join(table, v))
-            ]
-            retained_list = live[-self.retain_versions :]
-            if version not in retained_list:
-                retained_list.append(version)
-            # Truncate the commit log to the retention window (Delta's
-            # log checkpoint/cleanup analog): without this it grows one
-            # line per commit forever. Inside the lock so a concurrent
-            # committer's fresh append can never be stomped; atomic
-            # replace so readers only ever see a complete log.
-            log_tmp = os.path.join(table, f"_log_{uuid.uuid4().hex[:8]}")
-            with open(log_tmp, "w", encoding="utf-8") as fh:
-                fh.write("".join(v + "\n" for v in retained_list))
-            os.replace(log_tmp, log)
+            self._delta_commit(
+                name, os.path.join(table, version), operation=operation
+            )
+            # Read under the lock, so the list ends with this commit.
+            committed = self.versions(name)
         # GC deletes ONLY previously COMMITTED versions that fell off
         # the retention window. A bare "every v_ dir not retained"
         # sweep (the old rule) could destroy a CONCURRENT writer's
         # uncommitted version dir — under last-writer-wins that writer
-        # then commits a pointer to a deleted directory (data loss).
-        # Uncommitted dirs belong to in-flight writers; crashed
-        # writers' orphans are vacuumed by age instead.
-        retained = set(retained_list)
-        for v in committed:
-            if v not in retained:
-                shutil.rmtree(os.path.join(table, v), ignore_errors=True)
-        self._vacuum_orphans(name, retained)
+        # then commits a log entry naming a deleted directory (data
+        # loss). Uncommitted dirs belong to in-flight writers; crashed
+        # writers' orphans are vacuumed by age instead (not
+        # ``DeltaLog.vacuum``, which deletes untracked files at once).
+        retained = committed[-self.retain_versions :]
+        for v in committed[: -self.retain_versions]:
+            shutil.rmtree(os.path.join(table, v), ignore_errors=True)
+        self._vacuum_orphans(name, set(retained))
 
     #: age after which an uncommitted version dir is presumed to belong
     #: to a CRASHED writer and may be vacuumed (in-flight writers finish
@@ -2031,11 +1924,11 @@ class SnapshotStore:
         Every failure first settles the futures and discards staged
         change files; the releases run last on every exit. Then:
 
-        * an attempt whose version the pointer already names has
+        * an attempt whose version the log already names has
           committed — it is never deleted or retried;
         * otherwise its uncommitted dir is removed, and
           ConstraintViolationError re-raises unchanged;
-        * ConcurrentWriteError, or any failure while the pointer moved
+        * ConcurrentWriteError, or any failure while the log moved
           off the snapshot (a concurrent commit may have GC'd the
           files the attempt was reading — ``snapshot GC'd under
           <what>``), is a conflict: retry, up to ``max_retries``;
@@ -2233,14 +2126,14 @@ class SnapshotStore:
         pending.clear()
 
     def _delta_commit(
-        self, name: str, data: str | None, operation: str = "WRITE"
+        self, name: str, data: str, operation: str = "WRITE"
     ) -> None:
         """Emit one protocol-conformant ``_delta_log`` commit
         reconciling the log's live file set against the data dir
         ``data`` — the version being committed, or the current one for
-        appends and metadata-only commits (called inside the commit
-        lock, before the pointer flip, so log order == commit order
-        and a refused log commit moves nothing):
+        appends and metadata-only commits. Called inside the commit
+        lock; the log's putIfAbsent is the commit point, so a refused
+        log commit moves nothing:
 
         * adds    = files on disk the log doesn't know (stats from one
                     footer read each — or REUSED from the prior add
@@ -2253,20 +2146,39 @@ class SnapshotStore:
 
         metaData (Spark schemaString + partitionColumns) is emitted on
         the first commit and re-emitted when the data files' arrow
-        schema fingerprint changes (schema evolution)."""
+        schema fingerprint changes (schema evolution).
+
+        A version that lost every row (a COW delete of all rows of a
+        partitioned table, whose empty partitioned write leaves no
+        file) gets one zero-row file shaped like the table's first
+        live file, in the same hive dir — the zero-row file Spark
+        itself writes for an empty flat table. So every committed
+        version keeps a live add that names its dir, and readers
+        still infer the schema."""
         import hashlib
         import json
 
         from product_analytics_spark.sources import delta_log as dl
 
         table = self.path(name)
-        if data is None:
-            return
         log = dl.DeltaLog(table, owner=self.commit_owner)
         latest = log.latest_version()
         prev = log.snapshot(latest) if latest is not None else None
 
         parts = self._partition_dirs(data)
+        if not parts and prev is not None and prev.files:
+            import pyarrow.parquet as pq
+
+            src = min(prev.files)
+            sub = os.path.dirname(
+                src.split("/", 1)[1] if self._version_of(src) else src
+            )
+            os.makedirs(os.path.join(data, sub), exist_ok=True)
+            pq.write_table(
+                pq.read_schema(os.path.join(table, src)).empty_table(),
+                os.path.join(data, sub, "part-00000-empty.parquet"),
+            )
+            parts = self._partition_dirs(data)
         part_cols = self._partition_cols(parts)
         disk: dict[str, str] = {}  # rel path from TABLE root -> abs
         for _rel, files in parts:
@@ -2696,7 +2608,7 @@ class SnapshotStore:
 
     def delta_snapshot(self, name: str, version: int | None = None):
         """The table's Delta snapshot (live file set + metadata) at a
-        log version — requires ``delta_log=True`` writes."""
+        log version."""
         from product_analytics_spark.sources import delta_log as dl
 
         return dl.DeltaLog(self.path(name)).snapshot(version)
@@ -2781,7 +2693,7 @@ class SnapshotStore:
         _validate: bool = True,
         _generated_applied: bool = False,
     ) -> None:
-        """Atomic full replace: write a version dir, commit the pointer.
+        """Atomic full replace: write a version dir, commit it to the log.
 
         ``zorder_by`` lays the files out on the multi-column Morton
         curve (see ``_write_version``) — the ``OPTIMIZE ZORDER BY``
@@ -2935,13 +2847,12 @@ class SnapshotStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data)
-        if self.delta_log:
-            # An append IS a commit in Delta terms: add actions for the
-            # new files (reconciled: disk minus log-live), no removes.
-            with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation="WRITE"
-                )
+        # An append IS a commit in Delta terms: add actions for the
+        # new files (reconciled: disk minus log-live), no removes.
+        with self._commit_lock(name):
+            self._delta_commit(
+                name, self.current_data_dir(name) or data, operation="WRITE"
+            )
         self._maybe_auto_compact(name)
 
     def _assert_coordinator_routed(self, name: str) -> None:
@@ -2953,8 +2864,6 @@ class SnapshotStore:
         disk-minus-log reconcile silently ADOPTS — committing rows a
         writer was just told it could not commit. Check the table's
         coordinator declaration BEFORE any byte lands."""
-        if not self.delta_log:
-            return
         from product_analytics_spark.sources import delta_log as dl
 
         try:
@@ -3025,7 +2934,7 @@ class SnapshotStore:
         returns the merged snapshot DataFrame (freshly readable).
 
         The merged relation lazily reads the OLD version's files;
-        writing the new version before the pointer commit means the
+        writing the new version before the log commit means the
         read and the write never race — the commit happens only after
         the new version is fully on disk.
 
@@ -3168,7 +3077,7 @@ class SnapshotStore:
         order. Flat tables yield one ``(".", files)`` pair; hive-
         partitioned tables yield one pair per leaf partition directory
         (``order_year=1996/order_month=3``). Hidden/metadata entries
-        (``_SUCCESS``, ``.crc``, the pointer/log files) are skipped."""
+        (``_SUCCESS``, ``.crc``, ``_dv``, sidecars) are skipped."""
         out: list[tuple[str, list[str]]] = []
         for root, dirs, files in os.walk(data):
             dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
@@ -3252,7 +3161,7 @@ class SnapshotStore:
     ) -> dict:
         """Execute the compaction plan (OPTIMIZE's rewrite half): each
         planned group is rewritten as ONE file into a fresh version
-        dir, then the pointer commits atomically — readers switch from
+        dir, then the log commits it atomically — readers switch from
         N small files to |groups| files in one rename, with the prior
         version retained per the retention window (time travel to the
         pre-compaction layout still works).
@@ -3386,16 +3295,12 @@ class SnapshotStore:
         # engine maintaining the table reclusters the same way, which
         # is the point of putting them in the log (Delta's successor
         # to ZORDER post-hooks).
-        liquid_keys: list[str] = []
-        if self.delta_log:
-            from product_analytics_spark.sources import delta_log as dl
+        from product_analytics_spark.sources import delta_log as dl
 
-            try:
-                liquid_keys = self.delta_snapshot(
-                    name
-                ).clustering_columns()
-            except dl.DeltaProtocolError:
-                liquid_keys = []
+        try:
+            liquid_keys = self.delta_snapshot(name).clustering_columns()
+        except dl.DeltaProtocolError:
+            liquid_keys = []
         layout = self.layout(name)
         keys = liquid_keys or list(
             layout.get("zorder_by") or layout.get("cluster_by") or ()
@@ -3566,8 +3471,8 @@ class SnapshotStore:
         """Copy-on-write rewrite — the kernel under DELETE and UPDATE
         (Delta/Iceberg COW semantics): only files that CONTAIN a
         matching row are rewritten; every untouched file is HARDLINKED
-        into the new version (zero data movement), and the pointer
-        commit flips readers atomically.
+        into the new version (zero data movement), and the log commit
+        flips readers atomically.
 
         Touched files are discovered by Spark itself: one filtered
         scan projecting input_file_name() — partition pruning and

@@ -2,9 +2,10 @@
 
 The docstrings of ``SnapshotStore._commit`` (sources/sinks.py) and
 ``JsonlWriter.commit`` (sources/pyds.py) claim atomicity: a failure at
-ANY point before the commit's single atomic rename must leave readers
-on the prior version with no partial output visible. These tests
-inject the failure instead of assuming it.
+ANY point before the commit point (the Delta log's putIfAbsent; the
+manifest's atomic rename) must leave readers on the prior version with
+no partial output visible. These tests inject the failure instead of
+assuming it.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import os
 import pytest
 from pyspark.sql import Row
 
+from product_analytics_spark.sources import delta_log as dl
 from product_analytics_spark.sources.pyds import JsonlWriter
 from product_analytics_spark.sources.sinks import SnapshotStore
 
@@ -25,6 +27,18 @@ def _rows(df):
 
 class _Boom(RuntimeError):
     pass
+
+
+class _CrashingOwner(dl.FileSystemCommitOwner):
+    """The filesystem commit owner, dying at the commit point (the
+    log's putIfAbsent) while ``armed``."""
+
+    armed = False
+
+    def put_if_absent(self, log_dir, version, payload):
+        if self.armed:
+            raise _Boom("crash at the commit point")
+        return super().put_if_absent(log_dir, version, payload)
 
 
 class TestSnapshotStoreCrashPaths:
@@ -41,58 +55,43 @@ class TestSnapshotStoreCrashPaths:
         assert _rows(store.read("t")) == before
         assert staged not in store.versions("t")  # never logged = never committed
 
-    def test_crash_inside_commit_before_pointer_swap(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """os.replace is the commit point — dying on it (tmp pointer
-        written, swap not executed) must leave the prior version
-        readable and the store retryable."""
-        store = SnapshotStore(spark, str(tmp_path / "wh"))
+    def test_crash_at_log_commit_point(self, spark, tmp_path):
+        """The log's putIfAbsent is the commit point — dying on it
+        (version dir written, log entry not linked) must leave the
+        prior version readable and the store retryable."""
+        owner = _CrashingOwner()
+        store = SnapshotStore(spark, str(tmp_path / "wh"), commit_owner=owner)
         v1 = spark.createDataFrame([(1, "a")], "k int, v string")
         store.overwrite("t", v1)
         before = _rows(store.read("t"))
-
-        real_replace = os.replace
-
-        def exploding_replace(src, dst):
-            if os.path.basename(dst) == "_CURRENT":
-                raise _Boom("crash at the commit point")
-            return real_replace(src, dst)
+        log_v = dl.DeltaLog(store.path("t")).latest_version()
 
         v2 = spark.createDataFrame([(2, "b")], "k int, v string")
-        monkeypatch.setattr(os, "replace", exploding_replace)
+        owner.armed = True
         with pytest.raises(_Boom):
             store.overwrite("t", v2)
-        monkeypatch.undo()
+        owner.armed = False
 
-        # Reader still on v1; the orphan tmp pointer and staged dir are
-        # inert debris, not state.
+        # Reader still on v1, and the log did not move.
         assert _rows(store.read("t")) == before
+        assert dl.DeltaLog(store.path("t")).latest_version() == log_v
         # And the store recovers: a clean retry commits v2.
         store.overwrite("t", v2)
         assert _rows(store.read("t")) == [(2, "b")]
 
-    def test_merge_crash_preserves_prior_snapshot(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """merge() = read prev + overwrite; a crash during its commit
+    def test_merge_crash_preserves_prior_snapshot(self, spark, tmp_path):
+        """merge() = read prev + overwrite; a crash at its log commit
         leaves the pre-merge snapshot intact (no torn merge)."""
-        store = SnapshotStore(spark, str(tmp_path / "wh"))
+        owner = _CrashingOwner()
+        store = SnapshotStore(spark, str(tmp_path / "wh"), commit_owner=owner)
         base = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
         store.overwrite("t", base)
 
-        real_replace = os.replace
-
-        def exploding_replace(src, dst):
-            if os.path.basename(dst) == "_CURRENT":
-                raise _Boom()
-            return real_replace(src, dst)
-
         batch = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
-        monkeypatch.setattr(os, "replace", exploding_replace)
+        owner.armed = True
         with pytest.raises(_Boom):
             store.merge("t", batch, key="k")
-        monkeypatch.undo()
+        owner.armed = False
         assert _rows(store.read("t")) == [(1, "a"), (2, "b")]
 
 

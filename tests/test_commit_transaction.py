@@ -8,17 +8,22 @@
   after ``max_retries``;
 * a genuine failure of the MoR trio and the COW rewrite re-raises
   unchanged and leaves no new version dir;
-* a Delta-log commit refused inside the commit lock leaves the pointer,
-  the log and the table's rows as they were.
+* a Delta-log commit refused inside the commit lock leaves the
+  table's version, its log and its rows as they were.
 
 The concurrent commit lands through ``post_scan`` where the writer has
 it, and through a ``_commit`` wrapper on the store instance for
 ``restore``, ``purge_dv`` and ``optimize``, which take no hook.
+
+Each writer's base store is built once per module and copied into
+every case (a store is a plain directory), so a case pays only for
+the writes it tests.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import DataFrame
@@ -42,20 +47,39 @@ def _rows(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def _store(spark, root, writer):
+def _open(spark, root):
+    return SnapshotStore(
+        spark, str(root), retain_versions=10, delta_log=True, cdf=True
+    )
+
+
+def _build(spark, root, writer):
     """A four-file table; clustered for optimize (else it falls back
     to compact), with a second version to go back to for restore and
     an outstanding deletion vector for purge_dv."""
-    st = SnapshotStore(
-        spark, str(root), retain_versions=10, delta_log=True, cdf=True
-    )
+    st = _open(spark, root)
     layout = {"cluster_by": ("v",)} if writer == "optimize" else {}
     st.overwrite("t", _base(spark), n_files=4, **layout)
     if writer == "restore":
         st.merge("t", _rows(spark, [(100, "z", 1000)]), "k")
     if writer == "purge_dv":
         st.delete_where_mor("t", "k >= 38")
-    return st
+
+
+@pytest.fixture(scope="module")
+def make_store(spark, tmp_path_factory):
+    """``make_store(root, writer)``: a copy of ``writer``'s base store
+    at ``root``; the base is built on first use."""
+    bases: dict[str, str] = {}
+
+    def make(root, writer):
+        if writer not in bases:
+            bases[writer] = str(tmp_path_factory.mktemp(f"base_{writer}"))
+            _build(spark, bases[writer], writer)
+        shutil.copytree(bases[writer], str(root))
+        return _open(spark, root)
+
+    return make
 
 
 def _concurrent(spark, st, writer, i):
@@ -159,13 +183,15 @@ def _vdirs(st):
 
 
 @pytest.mark.parametrize("writer", WRITERS)
-def test_conflict_retry_equals_serial_run(spark, tmp_path, writer, monkeypatch):
-    st = _store(spark, tmp_path / "occ", writer)
+def test_conflict_retry_equals_serial_run(
+    spark, tmp_path, writer, monkeypatch, make_store
+):
+    st = make_store(tmp_path / "occ", writer)
     result, fired = _with_concurrent(
         spark, st, writer, monkeypatch, every=False
     )
     assert fired == [1]
-    serial = _store(spark, tmp_path / "serial", writer)
+    serial = make_store(tmp_path / "serial", writer)
     _concurrent(spark, serial, writer, 1)
     expected = _run(spark, serial, writer)
     assert _normal(spark, st, result) == _normal(spark, serial, expected)
@@ -173,8 +199,10 @@ def test_conflict_retry_equals_serial_run(spark, tmp_path, writer, monkeypatch):
 
 
 @pytest.mark.parametrize("writer", WRITERS)
-def test_always_conflicting_writer_gives_up(spark, tmp_path, writer, monkeypatch):
-    st = _store(spark, tmp_path / "occ", writer)
+def test_always_conflicting_writer_gives_up(
+    spark, tmp_path, writer, monkeypatch, make_store
+):
+    st = make_store(tmp_path / "occ", writer)
     with pytest.raises(ConcurrentWriteError):
         _with_concurrent(spark, st, writer, monkeypatch, every=True)
     assert st._cdc_pending("t") == []
@@ -185,9 +213,9 @@ def test_always_conflicting_writer_gives_up(spark, tmp_path, writer, monkeypatch
     ("delete_where_mor", "update_where_mor", "merge_mor", "_rewrite_where"),
 )
 def test_genuine_failure_reraised_without_residue(
-    spark, tmp_path, writer, monkeypatch
+    spark, tmp_path, writer, monkeypatch, make_store
 ):
-    st = _store(spark, tmp_path / "occ", writer)
+    st = make_store(tmp_path / "occ", writer)
     before, ver = _vdirs(st), st.current_version("t")
     boom = RuntimeError("injected commit failure")
 
@@ -210,9 +238,9 @@ def test_refused_log_commit_leaves_table_intact(
 ):
     """The Delta-log commit refuses inside the commit lock: a staged
     change file vanished before the commit, or the log itself refuses
-    the new version. The refusal comes before the pointer moves: the
-    table keeps its version, its rows and its log, and no new version
-    dir or staged change file is left behind."""
+    the new version. The log commit is the commit point, so the table
+    keeps its version, its rows and its log, and no new version dir or
+    staged change file is left behind."""
     st = SnapshotStore(spark, str(tmp_path / "wh"), delta_log=True, cdf=True)
     st.overwrite("t", _base(spark).where("k < 10"))
     ver, before = st.current_version("t"), _vdirs(st)

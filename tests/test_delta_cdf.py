@@ -65,8 +65,9 @@ def _counts(spark, tdir, start=0, end=None):
 
 
 def test_cdf_requires_delta_log(spark):
+    # every store commits through the log; one without it is refused
     with pytest.raises(ValueError, match="delta_log"):
-        SnapshotStore(spark, WH, cdf=True)
+        SnapshotStore(spark, WH, delta_log=False, cdf=True)
 
 
 def test_cdf_full_dml_lifecycle(spark, store):

@@ -87,11 +87,15 @@ class TestEnablement:
         assert dl.DeltaLog(store.path("t")).latest_version() == v1
 
     def test_requires_delta_log(self, spark):
+        # a store without the log cannot be built; every store has
+        # one, so a default store enables row tracking
         shutil.rmtree(WH + "2", ignore_errors=True)
+        with pytest.raises(ValueError, match="delta_log"):
+            SnapshotStore(spark, WH + "2", delta_log=False)
         s = SnapshotStore(spark, WH + "2")
         s.overwrite("t", _base(spark))
-        with pytest.raises(ValueError, match="delta_log"):
-            s.enable_row_tracking("t")
+        s.enable_row_tracking("t")
+        assert dl.DeltaLog(s.path("t")).snapshot().row_tracking_enabled()
         shutil.rmtree(WH + "2", ignore_errors=True)
 
 

@@ -1,8 +1,8 @@
 """SnapshotStore commit protocol + physical layout (S4-S7).
 
-The pointer-commit property is what makes the OSS fallback honest:
-an uncommitted version write must be invisible to readers, and the
-commit must be a single atomic pointer replace. The layout tests pin
+The commit property: an uncommitted version write must be invisible
+to readers, and the commit must be a single atomic Delta log entry
+(the log's putIfAbsent). The layout tests pin
 the S6/S7 guarantees the scale notes promise: one file per hive
 partition directory and cluster-key ordering inside each file.
 """
@@ -33,7 +33,7 @@ class TestCommitProtocol:
         v1 = _df(spark, [(1, "a", 1.0), (2, "b", 2.0)])
         store.overwrite("t1", v1)
         # Write a new version WITHOUT committing (= crash before the
-        # pointer replace): readers must still see v1.
+        # log commit): readers must still see v1.
         v2 = _df(spark, [(1, "a", 9.0)])
         pending = store._write_version("t1", v2)
         got = {(r.k, r.v) for r in store.read("t1").collect()}
@@ -794,8 +794,8 @@ class TestOptimizeRecluster:
 
 
 class TestCommitLogGc:
-    """Round-8: the commit log truncates to the retention window
-    (Delta log-cleanup analog), GC deletes only previously COMMITTED
+    """Round-8: the version list (from the Delta log's commits) is
+    bounded by the retention window, GC deletes only previously COMMITTED
     versions, and a concurrent writer's uncommitted dir survives
     another writer's commit (the old every-v_-dir sweep destroyed the
     last writer's data under unchecked concurrency); crashed writers'
@@ -805,11 +805,12 @@ class TestCommitLogGc:
         store = SnapshotStore(spark, str(tmp_path / "wh"), retain_versions=2)
         for i in range(5):
             store.overwrite("t", spark.range(i + 1).selectExpr("id AS k"))
-        log = store._log_path("t")
-        with open(log, encoding="utf-8") as fh:
-            lines = [ln for ln in fh if ln.strip()]
-        assert len(lines) == 2  # retention window, not 5
-        assert len(store.versions("t")) == 2
+        vs = store.versions("t")
+        assert len(vs) == 2  # retention window, not 5
+        assert vs[-1] == store.current_version("t")
+        # the log keeps all five commits; GC dropped the three older dirs
+        on_disk = {d for d in os.listdir(store.path("t")) if d.startswith("v_")}
+        assert on_disk == set(vs)
         assert store.read("t", version=0).count() == 4  # time travel intact
 
     def test_inflight_writer_dir_survives_concurrent_commit(
