@@ -73,8 +73,10 @@ _NAMESPACES = {
     "live": _Namespace(False, drop=lambda release: release()),
     "shared": _Namespace(True, build_locked=True, drop=_drop_shared),
     "base_tables": _Namespace(True, build_locked=True),
+    "model_columns": _Namespace(True),
     "version_dirs": _Namespace(True, bound=256),
     "snapshots": _Namespace(False, bound=256),
+    "retained": _Namespace(False, bound=256),
     "landed": _Namespace(False),
     "materialized": _Namespace(False),
     "cdf_fused": _Namespace(False),
@@ -146,6 +148,25 @@ def memo(namespace: str, key, build, *, spark=None, valid=None):
                 _put(ns, full, value)
     elif not hit:
         value = build()
+        with ns.lock:
+            _put(ns, full, value)
+    count(namespace, "hits" if hit else "misses")
+    return value
+
+
+def carry(namespace: str, key, step):
+    """Replace a process-scoped entry with ``step(entry)`` (``step(None)``
+    when there is none) and return it: state a caller carries forward
+    instead of rebuilding, like a table's retained version list from
+    one log version to the next. ``step`` returns its argument itself
+    when the entry is still current (a hit)."""
+    ns = _NAMESPACES[namespace]
+    full = (_PROCESS, key)
+    prior = _get(ns, full, None)
+    prior = None if prior is _MISS else prior
+    value = step(prior)
+    hit = prior is not None and value is prior
+    if not hit:
         with ns.lock:
             _put(ns, full, value)
     count(namespace, "hits" if hit else "misses")

@@ -20,36 +20,32 @@ snapshot DataFrame. The caller merges via operators/incremental.py.
 Dedup uses the max_by aggregation form — shuffles one candidate row
 per key per input partition instead of every CDC version (the 100 TB
 win; see operators/dedup.py).
+
+The model's Column expressions are built once per session
+(``cache.py``'s ``model_columns``); a run chains only the DataFrame
+operators and the watermark literal.
 """
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
 from product_analytics_spark.functions import cleaning
+from product_analytics_spark.models import select, select_list
 from product_analytics_spark.operators import dedup, incremental
 
 PASSTHROUGH_META = ("_source_system", "_batch_id")
 
+#: columns the output drops once the backfill has used them
+_RUN_ONLY = ("_cdc_operation", "_own_ts")
 
-def build_customers_latest(
-    bronze: DataFrame,
-    prev: DataFrame | None = None,
-    incremental_mode: bool = True,
-) -> DataFrame:
-    """One run of the customers_latest model over a bronze CDC batch.
 
-    ``prev`` is the prior materialized snapshot ({{ this }});
-    None == first run / full refresh.
-    """
-    batch = bronze
-    if incremental_mode and prev is not None:
-        wm = incremental.high_watermark(prev, "last_updated_at")
-        batch = incremental.watermark_filter(batch, "_cdc_timestamp", wm)
-
-    latest = dedup.latest_by_key(batch, "customer_id")
-
+def _columns() -> SimpleNamespace:
+    """The model's Column expressions, stage by stage."""
     raw_email, raw_phone = F.col("email"), F.col("phone")
     is_email_valid = ~(
         raw_email.isNull()
@@ -68,48 +64,79 @@ def build_customers_latest(
         & F.col("state").isNotNull() & (F.col("state") != "")
         & F.col("postal_code").isNotNull() & (F.col("postal_code") != "")
     )
-
-    transformed = latest.select(
+    own_ts = F.col("_cdc_timestamp")
+    items = (
         "customer_id",
-        F.lower(F.trim("email")).alias("email"),
-        F.trim("first_name").alias("first_name"),
-        F.trim("last_name").alias("last_name"),
-        F.concat(F.trim("first_name"), F.lit(" "), F.trim("last_name")).alias("full_name"),
-        F.trim("phone").alias("phone"),
-        F.trim("address_line1").alias("address_line1"),
-        F.trim("address_line2").alias("address_line2"),
-        F.trim("city").alias("city"),
-        F.trim("state").alias("state"),
-        F.upper(F.trim("country")).alias("country"),
-        F.trim("postal_code").alias("postal_code"),
+        ("email", F.lower(F.trim("email"))),
+        ("first_name", F.trim("first_name")),
+        ("last_name", F.trim("last_name")),
+        ("full_name", F.concat(F.trim("first_name"), F.lit(" "), F.trim("last_name"))),
+        ("phone", F.trim("phone")),
+        ("address_line1", F.trim("address_line1")),
+        ("address_line2", F.trim("address_line2")),
+        ("city", F.trim("city")),
+        ("state", F.trim("state")),
+        ("country", F.upper(F.trim("country"))),
+        ("postal_code", F.trim("postal_code")),
         "registration_date",
-        F.upper("customer_status").alias("customer_status"),
-        F.upper("customer_segment").alias("customer_segment"),
-        is_email_valid.alias("is_email_valid"),
-        is_phone_valid.alias("is_phone_valid"),
-        is_address_complete.alias("is_address_complete"),
+        ("customer_status", F.upper("customer_status")),
+        ("customer_segment", F.upper("customer_segment")),
+        ("is_email_valid", is_email_valid),
+        ("is_phone_valid", is_phone_valid),
+        ("is_address_complete", is_address_complete),
         "_cdc_operation",
-        F.col("_cdc_timestamp").alias("last_updated_at"),
-        (F.col("_cdc_operation") == "DELETE").alias("is_deleted"),
+        ("last_updated_at", own_ts),
+        ("is_deleted", F.col("_cdc_operation") == "DELETE"),
         *PASSTHROUGH_META,
-        F.col("_cdc_timestamp").alias("_own_ts"),
+        ("_own_ts", own_ts),
     )
-
-    if incremental_mode and prev is not None:
-        with_first_seen = incremental.first_seen_backfill(
-            transformed, prev, "customer_id", "_own_ts"
-        )
-        # INSERT rows always keep their own timestamp (ref :125).
-        with_first_seen = with_first_seen.withColumn(
-            "first_seen_at",
-            F.when(F.col("_cdc_operation") == "INSERT", F.col("_own_ts")).otherwise(
-                F.col("first_seen_at")
+    names, transformed = select_list(*items)
+    return SimpleNamespace(
+        # DELETE rows leave the active set (ref :143-153)
+        not_deleted=F.col("_cdc_operation") != "DELETE",
+        # full refresh: first_seen_at is the row's own timestamp
+        out_full=select_list(
+            *[i for i, n in zip(items, names) if n not in _RUN_ONLY],
+            ("first_seen_at", own_ts),
+        )[1],
+        transformed=transformed,
+        # incremental: the prior snapshot's first_seen_at per key; an
+        # INSERT row keeps its own timestamp (ref :123-140)
+        prior=F.max("first_seen_at").alias("_prior_first_seen"),
+        out_incremental=select_list(
+            *[n for n in names if n not in _RUN_ONLY],
+            (
+                "first_seen_at",
+                F.when(F.col("_cdc_operation") == "INSERT", F.col("_own_ts")).otherwise(
+                    F.coalesce(F.col("_prior_first_seen"), F.col("_own_ts"))
+                ),
             ),
-        )
-    else:
-        with_first_seen = transformed.withColumn("first_seen_at", F.col("_own_ts"))
-
-    return (
-        with_first_seen.filter(F.col("_cdc_operation") != "DELETE")
-        .drop("_cdc_operation", "_own_ts")
+        )[1],
     )
+
+
+def build_customers_latest(
+    bronze: DataFrame,
+    prev: DataFrame | None = None,
+    incremental_mode: bool = True,
+) -> DataFrame:
+    """One run of the customers_latest model over a bronze CDC batch.
+
+    ``prev`` is the prior materialized snapshot ({{ this }});
+    None == first run / full refresh.
+    """
+    c = cache.memo(
+        "model_columns",
+        ("customers_latest", tuple(bronze.columns)),
+        _columns,
+        spark=bronze.sparkSession,
+    )
+    if not (incremental_mode and prev is not None):
+        latest = dedup.latest_by_key(bronze, "customer_id")
+        return select(latest.filter(c.not_deleted), c.out_full)
+    wm = incremental.high_watermark(prev, "last_updated_at")
+    batch = incremental.watermark_filter(bronze, "_cdc_timestamp", wm)
+    transformed = select(dedup.latest_by_key(batch, "customer_id"), c.transformed)
+    prior = prev.groupBy("customer_id").agg(c.prior)
+    joined = transformed.join(prior, "customer_id", "left")
+    return select(joined.filter(c.not_deleted), c.out_incremental)

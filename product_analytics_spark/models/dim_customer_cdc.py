@@ -14,44 +14,33 @@ then left joins of key-sized aggregates back to the base — every side
 except the metrics aggregate is broadcast-able; the reference's five
 CTE joins collapse here because segmentation / geo / quality are pure
 projections of the base row, not separate relations.
+
+The model's Column expressions — the metric aggregates, the
+region/tier/segment/lifecycle/RFM ladders — are built once per session
+per (``as_of``, ``as_of_ts``, ``fix_region_case``, input columns) and
+held in ``cache.py``'s ``model_columns`` namespace; a run chains only
+the DataFrame operators over them.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
+from product_analytics_spark.models import select, select_list
 
-def build_dim_customer_cdc(
-    customers_latest: DataFrame,
-    orders_cleaned: DataFrame,
-    as_of: dt.date,
-    as_of_ts: dt.datetime | None = None,
-    fix_region_case: bool = False,
-) -> DataFrame:
-    """See module docstring.
 
-    ``fix_region_case``: the reference has a latent case bug in its
-    geographic mapping — customers_latest.sql:91 UPPERs country, but
-    dim_customer.sql:66-70 compares against mixed-case literals
-    ('Canada', 'Germany', 'France', 'Australia'), so those branches
-    can never match and such customers land in 'Other'; only 'USA'
-    and 'UK' ever hit. The default (False) reproduces that behavior
-    bug-for-bug — this module's contract is value parity with the
-    reference. Pass True for the evidently-intended mapping
-    (uppercased literals)."""
+def _columns(
+    as_of: dt.date, as_of_ts: dt.datetime | None, fix_region_case: bool
+) -> SimpleNamespace:
+    """The model's Column expressions (see ``build_dim_customer_cdc``)."""
     as_of_lit = F.lit(as_of)
-    base = customers_latest.filter(~F.col("is_deleted"))
-
-    valid_orders = orders_cleaned.filter(
-        F.col("customer_id").isNotNull()
-        & (F.col("order_status") != "CANCELLED")
-        & (F.col("is_valid_order") == True)  # noqa: E712
-    )
     nr = F.col("net_revenue")
-    om = valid_orders.groupBy("customer_id").agg(
+    metrics = [
         F.countDistinct("order_id").alias("lifetime_orders"),
         F.round(F.sum(nr), 2).alias("lifetime_value"),
         F.round(F.avg(nr), 2).alias("average_order_value"),
@@ -76,9 +65,7 @@ def build_dim_customer_cdc(
             ),
             2,
         ).alias("revenue_last_90_days"),
-    ).withColumn("days_since_last_order", F.datediff(as_of_lit, F.col("last_order_date")))
-
-    j = base.join(om, "customer_id", "left")
+    ]
 
     lo = F.col("lifetime_orders")
     lv = F.col("lifetime_value")
@@ -155,42 +142,92 @@ def build_dim_customer_cdc(
 
     updated_at = F.lit(as_of_ts) if as_of_ts is not None else F.current_timestamp()
 
-    return j.select(
-        "customer_id",
-        "email",
-        "full_name",
-        "phone",
-        "city",
-        "state",
-        "country",
-        region.alias("region"),
-        "registration_date",
-        "customer_status",
-        "customer_segment",
-        customer_tier.alias("customer_tier"),
-        enhanced_segment.alias("enhanced_segment"),
-        lifecycle_stage.alias("lifecycle_stage"),
-        F.coalesce(lo, F.lit(0)).alias("lifetime_orders"),
-        F.coalesce(lv, F.lit(0.00)).alias("lifetime_value"),
-        F.coalesce(F.col("average_order_value"), F.lit(0.00)).alias("average_order_value"),
-        F.coalesce(F.col("completed_orders"), F.lit(0)).alias("completed_orders"),
-        F.coalesce(F.col("cancelled_orders"), F.lit(0)).alias("cancelled_orders"),
-        F.coalesce(F.col("delivered_revenue"), F.lit(0.00)).alias("delivered_revenue"),
-        F.coalesce(dslo, F.lit(9999)).alias("days_since_last_order"),
-        F.coalesce(lo > 1, F.lit(False)).alias("is_repeat_customer"),
-        F.coalesce(F.col("orders_last_90_days"), F.lit(0)).alias("orders_last_90_days"),
-        F.coalesce(F.col("revenue_last_90_days"), F.lit(0.00)).alias("revenue_last_90_days"),
-        F.coalesce(F.col("active_months"), F.lit(0)).alias("active_months"),
-        F.coalesce(lv >= 1000, F.lit(False)).alias("is_high_value_customer"),
-        F.coalesce(dslo <= 90, F.lit(False)).alias("is_active_customer"),
-        cancellation_rate.alias("cancellation_rate"),
-        recency_score.alias("recency_score"),
-        frequency_score.alias("frequency_score"),
-        monetary_score.alias("monetary_score"),
-        F.round(quality_score, 2).alias("data_quality_score"),
-        "is_email_valid",
-        "is_phone_valid",
-        "is_address_complete",
-        F.col("first_seen_at").alias("created_at"),
-        updated_at.alias("updated_at"),
+    return SimpleNamespace(
+        active=~F.col("is_deleted"),
+        valid_order=(
+            F.col("customer_id").isNotNull()
+            & (F.col("order_status") != "CANCELLED")
+            & (F.col("is_valid_order") == True)  # noqa: E712
+        ),
+        metrics=metrics,
+        days_since_last_order=F.datediff(as_of_lit, F.col("last_order_date")),
+        out=select_list(
+            "customer_id",
+            "email",
+            "full_name",
+            "phone",
+            "city",
+            "state",
+            "country",
+            ("region", region),
+            "registration_date",
+            "customer_status",
+            "customer_segment",
+            ("customer_tier", customer_tier),
+            ("enhanced_segment", enhanced_segment),
+            ("lifecycle_stage", lifecycle_stage),
+            ("lifetime_orders", F.coalesce(lo, F.lit(0))),
+            ("lifetime_value", F.coalesce(lv, F.lit(0.00))),
+            ("average_order_value", F.coalesce(F.col("average_order_value"), F.lit(0.00))),
+            ("completed_orders", F.coalesce(F.col("completed_orders"), F.lit(0))),
+            ("cancelled_orders", F.coalesce(F.col("cancelled_orders"), F.lit(0))),
+            ("delivered_revenue", F.coalesce(F.col("delivered_revenue"), F.lit(0.00))),
+            ("days_since_last_order", F.coalesce(dslo, F.lit(9999))),
+            ("is_repeat_customer", F.coalesce(lo > 1, F.lit(False))),
+            ("orders_last_90_days", F.coalesce(F.col("orders_last_90_days"), F.lit(0))),
+            ("revenue_last_90_days", F.coalesce(F.col("revenue_last_90_days"), F.lit(0.00))),
+            ("active_months", F.coalesce(F.col("active_months"), F.lit(0))),
+            ("is_high_value_customer", F.coalesce(lv >= 1000, F.lit(False))),
+            ("is_active_customer", F.coalesce(dslo <= 90, F.lit(False))),
+            ("cancellation_rate", cancellation_rate),
+            ("recency_score", recency_score),
+            ("frequency_score", frequency_score),
+            ("monetary_score", monetary_score),
+            ("data_quality_score", F.round(quality_score, 2)),
+            "is_email_valid",
+            "is_phone_valid",
+            "is_address_complete",
+            ("created_at", F.col("first_seen_at")),
+            ("updated_at", updated_at),
+        )[1],
     )
+
+
+def build_dim_customer_cdc(
+    customers_latest: DataFrame,
+    orders_cleaned: DataFrame,
+    as_of: dt.date,
+    as_of_ts: dt.datetime | None = None,
+    fix_region_case: bool = False,
+) -> DataFrame:
+    """See module docstring.
+
+    ``fix_region_case``: the reference has a latent case bug in its
+    geographic mapping — customers_latest.sql:91 UPPERs country, but
+    dim_customer.sql:66-70 compares against mixed-case literals
+    ('Canada', 'Germany', 'France', 'Australia'), so those branches
+    can never match and such customers land in 'Other'; only 'USA'
+    and 'UK' ever hit. The default (False) reproduces that behavior
+    bug-for-bug — this module's contract is value parity with the
+    reference. Pass True for the evidently-intended mapping
+    (uppercased literals)."""
+    c = cache.memo(
+        "model_columns",
+        (
+            "dim_customer",
+            as_of,
+            as_of_ts,
+            fix_region_case,
+            tuple(customers_latest.columns),
+            tuple(orders_cleaned.columns),
+        ),
+        lambda: _columns(as_of, as_of_ts, fix_region_case),
+        spark=customers_latest.sparkSession,
+    )
+    om = (
+        orders_cleaned.filter(c.valid_order)
+        .groupBy("customer_id")
+        .agg(*c.metrics)
+        .withColumn("days_since_last_order", c.days_since_last_order)
+    )
+    return select(customers_latest.filter(c.active).join(om, "customer_id", "left"), c.out)

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
+
 #: CDC metadata columns (reference: models/sources/bronze/bronze.yml:10-14).
 CDC_OP = "_cdc_operation"
 CDC_TS = "_cdc_timestamp"
@@ -47,14 +49,28 @@ def latest_by_key(
     Equivalent to the reference's row_number()+rn=1 pattern
     (customers_latest.sql:33-38) but expressed as a hash aggregate so
     Spark's partial aggregation halves-or-better the shuffle volume.
+
+    The grouping, ``max_by`` struct and output columns are built once
+    per session per (key, order, input columns) — ``cache.py``'s
+    ``model_columns`` — since the CDC models apply them every run.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    payload = [c for c in df.columns if c not in keys]
-    ord_struct = F.struct(*[F.col(c) for c in order_by])
-    agg = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_latest")
+    keys = (key,) if isinstance(key, str) else tuple(key)
+    cols = tuple(df.columns)
+
+    def build():
+        payload = [c for c in cols if c not in keys]
+        ord_struct = F.struct(*[F.col(c) for c in order_by])
+        group = [F.col(k) for k in keys]
+        latest = F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_latest")
+        return group, latest, [*group, F.col("_latest.*")]
+
+    group, latest, out = cache.memo(
+        "model_columns",
+        ("latest_by_key", keys, tuple(order_by), cols),
+        build,
+        spark=df.sparkSession,
     )
-    return agg.select(*keys, "_latest.*")
+    return df.groupBy(*group).agg(latest).select(*out)
 
 
 def latest_by_key_window(

@@ -10,10 +10,13 @@ orders_cleaned.sql:9-12) as engine operators.
 Scale notes: the watermark is a single scalar collected on the driver
 (one tiny aggregate job over the snapshot's max — at 100 TB keep the
 snapshot partitioned by an ingest-date column so the max prunes to the
-newest partitions). The merge is a key-partitioned anti-join + union;
-with both sides bucketed/partitioned on the key it is shuffle-free on
-the snapshot side. With delta-spark present, MERGE INTO does the same
-with file-level pruning.
+newest partitions). It stays a job rather than a read of the Delta
+log's per-file ``maxValues``: Spark writes timestamps as INT96
+(``spark.sql.parquet.outputTimestampType``), for which parquet keeps
+no min/max statistics, so the log has no timestamp bounds to read. The
+merge is a key-partitioned anti-join + union; with both sides
+bucketed/partitioned on the key it is shuffle-free on the snapshot
+side.
 """
 
 from __future__ import annotations

@@ -65,6 +65,72 @@ UNCHECKED = object()
 _READ = object()
 
 
+#: the deletion-vector sidecar (``_dv/``) the MoR DMLs write: one row
+#: per tombstoned position (version-relative file path, row index)
+_DV_SCHEMA = "path string, row_index bigint"
+
+
+def _logged_schema(meta: dict):
+    """The Spark schema a log metaData action records for its files,
+    without the field metadata the log adds (``delta.*`` keys:
+    generation expressions, invariants, identity specs), which the
+    files' own footers never carry. None — read the footers instead —
+    where the log does not describe the files' physical columns:
+
+    * row-tracked tables: rewritten files carry the materialized
+      row-id columns;
+    * column-mapping tables: the files carry physical names;
+    * type-widening tables: the files carry mixed physical widths."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    conf = meta.get("configuration") or {}
+    if (
+        not meta.get("schemaString")
+        or conf.get("delta.columnMapping.mode") in ("name", "id")
+        or conf.get("delta.enableTypeWidening") == "true"
+        or conf.get("delta.enableRowTracking") == "true"
+    ):
+        return None
+
+    def strip(t):
+        if isinstance(t, dict):
+            if t.get("type") == "struct":
+                for f in t["fields"]:
+                    md = {
+                        k: v
+                        for k, v in (f.get("metadata") or {}).items()
+                        if not k.startswith("delta.")
+                    }
+                    f["metadata"] = md
+                    strip(f["type"])
+            elif t.get("type") == "array":
+                strip(t["elementType"])
+            elif t.get("type") == "map":
+                strip(t["keyType"])
+                strip(t["valueType"])
+        return t
+
+    return StructType.fromJson(strip(json.loads(meta["schemaString"])))
+
+
+def _nullable(t):
+    """``t`` with every field, array element and map value nullable —
+    the schema a parquet read reports for files written from ``t``."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 def _dir_signature(d: str) -> tuple:
     """Content signature of a store directory's data files: sorted
     (relative path, size, mtime_ns) per parquet file, skipping
@@ -152,6 +218,9 @@ class _Attempt:
         self.jobs: list = []
         #: zero-arg callables run last on every exit (cache releases)
         self.releases: list = []
+        #: the DataFrame ``_stage_overwrite`` wrote: its schema is the
+        #: metaData of a new table whose empty first write left no file
+        self.written: DataFrame | None = None
 
     @property
     def vdir(self) -> str:
@@ -819,28 +888,69 @@ class SnapshotStore:
 
     def versions(self, name: str) -> list[str]:
         """Committed version dirs still on disk, oldest→newest: the
-        dirs the log's data commits name, walked newest first back to
-        the first one GC dropped (the retention window)."""
+        dirs the log's data commits name, back to the first one GC
+        dropped (the retention window)."""
+        return [v for v, _lv in self._retained(self.path(name))]
+
+    def _retained(self, table: str) -> list[tuple[str, int]]:
+        """(version dir, log version of the newest commit naming it)
+        for ``versions()``, oldest→newest. Carried forward per table
+        through ``cache.py``'s ``retained`` namespace: each call opens
+        only the commits after the last one it saw (one per commit),
+        not every commit back to the first GC'd dir. The carried list
+        is rebuilt when the last seen commit file changed (a table
+        recreated at the same path)."""
         import json
 
         from product_analytics_spark.sources import delta_log as dl
 
-        table = self.path(name)
-        out: list[str] = []
-        for _v, path in reversed(dl.DeltaLog(table)._commits()):
-            with open(path, encoding="utf-8") as fh:
-                adds = (
-                    a["add"]["path"]
-                    for a in map(json.loads, filter(str.strip, fh))
-                    if a.get("add")
-                )
-                v = self._version_of(next(adds, ""))
-            if v is None or (out and out[-1] == v):
-                continue  # metadata-only, append, or root-dir commit
-            if not os.path.isdir(os.path.join(table, v)):
-                break
-            out.append(v)
-        return out[::-1]
+        commits = dl.DeltaLog(table)._commits()
+
+        def ident(path: str):
+            st = os.stat(path)
+            return st.st_ino, st.st_mtime_ns, st.st_size
+
+        def step(prior):
+            if not commits:
+                return (None, None, ())
+            head_v, head_p = commits[-1]
+            seen, seen_id, runs = prior or (None, None, ())
+            try:
+                if seen is None or ident(dict(commits)[seen]) != seen_id:
+                    seen, runs = None, ()
+            except (KeyError, OSError):
+                seen, runs = None, ()
+            runs = list(runs)
+            for lv, path in commits:
+                if seen is not None and lv <= seen:
+                    continue
+                with open(path, encoding="utf-8") as fh:
+                    adds = (
+                        a["add"]["path"]
+                        for a in map(json.loads, filter(str.strip, fh))
+                        if a.get("add")
+                    )
+                    v = self._version_of(next(adds, ""))
+                if v is None:
+                    continue  # metadata-only, append, or root-dir commit
+                if runs and runs[-1][0] == v:
+                    runs[-1] = (v, lv)
+                else:
+                    runs.append((v, lv))
+            # the window: newest dirs back to the first one GC dropped
+            # (or whose commits log cleanup already removed)
+            first = commits[0][0]
+            for i in range(len(runs) - 1, -1, -1):
+                v, lv = runs[i]
+                if lv < first or not os.path.isdir(os.path.join(table, v)):
+                    runs = runs[i + 1 :]
+                    break
+            out = (head_v, ident(head_p), tuple(runs))
+            return prior if out == prior else out
+
+        return list(
+            cache.carry("retained", os.path.abspath(table), step)[2]
+        )
 
     def current_data_dir(self, name: str) -> str | None:
         """Directory of the committed version, from the log's current
@@ -1160,16 +1270,67 @@ class SnapshotStore:
         memoized per (dir, mergeSchema, content signature): the DML
         certs re-read one version many times per op (q428: 66×, ~90
         ms each). The signature catches in-place changes (append into
-        the live data dir, a new _dv file)."""
+        the live data dir, a new _dv file).
+
+        The read is typed, not inferred: a version dir with the data
+        columns its commit logged (``_data_schema``), a ``_dv``
+        sidecar with the fixed schema the DML paths write. Footer
+        inference runs a one-task Spark job per dir; it stays where
+        neither describes the files' physical columns: row-tracked
+        ``mergeSchema`` reads (rewritten files carry materialized
+        row-id columns the logical schema omits) and the dirs
+        ``_data_schema`` leaves to it."""
 
         def read():
             reader = self.spark.read
             if merge_schema:
-                reader = reader.option("mergeSchema", "true")
+                return reader.option("mergeSchema", "true").parquet(data_dir)
+            if os.path.basename(data_dir) == "_dv":
+                schema = _DV_SCHEMA
+            else:
+                schema = self._data_schema(data_dir)
+            if schema is not None:
+                reader = reader.schema(schema)
             return reader.parquet(data_dir)
 
         key = (os.path.abspath(data_dir), bool(merge_schema), _dir_signature(data_dir))
         return cache.memo("version_dirs", key, read, spark=self.spark)
+
+    def _data_schema(self, data_dir: str):
+        """The data columns a version dir (or, for a table whose first
+        write was an ``append``, the table root) was committed with:
+        ``_logged_schema`` of the log metaData at the newest commit at
+        which the dir was live. Partition columns are left out: Spark's
+        path discovery (a listing, no Spark job) types them from the dir's
+        hive values exactly as an inferred read does, and an append
+        can add values the logged type would not parse. None — infer
+        from the footers — where ``_logged_schema`` is None and for
+        dirs no retained commit names (outside any table, or not
+        committed)."""
+        from pyspark.sql.types import StructType
+
+        from product_analytics_spark.sources import delta_log as dl
+
+        data_dir = os.path.normpath(data_dir)
+        v = os.path.basename(data_dir)
+        table = os.path.dirname(data_dir) if v.startswith("v_") else data_dir
+        log = dl.DeltaLog(table)
+        try:
+            snap = log.snapshot()
+        except dl.DeltaProtocolError:
+            return None  # not a logged table
+        live = self._version_of(next(iter(snap.files), ""))
+        if not snap.files or (os.path.join(table, live) if live else table) != data_dir:
+            lv = dict(self._retained(table)).get(v)  # time travel
+            if lv is None:
+                return None
+            snap = log.snapshot(lv)
+        meta = snap.metadata or {}
+        schema = _logged_schema(meta)
+        if schema is None:
+            return None
+        parts = set(meta.get("partitionColumns") or ())
+        return StructType([f for f in schema.fields if f.name not in parts])
 
     def _apply_dv(
         self, data_dir: str, merge_schema: bool = False
@@ -1831,6 +1992,7 @@ class SnapshotStore:
         version: str,
         expected_version=UNCHECKED,
         operation: str = "WRITE",
+        written: DataFrame | None = None,
     ) -> None:
         """Commit the written version dir ``version``, then
         garbage-collect versions that fell off the retention window.
@@ -1856,7 +2018,8 @@ class SnapshotStore:
                         "transaction's snapshot read; re-read and retry"
                     )
             self._delta_commit(
-                name, os.path.join(table, version), operation=operation
+                name, os.path.join(table, version), operation=operation,
+                written=written,
             )
             # Read under the lock, so the list ends with this commit.
             committed = self.versions(name)
@@ -1957,6 +2120,7 @@ class SnapshotStore:
                         name, txn.version,
                         expected_version=txn.expected,
                         operation=operation,
+                        written=txn.written,
                     )
             except Exception as exc:
                 # Settle every overlapped job first (ADVICE r12): none
@@ -2126,7 +2290,11 @@ class SnapshotStore:
         pending.clear()
 
     def _delta_commit(
-        self, name: str, data: str, operation: str = "WRITE"
+        self,
+        name: str,
+        data: str,
+        operation: str = "WRITE",
+        written: DataFrame | None = None,
     ) -> None:
         """Emit one protocol-conformant ``_delta_log`` commit
         reconciling the log's live file set against the data dir
@@ -2153,8 +2321,11 @@ class SnapshotStore:
         file) gets one zero-row file shaped like the table's first
         live file, in the same hive dir — the zero-row file Spark
         itself writes for an empty flat table. So every committed
-        version keeps a live add that names its dir, and readers
-        still infer the schema."""
+        version keeps a live add that names its dir. A new table's
+        empty partitioned first write (Spark writes no file for it)
+        gets one zero-row file of ``written``, the DataFrame written,
+        at the version root, and its metaData schema from ``written``
+        rather than from the files."""
         import hashlib
         import json
 
@@ -2166,7 +2337,11 @@ class SnapshotStore:
         prev = log.snapshot(latest) if latest is not None else None
 
         parts = self._partition_dirs(data)
-        if not parts and prev is not None and prev.files:
+        empty_first = not parts and prev is None and written is not None
+        if empty_first:
+            written.limit(0).coalesce(1).write.mode("append").parquet(data)
+            parts = self._partition_dirs(data)
+        elif not parts and prev is not None and prev.files:
             import pyarrow.parquet as pq
 
             src = min(prev.files)
@@ -2468,7 +2643,13 @@ class SnapshotStore:
                 reader = self.spark.read
                 if rt_marker:
                     reader = reader.option("mergeSchema", "true")
-                schema_json = reader.parquet(data).schema.json()
+                if empty_first:
+                    # the zero-row first version (above): the files'
+                    # schema is the written one, made nullable as a
+                    # parquet read makes it
+                    schema_json = _nullable(written.schema).json()
+                else:
+                    schema_json = reader.parquet(data).schema.json()
             if rt_phys_cols:
                 # the materialized row-id columns live in the FILES,
                 # never in the logical schema (Delta hides them too)
@@ -2651,7 +2832,7 @@ class SnapshotStore:
         table = self.path(name)
         part_cols = (snap.metadata or {}).get("partitionColumns") or []
         if not kept:
-            schema = self.spark.read.parquet(
+            schema = _logged_schema(snap.metadata or {}) or self.spark.read.parquet(
                 self.current_data_dir(name)
             ).schema
             return self.spark.createDataFrame([], schema)
@@ -2785,6 +2966,7 @@ class SnapshotStore:
             )
 
             zorder_depth = choose_equal_depth(df, list(zorder_by))
+        txn.written = df
         txn.version = self._write_version(
             name,
             df,
