@@ -392,9 +392,11 @@ def q221_weighted_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild the identical graph and resolve the same horizon with a
     bounded recursive CTE. Integer weights keep every min() order-free.
 
-    Scale: each round is one vertex-keyed shuffle of 16-byte rows;
-    rounds compose into one job (no convergence probe); the horizon
-    bound is what makes the cost predictable — the unbounded variant
+    Scale: each round is one left join of the distance relation onto
+    the edges and one vertex-keyed min() agg of 16-byte rows, reading
+    the previous round once; the rounds between checkpoints run as one
+    query (no convergence probe); the horizon bound is what makes the
+    cost predictable — the unbounded variant
     is X29/X81 territory (iterate-with-probe)."""
     from product_analytics_spark.operators import graph
 

@@ -34,7 +34,9 @@ Scale notes (100 TB corpus → billions of edges):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from product_analytics_spark import cache
@@ -49,6 +51,66 @@ def _checkpoint_over(prev: DataFrame | None, df: DataFrame) -> DataFrame:
     if prev is not None:
         cache.release_checkpoint(prev)
     return out
+
+
+@contextmanager
+def _built(df: DataFrame):
+    """``df`` materialized by one eager ``localCheckpoint`` job, for a
+    relation that one query scans several times, released on exit.
+    A lazily persisted relation becomes one table-cache stage job per
+    scan under AQE, and those jobs all wait on the same blocks while
+    holding executor slots."""
+    out = df.localCheckpoint(eager=True)
+    try:
+        yield out
+    finally:
+        cache.release_checkpoint(out)
+
+
+def _both_ways(edges: DataFrame, src_col: str, dst_col: str, a: str, b: str) -> DataFrame:
+    """Each edge in both orientations, as columns ``a``, ``b``, from one
+    scan of ``edges`` (a union of two projections scans it twice)."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src_col).alias(a), F.col(dst_col).alias(b)),
+                F.struct(F.col(dst_col).alias(a), F.col(src_col).alias(b)),
+            )
+        ).alias("_e")
+    ).select("_e.*")
+
+
+def _min_fold(e: DataFrame, state: DataFrame, rounds: int, col: str, step: Column) -> DataFrame:
+    """``rounds`` relaxation rounds of ``state`` (id, ``col``) over the
+    edges ``e`` (s, d, ...): each round reads the previous state once.
+    The state is left-joined onto the edges, each joined row explodes
+    into itself and its relaxed neighbour (d, ``col`` + ``step``), null
+    ids (no out-edge) drop, and a min() agg folds each vertex. A vertex
+    without out-edges, an isolated source included, keeps its row
+    through the left join. Reading the state twice per round (once in
+    the join, once in a union) would nest 2^k copies of the seed plan
+    by round k. A checkpoint every 5 rounds truncates the lineage; the
+    result is an eager checkpoint registered with the cache."""
+    ckpt = None
+    for i in range(rounds):
+        state = (
+            state.join(e, F.col("id") == F.col("s"), "left")
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct("id", col),
+                        F.struct(F.col("d").alias("id"), (F.col(col) + step).alias(col)),
+                    )
+                ).alias("_r")
+            )
+            .select("_r.*")
+            .where(F.col("id").isNotNull())
+            .groupBy("id")
+            .agg(F.min(col).alias(col))
+        )
+        if (i + 1) % 5 == 0:
+            state = ckpt = _checkpoint_over(ckpt, state)
+    return cache.register_checkpoint(_checkpoint_over(ckpt, state))
 
 
 def connected_components(
@@ -183,49 +245,45 @@ def triangle_counts(
     All keys are vertex ids — AQE skew handling covers residual heavy
     keys.
     """
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
+    und_q = (
+        _both_ways(edges, src_col, dst_col, "a", "b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        # und feeds the degree agg AND both orientation joins — persist
-        # or the caller's (possibly expensive) edge derivation runs
-        # once per reference.
-        .persist()
     )
-    # Total-order key: deg*2^32 + id — one long compare orients edges
-    # deterministically (degree asc, id asc tie-break).
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    keyed = und.join(deg, "a").select(
-        "a",
-        "b",
-        (F.col("deg") * F.lit(1 << 32) + F.col("a")).alias("ka"),
-    )
-    degb = deg.select(F.col("a").alias("b"), (F.col("deg") * F.lit(1 << 32) + F.col("a")).alias("kb"))
-    oriented = (
-        keyed.join(degb, "b")
-        .filter(F.col("ka") < F.col("kb"))
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"), F.col("kb").alias("kdst"))
-    )
-    e = oriented.persist()
-    try:
-        e1 = e.select(F.col("src"), F.col("dst").alias("v"), F.col("kdst").alias("kv"))
-        e2 = e.select(F.col("src"), F.col("dst").alias("w"), F.col("kdst").alias("kw"))
-        wedges = e1.join(e2, "src").filter(F.col("kv") < F.col("kw"))
-        closure = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-        tri = wedges.join(closure, ["v", "w"]).select("src", "v", "w")
-        per_vertex = (
-            tri.select(F.col("src").alias("id"))
-            .union(tri.select(F.col("v").alias("id")))
-            .union(tri.select(F.col("w").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_triangles"))
+    # und feeds the degree agg and both orientation joins, and the
+    # oriented edges feed both wedge sides and the closure check: each
+    # is built once (``_built``) so the query reading it does not run
+    # the caller's edge derivation, or a table-cache job, per scan.
+    with _built(und_q) as und:
+        # Total-order key: deg*2^32 + id — one long compare orients edges
+        # deterministically (degree asc, id asc tie-break).
+        deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+        keyed = und.join(deg, "a").select(
+            "a",
+            "b",
+            (F.col("deg") * F.lit(1 << 32) + F.col("a")).alias("ka"),
         )
-        # Materialize before unpersist: callers get a plain DataFrame.
-        return cache.register_checkpoint(per_vertex.localCheckpoint(eager=True))
-    finally:
-        e.unpersist()
-        und.unpersist()
+        degb = deg.select(F.col("a").alias("b"), (F.col("deg") * F.lit(1 << 32) + F.col("a")).alias("kb"))
+        oriented = (
+            keyed.join(degb, "b")
+            .filter(F.col("ka") < F.col("kb"))
+            .select(F.col("a").alias("src"), F.col("b").alias("dst"), F.col("kb").alias("kdst"))
+        )
+        with _built(oriented) as e:
+            e1 = e.select(F.col("src"), F.col("dst").alias("v"), F.col("kdst").alias("kv"))
+            e2 = e.select(F.col("src"), F.col("dst").alias("w"), F.col("kdst").alias("kw"))
+            wedges = e1.join(e2, "src").filter(F.col("kv") < F.col("kw"))
+            closure = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+            tri = wedges.join(closure, ["v", "w"]).select("src", "v", "w")
+            per_vertex = (
+                tri.select(F.col("src").alias("id"))
+                .union(tri.select(F.col("v").alias("id")))
+                .union(tri.select(F.col("w").alias("id")))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).alias("n_triangles"))
+            )
+            # Materialize before release: callers get a plain DataFrame.
+            return cache.register_checkpoint(per_vertex.localCheckpoint(eager=True))
 
 
 def bfs_hops(
@@ -238,42 +296,21 @@ def bfs_hops(
 ) -> DataFrame:
     """Minimum hop distance from a seed set over undirected edges,
     bounded at ``max_hops`` — frontier-expansion BFS as k rounds of
-    (frontier ⋈ edges → min-hop agg).
+    (state ⟕ edges → min-hop agg), see ``_min_fold``.
 
     State per round is the (vertex, hops) relation — 12 bytes/vertex,
-    the same scale posture as connected_components. The frontier join
-    is keyed on vertex id; reached vertices are folded back with a
-    min() agg so re-discovery never raises a hop count. Returns
-    (id, hops) with hops in [0, max_hops].
+    the same scale posture as connected_components. The join is keyed
+    on vertex id; reached vertices are folded with a min() agg so
+    re-discovery never raises a hop count. There is no per-round
+    convergence probe (the hop bound is fixed), so the rounds between
+    checkpoints run as one query: each round adds its shuffle stages
+    to it, and the symmetrized edge set is built once beforehand.
+    Returns (id, hops) with hops in [0, max_hops].
     """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .union(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
-        .distinct()
-        .persist()
-    )
-    try:
+    sym = _both_ways(edges, src_col, dst_col, "s", "d").distinct()
+    with _built(sym) as e:
         reached = source_ids.select(F.col(id_col).alias("id"), F.lit(0).alias("hops"))
-        ckpt = None
-        for i in range(max_hops):
-            expanded = (
-                e.join(reached, e.s == reached.id)
-                .select(F.col("d").alias("id"), (F.col("hops") + 1).alias("hops"))
-                .union(reached)
-                .groupBy("id")
-                .agg(F.min("hops").alias("hops"))
-            )
-            # Unlike connected_components there is NO per-round
-            # convergence probe — the hop bound is fixed — so rounds
-            # compose into ONE job; checkpoint only every few rounds
-            # to truncate lineage on deep searches.
-            reached = expanded
-            if (i + 1) % 5 == 0:
-                reached = ckpt = _checkpoint_over(ckpt, expanded)
-        # Materialize while the edge relation is still cached.
-        return cache.register_checkpoint(_checkpoint_over(ckpt, reached))
-    finally:
-        e.unpersist()
+        return _min_fold(e, reached, max_hops, "hops", F.lit(1))
 
 
 def pagerank(
@@ -375,36 +412,23 @@ def bellman_ford(
     convergence), cycles cannot loop because the horizon is fixed.
 
     Scale: state is (vertex, dist) — 16 bytes/vertex; each round is
-    ONE shuffle keyed on vertex id, and the rounds compose into one
-    job (no convergence probe). Distances must be integral for
-    bit-exact results on any partitioning (min of integers is
-    order-free; float path sums would not be).
+    one left join onto the edge list and one min() agg keyed on vertex
+    id (``_min_fold``), and the rounds between checkpoints run as one
+    query (no convergence probe) over an edge list built once
+    beforehand. Distances must be integral for bit-exact results on
+    any partitioning (min of integers is order-free; float path sums
+    would not be).
     """
-    e = (
+    weighted = (
         edges.select(
             F.col(src_col).alias("s"),
             F.col(dst_col).alias("d"),
             F.col(weight_col).cast("bigint").alias("w"),
         )
         .distinct()
-        .persist()
     )
-    try:
+    with _built(weighted) as e:
         dist = source_ids.select(
             F.col(id_col).alias("id"), F.lit(0).cast("bigint").alias("dist")
         )
-        ckpt = None
-        for i in range(rounds):
-            relaxed = (
-                e.join(dist, e.s == dist.id)
-                .select(F.col("d").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
-                .union(dist)
-                .groupBy("id")
-                .agg(F.min("dist").alias("dist"))
-            )
-            dist = relaxed
-            if (i + 1) % 5 == 0:
-                dist = ckpt = _checkpoint_over(ckpt, relaxed)
-        return cache.register_checkpoint(_checkpoint_over(ckpt, dist))
-    finally:
-        e.unpersist()
+        return _min_fold(e, dist, rounds, "dist", F.col("w"))

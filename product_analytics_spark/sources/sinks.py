@@ -958,19 +958,24 @@ class SnapshotStore:
         version's live files sit under one ``v_<uuid>`` dir, so any
         one of them names it. A table whose first write was an
         ``append`` keeps its files at the table root until a rewrite."""
+        return self._current(name)[0]
+
+    def _current(self, name: str):
+        """(``current_data_dir``, the log snapshot it was read from);
+        (None, None) before the first commit."""
         from product_analytics_spark.sources import delta_log as dl
 
         log = dl.DeltaLog(self.path(name))
         try:
-            files = log.snapshot().files
+            snap = log.snapshot()
         except dl.DeltaProtocolError:
             if log.latest_version() is None:
-                return None  # no commit yet
+                return None, None  # no commit yet
             raise
-        if not files:
-            return None
-        v = self._version_of(next(iter(files)))
-        return os.path.join(self.path(name), v) if v else self.path(name)
+        if not snap.files:
+            return None, None
+        v = self._version_of(next(iter(snap.files)))
+        return (os.path.join(self.path(name), v) if v else self.path(name)), snap
 
     def current_version(self, name: str) -> str | None:
         """The committed version dir name — the snapshot identity an
@@ -1013,10 +1018,10 @@ class SnapshotStore:
             )
 
         if version is None:
-            data = self.current_data_dir(name)
+            data, snap = self._current(name)
             if data is None:
                 return None
-            return _hide_rt(self._apply_dv(data, merge_schema=rt))
+            return _hide_rt(self._apply_dv(data, merge_schema=rt, snap=snap))
         vs = self.versions(name)
         if isinstance(version, int):
             if not vs:
@@ -1264,7 +1269,7 @@ class SnapshotStore:
         return 8
 
     def _read_version_dir(
-        self, data_dir: str, merge_schema: bool = False
+        self, data_dir: str, merge_schema: bool = False, snap=None
     ) -> DataFrame:
         """Parquet read of a store directory, its resolved lazy plan
         memoized per (dir, mergeSchema, content signature): the DML
@@ -1279,24 +1284,33 @@ class SnapshotStore:
         neither describes the files' physical columns: row-tracked
         ``mergeSchema`` reads (rewritten files carry materialized
         row-id columns the logical schema omits) and the dirs
-        ``_data_schema`` leaves to it."""
+        ``_data_schema`` leaves to it. ``snap``, the log snapshot the
+        caller resolved ``data_dir`` from, saves ``_data_schema`` a
+        second listing of the log.
+
+        A ``_dv`` sidecar is read by its file paths: Spark treats a
+        root path whose name starts with ``_`` as hidden and warns
+        that all paths were ignored."""
+
+        sig = _dir_signature(data_dir)
 
         def read():
             reader = self.spark.read
             if merge_schema:
                 return reader.option("mergeSchema", "true").parquet(data_dir)
             if os.path.basename(data_dir) == "_dv":
-                schema = _DV_SCHEMA
-            else:
-                schema = self._data_schema(data_dir)
+                return reader.schema(_DV_SCHEMA).parquet(
+                    *(os.path.join(data_dir, rel) for rel, _, _ in sig)
+                )
+            schema = self._data_schema(data_dir, snap)
             if schema is not None:
                 reader = reader.schema(schema)
             return reader.parquet(data_dir)
 
-        key = (os.path.abspath(data_dir), bool(merge_schema), _dir_signature(data_dir))
+        key = (os.path.abspath(data_dir), bool(merge_schema), sig)
         return cache.memo("version_dirs", key, read, spark=self.spark)
 
-    def _data_schema(self, data_dir: str):
+    def _data_schema(self, data_dir: str, snap=None):
         """The data columns a version dir (or, for a table whose first
         write was an ``append``, the table root) was committed with:
         ``_logged_schema`` of the log metaData at the newest commit at
@@ -1306,7 +1320,8 @@ class SnapshotStore:
         can add values the logged type would not parse. None — infer
         from the footers — where ``_logged_schema`` is None and for
         dirs no retained commit names (outside any table, or not
-        committed)."""
+        committed). ``snap`` is the table's current snapshot when the
+        caller already holds it."""
         from pyspark.sql.types import StructType
 
         from product_analytics_spark.sources import delta_log as dl
@@ -1315,10 +1330,11 @@ class SnapshotStore:
         v = os.path.basename(data_dir)
         table = os.path.dirname(data_dir) if v.startswith("v_") else data_dir
         log = dl.DeltaLog(table)
-        try:
-            snap = log.snapshot()
-        except dl.DeltaProtocolError:
-            return None  # not a logged table
+        if snap is None:
+            try:
+                snap = log.snapshot()
+            except dl.DeltaProtocolError:
+                return None  # not a logged table
         live = self._version_of(next(iter(snap.files), ""))
         if not snap.files or (os.path.join(table, live) if live else table) != data_dir:
             lv = dict(self._retained(table)).get(v)  # time travel
@@ -1333,14 +1349,14 @@ class SnapshotStore:
         return StructType([f for f in schema.fields if f.name not in parts])
 
     def _apply_dv(
-        self, data_dir: str, merge_schema: bool = False
+        self, data_dir: str, merge_schema: bool = False, snap=None
     ) -> DataFrame:
         """Read a version dir, filtering deletion-vectored positions:
         broadcast anti-join on (version-relative path, row_index).
         ``merge_schema`` is set by row-tracked tables, whose rewritten
         files carry the materialized row-id columns the hardlinked
-        ones lack."""
-        base = self._read_version_dir(data_dir, merge_schema=merge_schema)
+        ones lack; ``snap`` as for ``_read_version_dir``."""
+        base = self._read_version_dir(data_dir, merge_schema=merge_schema, snap=snap)
         dv_dir = self._dv_dir(data_dir)
         if not os.path.isdir(dv_dir):
             return base
