@@ -9,16 +9,17 @@ ones. Each namespace has one lock, an optional LRU bound, an explicit
 clear and counters (``hits``/``misses``, named events) that
 :func:`stats` reads. README.md "Caches" lists the namespaces.
 
-``live`` holds what :func:`persist` and :func:`register_checkpoint`
-register, so a long-lived session that sweeps many queries
-(bench.py, tools/check.py) releases them with :func:`clear_all`
-between queries (the round-1 leak); it is never looked up, so it
-needs no session scope. ``shared`` holds relations several queries
-reuse and survives :func:`clear_all`. Its builds run under the
-namespace lock: concurrent misses on one key build it once, and a
-per-key latch raised ``analyst_mix`` op latency instead by letting
-heavy builds overlap light queries. Bounded namespaces build outside
-their lock, so a slow snapshot replay never stalls other tables.
+``live`` holds what :func:`persist`, :func:`checkpoint` and
+:func:`register_checkpoint` register, so a long-lived session that
+sweeps many queries (bench.py, tools/check.py) releases them with
+:func:`clear_all` between queries (the round-1 leak); it is never
+looked up, so it needs no session scope. ``shared`` holds relations
+several queries reuse and survives :func:`clear_all`. Its builds run
+under the namespace lock: concurrent misses on one key build it once,
+and a per-key latch raised ``analyst_mix`` op latency instead by
+letting heavy builds overlap light queries. Bounded namespaces build
+outside their lock, so a slow snapshot replay never stalls other
+tables.
 """
 
 from __future__ import annotations
@@ -226,6 +227,16 @@ def register_checkpoint(df: DataFrame) -> DataFrame:
     else:
         owner.append(df)
     return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` built by one eager ``localCheckpoint`` job and registered
+    (:func:`register_checkpoint`): for a relation that one query scans
+    several times and the returned lazy DataFrame still reads. A
+    lazily persisted relation becomes one table-cache job per scan
+    under AQE, and those jobs all wait on the same blocks while
+    holding executor slots."""
+    return register_checkpoint(df.localCheckpoint(eager=True))
 
 
 def clear_all() -> int:

@@ -9,9 +9,10 @@ discipline per qcommon.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from product_analytics_spark import cache
 from product_analytics_spark.qcommon import _hash60_sql, _money_cents, _t
 from product_analytics_spark.operators.text import portable_hash60
 
@@ -126,6 +127,25 @@ FP_BALL = 1            # per-band Hamming-ball probe radius
 FP_MAX_HAMMING = FP_BANDS * (FP_BALL + 1) - 1  # = 7
 
 
+def chunk_parity_fingerprint() -> Column:
+    """q183's FP_BITS-bit fingerprint of the ``text``/``n_chars``
+    columns as ONE ``F.expr`` SQL string: bit i-1 is the parity of
+    ``text.portable_hash60`` (the first 15 hex chars of md5 as a
+    BIGINT) of chunk i, the characters (floor((i-1)n/FP_BITS),
+    floor(in/FP_BITS)] in 1-based substring coordinates, cut with
+    all-integer ``div`` arithmetic so both engines cut identical
+    chunks. Built Column by Column, the 60 chunk terms cost about 12
+    py4j calls each; the string parses JVM-side to the same
+    expression (an INT weight up to bit 30, BIGINT above)."""
+    terms = []
+    for i in range(1, FP_BITS + 1):
+        lo, hi = f"n_chars * {i - 1} div {FP_BITS}", f"n_chars * {i} div {FP_BITS}"
+        chunk = f"substring(text, CAST({lo} + 1 AS INT), CAST({hi} - {lo} AS INT))"
+        h60 = f"CAST(conv(substring(md5({chunk}), 1, 15), 16, 10) AS BIGINT)"
+        terms.append(f"({h60} % 2) * {1 << (i - 1)}")
+    return F.expr(f"CAST({' + '.join(terms)} AS BIGINT)")
+
+
 def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-parity fingerprint near-dup — the perceptual-hash (pHash)
     pipeline shape applied to the text corpus: each document folds to
@@ -162,28 +182,12 @@ def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The shuffled payload stays (band_id, 15-bit value, 60-bit fp) —
     fixed width; verification is one integer xor."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    # proportional chunk boundaries: chunk i covers (floor((i-1)n/60),
-    # floor(in/60)] in 1-based substring coordinates — all-integer
-    # `div` arithmetic so both engines cut identical chunks
-    bit_cols = []
-    for i in range(1, FP_BITS + 1):
-        start = F.expr(f"CAST(n_chars * {i - 1} div {FP_BITS} + 1 AS INT)")
-        length = F.expr(
-            f"CAST(n_chars * {i} div {FP_BITS} - n_chars * {i - 1} div {FP_BITS} AS INT)"
-        )
-        chunk = F.substring(F.col("text"), start, length)
-        bit_cols.append((portable_hash60(chunk) % 2) * (1 << (i - 1)))
-    fp_col = bit_cols[0]
-    for c in bit_cols[1:]:
-        fp_col = fp_col + c
-    from product_analytics_spark import cache as _cache
-
-    # The 60-chunk md5 projection feeds FIVE plan branches (distinct,
-    # both expansion joins, both sides of the intra self-join) —
-    # persist it once or the hash work runs 5x (measured 3.6 s -> ~1 s
-    # at sf0.1). At corpus scale this is a materialized signatures
-    # table reused across stages.
-    fps = _cache.persist(d.select("doc_id", fp_col.cast("long").alias("fp")))
+    # The 60-chunk md5 projection feeds six scans (distinct, both
+    # expansion joins, both sides of the intra self-join, the summary):
+    # one eager checkpoint builds it before the query that reads it,
+    # or the hash work runs per scan. At corpus scale this is a
+    # materialized signatures table reused across stages.
+    fps = cache.checkpoint(d.select("doc_id", chunk_parity_fingerprint().alias("fp")))
     fpd = fps.select("fp").distinct()
     bands = fpd.select(
         "fp",
@@ -202,7 +206,7 @@ def q183_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("fp").alias("fp_a"),
         "band",
         F.explode(
-            F.array(*[F.lit(x).cast("long") for x in flips])
+            F.expr("array(" + ",".join(f"{x}L" for x in flips) + ")")
         ).alias("flip"),
         "band_val",
     ).select(

@@ -21,7 +21,9 @@ each round so the plan does not grow exponentially.
 
 Scale notes (100 TB corpus → billions of edges):
 - state per round is the (vertex, label) relation — 16 bytes/vertex,
-  shuffled on vertex id; edges are re-used each round (cache them);
+  shuffled on vertex id; edges are re-used each round, so each
+  kernel builds its edge relation once (one eager checkpoint) before
+  the rounds read it;
 - the classic worst case (one long chain) needs O(n) rounds of THIS
   algorithm; the published fix is large-star/small-star (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14) which
@@ -125,15 +127,15 @@ def connected_components(
     Only vertices appearing in ``edges`` are returned (isolated
     documents are their own cluster by definition — callers left-join
     and coalesce to the doc's own id).
+
+    The edges are symmetrized from one scan of ``edges`` and built
+    once (``_built``) before the rounds: the initial labels and every
+    round's join read them, and they are released on return, when the
+    labels no longer need them.
     """
     # Symmetrize once; each round then needs only one join direction.
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .distinct()
-    )
-    e = e.persist()
-    try:
+    sym = _both_ways(edges, src_col, dst_col, "src", "dst").distinct()
+    with _built(sym) as e:
         # Fused initialization: label(v) = min(v, min neighbor) — the
         # identity init plus the first propagation round in ONE hash-agg
         # (the symmetrized edge set lists every vertex as src, so this
@@ -188,8 +190,6 @@ def connected_components(
             f"connected_components did not converge in {max_iterations} rounds — "
             "pathological chain graph; switch to large-star/small-star"
         )
-    finally:
-        e.unpersist()
 
 
 def dup_clusters(
@@ -283,7 +283,7 @@ def triangle_counts(
                 .agg(F.count(F.lit(1)).alias("n_triangles"))
             )
             # Materialize before release: callers get a plain DataFrame.
-            return cache.register_checkpoint(per_vertex.localCheckpoint(eager=True))
+            return cache.checkpoint(per_vertex)
 
 
 def bfs_hops(

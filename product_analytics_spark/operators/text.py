@@ -235,6 +235,27 @@ def _band_hash_array(
     return F.expr("array(" + ",".join(terms) + ")")
 
 
+def _band_candidates(
+    sig: DataFrame, id_col: str, bands: int, rows_per_band: int, hasher: str
+) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of the documents whose
+    ``sig`` relation rows agree on at least one band hash: the band
+    self-join. Its payload is only (id, band_idx, band_hash)."""
+    banded = sig.select(
+        F.col(id_col),
+        F.posexplode(
+            _band_hash_array(bands, rows_per_band, hasher)
+        ).alias("band_idx", "bh"),
+    )
+    return (
+        banded.select(F.col(id_col).alias("id_a"), "band_idx", "bh")
+        .join(banded.select(F.col(id_col).alias("id_b"), "band_idx", "bh"), ["band_idx", "bh"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     """MinHash signature: per salt i, min over shingles of
     xxhash64(salt_i, shingle). Deterministic; array<long> output.
@@ -273,11 +294,13 @@ def minhash_near_dup_pairs(
          32-long arrays through the join; re-joining the narrow
          signature relation after pair-dedup is strictly less data);
       4. verify: signature agreement rate >= threshold, computed by
-         re-joining the persisted signature relation per side.
+         re-joining the checkpointed signature relation per side.
 
-    The signature relation is persisted (registered with
-    product_analytics_spark.cache so sweep runners release it) — the
-    band explode and both verify joins reuse one shingling pass.
+    The signature relation is built by one eager checkpoint
+    (``cache.checkpoint``, registered so sweep runners release it)
+    before the query that reads it: both band-join sides and both
+    verify joins scan it, and one shingling pass feeds all four.
+    ``pre_group_exact`` builds its exact-dup groups the same way.
 
     Scale: at 100 TB the signature table is ~num_hashes*8 bytes/doc —
     write it to a table and reuse across runs. The band-hash shuffle
@@ -297,7 +320,7 @@ def minhash_near_dup_pairs(
     id_a < id_b.
     """
     if pre_group_exact:
-        groups = cache.persist(
+        groups = cache.checkpoint(
             df.groupBy(F.md5(F.col(text_col)).alias("_gk")).agg(
                 F.min(id_col).alias("_rep"),
                 F.sort_array(F.collect_list(id_col)).alias("_members"),
@@ -365,23 +388,10 @@ def minhash_near_dup_pairs(
         hashed = df.select(F.col(id_col), shingle_hashes.alias("_sh"))
     else:
         raise ValueError(f"unknown hasher: {hasher}")
-    sig = cache.persist(
+    sig = cache.checkpoint(
         hashed.select(F.col(id_col), _minhash_sig_fold(F.col("_sh"), num_hashes, hasher).alias("sig"))
     )
-
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            _band_hash_array(bands, rows_per_band, hasher)
-        ).alias("band_idx", "bh"),
-    )
-    cand = (
-        banded.select(F.col(id_col).alias("id_a"), "band_idx", "bh")
-        .join(banded.select(F.col(id_col).alias("id_b"), "band_idx", "bh"), ["band_idx", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(sig, id_col, bands, rows_per_band, hasher)
     sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sig_a"))
     sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sig_b"))
     verified = cand.join(sig_a, "id_a").join(sig_b, "id_b")
@@ -415,7 +425,7 @@ def jaccard_near_dup_pairs(
     corpus size — the skew bound is the size of the largest true
     near-dup cluster (exact dups can be pre-grouped to cap even that).
 
-    Two-stage pipeline sharing ONE shingle-hash pass (persisted):
+    Two-stage pipeline sharing ONE shingle-hash pass (checkpointed):
       1. candidates: 16-band x 2-row MinHash banding over the portable
          salted hashes. Recall for true jaccard j is 1-(1-j^2)^16:
          ~0.94 at j=0.4, ~0.99 at j=0.5 — and the DuckDB oracle
@@ -457,8 +467,23 @@ def jaccard_band_candidates_iu(
     Returns (id_a, id_b, i, u) with id_a < id_b, over the distinct
     band-candidate pairs.
     """
-    rows_per_band = num_hashes // bands
-    rel = cache.persist(
+    return _band_candidate_sets(df, text_col, id_col, shingle_n, num_hashes, bands).select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("_sa", "_sb")).alias("i"),
+        F.size(F.array_union("_sa", "_sb")).alias("u"),
+    )
+
+
+def _band_candidate_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, num_hashes: int, bands: int
+) -> DataFrame:
+    """The band-candidate pairs of :func:`jaccard_band_candidates_iu`
+    and :func:`containment_pairs` with both sides' distinct
+    shingle-hash sets: (id_a, id_b, _sa, _sb). The (id, set, signature)
+    relation is built by one eager checkpoint: both band-join sides
+    and both set joins scan it."""
+    rel = cache.checkpoint(
         with_shingle_hashes31(df, text_col, shingle_n, out_col="_sh")
         .select(F.col(id_col), F.array_distinct(F.col("_sh")).alias("_s"))
         .select(
@@ -467,29 +492,10 @@ def jaccard_band_candidates_iu(
             _minhash_sig_fold(F.col("_s"), num_hashes, "portable").alias("sig"),
         )
     )
-
-    banded = rel.select(
-        F.col(id_col),
-        F.posexplode(
-            _band_hash_array(bands, rows_per_band, "portable")
-        ).alias("band_idx", "bh"),
-    )
-    cand = (
-        banded.select(F.col(id_col).alias("id_a"), "band_idx", "bh")
-        .join(banded.select(F.col(id_col).alias("id_b"), "band_idx", "bh"), ["band_idx", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = _band_candidates(rel, id_col, bands, num_hashes // bands, "portable")
     sets_a = rel.select(F.col(id_col).alias("id_a"), F.col("_s").alias("_sa"))
     sets_b = rel.select(F.col(id_col).alias("id_b"), F.col("_s").alias("_sb"))
-    verified = cand.join(sets_a, "id_a").join(sets_b, "id_b")
-    return verified.select(
-        "id_a",
-        "id_b",
-        F.size(F.array_intersect("_sa", "_sb")).alias("i"),
-        F.size(F.array_union("_sa", "_sb")).alias("u"),
-    )
+    return cand.join(sets_a, "id_a").join(sets_b, "id_b")
 
 
 def containment_pairs(
@@ -514,33 +520,7 @@ def containment_pairs(
     8-byte hashes. Output is directed: ``id_contained`` is the doc
     with the smaller shingle set (tie → smaller id).
     """
-    rows_per_band = num_hashes // bands
-    rel = cache.persist(
-        with_shingle_hashes31(df, text_col, shingle_n, out_col="_sh")
-        .select(F.col(id_col), F.array_distinct(F.col("_sh")).alias("_s"))
-        .select(
-            F.col(id_col),
-            F.col("_s"),
-            _minhash_sig_fold(F.col("_s"), num_hashes, "portable").alias("sig"),
-        )
-    )
-
-    banded = rel.select(
-        F.col(id_col),
-        F.posexplode(
-            _band_hash_array(bands, rows_per_band, "portable")
-        ).alias("band_idx", "bh"),
-    )
-    cand = (
-        banded.select(F.col(id_col).alias("id_a"), "band_idx", "bh")
-        .join(banded.select(F.col(id_col).alias("id_b"), "band_idx", "bh"), ["band_idx", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sets_a = rel.select(F.col(id_col).alias("id_a"), F.col("_s").alias("_sa"))
-    sets_b = rel.select(F.col(id_col).alias("id_b"), F.col("_s").alias("_sb"))
-    v = cand.join(sets_a, "id_a").join(sets_b, "id_b")
+    v = _band_candidate_sets(df, text_col, id_col, shingle_n, num_hashes, bands)
     inter = F.size(F.array_intersect("_sa", "_sb"))
     la, lb = F.size("_sa"), F.size("_sb")
     mn = F.least(la, lb)
@@ -637,7 +617,7 @@ def simhash_near_dup_pairs(
             for i in range(n_chunks)
         ]
     )
-    chunked = cache.persist(
+    chunked = cache.checkpoint(
         sh.select(F.col(id_col), F.col("sh"), F.posexplode(chunks).alias("chunk_idx", "cv"))
     )
     left = chunked.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"), "chunk_idx", "cv")

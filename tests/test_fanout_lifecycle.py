@@ -4,6 +4,9 @@ pipelines.
 - ``qcommon.spread_by`` hash-partitions on its key to the session's
   ``defaultParallelism`` (the executor core count), and the document
   pipelines (q20 here) fan out through it rather than a fixed count.
+  q20's repartition feeds its signature relation, which one eager
+  checkpoint builds, so the pin reads the plan the checkpoint was
+  taken of.
 - The graph operators' ``localCheckpoint`` RDDs are released by the
   cache registries: after ``clear_all`` + ``clear_shared`` nothing the
   graph keys persisted is left, with no JVM collection needed.
@@ -45,12 +48,21 @@ class TestSpreadBy:
         ).count()
         assert misplaced == 0
 
-    def test_q20_repartitions_documents_to_default_parallelism(self, spark):
-        df = QUERIES["q20_fuzzy_dedup"](spark, SF_SMALL)
+    def test_q20_repartitions_documents_to_default_parallelism(self, spark, monkeypatch):
+        frame = type(spark.range(1))
+        take = frame.localCheckpoint
+        sources = []
+
+        def record(df, *args, **kwargs):
+            sources.append(df)
+            return take(df, *args, **kwargs)
+
+        monkeypatch.setattr(frame, "localCheckpoint", record)
         try:
-            assert _repartitions(df) == {
-                ("doc_id", spark.sparkContext.defaultParallelism)
-            }
+            QUERIES["q20_fuzzy_dedup"](spark, SF_SMALL)
+            assert [_repartitions(df) for df in sources] == [
+                {("doc_id", spark.sparkContext.defaultParallelism)}
+            ]
         finally:
             cache.clear_all()
 
