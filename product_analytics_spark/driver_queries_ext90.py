@@ -986,7 +986,7 @@ def q430_mor_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sinks.delete_where_mor) — the q290 MoR-vs-CoW cost model's MoR
     half IMPLEMENTED: two successive deletes rewrite ZERO data files
     (every file hardlinked; tombstoned (file, row_index) positions
-    land in the version's ``_dv`` and readers apply them as a
+    land in the log's deletion vectors and readers apply them as a
     broadcast anti-join on ``_metadata.row_index``), then OPTIMIZE
     materializes the outstanding DV (purges it, rewrites clustered)
     with bit-identical rows.

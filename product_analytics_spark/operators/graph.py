@@ -334,9 +334,10 @@ def pagerank(
     Each iteration = one join of the rank relation onto the edge
     relation (broadcast when |nodes| is dim-sized, hash otherwise) +
     one hash-agg shuffle keyed on dst — the textbook Pregel step as
-    two Catalyst ops. Edge relation is reused every round: persist()
-    it at scale. Dangling mass is NOT redistributed (documented
-    deviation; deterministic either way).
+    two Catalyst ops. The edge and node relations are read every
+    round, so each is built once by an eager checkpoint. Dangling
+    mass is NOT redistributed (documented deviation; deterministic
+    either way).
 
     100 TB notes: state is 16 bytes/node; the edge join key should be
     the pre-partitioned src column so iterations reuse one exchange;
@@ -349,13 +350,14 @@ def pagerank(
         w.cast("long").alias("_w"),
     )
     out_w = e.groupBy("_src").agg(F.sum("_w").alias("_wsum"))
-    # Persist: every iteration's plan references the edge and node
-    # relations again — uncached, a k-iteration run recomputes the
-    # (possibly expensive) edge derivation ~2k times through the
-    # growing lineage. Registered in the cache registry for release.
-    e = cache.persist(e.join(out_w, "_src"))
+    # Every iteration's plan scans the edge and node relations again:
+    # uncached, a k-iteration run recomputes the edge derivation ~2k
+    # times; lazily persisted, each scan of a not-yet-built relation
+    # is its own table-cache job. One eager checkpoint each, released
+    # by the cache registry.
+    e = cache.checkpoint(e.join(out_w, "_src"))
 
-    nodes = cache.persist(
+    nodes = cache.checkpoint(
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct()

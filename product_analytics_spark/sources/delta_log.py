@@ -3093,49 +3093,84 @@ def _positions_df(spark, rows, schema: str):
     return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
-def _dv_anti_join(df, pos_df, path_col: str, ri_col: str):
-    """One broadcast anti-join of tagged (path, row_index) columns
-    against a deletion-vector positions relation; drops the tag
-    columns. Shared by every DV read path so the positions relation is
-    broadcast ONCE per read, not once per partition-group branch."""
-    from pyspark.sql import functions as F
-
-    cols = [c for c in df.columns if c not in (path_col, ri_col)]
-    return df.join(
-        F.broadcast(pos_df),
-        (F.col(path_col) == pos_df["path"])
-        & (F.col(ri_col) == pos_df["row_index"]),
-        "left_anti",
-    ).select(*cols)
+#: ASCII characters Hadoop's ``Path.toUri`` leaves unescaped in a
+#: path (java.net.URI's path characters); it percent-encodes every
+#: other ASCII character, and non-ASCII ones only when they are spaces
+#: or controls.
+_URI_PATH_CHARS = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "-_.!~*'():@&=+$,;/"
+)
 
 
-def apply_dv_filter(spark, df, table_dir: str, positions):
-    """Filter a file-scan DataFrame by deletion-vector positions:
-    broadcast anti-join on (table-relative path, ``_metadata.
-    row_index``). Cost bounded by total DV cardinality — the exact
-    read-side trade MoR buys. Must be applied directly on the scan
-    (``_metadata`` is a scan pseudo-column; it does not survive
-    joins/unions)."""
-    if not positions:
-        return df
-    from pyspark.sql import functions as F
+def file_uri(path: str) -> str:
+    """The ``_metadata.file_path`` a Spark scan reports for the local
+    file ``path``: ``file:`` and the absolute path, escaped as Hadoop
+    escapes it (a hive dir ``p=a b`` scans as ``p=a%20b``)."""
+    import unicodedata
+    from urllib.parse import quote
 
-    # Match on the FULL ``_metadata.file_path`` ("file:" + absolute
-    # path, Spark's local-fs form): relative add paths resolve under
-    # the table root, absolute-URI adds (shallow clones of DV'd
-    # sources) resolve wherever they live — both become the exact
-    # string the scan reports.
-    base = os.path.abspath(table_dir)
-    full = [("file:" + resolve_path(base, p), ri) for p, ri in positions]
-    pos_df = _positions_df(
-        spark, full, "path string, row_index bigint"
+    return "file:" + "".join(
+        c
+        if c in _URI_PATH_CHARS
+        or (c >= "\x80" and unicodedata.category(c) not in ("Zs", "Zl", "Zp", "Cc"))
+        else quote(c, safe="")
+        for c in os.path.abspath(path)
     )
-    tagged = df.select(
+
+
+def dv_positions_df(spark, table_dir: str, positions):
+    """The broadcast side of the deletion-vector anti-join: one row per
+    tombstoned (add path, row index) of ``positions``, keyed by the
+    ``_metadata.file_path`` the file scans as. Relative add paths
+    resolve under the table root, absolute-URI adds (shallow clones of
+    DV'd sources) wherever they live. None when there are none."""
+    if not positions:
+        return None
+    uri = {p: file_uri(resolve_path(table_dir, p)) for p in {p for p, _ in positions}}
+    return _positions_df(
+        spark, [(uri[p], ri) for p, ri in positions], "path string, row_index bigint"
+    )
+
+
+def _dv_tag(df):
+    """``df`` (a file scan) plus its rows' deletion-vector key as real
+    columns: ``_metadata`` is a scan pseudo-column and does not survive
+    unions."""
+    from pyspark.sql import functions as F
+
+    return df.select(
         "*",
         F.col("_metadata.file_path").alias("__dv_f"),
         F.col("_metadata.row_index").alias("__dv_ri"),
     )
-    return _dv_anti_join(tagged, pos_df, "__dv_f", "__dv_ri")
+
+
+def _dv_anti_join(tagged, pos_df):
+    """One broadcast anti-join of ``_dv_tag``-tagged rows against a
+    ``dv_positions_df`` relation; drops the tag columns. The partitioned
+    ``read_delta`` tags each branch and joins once above the union, so
+    the positions are broadcast once per read, not once per branch."""
+    from pyspark.sql import functions as F
+
+    cols = [c for c in tagged.columns if c not in ("__dv_f", "__dv_ri")]
+    return tagged.join(
+        F.broadcast(pos_df),
+        (F.col("__dv_f") == pos_df["path"])
+        & (F.col("__dv_ri") == pos_df["row_index"]),
+        "left_anti",
+    ).select(*cols)
+
+
+def apply_dv_filter(df, pos_df):
+    """Drop a file scan's deletion-vectored rows: a broadcast anti-join
+    of (``_metadata.file_path``, ``_metadata.row_index``) against
+    ``pos_df`` (``dv_positions_df``; None drops nothing). Cost bounded
+    by the total DV cardinality — the exact read-side trade MoR buys.
+    Apply it directly on the scan, where ``_metadata`` resolves."""
+    if pos_df is None:
+        return df
+    return _dv_anti_join(_dv_tag(df), pos_df)
 
 
 def read_delta(spark, table_dir: str, version: int | None = None):
@@ -3169,7 +3204,7 @@ def read_delta(spark, table_dir: str, version: int | None = None):
     paths = sorted(snap.files)
     if not paths:
         raise DeltaProtocolError(f"empty table at {table_dir}")
-    positions = snap.dv_positions(table_dir)
+    pos_df = dv_positions_df(spark, table_dir, snap.dv_positions(table_dir))
     conf = (snap.metadata or {}).get("configuration") or {}
     widened = conf.get("delta.enableTypeWidening") == "true"
 
@@ -3300,7 +3335,7 @@ def read_delta(spark, table_dir: str, version: int | None = None):
         return _hide_rt(
             _conform_types(
                 _to_logical(
-                    apply_dv_filter(spark, df, table_dir, positions)
+                    apply_dv_filter(df, pos_df)
                 )
             )
         )
@@ -3333,35 +3368,21 @@ def read_delta(spark, table_dir: str, version: int | None = None):
     # built one BroadcastExchange per group — N identical broadcasts
     # of the same positions for an N-partition table (round-12
     # optimization; guide §2.4).
-    base_abs = os.path.abspath(table_dir)
     out = None
     for key in sorted(groups, key=lambda k: tuple(str(x) for x in k)):
         df = _reader().parquet(
             *[resolve_path(table_dir, p) for p in groups[key]]
         )
-        if positions:
-            df = df.select(
-                "*",
-                F.col("_metadata.file_path").alias("__dv_f"),
-                F.col("_metadata.row_index").alias("__dv_ri"),
-            )
+        if pos_df is not None:
+            df = _dv_tag(df)
         df = _conform_types(df)
         for c, v in zip(part_cols, key):
             df = df.withColumn(
                 c, F.lit(v).cast(part_types.get(c, "string"))
             )
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-    if positions:
-        full = [
-            ("file:" + resolve_path(base_abs, p), ri)
-            for p, ri in positions
-        ]
-        out = _dv_anti_join(
-            out,
-            _positions_df(spark, full, "path string, row_index bigint"),
-            "__dv_f",
-            "__dv_ri",
-        )
+    if pos_df is not None:
+        out = _dv_anti_join(out, pos_df)
     return _hide_rt(_conform_types(_to_logical(out)))
 
 
@@ -4196,20 +4217,14 @@ def read_row_ids(spark, table_dir: str, version: int | None = None):
                 "non-row-tracking writer after enablement?)"
             )
         base_rows.append(
-            (rel, int(add["baseRowId"]),
+            (file_uri(resolve_path(table_dir, rel)), int(add["baseRowId"]),
              int(add.get("defaultRowCommitVersion") or 0))
         )
     base_df = _positions_df(
         spark, base_rows,
         "__rt_p string, __rt_base bigint, __rt_cv bigint",
     )
-    positions = snap.dv_positions(table_dir)
-    pos_df = None
-    if positions:
-        pos_df = _positions_df(
-            spark, positions, "path string, row_index bigint"
-        )
-    prefix = "file:" + os.path.abspath(table_dir).rstrip("/") + "/"
+    pos_df = dv_positions_df(spark, table_dir, snap.dv_positions(table_dir))
     part_cols = (snap.metadata or {}).get("partitionColumns") or []
     part_types = _part_types_of(snap)
     # Round-12 optimization (guide §1.2): mergeSchema footer-scans
@@ -4260,9 +4275,7 @@ def read_row_ids(spark, table_dir: str, version: int | None = None):
         ).parquet(*[resolve_path(table_dir, p) for p in groups[key]])
         tagged = df.select(
             "*",
-            F.substring(
-                F.col("_metadata.file_path"), len(prefix) + 1, 1 << 20
-            ).alias("__rt_path"),
+            F.col("_metadata.file_path").alias("__rt_path"),
             F.col("_metadata.row_index").alias("__rt_ri"),
         )
         for c, v in zip(part_cols, key):

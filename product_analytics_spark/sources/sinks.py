@@ -23,7 +23,7 @@ the next successful commit.
 
 Every writer runs through one optimistic transaction,
 ``SnapshotStore._transact``: snapshot read, version-dir allocation,
-settling the overlapped cdc/validation/DV jobs, the commit, telling a
+settling the overlapped cdc/validation jobs, the commit, telling a
 conflict from a failure, cleanup and retry live there once. Inside
 the commit lock the order is: OCC check, log commit, the retained
 list for GC — so a refused log commit leaves the table exactly as it
@@ -63,11 +63,6 @@ UNCHECKED = object()
 #: ``_transact``'s default expectation: read ``current_version`` at
 #: the start of every attempt.
 _READ = object()
-
-
-#: the deletion-vector sidecar (``_dv/``) the MoR DMLs write: one row
-#: per tombstoned position (version-relative file path, row index)
-_DV_SCHEMA = "path string, row_index bigint"
 
 
 def _logged_schema(meta: dict):
@@ -212,15 +207,23 @@ class _Attempt:
         #: overlapped cdc stage (``_stage_cdc_async``): adopted by the
         #: commit, discarded on every other exit
         self.cdc = None
-        #: overlapped validation / DV-write futures (None entries are
-        #: skipped): joined in order before the commit, so a failure
-        #: refuses it; awaited and swallowed on every other exit
+        #: overlapped validation futures (None entries are skipped):
+        #: joined in order before the commit, so a failure refuses it;
+        #: awaited and swallowed on every other exit
         self.jobs: list = []
         #: zero-arg callables run last on every exit (cache releases)
         self.releases: list = []
         #: the DataFrame ``_stage_overwrite`` wrote: its schema is the
         #: metaData of a new table whose empty first write left no file
         self.written: DataFrame | None = None
+        #: a MoR DML's newly deleted row indexes by scanned file
+        #: (``_metadata.file_path``): the commit adds them to the
+        #: deletion vector of the add that hardlinks that file
+        self.deleted: dict[str, list[int]] = {}
+        #: a log snapshot whose adds the commit reuses, ahead of the
+        #: live snapshot's, for the files it hardlinks (``restore``'s
+        #: target version, with its deletion vectors)
+        self.source = None
 
     @property
     def vdir(self) -> str:
@@ -998,11 +1001,10 @@ class SnapshotStore:
         store to have been created with ``retain_versions > 1`` for
         anything but the current version to still exist.
 
-        If the version carries a deletion vector (``_dv/`` — written
-        by ``delete_where_mor``), the tombstoned row positions are
-        filtered out via a broadcast anti-join on
-        (file basename, ``_metadata.row_index``) — the merge-on-read
-        half of the DELETE cost model (q290)."""
+        Rows the version's log snapshot marks deleted (the deletion
+        vectors the MoR DMLs commit) are filtered out by a broadcast
+        anti-join on (``_metadata.file_path``, ``_metadata.row_index``)
+        — the merge-on-read half of the DELETE cost model (q290)."""
         rt = self._row_tracking(name)
 
         def _hide_rt(df: DataFrame) -> DataFrame:
@@ -1034,44 +1036,20 @@ class SnapshotStore:
 
     # ------------------------------------------ deletion vectors (MoR)
 
-    @staticmethod
-    def _dv_dir(data_dir: str) -> str:
-        # underscore prefix ⇒ invisible to spark.read.parquet(data_dir)
-        # and to _partition_dirs, like _delta_log / _SUCCESS
-        return os.path.join(data_dir, "_dv")
-
     def _has_dv(self, name: str) -> bool:
-        data = self.current_data_dir(name)
-        return data is not None and os.path.isdir(self._dv_dir(data))
+        """Whether a live file of ``name`` carries a deletion vector."""
+        snap = self._current(name)[1]
+        return snap is not None and any(
+            a.get("deletionVector") for a in snap.files.values()
+        )
 
-    @classmethod
-    def _dv_file_rows(cls, data_dir: str) -> int:
-        """Row count of a version's deletion vector from its parquet
-        FOOTERS (round-13, guide §1.2): the MoR DMLs wrote the _dv
-        relation themselves moments earlier, so reporting its size
-        back ran a full Spark count JOB per DML for a number the
-        footers already hold — O(|files|) driver metadata reads."""
-        import pyarrow.parquet as pq
-
-        dv_dir = cls._dv_dir(data_dir)
-        n = 0
-        for f in sorted(os.listdir(dv_dir)):
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                n += pq.ParquetFile(
-                    os.path.join(dv_dir, f)
-                ).metadata.num_rows
-        return n
-
-    @staticmethod
-    def _rel_path_col(data_dir: str):
-        """``_metadata.file_path`` relative to the version dir — the
-        DV's file key. Basenames alone are NOT unique (a partitionBy
-        task reuses its part-file name in every hive dir it writes),
-        but the version-relative path is, and it stays stable across
-        hardlinked versions because links mirror the relative layout."""
-        prefix = "file:" + os.path.abspath(data_dir).rstrip("/") + "/"
-        return F.substring(
-            F.col("_metadata.file_path"), len(prefix) + 1, 1 << 20
+    def _dv_rows(self, data_dir: str) -> int:
+        """Deleted rows the deletion vectors of version dir
+        ``data_dir``'s log snapshot record."""
+        snap = self._dir_snapshot(data_dir)[1]
+        return sum(
+            int((a.get("deletionVector") or {}).get("cardinality") or 0)
+            for a in snap.files.values()
         )
 
     def _row_tracking(self, name: str) -> bool:
@@ -1096,14 +1074,14 @@ class SnapshotStore:
             fh.write("enabled\n")
         return v
 
-    def _rt_base_df(self, name: str, data_dir: str):
-        """Broadcastable (version-relative path, baseRowId,
+    def _rt_base_df(self, name: str):
+        """Broadcastable (``_metadata.file_path``, baseRowId,
         defaultRowCommitVersion) map of the CURRENT snapshot — the
         O(|files|) side of the virtual-row-id computation."""
         from product_analytics_spark.sources import delta_log as dl
 
-        snap = dl.DeltaLog(self.path(name)).snapshot()
-        vbase = os.path.basename(os.path.normpath(data_dir))
+        table = self.path(name)
+        snap = dl.DeltaLog(table).snapshot()
         rows = []
         for rel in sorted(snap.files):
             add = snap.files[rel]
@@ -1112,14 +1090,9 @@ class SnapshotStore:
                     f"row-tracked table {name!r}: live file {rel!r} "
                     "has no baseRowId"
                 )
-            vrel = (
-                rel.split("/", 1)[1]
-                if rel.startswith(vbase + "/")
-                else rel
-            )
             rows.append(
                 (
-                    vrel,
+                    dl.file_uri(dl.resolve_path(table, rel)),
                     int(add["baseRowId"]),
                     int(add.get("defaultRowCommitVersion") or 0),
                 )
@@ -1129,9 +1102,7 @@ class SnapshotStore:
             "__rt_p string, __rt_base bigint, __rt_cv bigint",
         )
 
-    def _rt_attach_ids(
-        self, name: str, data_dir: str, scan: DataFrame, base_df=None
-    ):
+    def _rt_attach_ids(self, name: str, scan: DataFrame, base_df=None):
         """Tag a raw scan with the stable ``_pa_row_id_m`` /
         ``_pa_row_commit_m`` columns (see ``_rt_ids``). Must be applied
         directly on the scan (``_metadata`` is a scan pseudo-column).
@@ -1145,12 +1116,7 @@ class SnapshotStore:
             if c not in (dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL)
         ]
         return self._rt_ids(
-            name,
-            data_dir,
-            self._tag_positions(scan, data_dir),
-            logical,
-            scan.columns,
-            base_df,
+            name, self._tag_positions(scan), logical, scan.columns, base_df
         )
 
     @staticmethod
@@ -1170,7 +1136,6 @@ class SnapshotStore:
     def _rt_ids(
         self,
         name: str,
-        data_dir: str,
         tagged: DataFrame,
         cols: Sequence[str],
         source_cols: Sequence[str],
@@ -1189,7 +1154,7 @@ class SnapshotStore:
             dl.MATERIALIZED_ROW_COMMIT_COL,
         )
         if base_df is None:
-            base_df = self._rt_base_df(name, data_dir)
+            base_df = self._rt_base_df(name)
 
         def materialized(c: str):
             return (
@@ -1274,56 +1239,40 @@ class SnapshotStore:
         """Parquet read of a store directory, its resolved lazy plan
         memoized per (dir, mergeSchema, content signature): the DML
         certs re-read one version many times per op (q428: 66×, ~90
-        ms each). The signature catches in-place changes (append into
-        the live data dir, a new _dv file).
+        ms each). The signature catches in-place changes (an append
+        into the live data dir). Deleted rows are not filtered here
+        (``_apply_dv``).
 
-        The read is typed, not inferred: a version dir with the data
-        columns its commit logged (``_data_schema``), a ``_dv``
-        sidecar with the fixed schema the DML paths write. Footer
-        inference runs a one-task Spark job per dir; it stays where
-        neither describes the files' physical columns: row-tracked
+        The read is typed, not inferred: with the data columns the
+        dir's commit logged (``_data_schema``). Footer inference runs
+        a one-task Spark job per dir; it stays where the log does not
+        describe the files' physical columns: row-tracked
         ``mergeSchema`` reads (rewritten files carry materialized
         row-id columns the logical schema omits) and the dirs
         ``_data_schema`` leaves to it. ``snap``, the log snapshot the
         caller resolved ``data_dir`` from, saves ``_data_schema`` a
-        second listing of the log.
-
-        A ``_dv`` sidecar is read by its file paths: Spark treats a
-        root path whose name starts with ``_`` as hidden and warns
-        that all paths were ignored."""
-
-        sig = _dir_signature(data_dir)
+        second listing of the log."""
 
         def read():
             reader = self.spark.read
             if merge_schema:
                 return reader.option("mergeSchema", "true").parquet(data_dir)
-            if os.path.basename(data_dir) == "_dv":
-                return reader.schema(_DV_SCHEMA).parquet(
-                    *(os.path.join(data_dir, rel) for rel, _, _ in sig)
-                )
             schema = self._data_schema(data_dir, snap)
             if schema is not None:
                 reader = reader.schema(schema)
             return reader.parquet(data_dir)
 
+        sig = _dir_signature(data_dir)
         key = (os.path.abspath(data_dir), bool(merge_schema), sig)
         return cache.memo("version_dirs", key, read, spark=self.spark)
 
-    def _data_schema(self, data_dir: str, snap=None):
-        """The data columns a version dir (or, for a table whose first
-        write was an ``append``, the table root) was committed with:
-        ``_logged_schema`` of the log metaData at the newest commit at
-        which the dir was live. Partition columns are left out: Spark's
-        path discovery (a listing, no Spark job) types them from the dir's
-        hive values exactly as an inferred read does, and an append
-        can add values the logged type would not parse. None — infer
-        from the footers — where ``_logged_schema`` is None and for
-        dirs no retained commit names (outside any table, or not
-        committed). ``snap`` is the table's current snapshot when the
-        caller already holds it."""
-        from pyspark.sql.types import StructType
-
+    def _dir_snapshot(self, data_dir: str, snap=None):
+        """(table dir, the log snapshot at the newest commit at which
+        the version dir ``data_dir`` — or, for a table whose first
+        write was an ``append``, the table root — was live). The
+        snapshot is None for a dir no retained commit names (outside
+        any table, or not committed). ``snap`` is the table's current
+        snapshot when the caller already holds it."""
         from product_analytics_spark.sources import delta_log as dl
 
         data_dir = os.path.normpath(data_dir)
@@ -1334,13 +1283,27 @@ class SnapshotStore:
             try:
                 snap = log.snapshot()
             except dl.DeltaProtocolError:
-                return None  # not a logged table
+                return table, None  # not a logged table
         live = self._version_of(next(iter(snap.files), ""))
         if not snap.files or (os.path.join(table, live) if live else table) != data_dir:
             lv = dict(self._retained(table)).get(v)  # time travel
-            if lv is None:
-                return None
-            snap = log.snapshot(lv)
+            snap = None if lv is None else log.snapshot(lv)
+        return table, snap
+
+    def _data_schema(self, data_dir: str, snap=None):
+        """The data columns ``data_dir`` was committed with:
+        ``_logged_schema`` of its ``_dir_snapshot``'s metaData.
+        Partition columns are left out: Spark's path discovery (a
+        listing, no Spark job) types them from the dir's hive values
+        exactly as an inferred read does, and an append can add values
+        the logged type would not parse. None — infer from the footers
+        — where ``_logged_schema`` is None and for dirs no retained
+        commit names."""
+        from pyspark.sql.types import StructType
+
+        snap = self._dir_snapshot(data_dir, snap)[1]
+        if snap is None:
+            return None
         meta = snap.metadata or {}
         schema = _logged_schema(meta)
         if schema is None:
@@ -1351,65 +1314,61 @@ class SnapshotStore:
     def _apply_dv(
         self, data_dir: str, merge_schema: bool = False, snap=None
     ) -> DataFrame:
-        """Read a version dir, filtering deletion-vectored positions:
-        broadcast anti-join on (version-relative path, row_index).
-        ``merge_schema`` is set by row-tracked tables, whose rewritten
-        files carry the materialized row-id columns the hardlinked
-        ones lack; ``snap`` as for ``_read_version_dir``."""
-        base = self._read_version_dir(data_dir, merge_schema=merge_schema, snap=snap)
-        dv_dir = self._dv_dir(data_dir)
-        if not os.path.isdir(dv_dir):
-            return base
-        dv = self._read_version_dir(dv_dir)
-        cols = base.columns
-        return (
-            base.select(
-                "*",
-                self._rel_path_col(data_dir).alias("__dv_f"),
-                F.col("_metadata.row_index").alias("__dv_ri"),
-            )
-            .join(
-                F.broadcast(dv),
-                (F.col("__dv_f") == dv["path"])
-                & (F.col("__dv_ri") == dv["row_index"]),
-                "left_anti",
-            )
-            .select(*cols)
-        )
+        """Read a version dir without the rows its log snapshot marks
+        deleted (``dl.apply_dv_filter``, the reader ``read_delta`` and
+        ``read_pruned`` use). ``merge_schema`` is set by row-tracked
+        tables, whose rewritten files carry the materialized row-id
+        columns the hardlinked ones lack; ``snap`` as for
+        ``_read_version_dir``."""
+        from product_analytics_spark.sources import delta_log as dl
 
-    def _tag_positions(self, df: DataFrame, data_dir: str) -> DataFrame:
-        """``df`` (a scan of ``data_dir``) plus each row's DV key:
-        ``__pos_f`` (version-relative path) and ``__pos_ri`` (row
+        base = self._read_version_dir(data_dir, merge_schema=merge_schema, snap=snap)
+        table, snap = self._dir_snapshot(data_dir, snap)
+        if snap is None or not any(
+            a.get("deletionVector") for a in snap.files.values()
+        ):
+            return base  # no memo lookup: its session scope costs py4j calls
+        return dl.apply_dv_filter(base, self._dv_positions(table, snap)[1])
+
+    def _dv_positions(self, table: str, snap):
+        """(row indexes by add path, their ``dl.dv_positions_df``
+        relation) of ``snap``'s deletion vectors, decoded once per
+        table and log version: readers filter by the relation, and a
+        MoR commit adds its new positions to the decoded ones of the
+        files it touches, without reading their DV files again."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        def build():
+            positions = snap.dv_positions(table)
+            by_path: dict[str, list[int]] = {}
+            for p, ri in positions:
+                by_path.setdefault(p, []).append(ri)
+            return by_path, dl.dv_positions_df(self.spark, table, positions)
+
+        table_id = (snap.metadata or {}).get("id")
+        key = ("dv", os.path.abspath(table), table_id, snap.version)
+        return cache.memo("version_dirs", key, build, spark=self.spark)
+
+    @staticmethod
+    def _tag_positions(df: DataFrame) -> DataFrame:
+        """``df`` (a file scan) plus each row's deletion-vector key:
+        ``__pos_f`` (``_metadata.file_path``) and ``__pos_ri`` (row
         index)."""
         return df.select(
             "*",
-            self._rel_path_col(data_dir).alias("__pos_f"),
+            F.col("_metadata.file_path").alias("__pos_f"),
             F.col("_metadata.row_index").alias("__pos_ri"),
         )
 
-    def _merged_dv(self, data_dir: str, matched: DataFrame) -> DataFrame:
-        """The next version's deletion vector: ``data_dir``'s
-        outstanding DV ∪ the positions of ``matched`` (rows tagged by
-        ``_tag_positions``), distinct."""
-        new_pos = matched.select(
-            F.col("__pos_f").alias("path"),
-            F.col("__pos_ri").alias("row_index"),
-        )
-        old_dv_dir = self._dv_dir(data_dir)
-        if os.path.isdir(old_dv_dir):
-            return (
-                self._read_version_dir(old_dv_dir)
-                .unionByName(new_pos)
-                .distinct()
-            )
-        return new_pos.distinct()
-
-    def _write_dv_async(self, vdir: str, merged_dv: DataFrame):
-        """Write ``merged_dv`` as ``vdir``'s one-file deletion vector
-        on an overlapped job; returns its Future."""
-        return _submit_inheritable(
-            lambda: merged_dv.coalesce(1).write.parquet(self._dv_dir(vdir))
-        )
+    @staticmethod
+    def _positions(matched: DataFrame) -> dict[str, list[int]]:
+        """Row indexes of ``_tag_positions``-tagged rows by scanned
+        file: the positions a MoR DML hands its commit (``txn.deleted``).
+        O(matched) rows reach the driver."""
+        out: dict[str, list[int]] = {}
+        for f, ri in matched.select("__pos_f", "__pos_ri").collect():
+            out.setdefault(f, []).append(ri)
+        return out
 
     def delete_where_mor(
         self,
@@ -1419,10 +1378,10 @@ class SnapshotStore:
         post_scan=None,
     ) -> dict:
         """Merge-on-read DELETE (Delta deletion vectors' semantics):
-        NO data file is rewritten — matching LIVE rows' (file,
-        row_index) positions are appended to the version's deletion
-        vector, every data file is hardlinked into the new version,
-        and readers apply the DV as a broadcast anti-join. This is
+        NO data file is rewritten — every data file is hardlinked into
+        the new version, and the commit adds the matching LIVE rows'
+        (file, row_index) positions to those files' deletion vectors,
+        which every reader applies as a broadcast anti-join. This is
         the low-write-amplification half of the q290 cost model:
         deleting 3 rows from a 128 MB file costs a few DV bytes, not
         a 128 MB rewrite; reads pay one broadcast anti-join until the
@@ -1430,43 +1389,39 @@ class SnapshotStore:
         the DV. Optimistic transaction like the COW paths
         (``post_scan`` = the same fault-injection window).
 
-        The commit emits protocol-v3 ``deletionVector`` descriptors on
-        the affected adds (roaring-bitmap sidecar per commit, protocol
-        upgraded to reader 3 / writer 7 with the deletionVectors table
-        feature — see ``sources/deletion_vectors.py``), so log consumers
-        (``read_delta``/``read_pruned``) see exactly the live rows."""
+        The deletion vectors are the log's protocol-v3
+        ``deletionVector`` descriptors: one roaring-bitmap file per
+        commit for the files that gained positions (their old
+        positions ∪ the new ones), untouched files keep theirs, and
+        the first one upgrades the protocol to reader 3 / writer 7
+        with the deletionVectors table feature (see
+        ``sources/deletion_vectors.py``)."""
         self._assert_appendable(name, "DELETE (merge-on-read)")
 
         def attempt(txn: _Attempt):
-            data = self.current_data_dir(name)
+            data, snap = self._current(name)
             if data is None:
                 raise ValueError(f"unknown table {name!r}")
             # positions of matching rows among LIVE rows only.
             # With CDF on, the matched rows feed BOTH the change
-            # file and the deletion vector — one persisted
-            # O(matched) intermediate instead of two full scans
-            # of the live relation (round-12 optimization, guide
-            # §1.2: every extra consumer re-ran the scan + DV
-            # anti-join).
+            # file and the positions — one persisted O(matched)
+            # intermediate instead of two full scans of the live
+            # relation (round-12 optimization, guide §1.2: every
+            # extra consumer re-ran the scan + DV anti-join).
             matched = self._tag_positions(
-                self._apply_dv(data).where(predicate), data
+                self._apply_dv(data, snap=snap).where(predicate)
             )
             if self.cdf:
                 matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
                 txn.releases.append(lambda: matched.unpersist(False))
-            merged_dv = self._merged_dv(data, matched)
             if post_scan is not None:
                 post_scan()
-            # Materialize-then-fork (round-13, VERDICT r12
-            # item 2, guide §2.6): the round-12 async attempt
-            # lost because the cdc and DV jobs raced to fill
-            # the `matched` cache. Materializing the persisted
-            # intermediate FIRST (one cheap count — the scan
-            # that one consumer was paying anyway) lets the
-            # cdc stage overlap the hardlink pass and the DV
-            # write, both now pure cache readers.
+            # Materialize-then-fork (round-13, VERDICT r12 item 2,
+            # guide §2.6): collecting the positions fills the
+            # persisted `matched` cache, so the cdc stage then
+            # overlaps the hardlink pass as a pure cache reader.
+            txn.deleted = self._positions(matched)
             if self.cdf:
-                matched.count()
                 txn.cdc = self._stage_cdc_async(
                     name,
                     matched.drop("__pos_f", "__pos_ri").withColumn(
@@ -1477,11 +1432,10 @@ class SnapshotStore:
                 self._link_files(txn.vdir, rel, files)
                 for rel, files in self._partition_dirs(data)
             )
-            merged_dv.coalesce(1).write.parquet(self._dv_dir(txn.vdir))
             return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(txn.vdir),
+                "dv_rows": self._dv_rows(txn.vdir),
             }
 
         return self._transact(
@@ -1497,10 +1451,11 @@ class SnapshotStore:
         post_scan=None,
     ) -> dict:
         """Merge-on-read UPDATE (Delta's deletion-vector UPDATE shape):
-        matching LIVE rows are tombstoned into the deletion vector and
-        their UPDATED versions are written as new data files into the
-        same version — every pre-existing file is hardlinked, so write
-        amplification is O(matched rows), not O(touched files).
+        matching LIVE rows' positions go to the commit's deletion
+        vectors and their UPDATED versions are written as new data
+        files into the same version — every pre-existing file is
+        hardlinked, so write amplification is O(matched rows), not
+        O(touched files).
         ``assignments`` maps column -> SQL expression (cast back to the
         column's original type, same schema-enforcement rule as the
         COW update). Partition-column reassignment is refused (it
@@ -1520,34 +1475,31 @@ class SnapshotStore:
         self._assert_appendable(name, "UPDATE (merge-on-read)")
 
         def attempt(txn: _Attempt):
-            data = self.current_data_dir(name)
+            data, snap = self._current(name)
             if data is None:
                 raise ValueError(f"unknown table {name!r}")
             rt = self._row_tracking(name)
-            live = self._apply_dv(data, merge_schema=rt)
+            live = self._apply_dv(data, merge_schema=rt, snap=snap)
             rt_cols, logical_cols = self._rt_split(live, rt)
             part_cols = self._partition_cols(self._partition_dirs(data))
             # ONE scan finds the matched rows WITH their positions;
-            # everything downstream (deletion vector, rewritten
+            # everything downstream (deleted positions, rewritten
             # rows, constraint validation, CDF pre/post images)
             # derives from this persisted O(matched) intermediate.
             # The per-consumer form re-ran the live scan + DV
             # anti-join up to 4x per UPDATE (round-12 optimization,
             # guide §1.2).
-            matched = self._tag_positions(
-                live.where(predicate), data
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            matched = self._tag_positions(live.where(predicate)).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             txn.releases.append(lambda: matched.unpersist(False))
-            merged_dv = self._merged_dv(data, matched)
             # Row tracking: the rewritten rows carry their OLD ids in
             # the materialized columns, so identity survives the
             # tombstone-and-rewrite (Delta's exact mechanism). The
             # position tags double as the row-id join key — no second
             # scan.
             if rt:
-                updated = self._rt_ids(
-                    name, data, matched, logical_cols, live.columns
-                )
+                updated = self._rt_ids(name, matched, logical_cols, live.columns)
             else:
                 updated = matched.drop("__pos_f", "__pos_ri")
             for col, expr_sql in assignments.items():
@@ -1557,14 +1509,14 @@ class SnapshotStore:
                 )
             updated = updated.select(*logical_cols, *rt_cols)
             # Materialize-then-fork (round-13, VERDICT r12 item 2,
-            # guide §2.6): fill the shared `matched` cache with ONE
-            # count — the scan its first consumer was paying anyway —
-            # then run the validation probe, the cdc stage and the DV
-            # write as overlapped cache readers alongside the hardlink
+            # guide §2.6): collecting the positions fills the shared
+            # `matched` cache — the scan its first consumer was paying
+            # anyway — then the validation probe and the cdc stage
+            # run as overlapped cache readers alongside the hardlink
             # pass and the rewrite write. The round-12
             # fork-without-materialize attempt lost exactly because
             # the forks raced to fill this cache.
-            matched.count()
+            txn.deleted = self._positions(matched)
             txn.jobs.append(
                 self._validate_async(name, updated.select(*logical_cols))
             )
@@ -1585,12 +1537,11 @@ class SnapshotStore:
                 self._link_files(txn.vdir, rel, files)
                 for rel, files in self._partition_dirs(data)
             )
-            txn.jobs.append(self._write_dv_async(txn.vdir, merged_dv))
             self._write_appended(txn.vdir, updated, part_cols)
             return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(txn.vdir),
+                "dv_rows": self._dv_rows(txn.vdir),
             }
 
         return self._transact(
@@ -1607,12 +1558,13 @@ class SnapshotStore:
     ) -> dict:
         """Merge-on-read MERGE via deletion vectors (Delta's low-shuffle
         MERGE shape, completing the DV DML trio with
-        :meth:`delete_where_mor` / :meth:`update_where_mor`): live rows
-        whose key appears in ``batch`` are tombstoned into the deletion
-        vector and ALL batch rows (matched replacements + inserts) are
-        written as NEW files into the same version — every pre-existing
-        file is hardlinked, so write amplification is O(batch rows),
-        never O(touched files). Semantically identical to
+        :meth:`delete_where_mor` / :meth:`update_where_mor`): the
+        positions of live rows whose key appears in ``batch`` go to the
+        commit's deletion vectors and ALL batch rows (matched
+        replacements + inserts) are written as NEW files into the same
+        version — every pre-existing file is hardlinked, so write
+        amplification is O(batch rows), never O(touched files).
+        Semantically identical to
         :meth:`merge` / ``merge_upsert`` (``prev ANTI batch-keys UNION
         batch``), but a 100-row upsert against a 100 TB table writes
         100 rows + DV bytes instead of rewriting every touched file.
@@ -1633,11 +1585,11 @@ class SnapshotStore:
         batch = self._apply_generated(name, batch)
 
         def attempt(txn: _Attempt):
-            data = self.current_data_dir(name)
+            data, snap = self._current(name)
             if data is None:
                 raise ValueError(f"unknown table {name!r}")
             rt = self._row_tracking(name)
-            live = self._apply_dv(data, merge_schema=rt)
+            live = self._apply_dv(data, merge_schema=rt, snap=snap)
             rt_cols, logical_cols = self._rt_split(live, rt)
             batch_eff = (
                 self._identity_merge_batch(name, live, batch, keys)
@@ -1663,7 +1615,7 @@ class SnapshotStore:
             # ONE live scan: the semi-join against the batch keys
             # finds every matched row WITH its position, the logical
             # columns (CDF preimages) and — on row-tracked tables —
-            # the materialized id columns. The deletion vector, the
+            # the materialized id columns. The deleted positions, the
             # CDF classification (matched keys stand in for "batch
             # keys present in live") and the inherited row ids all
             # derive from this persisted O(matched) intermediate; the
@@ -1673,7 +1625,7 @@ class SnapshotStore:
             # broadcast, the CDF post/insert images and the data
             # write.
             aligned = aligned.persist(StorageLevel.MEMORY_AND_DISK)
-            matched = self._tag_positions(live, data).join(
+            matched = self._tag_positions(live).join(
                 F.broadcast(aligned.select(*keys).distinct()),
                 on=keys,
                 how="left_semi",
@@ -1682,16 +1634,15 @@ class SnapshotStore:
                 lambda: matched.unpersist(False),
                 lambda: aligned.unpersist(False),
             ]
-            merged_dv = self._merged_dv(data, matched)
             # Materialize-then-fork (round-13, VERDICT r12 item 2,
-            # guide §2.6): one count fills BOTH caches (computing
-            # `matched` builds the broadcast over `aligned`, so the
-            # batch cache fills as a side effect); the validation
-            # probe, cdc stage and DV write then overlap the hardlink
-            # pass and the data write as pure cache readers. CHECK
-            # constraints gate the NEW rows only — the hardlinked
-            # side was validated when it committed.
-            matched.count()
+            # guide §2.6): collecting the positions fills BOTH caches
+            # (computing `matched` builds the broadcast over
+            # `aligned`, so the batch cache fills as a side effect);
+            # the validation probe and cdc stage then overlap the
+            # hardlink pass and the data write as pure cache readers.
+            # CHECK constraints gate the NEW rows only — the
+            # hardlinked side was validated when it committed.
+            txn.deleted = self._positions(matched)
             txn.jobs.append(self._validate_async(name, aligned))
             if post_scan is not None:
                 post_scan()
@@ -1729,7 +1680,7 @@ class SnapshotStore:
                 # replacement row inherits the smallest (oldest)
                 # matched row id, deterministically.
                 matched_ids = (
-                    self._rt_ids(name, data, matched, keys, live.columns)
+                    self._rt_ids(name, matched, keys, live.columns)
                     .groupBy(*keys)
                     .agg(*[F.min(F.col(c)).alias(c) for c in rt_cols])
                 )
@@ -1742,12 +1693,11 @@ class SnapshotStore:
                 self._link_files(txn.vdir, rel, files)
                 for rel, files in self._partition_dirs(data)
             )
-            txn.jobs.append(self._write_dv_async(txn.vdir, merged_dv))
             self._write_appended(txn.vdir, to_write, part_cols)
             return lambda: {
                 "files_linked": n_link,
                 "files_rewritten": 0,
-                "dv_rows": self._dv_file_rows(txn.vdir),
+                "dv_rows": self._dv_rows(txn.vdir),
             }
 
         return self._transact(
@@ -1757,9 +1707,10 @@ class SnapshotStore:
     def purge_dv(self, name: str, max_retries: int = 3) -> bool:
         """Materialize outstanding deletion vectors: rewrite the table
         through the DV-aware reader (restoring the recorded layout)
-        so the new version has plain files and no ``_dv`` — what Delta
-        does when OPTIMIZE or a rewrite touches DV'd files. Returns
-        True if a purge happened. OCC with retry."""
+        so the new version's adds are plain files with no
+        ``deletionVector`` — what Delta does when OPTIMIZE or a
+        rewrite touches DV'd files. Returns True if a purge happened.
+        OCC with retry."""
 
         def attempt(txn: _Attempt):
             if not self._has_dv(name):
@@ -1771,9 +1722,9 @@ class SnapshotStore:
                 # materialized-or-virtual), or the fresh baseRowId
                 # ranges of the rewritten files would re-mint ids —
                 # Delta preserves ids through OPTIMIZE the same way.
-                data = self.current_data_dir(name)
+                data, snap = self._current(name)
                 df = self._rt_attach_ids(
-                    name, data, self._apply_dv(data, merge_schema=True)
+                    name, self._apply_dv(data, merge_schema=True, snap=snap)
                 )
             else:
                 df = self.read(name)
@@ -1816,14 +1767,14 @@ class SnapshotStore:
         ``version`` is a retained version dir name (``v_...``, one of
         :meth:`versions`) or an index into :meth:`versions` (negative
         = from the end, like ``read``); anything else raises
-        ValueError. Every file of the target version — data files,
-        hive subdirs, and an outstanding ``_dv`` deletion vector — is
-        HARDLINKED into the new version dir: zero data movement, cost
-        O(|files|) metadata ops, exactly how Delta's RESTORE re-adds
-        the old snapshot's files by reference. The log reconciles
-        automatically: the restored files are re-added (stats reused
-        by inode — no footer re-reads) and the abandoned version's
-        files removed, with ``dataChange: true``
+        ValueError. Every file of the target version (data files and
+        hive subdirs) is HARDLINKED into the new version dir: zero
+        data movement, cost O(|files|) metadata ops, exactly how
+        Delta's RESTORE re-adds the old snapshot's files by reference.
+        The log reconciles automatically: the restored files are
+        re-added with the target version's adds (stats and deletion
+        vectors reused by inode — no footer re-reads) and the
+        abandoned version's files removed, with ``dataChange: true``
         (rows DID change — streams and the change feed correctly see
         the restore as delete-all + insert-all of the delta, Delta's
         own RESTORE semantics).
@@ -1850,6 +1801,7 @@ class SnapshotStore:
         src = os.path.join(self.path(name), version)
 
         def attempt(txn: _Attempt):
+            txn.source = self._dir_snapshot(src)[1]
             n_link = 0
             for root, _dirs, files in os.walk(src):
                 rel = os.path.relpath(root, src)
@@ -2008,14 +1960,16 @@ class SnapshotStore:
         version: str,
         expected_version=UNCHECKED,
         operation: str = "WRITE",
-        written: DataFrame | None = None,
+        txn: _Attempt | None = None,
     ) -> None:
         """Commit the written version dir ``version``, then
-        garbage-collect versions that fell off the retention window.
+        garbage-collect versions that fell off the retention window
+        and the deletion-vector files only they referenced.
         Inside the commit lock the order is: OCC check, the log commit
         (``_delta_commit``, reconciled against ``version``'s dir — its
-        putIfAbsent is the commit point), the retained list. A refused
-        log commit therefore leaves the table as it was.
+        putIfAbsent is the commit point; ``txn``, the attempt that
+        wrote it, if any), the retained list. A refused log commit
+        therefore leaves the table as it was.
 
         Optimistic concurrency: with ``expected_version`` set (the
         version the transaction READ — ``current_version()`` at its
@@ -2034,11 +1988,10 @@ class SnapshotStore:
                         "transaction's snapshot read; re-read and retry"
                     )
             self._delta_commit(
-                name, os.path.join(table, version), operation=operation,
-                written=written,
+                name, os.path.join(table, version), operation=operation, txn=txn
             )
             # Read under the lock, so the list ends with this commit.
-            committed = self.versions(name)
+            committed = self._retained(table)
         # GC deletes ONLY previously COMMITTED versions that fell off
         # the retention window. A bare "every v_ dir not retained"
         # sweep (the old rule) could destroy a CONCURRENT writer's
@@ -2048,9 +2001,13 @@ class SnapshotStore:
         # writers' orphans are vacuumed by age instead (not
         # ``DeltaLog.vacuum``, which deletes untracked files at once).
         retained = committed[-self.retain_versions :]
-        for v in committed[: -self.retain_versions]:
+        gone = committed[: -self.retain_versions]
+        for v, _lv in gone:
             shutil.rmtree(os.path.join(table, v), ignore_errors=True)
-        self._vacuum_orphans(name, set(retained))
+        entries = os.listdir(table)
+        self._vacuum_orphans(table, {v for v, _lv in retained}, entries)
+        if gone and any(e.startswith("deletion_vector_") for e in entries):
+            self._gc_dv_files(table, gone, retained)
 
     #: age after which an uncommitted version dir is presumed to belong
     #: to a CRASHED writer and may be vacuumed (in-flight writers finish
@@ -2058,22 +2015,56 @@ class SnapshotStore:
     #: reason — err far on the side of not touching live work).
     ORPHAN_TTL_S = 3600.0
 
-    def _vacuum_orphans(self, name: str, retained: set[str]) -> None:
-        """Delete version dirs that are neither retained nor recently
-        modified — the leftovers of writers that crashed between
-        _write_version and _commit. Age-gated so a concurrent IN-FLIGHT
-        writer's uncommitted dir is never swept."""
+    def _vacuum_orphans(
+        self, table: str, retained: set[str], entries: list[str]
+    ) -> None:
+        """Delete version dirs among ``entries`` (the table dir's
+        listing) that are neither retained nor recently modified — the
+        leftovers of writers that crashed between _write_version and
+        _commit. Age-gated so a concurrent IN-FLIGHT writer's
+        uncommitted dir is never swept."""
         import time
 
-        table = self.path(name)
         now = time.time()
-        for entry in os.listdir(table):
+        for entry in entries:
             if not entry.startswith("v_") or entry in retained:
                 continue
             p = os.path.join(table, entry)
             try:
                 if now - os.path.getmtime(p) > self.ORPHAN_TTL_S:
                     shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
+
+    @staticmethod
+    def _gc_dv_files(table: str, gone, retained) -> None:
+        """Delete the deletion-vector files the log snapshots of the
+        GC'd versions ``gone`` reference and no ``retained`` version's
+        snapshot does (both (version dir, log version) pairs from
+        ``_retained``). A file no commit has named is never touched:
+        an in-flight writer may be about to commit it."""
+        from product_analytics_spark.sources import delta_log as dl
+        from product_analytics_spark.sources import deletion_vectors as dvs
+
+        log = dl.DeltaLog(table)
+
+        def referenced(runs) -> set[str]:
+            return {
+                dvs.dv_file_path(table, a["deletionVector"])
+                for _v, lv in runs
+                for a in log.snapshot(lv).files.values()
+                if (a.get("deletionVector") or {}).get("storageType") == "u"
+            }
+
+        try:
+            stale = referenced(gone)
+            if stale:
+                stale -= referenced(retained)
+        except dl.DeltaProtocolError:
+            return  # a snapshot the log can no longer rebuild: keep all
+        for p in stale:
+            try:
+                os.unlink(p)
             except OSError:
                 pass
 
@@ -2113,11 +2104,10 @@ class SnapshotStore:
           <what>``), is a conflict: retry, up to ``max_retries``;
         * anything else is a genuine error and re-raises unchanged.
 
-        ``materialize_dv`` (the raw-file rewriters): purge a pending
-        deletion vector before each attempt — those paths read data
-        files directly, so committing without applying the DV would
-        resurrect MoR-deleted rows (and the new version drops the
-        ``_dv``)."""
+        ``materialize_dv`` (the raw-file rewriters): purge outstanding
+        deletion vectors before each attempt — those paths read data
+        files directly, so committing without applying the DVs would
+        resurrect MoR-deleted rows."""
         last_err: ConcurrentWriteError | None = None
         for _ in range(max_retries):
             if materialize_dv and self._has_dv(name):
@@ -2136,7 +2126,7 @@ class SnapshotStore:
                         name, txn.version,
                         expected_version=txn.expected,
                         operation=operation,
-                        written=txn.written,
+                        txn=txn,
                     )
             except Exception as exc:
                 # Settle every overlapped job first (ADVICE r12): none
@@ -2310,7 +2300,7 @@ class SnapshotStore:
         name: str,
         data: str,
         operation: str = "WRITE",
-        written: DataFrame | None = None,
+        txn: _Attempt | None = None,
     ) -> None:
         """Emit one protocol-conformant ``_delta_log`` commit
         reconciling the log's live file set against the data dir
@@ -2320,13 +2310,20 @@ class SnapshotStore:
         log commit moves nothing:
 
         * adds    = files on disk the log doesn't know (stats from one
-                    footer read each — or REUSED from the prior add
-                    when the file is a COW hardlink of a live file:
-                    same inode ⇒ same content ⇒ same stats, zero
-                    re-reads for the untouched side of a DML);
+                    footer read each — or REUSED, deletion vector
+                    included, from the prior add when the file is a
+                    hardlink of a live file (or of a file of
+                    ``txn.source``): same inode ⇒ same content ⇒ same
+                    stats, zero re-reads for the untouched side of a
+                    DML);
         * removes = live log paths no longer in the data dir (the old
                     version's files — still on disk for time travel
                     until GC, exactly Delta's remove-then-VACUUM).
+
+        ``txn.deleted`` (a MoR DML's new positions by scanned file)
+        moves to the adds that hardlink those files: one new
+        deletion-vector file holds each such file's old positions ∪
+        its new ones; every other add keeps its descriptor.
 
         metaData (Spark schemaString + partitionColumns) is emitted on
         the first commit and re-emitted when the data files' arrow
@@ -2339,8 +2336,8 @@ class SnapshotStore:
         itself writes for an empty flat table. So every committed
         version keeps a live add that names its dir. A new table's
         empty partitioned first write (Spark writes no file for it)
-        gets one zero-row file of ``written``, the DataFrame written,
-        at the version root, and its metaData schema from ``written``
+        gets one zero-row file of ``txn.written``, the DataFrame
+        written, at the version root, and its metaData schema from it
         rather than from the files."""
         import hashlib
         import json
@@ -2348,6 +2345,8 @@ class SnapshotStore:
         from product_analytics_spark.sources import delta_log as dl
 
         table = self.path(name)
+        txn = txn or _Attempt(table, UNCHECKED)  # an append or metadata commit
+        written = txn.written
         log = dl.DeltaLog(table, owner=self.commit_owner)
         latest = log.latest_version()
         prev = log.snapshot(latest) if latest is not None else None
@@ -2377,68 +2376,61 @@ class SnapshotStore:
                 disk[os.path.relpath(f, table).replace(os.sep, "/")] = f
 
         old_by_ino: dict[int, dict] = {}
-        if prev is not None:
-            for rel, add in prev.files.items():
+        for snap in [s for s in (prev, txn.source) if s is not None]:
+            for rel, add in snap.files.items():
                 try:
                     old_by_ino[os.stat(os.path.join(table, rel)).st_ino] = add
                 except OSError:
                     pass
-
-        # Outstanding deletion vector of the CURRENT version (written
-        # by the MoR DML paths): version-relative (path, row_index)
-        # positions, keyed up to table-relative add paths below.
-        dv_by_rel: dict[str, list[int]] = {}
-        dv_dir = self._dv_dir(data)
-        if os.path.isdir(dv_dir):
-            import pyarrow.parquet as pq
-
-            vbase = os.path.basename(os.path.normpath(data))
-            t = pq.read_table(dv_dir)
-            for p, ri in zip(
-                t.column("path").to_pylist(),
-                t.column("row_index").to_pylist(),
-            ):
-                dv_by_rel.setdefault(f"{vbase}/{p}", []).append(ri)
+        deleted_by_ino = {
+            os.stat(dl.resolve_path(table, f)).st_ino: ris
+            for f, ris in txn.deleted.items()
+        }
 
         actions: list[dict] = []
         new_adds: list[dict] = []
+        gained: dict[str, tuple] = {}  # rel -> (add, its old rel, new positions)
         first_abs = next(iter(disk.values()), None)
         for rel in sorted(disk):
             if prev is not None and rel in prev.files:
                 continue  # already live (append case)
             abs_p = disk[rel]
             try:
-                old = old_by_ino.get(os.stat(abs_p).st_ino)
+                ino = os.stat(abs_p).st_ino
             except OSError:
-                old = None
+                ino = None
+            old = old_by_ino.get(ino)
             if old is not None and "stats" in old:
                 add = dict(old)
                 add["path"] = rel
                 add["partitionValues"] = dl._partition_values(rel)
-                add.pop("deletionVector", None)  # re-derived below
             else:
                 add = dl.make_add(table, abs_p)
+            if ino in deleted_by_ino:
+                gained[rel] = (add, (old or {}).get("path"), deleted_by_ino.pop(ino))
             new_adds.append(add)
+        if deleted_by_ino:
+            raise dl.DeltaProtocolError(
+                f"table {name!r}: deleted rows of {len(deleted_by_ino)} "
+                "file(s) not in the committed version"
+            )
 
-        if dv_by_rel:
+        if gained:
             from product_analytics_spark.sources import (
                 deletion_vectors as dvs,
             )
 
-            descriptors = dvs.write_dv_file(table, dv_by_rel)
-            for add in new_adds:
-                dvd = descriptors.get(add["path"])
-                if dvd is None:
-                    # reused stats may carry a stale tightBounds from
-                    # a previously DV'd incarnation — normalize
-                    if "tightBounds" in (add.get("stats") or ""):
-                        st = json.loads(add["stats"])
-                        st.pop("tightBounds", None)
-                        add["stats"] = json.dumps(
-                            st, separators=(",", ":"), sort_keys=True
-                        )
-                    continue
-                add["deletionVector"] = dvd
+            # the old positions as the DML's scan decoded them
+            old_positions = self._dv_positions(table, prev)[0]
+            descriptors = dvs.write_dv_file(
+                table,
+                {
+                    rel: sorted(set(new).union(old_positions.get(old_rel, ())))
+                    for rel, (_add, old_rel, new) in gained.items()
+                },
+            )
+            for rel, (add, _old_rel, _new) in gained.items():
+                add["deletionVector"] = descriptors[rel]
                 # stats still describe the PHYSICAL file, so bounds
                 # are wide over the live rows: declare tightBounds
                 # false (Delta's exact contract for DV'd files;
@@ -2513,7 +2505,7 @@ class SnapshotStore:
                 )
             schema_hash = hashlib.sha1(str(sch_obj).encode()).hexdigest()
         prev_conf = (prev.metadata.get("configuration") or {}) if prev else {}
-        dv_enabled = bool(dv_by_rel) or (
+        dv_enabled = bool(gained) or (
             prev_conf.get("delta.enableDeletionVectors") == "true"
         )
         cdf_enabled = self.cdf or (
@@ -2602,12 +2594,12 @@ class SnapshotStore:
             need_writer = max(need_writer, 6)
         if prev is None:
             proto = dict(
-                dl.PROTOCOL_DV_ACTION if dv_by_rel else dl.PROTOCOL_ACTION
+                dl.PROTOCOL_DV_ACTION if gained else dl.PROTOCOL_ACTION
             )
             if proto["minWriterVersion"] < need_writer:
                 proto["minWriterVersion"] = need_writer
             actions.append({"protocol": proto})
-        elif dv_by_rel and (
+        elif gained and (
             (prev.protocol or {}).get("minReaderVersion", 1) < 3
             or "deletionVectors"
             not in ((prev.protocol or {}).get("writerFeatures") or [])
@@ -2838,9 +2830,9 @@ class SnapshotStore:
         as Delta/Iceberg. Partition columns come back as string
         literals from the log's partitionValues. Files with
         ``deletionVector`` descriptors have their tombstoned
-        positions anti-joined out (decoded from the roaring
-        sidecars), so pruned reads never resurrect MoR-deleted
-        rows."""
+        positions anti-joined out (``dl.apply_dv_filter``, decoded
+        from the roaring-bitmap files), so pruned reads never
+        resurrect MoR-deleted rows."""
         from product_analytics_spark.sources import delta_log as dl
 
         snap = self.delta_snapshot(name, version)
@@ -2852,12 +2844,12 @@ class SnapshotStore:
                 self.current_data_dir(name)
             ).schema
             return self.spark.createDataFrame([], schema)
-        positions = snap.dv_positions(table)
+        pos_df = dl.dv_positions_df(self.spark, table, snap.dv_positions(table))
         if not part_cols:
             df = self.spark.read.parquet(
                 *[os.path.join(table, p) for p in kept]
             )
-            return dl.apply_dv_filter(self.spark, df, table, positions)
+            return dl.apply_dv_filter(df, pos_df)
         groups: dict[tuple, list[str]] = {}
         for p in kept:
             pv = snap.files[p].get("partitionValues") or {}
@@ -2868,7 +2860,7 @@ class SnapshotStore:
             df = self.spark.read.parquet(
                 *[os.path.join(table, p) for p in groups[key]]
             )
-            df = dl.apply_dv_filter(self.spark, df, table, positions)
+            df = dl.apply_dv_filter(df, pos_df)
             for c, v in zip(part_cols, key):
                 df = df.withColumn(c, F.lit(v).cast("string"))
             out = df if out is None else out.unionByName(df)
@@ -3275,7 +3267,7 @@ class SnapshotStore:
         order. Flat tables yield one ``(".", files)`` pair; hive-
         partitioned tables yield one pair per leaf partition directory
         (``order_year=1996/order_month=3``). Hidden/metadata entries
-        (``_SUCCESS``, ``.crc``, ``_dv``, sidecars) are skipped."""
+        (``_SUCCESS``, ``.crc``, sidecars) are skipped."""
         out: list[tuple[str, list[str]]] = []
         for root, dirs, files in os.walk(data):
             dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
@@ -3404,7 +3396,7 @@ class SnapshotStore:
             data = self.current_data_dir(name)
             assert data is not None  # plan non-empty ⇒ data exists
             rt = self._row_tracking(name)
-            rt_base = self._rt_base_df(name, data) if rt else None
+            rt_base = self._rt_base_df(name) if rt else None
             vdir = txn.vdir
 
             def _rewrite_group(group: list[str]) -> None:
@@ -3418,7 +3410,7 @@ class SnapshotStore:
                     # materialize ids so the merged file keeps them
                     # (fresh baseRowIds on the new file lose to the
                     # materialized column via coalesce at read)
-                    df = self._rt_attach_ids(name, data, df, base_df=rt_base)
+                    df = self._rt_attach_ids(name, df, base_df=rt_base)
                 # Groups of one directory share out_dir, and two
                 # concurrent append jobs into one directory race on
                 # the commit protocol's shared _temporary/0 staging
@@ -3527,7 +3519,7 @@ class SnapshotStore:
                     {"files_before": 0, "files_after": 0, "reclustered": False}
                 )
             rt = self._row_tracking(name)
-            rt_base = self._rt_base_df(name, data) if rt else None
+            rt_base = self._rt_base_df(name) if rt else None
             vdir = txn.vdir
 
             def _recluster_dir(rel: str, files: list[str]) -> None:
@@ -3543,7 +3535,7 @@ class SnapshotStore:
                 if rt:
                     # recluster preserves row identity by
                     # materializing ids into the rewritten files
-                    df = self._rt_attach_ids(name, data, df, base_df=rt_base)
+                    df = self._rt_attach_ids(name, df, base_df=rt_base)
                 if zorder:
                     from product_analytics_spark.functions.zorder import (
                         morton_zvalue,
@@ -3868,8 +3860,8 @@ class SnapshotStore:
                 # footers (round-13, guide §1.2): this was a full
                 # count JOB per DML (`self.read(name).count()`). The
                 # committed version is exactly ``vdir`` (hardlinks +
-                # rewritten files, no _dv — a pending deletion vector
-                # was purged before the scan), so the footers'
+                # rewritten files, no deletion vector — outstanding ones
+                # were purged before the scan), so the footers'
                 # num_rows sum IS the live row count — O(|files|)
                 # driver metadata reads, zero jobs.
                 import pyarrow.parquet as pq

@@ -79,14 +79,26 @@ def test_restore_unknown_version_raises(spark, store):
 
 def test_restore_preserves_deletion_vector(spark, store):
     st = store
-    st.overwrite("t", _base(spark, 20))
+    st.overwrite("t", _base(spark, 20), n_files=2)
     st.delete_where_mor("t", "k < 3")          # v1: DV, 17 live
     dv_version = st.current_version("t")
+    target_rows = sorted(tuple(r) for r in st.read("t").collect())
+
+    def cardinalities():
+        return sorted(
+            (os.path.basename(p), (a.get("deletionVector") or {}).get("cardinality"))
+            for p, a in st.delta_snapshot("t").files.items()
+        )
+
+    target = cardinalities()
+    assert sum(c or 0 for _f, c in target) == 3
     st.overwrite("t", _base(spark, 5))         # v2: plain 5 rows
+    assert not st._has_dv("t")                 # v1's files left the snapshot
     st.restore("t", dv_version)                # v3: back to DV state
-    assert st.read("t").count() == 17
-    # the hardlinked _dv came along; log carries the descriptors
-    assert st._has_dv("t")
+    # the restore commit re-adds the target version's adds, deletion
+    # vectors included
+    assert cardinalities() == target
+    assert sorted(tuple(r) for r in st.read("t").collect()) == target_rows
     assert dl.read_delta(spark, st.path("t")).count() == 17
 
 

@@ -4,7 +4,9 @@ A store read takes its schema from the log metaData that committed the
 version dir instead of inferring it from parquet footers (a one-task
 Spark job per dir). Table-driven: for every kind of table the typed
 read must equal the footer-inferred read — same columns, order, types
-and rows — and launch no Spark job. Row-tracked and column-mapped
+and rows — and launch no Spark job. A deletion-vectored read filters
+by the positions of the dir's log snapshot, which launches no job
+either. Row-tracked and column-mapped
 tables keep the inferred read (the log does not describe their files'
 physical columns), so for them only the equality is checked.
 
@@ -50,6 +52,16 @@ def _dv(spark, store):
     return {"dir": store.current_data_dir("t"), "where": "k % 5 != 0"}
 
 
+def _dv_time_travel(spark, store):
+    # the deleted rows come from the log snapshot that names the dir,
+    # not from the current one
+    store.overwrite("t", _base(spark), n_files=2)
+    store.delete_where_mor("t", "k % 5 = 0")
+    old = store.current_version("t")
+    store.delete_where_mor("t", "k % 3 = 0")
+    return {"dir": store.path("t") + "/" + old, "version": old, "where": "k % 5 != 0"}
+
+
 def _row_tracked(spark, store):
     store.overwrite("t", _base(spark), n_files=2)
     store.enable_row_tracking("t")
@@ -84,6 +96,7 @@ CASES = {
     "flat": _flat,
     "hive_partitioned_int": _partitioned,
     "deletion_vectored": _dv,
+    "deletion_vectored_time_travel": _dv_time_travel,
     "row_tracked": _row_tracked,
     "column_mapped": _column_mapped,
     "schema_evolved_time_travel": _evolved_time_travel,
