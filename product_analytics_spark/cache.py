@@ -80,7 +80,6 @@ _NAMESPACES = {
     "retained": _Namespace(False, bound=256),
     "landed": _Namespace(False),
     "materialized": _Namespace(False),
-    "cdf_fused": _Namespace(False),
 }
 #: guards the counters, so a hit never waits on a build
 _COUNTS_LOCK = threading.Lock()

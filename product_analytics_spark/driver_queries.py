@@ -1549,7 +1549,8 @@ Q40_WAREHOUSE = os.path.join(
 def q40_snapshot_merge_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S6+S7 exercised ON DISK (the round-1 gap: the write path had
     no driver-checked query): build the pre-cut snapshot, commit it
-    through the SnapshotStore pointer protocol partitioned by
+    through the SnapshotStore's Delta log (the log's putIfAbsent
+    of the next entry is the commit point) partitioned by
     event_type (S6) and clustered by user_id (S7 ZORDER analog), MERGE
     the post-cut batch into it (S4), and return the snapshot as read
     back from the committed parquet — so the oracle check covers the

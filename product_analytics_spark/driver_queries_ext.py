@@ -572,8 +572,8 @@ Q111_WH = os.path.join(_REPO, ".fixtures", ".q111_warehouse")
 def q111_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X85: snapshot time travel (sources/sinks.py:SnapshotStore with
     retain_versions>1) — commit v1, MERGE a correction batch into v2,
-    then read BOTH versions back by version index (the pointer-file
-    analog of Delta `VERSION AS OF`). Output: per-version rowcount +
+    then read BOTH versions back by log version (Delta
+    `VERSION AS OF`). Output: per-version rowcount +
     balance total; the oracle reconstructs both states relationally,
     so the on-disk versioning must preserve every value exactly."""
     from product_analytics_spark.sources.sinks import SnapshotStore

@@ -26,8 +26,8 @@ def q302_wap_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X263: write-audit-publish (WAP) — the deployment pattern that
     keeps bad data out of production tables: the new snapshot writes
     to an UNPUBLISHED staging version, the audit suite runs against
-    the staged data, and only a clean audit flips the pointer
-    (SnapshotStore's atomic commit) — a dirty batch leaves the
+    the staged data, and only a clean audit commits it (SnapshotStore's
+    atomic commit: the log's putIfAbsent) — a dirty batch leaves the
     published version untouched. Exercised FOR REAL: a clean batch
     (orders rollup) publishes; a poisoned batch (a NULL key + a
     duplicated key injected) fails its audit and is withheld — and
@@ -35,8 +35,8 @@ def q302_wap_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLEAN version after the failed attempt.
 
     Scale: staging versions are the store's normal immutable dirs;
-    the audit reads only the staged snapshot; publish is a pointer
-    rename — O(1) regardless of table size."""
+    the audit reads only the staged snapshot; publish is one log
+    putIfAbsent — O(1) regardless of table size."""
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q302_WH, ignore_errors=True)

@@ -203,8 +203,9 @@ def q324_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6/S7 lifecycle, the EXECUTE half of q199's compaction planner:
     land one year of orders as deliberately-small files, bin-pack them
     with SnapshotStore.plan_compaction (the q199 kernel over the REAL
-    file manifest), rewrite each planned group as one file, commit the
-    pointer, and emit the invariants a lakehouse OPTIMIZE job must
+    file manifest), rewrite each planned group as one file, commit it
+    through the log's putIfAbsent, and emit the invariants a lakehouse
+    OPTIMIZE job must
     uphold: row counts identical before/after, executed groups ==
     planned groups, file count strictly dropped, prior layout still
     time-travelable. File sizes aren't portable across writers, so the

@@ -100,7 +100,8 @@ def q342_decontaminate_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     the step a training-data pipeline actually ships: flag every
     training doc sharing an {Q342_NGRAM}-token shingle with the eval
     set, MATERIALIZE the clean corpus through the snapshot store's
-    atomic pointer commit, and verify the invariants on the
+    atomic commit (the log's putIfAbsent), and verify the invariants on
+    the
     read-back: clean + contaminated partitions the training set, the
     committed corpus row-matches the clean set, and re-screening the
     committed corpus finds ZERO residual contamination (the

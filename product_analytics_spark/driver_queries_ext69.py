@@ -44,8 +44,9 @@ def q374_dynamic_partition_overwrite(
     overwrite is two jobs (stage new files, swap the matching
     partition dirs) and the read-back prunes on the partition column.
 
-    Cross-ref: sinks.SnapshotStore overwrites whole TABLES by pointer
-    swap (S4-S7); this door is the engine-native PARTITION-scoped
+    Cross-ref: sinks.SnapshotStore overwrites whole TABLES by one log
+    commit (putIfAbsent, S4-S7); this door is the engine-native
+    PARTITION-scoped
     overwrite the reference's `insert_overwrite` dbt strategy maps to
     (reference dbt_project.yml materializations)."""
     tag = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/")))

@@ -231,7 +231,7 @@ def q394_advised_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partition pruning is THE first-order 100 TB win — the scan
     cost tracks the predicate's selectivity, not the table size; the
-    pointer-commit snapshot makes the layout refresh atomic."""
+    log's putIfAbsent commit makes the layout refresh atomic."""
     advice = _layout_advice()
     advisor_backed = "event_type" in _top_candidates(
         advice, "events", "partition_or_zorder_candidates", k=1

@@ -29,7 +29,8 @@ def q410_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     third user's clicks are deleted. The kernel rewrites ONLY files
     containing a matching row — the four non-click partition dirs
     survive as HARDLINKS (zero data movement; the in-row cert counts
-    them) — and commits the pointer atomically; the pre-delete version
+    them) — and commits atomically through the log's putIfAbsent; the
+    pre-delete version
     stays time-travelable (rows_before re-read from it).
 
     Compared values: per-type survivor counts + cents sums (the DuckDB
@@ -222,10 +223,10 @@ def q412_occ_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates of the final state plus the protocol booleans
     (conflict_raised / loser_cleaned / retry_committed).
 
-    Scale: the conflict check is a pointer compare inside a
-    microsecond lock — version data is on disk before commit, so
-    contention cost is retry WORK, never corruption; on object stores
-    the table format's log putIfAbsent is the same check."""
+    Scale: the conflict check is a log-version compare inside a
+    microsecond lock and the commit point is the log's putIfAbsent —
+    version data is on disk before commit, so contention cost is
+    retry WORK, never corruption."""
     from product_analytics_spark.operators.incremental import merge_upsert
     from product_analytics_spark.sources.sinks import (
         ConcurrentWriteError,

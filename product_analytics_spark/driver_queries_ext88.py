@@ -1,8 +1,9 @@
 """Round-8 driver query families, batch 88 (q413-q414): optimistic
 concurrency control threaded through the copy-on-write DML and
 compaction commit paths — the round-7 verdict's top item. A concurrent
-merge landing between a DML/compaction snapshot scan and its pointer
-commit must be detected (ConcurrentWriteError), never silently lost;
+merge landing between a DML/compaction snapshot scan and its log
+commit (the putIfAbsent of the next entry) must be detected
+(ConcurrentWriteError), never silently lost;
 the loser re-scans the fresh version and retries, yielding the serial
 history the DuckDB oracle replays.
 
@@ -56,8 +57,9 @@ def q413_occ_dml_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap the lost update would erase is a compared COUNT, not just
     a flag.
 
-    Scale: conflict detection is a pointer compare in a microsecond
-    critical section; the retry re-pays only the touched-file scan
+    Scale: conflict detection is a log-version compare in a
+    microsecond critical section ending in the log's putIfAbsent; the
+    retry re-pays only the touched-file scan
     (one input_file_name() manifest pass) — contention costs retry
     work, never correctness, same as Delta's commit-retry loop."""
     from product_analytics_spark.sources.sinks import SnapshotStore

@@ -253,7 +253,7 @@ def q425_concurrent_dag_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
     hook saw A's second attempt), and both ledgers' success flags.
 
     Scale: scheduler concurrency costs retry work, never correctness —
-    the same pointer-compare critical section as single-writer OCC;
+    the same log-version compare and putIfAbsent as single-writer OCC;
     retries re-pay one merge plan, not the DAG."""
     from product_analytics_spark.plans.executor import DagExecutor
     from product_analytics_spark.plans.registry import Model, ModelRegistry
@@ -872,8 +872,7 @@ def q429_delta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         net = added - removed
         live_delta = snaps[v].num_records() - prev.num_records()
         # content diff THROUGH THE LOG: each delta version's live file
-        # set (retained on disk) — pointer time travel can't see the
-        # append commit, the log can.
+        # set (retained on disk), read through the log's snapshots.
         table = store.path("t")
 
         def _at(version: int) -> DataFrame:

@@ -217,7 +217,7 @@ def q433_delta_dv_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in a new file while the DV keeps the old position dead, the
     classic resurrection trap). The result is read THROUGH THE LOG
     (``read_delta``: descriptors decoded from the roaring sidecars,
-    tombstones anti-joined out), never through the pointer store.
+    tombstones anti-joined out), never through the store's reader.
 
     The oracle is an independent parser: DuckDB replays the raw
     commit JSON (latest action per path), sums the LIVE adds'

@@ -245,8 +245,8 @@ def q435_restore_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``restore_equals_target`` via two-sided exceptAll);
     * history ABOVE the restore point survives — the pre-restore
       (post-delete) state is still time-travel-readable
-      (``history_preserved``), because RESTORE is a commit, not a
-      pointer rollback;
+      (``history_preserved``), because RESTORE is a new log commit
+      (putIfAbsent of the next entry), not a rollback;
     * the transaction log stays consistent: ``read_delta`` of the
       restored table matches the store's own read, and the log's
       latest version counts the restore as one more commit

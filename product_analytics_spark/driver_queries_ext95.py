@@ -68,7 +68,7 @@ def q459_append_only_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * ``dml_all_refused`` — DELETE/UPDATE/MERGE (COW and MoR),
       overwrite, and RESTORE all raise ``DeltaProtocolError`` with
-      the pointer version AND the log version unchanged;
+      the log version unchanged;
     * ``append_landed`` — a valid append still lands (version +1),
       per the feature's contract;
     * ``invariant_refused`` — an append with ``cents <= 0`` rows is

@@ -1782,10 +1782,16 @@ class DeltaLog:
                     t.get("lastUpdated") or 0
                 )
 
-    def snapshot(self, version: int | None = None) -> DeltaSnapshot:
+    def snapshot(
+        self,
+        version: int | None = None,
+        commits: list[tuple[int, str]] | None = None,
+    ) -> DeltaSnapshot:
         """Reconstruct the table state at ``version`` (default:
         latest): start from the newest checkpoint at or below it, then
-        replay the JSON commits after it in order.
+        replay the JSON commits after it in order. ``commits`` is this
+        log's :meth:`_commits` listing when the caller already holds
+        one, so the snapshot lists ``_delta_log`` no second time.
 
         MEMOIZED: commit files are immutable once linked into the log
         (the hardlink putIfAbsent), so a snapshot at a version is
@@ -1802,7 +1808,8 @@ class DeltaLog:
         ``table_changes`` / stream trigger replays checkpoint parquet
         + JSON tail from disk — O(live files) per call, a driver-side
         bottleneck at 10^6-file scale."""
-        commits = self._commits()
+        if commits is None:
+            commits = self._commits()
         if not commits:
             raise DeltaProtocolError(f"no commits in {self.log_dir}")
         if version is None:
@@ -3401,12 +3408,12 @@ CDC_TYPE_COL = "_change_type"
 CDC_VERSION_COL = "_commit_version"
 
 
-def _part_types_of(snap: "DeltaSnapshot") -> dict:
-    """Partition-column name -> Spark DataType from the snapshot's
+def _part_types_of(metadata: dict | None) -> dict:
+    """Column name -> Spark DataType from a metaData action's
     ``schemaString`` (partition literals are strings in the log and
     must be cast back to their declared types, like every Delta
     reader does)."""
-    schema_str = (snap.metadata or {}).get("schemaString")
+    schema_str = (metadata or {}).get("schemaString")
     if not schema_str:
         return {}
     try:
@@ -3418,266 +3425,138 @@ def _part_types_of(snap: "DeltaSnapshot") -> dict:
         return {}
 
 
-def _footer_schema(path: str):
-    """Spark read schema from one parquet footer, read driver-side via
-    pyarrow (microseconds; no Spark inference job). Returns None — the
-    caller falls back to Spark inference — for nanosecond timestamps
-    (the session's ``nanosAsLong`` legacy conf makes inference map
-    them to long; Arrow conversion would produce a timestamp type) or
-    any conversion hiccup."""
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
+@dataclass(frozen=True)
+class ChangeFile:
+    """One data file a commit contributes to its change feed."""
 
-        sch = pq.read_schema(path)
-        for f in sch:
-            if "timestamp[ns" in str(f.type):
-                return None
-        # prefer_timestamp_ntz matches Spark's own inference:
-        # isAdjustedToUTC files carry tz=UTC (-> TimestampType),
-        # NTZ files carry no tz (-> TimestampNTZType).
-        return from_arrow_schema(sch, prefer_timestamp_ntz=True)
-    except Exception:  # noqa: BLE001 — inference fallback
-        return None
+    path: str  # as the action names it (relative, or a file: URI)
+    partition_values: dict
+    size: int
+    kind: str  # "cdc" (carries its own _change_type), "insert" or "delete"
 
 
-def _load_with_partitions(
-    spark, table_dir: str, files_pv: list[tuple[str, dict]],
-    part_cols: list[str], part_types: dict,
+@dataclass(frozen=True)
+class CommitChanges:
+    """What one commit changed."""
+
+    version: int
+    files: list[ChangeFile]
+    #: the commit removes data files or deletes rows through a deletion
+    #: vector: it is not an append (the stream's skip_change_commits test)
+    rewrites: bool
+    #: the table's metaData in force at this version
+    metadata: dict
+
+
+def commit_changes(
+    log: "DeltaLog", start: int, end: int | None = None, feed: bool = True
 ):
-    """Read the given (rel path, partitionValues) files, injecting the
-    log's partition literals as typed columns (data files under a hive
-    layout do not store partition columns — the log does)."""
-    from pyspark.sql import functions as F
+    """Yield one :class:`CommitChanges` per version in ``[start, end]``
+    (``end`` defaults to the latest commit), reading each commit JSON
+    once, lazily, in version order.
 
-    gone = [
-        rel
-        for rel, _pv in files_pv
-        if not os.path.isfile(resolve_path(table_dir, rel))
-    ]
-    if gone:
-        # Retention/VACUUM dropped the data files this range's changes
-        # live in — same failure Delta reports when CDF is requested
-        # below the vacuum horizon.
+    The change-feed rule (Delta PROTOCOL.md "Add CDC File"): a commit
+    that carries ``cdc`` actions changes exactly its change files; a
+    commit without them changes its ``dataChange`` adds (inserts) and
+    its ``dataChange`` removes (deletes). OPTIMIZE/compaction commits
+    mark both sides ``dataChange: false`` and change nothing. A commit
+    that adds a deletion vector without ``cdc`` actions raises: its
+    churn re-adds whole files, and deriving inserts from it would
+    resurrect the deleted rows. With ``feed=False`` the files are the
+    commit's ``dataChange`` adds (what an append stream emits) and a
+    rewriting commit does not raise; its ``rewrites`` flag tells.
+
+    Cost: one listing of ``_delta_log`` and one snapshot (at ``start``,
+    for the metadata in force there); each later commit's ``metaData``
+    action advances the metadata, so no per-version snapshot is built."""
+    listed = log._commits()
+    if not listed:
+        raise DeltaProtocolError(f"no _delta_log at {log.table_dir}")
+    commits = dict(listed)
+    latest = listed[-1][0]
+    end = latest if end is None else int(end)
+    if end > latest:
         raise DeltaProtocolError(
-            f"change-feed data file(s) no longer on disk (GC'd/"
-            f"VACUUMed below the retention window): {sorted(gone)[:3]}"
+            f"end_version {end} beyond latest commit {latest}"
         )
-    groups: dict[tuple, list[str]] = {}
-    for rel, pv in files_pv:
-        key = tuple((pv or {}).get(c) for c in part_cols)
-        groups.setdefault(key, []).append(rel)
-    out = None
-    for key in sorted(groups, key=lambda k: tuple(str(x) for x in k)):
-        resolved = [resolve_path(table_dir, p) for p in groups[key]]
-        # Round-12 optimization (guide §1.2): Spark's schema inference
-        # runs one driver-side footer job PER read.parquet call — a
-        # change feed over N versions paid N+ of them. Read the first
-        # file's footer via pyarrow on the driver (no Spark job; same
-        # single-footer semantics as the inference it replaces) and
-        # force it as the read schema. Nanosecond timestamps fall back
-        # to inference (the session's nanosAsLong legacy conf maps
-        # them to long there; Arrow would disagree).
-        schema = _footer_schema(sorted(resolved)[0])
-        reader = spark.read.schema(schema) if schema else spark.read
-        df = reader.parquet(*resolved)
-        for c, v in zip(part_cols, key):
-            if v is not None and c not in df.columns:
-                df = df.withColumn(
-                    c, F.lit(v).cast(part_types.get(c, "string"))
+    metadata = None
+    for v in range(int(start), end + 1):
+        if v not in commits:
+            raise DeltaProtocolError(
+                f"commit {v} missing from the log of {log.table_dir} "
+                "(cleaned below the checkpoint?) — change feed "
+                "unavailable for it"
+            )
+        with open(commits[v], encoding="utf-8") as fh:
+            actions = [json.loads(ln) for ln in fh if ln.strip()]
+        if metadata is None:
+            metadata = log.snapshot(v, listed).metadata or {}
+        else:
+            metadata = next(
+                (a["metaData"] for a in actions if a.get("metaData")),
+                metadata,
+            )
+        adds = [
+            a["add"] for a in actions
+            if a.get("add") and a["add"].get("dataChange", True)
+        ]
+        removes = [
+            a["remove"] for a in actions
+            if a.get("remove") and a["remove"].get("dataChange", True)
+        ]
+        cdc = [a["cdc"] for a in actions if a.get("cdc")]
+        has_dv = any(a.get("deletionVector") for a in adds)
+        inserts = [
+            ChangeFile(
+                a["path"], a.get("partitionValues") or {},
+                int(a.get("size") or 0), "insert",
+            )
+            for a in adds
+        ]
+        if not feed:
+            files = inserts
+        elif cdc:
+            files = [
+                ChangeFile(
+                    c["path"], c.get("partitionValues") or {},
+                    int(c.get("size") or 0), "cdc",
                 )
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
-    return out
+                for c in cdc
+            ]
+        elif has_dv:
+            raise DeltaProtocolError(
+                f"commit {v} carries deletion vectors but no cdc "
+                "actions — its changes cannot be derived from "
+                "add/remove churn (write with cdf=True so DML stages "
+                "change files)"
+            )
+        else:
+            files = inserts + [
+                ChangeFile(
+                    r["path"],
+                    r.get("partitionValues") or _partition_values(r["path"]),
+                    int(r.get("size") or 0), "delete",
+                )
+                for r in removes
+            ]
+        yield CommitChanges(v, files, bool(removes) or has_dv, metadata)
 
 
-#: characters that never percent-encode in a file: URI — the fused CDF
-#: reader's file_path -> version map relies on exact string equality
-#: with Spark's `_metadata.file_path`, so any path outside this set
-#: falls back to the per-version reader.
-_URI_SAFE = frozenset(
-    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
-    "/._-="
-)
-
-
-def _table_changes_fused(spark, table_dir: str, specs):
-    """Cross-version CDF frame fusion (round-13, VERDICT r12 item 5,
-    guide §1.2): group change files ACROSS versions by (change kind,
-    footer schema, partition values) and read each group ONCE,
-    attaching ``_commit_version`` from a literal file-path -> version
-    map over ``_metadata.file_path`` — a feed over N versions builds
-    O(distinct groups) scan branches instead of
-    O(N x kinds x partitions), which also shrinks every downstream
-    action's plan.
-
-    Returns the fused DataFrame, or ``None`` (one count per reason
-    in the registry's ``cdf_fused`` namespace) when the feed is not provably equivalent
-    under fusion — different partition columns/types across versions,
-    mixed footer schemas within one version's (kind, partition)
-    group (the legacy reader forces the first file's footer there),
-    nanosecond timestamps (the pyarrow conversion declines), a
-    missing partition literal for a column the files don't carry, a
-    rel path repeated across versions within a kind (the version map
-    would collide), or non-URI-safe path characters (the map keys on
-    exact ``_metadata.file_path`` equality) — in which case the
-    caller runs the exact per-version loop, so output values, column
-    order and error behavior stay hash-identical by construction.
-    """
-    from pyspark.sql import functions as F
-
-    def _bail(reason):
-        cache.count("cdf_fused", reason)
-        return None
-
-    if not specs:
-        return _bail("no specs")
-    if not set(os.path.abspath(table_dir)) <= _URI_SAFE:
-        return _bail("unsafe table dir")
-    part_cols = specs[0][3]
-    part_types = specs[0][4]
-    pt_repr = {c: str(t) for c, t in part_types.items()}
-    for _v, _k, _fpv, pcs, pts in specs:
-        if list(pcs) != list(part_cols):
-            return _bail("part_cols differ")
-        if {c: str(t) for c, t in pts.items()} != pt_repr:
-            return _bail("part_types differ")
-
+def _footer_schema(path: str) -> tuple[str, object]:
+    """(fingerprint, Spark read schema) of one parquet footer, read on
+    the driver with pyarrow: no Spark inference job. Fields are made
+    nullable: REQUIRED vs OPTIONAL varies with the writing plan while
+    the layout is the same, and the nullable form reads both.
+    ``prefer_timestamp_ntz`` matches Spark's own inference: files
+    adjusted to UTC carry tz=UTC (TimestampType), NTZ files none."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    fp_schema: dict[tuple, object] = {}  # (kind, fp) -> Spark schema
-    seen_rels: dict[str, set] = {}
-    groups: dict[tuple, list[tuple[str, int]]] = {}
-    order: list[tuple] = []
-    expected: list[str] = []  # legacy output column order, simulated
-
-    def _extend(target, cols):
-        for c in cols:
-            if c not in target:
-                target.append(c)
-
-    for v, kind, files_pv, _pcs, _pts in specs:
-        per_pv: dict[tuple, list[tuple[str, str]]] = {}
-        pv_order: list[tuple] = []
-        for rel, pv in files_pv:
-            if not set(rel) <= _URI_SAFE:
-                return _bail("unsafe path")
-            if rel in seen_rels.setdefault(kind, set()):
-                return _bail("duplicate rel")
-            seen_rels[kind].add(rel)
-            p = resolve_path(table_dir, rel)
-            if not os.path.isfile(p):
-                raise DeltaProtocolError(
-                    f"change-feed data file(s) no longer on disk "
-                    f"(GC'd/VACUUMed below the retention window): "
-                    f"[{rel!r}]"
-                )
-            try:
-                # nullable-normalized fingerprint: REQUIRED vs
-                # OPTIONAL varies with the writing plan (a range()
-                # write emits not-null, a createDataFrame write
-                # nullable) while the data layout is identical; the
-                # forced read schema is the nullable form, which
-                # reads both correctly.
-                sch_obj = pa.schema(
-                    [
-                        fld.with_nullable(True)
-                        for fld in pq.read_schema(p).remove_metadata()
-                    ]
-                )
-                fp = str(sch_obj)
-            except Exception:  # noqa: BLE001 — unreadable: legacy path
-                return _bail("footer unreadable")
-            if (kind, fp) not in fp_schema:
-                if any(
-                    "timestamp[ns" in str(fld.type) for fld in sch_obj
-                ):
-                    return _bail("ns timestamps")
-                try:
-                    fp_schema[(kind, fp)] = from_arrow_schema(
-                        sch_obj, prefer_timestamp_ntz=True
-                    )
-                except Exception:  # noqa: BLE001 — legacy infers
-                    return _bail("arrow->spark conversion failed")
-            pv_key = tuple((pv or {}).get(c) for c in part_cols)
-            if pv_key not in per_pv:
-                pv_order.append(pv_key)
-            per_pv.setdefault(pv_key, []).append((rel, fp))
-        # walk this version's groups in the legacy reader's order and
-        # accumulate its frame's column order
-        frame_cols: list[str] = []
-        for pv_key in sorted(
-            per_pv, key=lambda k: tuple(str(x) for x in k)
-        ):
-            entries = per_pv[pv_key]
-            fps = {f for _r, f in entries}
-            if len(fps) > 1:
-                # the legacy reader forces the FIRST file's footer on
-                # every file of this group — fusing per-fp would read
-                # the others differently; not provably equivalent
-                return _bail("mixed schemas within one version group")
-            fp = fps.pop()
-            names = list(fp_schema[(kind, fp)].names)
-            for c, vv in zip(part_cols, pv_key):
-                if vv is None and c not in names:
-                    return _bail("missing partition literal")
-            _extend(
-                frame_cols,
-                names + [c for c in part_cols if c not in names],
-            )
-            gkey = (kind, fp, pv_key)
-            if gkey not in groups:
-                groups[gkey] = []
-                order.append(gkey)
-            groups[gkey].extend((rel, v) for rel, _f in entries)
-        if kind != "cdc" and CDC_TYPE_COL not in frame_cols:
-            frame_cols.append(CDC_TYPE_COL)
-        frame_cols.append(CDC_VERSION_COL)
-        _extend(expected, frame_cols)
-
-    # one SQL map literal per kind (file path -> commit version);
-    # paths are unique within a kind (guarded above)
-    kind_map_sql: dict[str, str] = {}
-    for kind in seen_rels:
-        entries = []
-        for gkey in order:
-            if gkey[0] != kind:
-                continue
-            for rel, v in groups[gkey]:
-                uri = "file:" + os.path.abspath(
-                    resolve_path(table_dir, rel)
-                )
-                entries.append(f"'{uri}', {int(v)}L")
-        kind_map_sql[kind] = (
-            "CAST(map(" + ", ".join(entries)
-            + ")[_metadata.file_path] AS BIGINT)"
-        )
-    out = None
-    for gkey in order:
-        kind, fp, pv_key = gkey
-        resolved = [
-            resolve_path(table_dir, rel) for rel, _v in groups[gkey]
-        ]
-        df = spark.read.schema(fp_schema[(kind, fp)]).parquet(*resolved)
-        ver_col = F.expr(kind_map_sql[kind])
-        for c, vv in zip(part_cols, pv_key):
-            if vv is not None and c not in df.columns:
-                df = df.withColumn(
-                    c, F.lit(vv).cast(part_types.get(c, "string"))
-                )
-        if kind != "cdc":
-            df = df.withColumn(CDC_TYPE_COL, F.lit(kind))
-        df = df.withColumn(CDC_VERSION_COL, ver_col)
-        out = df if out is None else out.unionByName(
-            df, allowMissingColumns=True
-        )
-    if out is not None and out.columns != expected:
-        out = out.select(*expected)
-    return out
+    sch = pa.schema(
+        [f.with_nullable(True) for f in pq.read_schema(path).remove_metadata()]
+    )
+    return str(sch), from_arrow_schema(sch, prefer_timestamp_ntz=True)
 
 
 def table_changes(
@@ -3693,138 +3572,108 @@ def table_changes(
     columns appended — the contract downstream incremental consumers
     (dbt models reading "what changed since my watermark") depend on.
 
-    Per Delta's spec, a commit that carries ``cdc`` actions is read
-    from those change files ALONE (the add/remove churn of a
-    copy-on-write rewrite re-adds every unchanged row and must be
-    ignored); a commit without ``cdc`` actions derives its changes
-    from the actions: ``add`` files with ``dataChange`` ⇒ their rows
-    are inserts, ``remove`` files with ``dataChange`` ⇒ their rows
-    are deletes (readable until VACUUM, exactly Delta's window).
-    OPTIMIZE/compaction commits mark ``dataChange: false`` on both
-    sides and contribute nothing — rearranging bytes is not a change.
+    Which files a commit changed is :func:`commit_changes`' rule: its
+    ``cdc`` files alone when it has any (a copy-on-write rewrite's
+    add/remove churn re-adds every unchanged row), else its
+    ``dataChange`` adds as inserts and removes as deletes (readable
+    until VACUUM, exactly Delta's window).
 
-    Scale: cost is O(rows actually changed) — the cdc files a DML
-    wrote, or the files an append added — never O(table). Requesting
-    a version below the checkpoint-cleaned tail raises
-    ``DeltaProtocolError`` (the commit JSON is gone), matching
-    Delta's behavior after log retention.
+    One grouped read: the files of every version are grouped by
+    (kind, footer schema, typed partition literals), each group is one
+    scan, and ``_commit_version`` comes from a file -> version map over
+    ``_metadata.file_path`` (keyed by :func:`file_uri`, the escaped
+    path Spark reports). A path named by several versions is read once
+    per version, each read in its own group. Groups are unioned by name
+    in version order (within a version: kind as listed, then partition
+    literals), so the columns come out as the first group's (the
+    files' columns, the partition columns they lack, ``_change_type``,
+    ``_commit_version``) followed by those later groups add.
+
+    Scale: one ``_delta_log`` listing, one snapshot and one footer per
+    change file; the scan is O(rows actually changed), never
+    O(table). A version below the checkpoint-cleaned tail, an end
+    beyond the latest commit, change files already VACUUMed or a range
+    without changes raise ``DeltaProtocolError``.
 
     Reference: the incremental models consume exactly this shape
     (``customers_latest.sql:3-6`` merge on the CDC stream;
     ``dbt_project.yml:39`` ``file_format: delta``)."""
     from pyspark.sql import functions as F
 
-    log = DeltaLog(table_dir)
-    latest = log.latest_version()
-    if latest is None:
-        raise DeltaProtocolError(f"no _delta_log at {table_dir}")
-    end = latest if end_version is None else int(end_version)
-    if end > latest:
-        raise DeltaProtocolError(
-            f"end_version {end} beyond latest commit {latest}"
-        )
-    commits = dict(log._commits())
-    # Gather per-version change specs first: (version, kind,
-    # [(rel path, partitionValues)], part_cols, part_types) with kind
-    # in {"cdc", "insert", "delete"} — the fused reader groups them
-    # across versions; the legacy loop below consumes the same specs.
-    specs = []
-    for v in range(int(start_version), end + 1):
-        if v not in commits:
-            raise DeltaProtocolError(
-                f"commit {v} missing from the log (cleaned below the "
-                "checkpoint?) — change feed unavailable for it"
-            )
-        with open(commits[v], encoding="utf-8") as fh:
-            actions = [json.loads(ln) for ln in fh if ln.strip()]
-        cdc = [a["cdc"] for a in actions if a.get("cdc")]
-        snap = log.snapshot(v)
-        part_cols = (snap.metadata or {}).get("partitionColumns") or []
-        part_types = _part_types_of(snap)
-        if cdc:
-            specs.append((
-                v, "cdc",
-                [(c["path"], c.get("partitionValues")) for c in cdc],
-                part_cols, part_types,
-            ))
-        else:
-            adds = [
-                a["add"]
-                for a in actions
-                if a.get("add") and a["add"].get("dataChange", True)
-            ]
-            if any(a.get("deletionVector") for a in adds):
-                # A MoR DV commit without cdc actions re-adds whole
-                # files with dataChange=true; deriving changes from
-                # the adds would IGNORE the deletion vector and emit
-                # tombstoned rows as inserts — replaying the feed
-                # would resurrect deleted rows (ADVICE r9). The
-                # streaming reader (delta_stream.py has_dv) already
-                # refuses this; mirror it here, matching Delta, which
-                # requires delta.enableChangeDataFeed for DML commits
-                # to be CDF-readable.
+    changes = list(
+        commit_changes(DeltaLog(table_dir), start_version, end_version)
+    )
+    schemas: dict[str, object] = {}  # footer fingerprint -> read schema
+    groups: dict[tuple, list[tuple[str, int]]] = {}
+    reads: dict[tuple[str, str], int] = {}  # (kind, file) -> reads so far
+    for c in changes:
+        part_cols = c.metadata.get("partitionColumns") or []
+        types = _part_types_of(c.metadata)
+        by_kind: dict[str, dict[tuple, list[str]]] = {}
+        for f in c.files:
+            p = resolve_path(table_dir, f.path)
+            if not os.path.isfile(p):
+                # Retention/VACUUM dropped the files this range's
+                # changes live in — the failure Delta reports when CDF
+                # is requested below the vacuum horizon.
                 raise DeltaProtocolError(
-                    f"commit {v} carries deletion vectors but no cdc "
-                    "actions — its changes cannot be derived from "
-                    "add/remove churn (write with cdf=True so DML "
-                    "stages change files)"
+                    f"change-feed data file {f.path!r} no longer on disk "
+                    "(GC'd/VACUUMed below the retention window)"
                 )
-            removes = [
-                a["remove"]
-                for a in actions
-                if a.get("remove") and a["remove"].get("dataChange", True)
-            ]
-            if adds:
-                specs.append((
-                    v, "insert",
-                    [(a["path"], a.get("partitionValues")) for a in adds],
-                    part_cols, part_types,
-                ))
-            if removes:
-                specs.append((
-                    v, "delete",
-                    [
-                        (r["path"], r.get("partitionValues") or
-                         _partition_values(r["path"]))
-                        for r in removes
-                    ],
-                    part_cols, part_types,
-                ))
-    out = _table_changes_fused(spark, table_dir, specs)
-    if out is None:
-        # legacy per-version loop — the correctness reference the
-        # fused reader must match, and the fallback whenever the feed
-        # is not provably homogeneous
-        for v, kind, files_pv, part_cols, part_types in specs:
-            df = _load_with_partitions(
-                spark, table_dir, files_pv, part_cols, part_types
+            fp, schema = _footer_schema(p)
+            schemas.setdefault(fp, schema)
+            pv = tuple(
+                (col, f.partition_values.get(col),
+                 types[col].simpleString() if col in types else "string")
+                for col in part_cols
             )
-            if df is None:
-                continue
-            if kind != "cdc":
-                df = df.withColumn(CDC_TYPE_COL, F.lit(kind))
-            df = df.withColumn(
-                CDC_VERSION_COL, F.lit(v).cast("long")
-            )
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-    if out is None:
+            by_kind.setdefault(f.kind, {}).setdefault((pv, fp), []).append(p)
+        for kind, subs in by_kind.items():
+            for pv, fp in sorted(
+                subs, key=lambda k: (tuple(str(x[1]) for x in k[0]), k[1])
+            ):
+                for p in subs[(pv, fp)]:
+                    n = reads.get((kind, p), 0)
+                    reads[(kind, p)] = n + 1
+                    groups.setdefault((kind, fp, pv, n), []).append(
+                        (p, c.version)
+                    )
+    if not groups:
+        end = changes[-1].version if changes else end_version
         raise DeltaProtocolError(
             f"no changes in versions [{start_version}, {end}]"
+        )
+    out = None
+    for (kind, fp, pv, _n), files in groups.items():
+        df = spark.read.schema(schemas[fp]).parquet(*(p for p, _v in files))
+        for col, val, typ in pv:
+            if val is not None and col not in df.columns:
+                df = df.withColumn(col, F.lit(val).cast(typ))
+        if kind != "cdc":
+            df = df.withColumn(CDC_TYPE_COL, F.lit(kind))
+        version_of = ", ".join(
+            "'" + file_uri(p).replace("'", "\\'") + f"', {v}L"
+            for p, v in files
+        )
+        df = df.withColumn(
+            CDC_VERSION_COL,
+            F.expr(f"CAST(map({version_of})[_metadata.file_path] AS BIGINT)"),
+        )
+        out = df if out is None else out.unionByName(
+            df, allowMissingColumns=True
         )
     # CDF × column mapping: data and cdc files carry PHYSICAL column
     # names (stable across renames); the feed is served under the END
     # version's LOGICAL names, so a rename mid-feed changes how every
     # batch — pre- and post-rename — is exposed, exactly like a
-    # Delta reader resolving the latest schema (ADVICE/verdict r9
-    # item 3). Metadata-only commits (the rename itself) contribute
-    # no rows.
-    m = log.snapshot(end).column_mapping()
-    if m:
-        for logical, phys in m.items():
-            if phys != logical and phys in out.columns:
-                out = out.withColumnRenamed(phys, logical)
+    # Delta reader resolving the latest schema. Metadata-only commits
+    # (the rename itself) contribute no rows.
+    mapping = DeltaSnapshot(
+        version=changes[-1].version, metadata=changes[-1].metadata
+    ).column_mapping()
+    for logical, phys in mapping.items():
+        if phys != logical and phys in out.columns:
+            out = out.withColumnRenamed(phys, logical)
     return out
 
 
@@ -4226,7 +4075,7 @@ def read_row_ids(spark, table_dir: str, version: int | None = None):
     )
     pos_df = dv_positions_df(spark, table_dir, snap.dv_positions(table_dir))
     part_cols = (snap.metadata or {}).get("partitionColumns") or []
-    part_types = _part_types_of(snap)
+    part_types = _part_types_of(snap.metadata)
     # Round-12 optimization (guide §1.2): mergeSchema footer-scans
     # every file in a distributed job per partition group, only to
     # discover whether rewritten files carry the materialized id

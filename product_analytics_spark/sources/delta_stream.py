@@ -7,9 +7,20 @@ Delta streaming-source contract, implemented over the pure-Python log
 Semantics (delta.io streaming source):
 
 * **offset = log version.** ``{"version": v}`` means "versions below
-  v are consumed". ``latestOffset`` lists the log (one directory
-  listing — O(tail), no data I/O); each micro-batch covers the
-  commit range ``[start, end)``.
+  v are consumed"; each micro-batch covers the commit range
+  ``[start, end)``.
+* **one lister, two listings per trigger.** What a commit changed
+  comes from ``delta_log.commit_changes``, the lister the batch
+  ``table_changes`` reads through. ``latestOffset`` lists
+  ``_delta_log`` once: plainly for the latest version, or, when
+  rate-limited, through the lister, which also reads each pending
+  commit's JSON until the budget is spent. ``partitions`` calls the
+  lister over its range: one listing, one snapshot (its metadata) and
+  one JSON read per commit; a snapshot built cold, without a
+  ``_last_checkpoint`` pointer, adds one listing for checkpoint
+  discovery. A trigger therefore lists the log twice (three times
+  cold) whatever the number of pending commits. The reader takes one
+  snapshot when it is built: the schema it serves.
 * **one InputPartition per added file.** Partition PLANNING happens
   on the driver from the commit JSON alone (paths + partitionValues
   + schema snippets travel in the partition value); row READING
@@ -31,15 +42,14 @@ Semantics (delta.io streaming source):
 Reference: the incremental models chain Delta tables into downstream
 models (dbt_project.yml:39 ``file_format: delta``); on Databricks the
 chain runs as a streaming read of exactly this shape. At 100 TB the
-log tail IS the change queue: per trigger the source lists a handful
-of JSON files and schedules O(files added since the watermark) tasks
-— never a table scan.
+log tail IS the change queue: per trigger the source reads the
+pending commits' JSON files and schedules O(files added since the
+watermark) tasks — never a table scan.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -135,6 +145,11 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         #: call; that first batch is admitted uncapped, like Delta's
         #: best-effort contract).
         self._pos: int | None = None
+        #: rows are served under the schema the source declared when
+        #: the query started, as Delta's streaming source does
+        self._schema, self._part_cols, self._mapping = _snapshot_schema(
+            self.table_dir
+        )
 
     # ---------------------------------------------------- offsets
 
@@ -142,102 +157,64 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         self._pos = self.start_version
         return {"version": self.start_version}
 
-    def _commit_cost(self, version: int) -> tuple[int, int]:
-        """(data files, data bytes) the READ PATH would actually load
-        for this commit under the current mode — admission must price
-        what ``partitions`` serves, or byte budgets mis-admit:
-
-        * cdf mode, commit WITH ``cdc`` actions: the change files
-          ALONE (the reader ignores the add/remove churn of a COW
-          rewrite — pricing those adds would make a tiny logical
-          change look like the whole rewritten table);
-        * cdf mode, commit WITHOUT ``cdc``: dataChange adds (inserts)
-          PLUS dataChange removes (delete rows are read from the
-          removed files; a remove without ``size`` prices 0 bytes but
-          still counts against the file cap);
-        * append mode: dataChange adds; a change commit that
-          ``skip_change_commits`` will drop entirely costs ZERO
-          (burning budget on files never read would split batches
-          around skipped commits).
-
-        One O(commit-size) JSON read."""
-        actions = self._commit_actions(version)
-        adds = [
-            a["add"] for a in actions
-            if a.get("add") and a["add"].get("dataChange", True)
-        ]
-        if self.read_cdf:
-            cdc = [a["cdc"] for a in actions if a.get("cdc")]
-            if cdc:
-                files = cdc
-            else:
-                files = adds + [
-                    a["remove"] for a in actions
-                    if a.get("remove")
-                    and a["remove"].get("dataChange", True)
-                ]
-        else:
-            is_change = any(
-                a.get("remove") and a["remove"].get("dataChange", True)
-                for a in actions
-            ) or any(a.get("deletionVector") for a in adds)
-            if is_change and self.skip_change:
-                return 0, 0
-            files = adds
-        return (
-            len(files),
-            sum(int(f.get("size") or 0) for f in files),
-        )
+    def _commit_cost(self, change) -> tuple[int, int]:
+        """(data files, data bytes) ``partitions`` would load for one
+        :class:`~product_analytics_spark.sources.delta_log.CommitChanges`
+        under the current mode, so byte budgets price what is served:
+        in cdf mode the commit's change files (its cdc files alone
+        when it has any — pricing a COW rewrite's adds would make a
+        tiny logical change look like the whole rewritten table — else
+        its dataChange adds and removes; a remove without ``size``
+        prices 0 bytes but counts against the file cap); in append
+        mode its dataChange adds, and ZERO for a change commit that
+        ``skip_change_commits`` drops (burning budget on files never
+        read would split batches around skipped commits)."""
+        if change.rewrites and self.skip_change and not self.read_cdf:
+            return 0, 0
+        return len(change.files), sum(f.size for f in change.files)
 
     def latestOffset(self):
         from product_analytics_spark.sources import delta_log as dl
 
-        latest = dl.DeltaLog(self.table_dir).latest_version()
-        nxt = self.start_version if latest is None else latest + 1
-        end = max(nxt, self.start_version)
-        if (self.max_files > 0 or self.max_bytes > 0) and (
-            self._pos is not None
-        ):
-            admitted = self._pos
-            fbudget = self.max_files if self.max_files > 0 else None
-            bbudget = self.max_bytes if self.max_bytes > 0 else None
-            while admitted < end:
-                try:
-                    nf, nb = self._commit_cost(admitted)
-                except Exception:  # noqa: BLE001 — cleaned tail etc.
-                    break
-                over = (
-                    (fbudget is not None and nf > fbudget)
-                    or (bbudget is not None and nb > bbudget)
-                )
-                if over and admitted > self._pos:
-                    break  # cap reached (always admit >= 1 commit)
-                if fbudget is not None:
-                    fbudget -= nf
-                if bbudget is not None:
-                    bbudget -= nb
-                admitted += 1
-                if (fbudget is not None and fbudget <= 0) or (
-                    bbudget is not None and bbudget <= 0
-                ):
-                    break
-            end = max(admitted, self._pos)
-        return {"version": end}
+        log = dl.DeltaLog(self.table_dir)
+        if (self.max_files <= 0 and self.max_bytes <= 0) or self._pos is None:
+            latest = log.latest_version()
+            nxt = self.start_version if latest is None else latest + 1
+            return {"version": max(nxt, self.start_version)}
+        admitted = self._pos
+        fbudget = self.max_files if self.max_files > 0 else None
+        bbudget = self.max_bytes if self.max_bytes > 0 else None
+        for change in dl.commit_changes(log, self._pos, feed=self.read_cdf):
+            nf, nb = self._commit_cost(change)
+            over = (
+                (fbudget is not None and nf > fbudget)
+                or (bbudget is not None and nb > bbudget)
+            )
+            if over and admitted > self._pos:
+                break  # cap reached (always admit >= 1 commit)
+            if fbudget is not None:
+                fbudget -= nf
+            if bbudget is not None:
+                bbudget -= nb
+            admitted += 1
+            if (fbudget is not None and fbudget <= 0) or (
+                bbudget is not None and bbudget <= 0
+            ):
+                break
+        return {"version": admitted}
 
     # -------------------------------------------------- planning
 
-    def _commit_actions(self, version: int) -> list[dict]:
-        from product_analytics_spark.sources import delta_log as dl
-
-        log = dl.DeltaLog(self.table_dir)
-        commits = dict(log._commits())
-        if version not in commits:
-            raise dl.DeltaProtocolError(
-                f"streaming source: commit {version} missing from "
-                f"{self.table_dir} (cleaned below the checkpoint?)"
+    def _fields(self, pv: dict) -> list:
+        return [
+            (
+                f["name"],
+                str(f["type"]),
+                pv.get(f["name"]) if f["name"] in self._part_cols else None,
+                self._mapping.get(f["name"], f["name"]),  # physical name
             )
-        with open(commits[version], encoding="utf-8") as fh:
-            return [json.loads(ln) for ln in fh if ln.strip()]
+            for f in self._schema["fields"]
+        ]
 
     def partitions(self, start, end):
         from product_analytics_spark.sources import delta_log as dl
@@ -246,99 +223,33 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         # learn/advance the rate-limit reference point (a restarted
         # reader first hears its true position here)
         self._pos = max(self._pos, e) if self._pos is not None else e
-        if e <= s:
-            return [_AddFilePartition("", [], empty=True)]
-        schema, part_cols, mapping = _snapshot_schema(self.table_dir)
-
-        def _fields(pv: dict) -> list:
-            return [
-                (
-                    f["name"],
-                    str(f["type"]),
-                    pv.get(f["name"]) if f["name"] in part_cols else None,
-                    mapping.get(f["name"], f["name"]),  # physical name
-                )
-                for f in schema["fields"]
-            ]
-
         out: list[_AddFilePartition] = []
-        for v in range(s, e):
-            actions = self._commit_actions(v)
-            adds = [
-                a["add"]
-                for a in actions
-                if a.get("add") and a["add"].get("dataChange", True)
-            ]
-            cdc = [a["cdc"] for a in actions if a.get("cdc")]
-            removes = [
-                a["remove"]
-                for a in actions
-                if a.get("remove") and a["remove"].get("dataChange", True)
-            ]
-            has_dv = any(a.get("deletionVector") for a in adds)
-            if self.read_cdf:
-                # Delta readChangeFeed: serve the commit's CHANGES.
-                # cdc files carry their own _change_type; commits
-                # without cdc derive insert/delete from dataChange
-                # adds/removes (table_changes' exact rule).
-                if cdc:
-                    for c in cdc:
-                        out.append(
-                            _AddFilePartition(
-                                dl.resolve_path(self.table_dir, c["path"]),
-                                _fields(c.get("partitionValues") or {}),
-                                version=v,
-                                cdf=True,
-                                change_type=None,
-                            )
-                        )
-                    continue
-                if has_dv:
+        if e > s:
+            changes = dl.commit_changes(
+                dl.DeltaLog(self.table_dir), s, e - 1, feed=self.read_cdf
+            )
+            for change in changes:
+                if change.rewrites and not self.read_cdf:
+                    if self.skip_change:
+                        continue  # skipChangeCommits: drop the whole commit
                     raise dl.DeltaProtocolError(
-                        f"commit {v} carries deletion vectors but no "
-                        "cdc files — enable cdf on the writer to "
-                        "stream its changes"
+                        f"commit {change.version} is not an append (COW "
+                        "rewrite / DV DML / RESTORE); set "
+                        "skip_change_commits=true or start above it"
                     )
-                for a in adds:
-                    out.append(
-                        _AddFilePartition(
-                            dl.resolve_path(self.table_dir, a["path"]),
-                            _fields(a.get("partitionValues") or {}),
-                            version=v,
-                            cdf=True,
-                            change_type="insert",
-                        )
-                    )
-                for r in removes:
-                    pv = r.get("partitionValues") or dl._partition_values(
-                        r["path"]
-                    )
-                    out.append(
-                        _AddFilePartition(
-                            dl.resolve_path(self.table_dir, r["path"]),
-                            _fields(pv),
-                            version=v,
-                            cdf=True,
-                            change_type="delete",
-                        )
-                    )
-                continue
-            is_change = bool(removes) or has_dv
-            if is_change:
-                if self.skip_change:
-                    continue  # skipChangeCommits: drop the whole commit
-                raise dl.DeltaProtocolError(
-                    f"commit {v} is not an append (COW rewrite / DV "
-                    "DML / RESTORE); set skip_change_commits=true or "
-                    "start above it"
-                )
-            for a in adds:
-                out.append(
+                out.extend(
                     _AddFilePartition(
-                        dl.resolve_path(self.table_dir, a["path"]),
-                        _fields(a.get("partitionValues") or {}),
-                        version=v,
+                        dl.resolve_path(self.table_dir, f.path),
+                        self._fields(f.partition_values),
+                        version=change.version,
+                        cdf=self.read_cdf,
+                        # cdc files carry their own _change_type
+                        change_type=(
+                            f.kind if self.read_cdf and f.kind != "cdc"
+                            else None
+                        ),
                     )
+                    for f in change.files
                 )
         return out or [_AddFilePartition("", [], empty=True)]
 

@@ -3328,17 +3328,25 @@ class SnapshotStore:
             return
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.sql import SparkSession
         from pyspark.util import inheritable_thread_target
 
         # inheritable_thread_target (ADVICE r12, same fix as the async
         # cdc/validation threads): pool threads running Spark actions
         # must inherit the submitter's JVM-thread locals (job group /
         # scheduler pool) and release their pinned py4j connection per
-        # task instead of parking a JVM thread until pool GC.
+        # task instead of parking a JVM thread until pool GC. Given the
+        # session, the wrapper also carries the session's job tags.
+        session = SparkSession.getActiveSession()
+        wrap = (
+            inheritable_thread_target(session)
+            if session is not None
+            else inheritable_thread_target
+        )
         with ThreadPoolExecutor(
             max_workers=min(max_workers, len(thunks))
         ) as tp:
-            futs = [tp.submit(inheritable_thread_target(t)) for t in thunks]
+            futs = [tp.submit(wrap(t)) for t in thunks]
             for f in futs:
                 f.result()
 

@@ -82,9 +82,12 @@ def test_function_surface_coverage_floor():
     tables reject them, and writing them in a SELECT is a type error).
     New Spark versions may add functions, so the guard is on the
     absolute used-count."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    )
     from surface_audit import audit
 
     out = audit()

@@ -228,6 +228,28 @@ class TestCompaction:
         after_rows = sorted(tuple(r) for r in store.read("tp").collect())
         assert after_rows == before_rows
 
+    def test_partitioned_compact_inherits_session_tags(self, spark, tmp_path):
+        """The per-partition-dir rewrites run on a bounded pool; each
+        thunk is wrapped with the session, so PySpark carries the
+        session's job tags into it instead of warning that they are
+        lost."""
+        import warnings
+
+        from product_analytics_spark.sources.sinks import SnapshotStore
+
+        store = SnapshotStore(spark, str(tmp_path / "wht"), retain_versions=2)
+        base = spark.range(0, 60).selectExpr(
+            "id AS k", "CAST(id % 3 AS STRING) AS part", "id * 1.5 AS v"
+        )
+        store.overwrite("tp", base, partition_by=["part"])
+        store.append("tp", base, partition_by=["part"])
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            stats = store.compact("tp", target_bytes=1 << 30)
+        assert stats["groups"] == 3
+        lost = [w for w in caught if "inherit" in str(w.message).lower()]
+        assert not lost, [str(w.message) for w in lost]
+
 
 class TestCopyOnWriteDML:
     """Delta-style COW DELETE/UPDATE: only files containing a matching

@@ -16,9 +16,10 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = os.path.join("/root/repo", "plans", "r13")
+OUT = os.path.join(ROOT, "plans", "r13")
 
 
 def main() -> None:

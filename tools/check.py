@@ -28,10 +28,12 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import pandas as pd
@@ -81,9 +83,11 @@ def main() -> int:
     only = set(argv[1:])
     results: dict[str, dict] = {}
 
-    import __spark_entry__ as entry_mod
     from product_analytics_spark import cache
     from product_analytics_spark.session import get_spark
+
+    # after the package: __spark_entry__ puts its own path first
+    import __spark_entry__ as entry_mod
 
     spark = get_spark("check")
     con = duckdb.connect()

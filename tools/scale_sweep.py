@@ -56,7 +56,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np
 import pyarrow as pa
@@ -65,11 +66,11 @@ import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
 TARGETS = {  # name -> (replica factor, data dir, results file)
-    "sf1": (10, "/root/repo/.scale_data/sf1", "/root/repo/.scale_sweep.json"),
+    "sf1": (10, os.path.join(ROOT, ".scale_data/sf1"), os.path.join(ROOT, ".scale_sweep.json")),
     "sf3": (
         30,
-        "/root/repo/.scale_data/sf3",
-        "/root/repo/.scale_sweep_sf3.json",
+        os.path.join(ROOT, ".scale_data/sf3"),
+        os.path.join(ROOT, ".scale_sweep_sf3.json"),
     ),
 }
 # sf1 defaults preserved for the existing entry points
@@ -245,9 +246,11 @@ def _resolve_keys(queries: dict, shorts: list[str] | None = None) -> list[str]:
 
 
 def run(target: str = "sf1", shorts: list[str] | None = None) -> None:
-    import __spark_entry__ as entry_mod
     from product_analytics_spark import cache
     from product_analytics_spark.session import get_spark
+
+    # after the package: __spark_entry__ puts its own path first
+    import __spark_entry__ as entry_mod
 
     _factor, dst, results_path = TARGETS[target]
     spark = get_spark("scale_sweep")
@@ -292,19 +295,21 @@ def scaling(target: str = "sf1", shorts: list[str] | None = None) -> None:
     """Compute-scaling arm (round-13, VERDICT r12 item 7): time the
     SCALING_KEYS at ``target`` scale through the noop sink on
     local[$SPARK_GRAFT_CPUS], min-of-2, and merge the result into
-    /root/repo/SCALING_r13.json under ``c<cpus>``. Run twice —
+    SCALING_r13.json at the repo root under ``c<cpus>``. Run twice —
     SPARK_GRAFT_CPUS=32 then =8 (sequential processes, never
     concurrent) — and the second run records per-key c8/c32 ratios:
     ratios ≈2-4 mean the key genuinely parallelizes and a future
     plan-quality regression WILL show up here, unlike in the
     floor-bound sf0.1 totals."""
-    import __spark_entry__ as entry_mod
     from product_analytics_spark import cache
     from product_analytics_spark.session import get_spark
 
+    # after the package: __spark_entry__ puts its own path first
+    import __spark_entry__ as entry_mod
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     _factor, dst, _ = TARGETS[target]
-    out_path = "/root/repo/SCALING_r13.json"
+    out_path = os.path.join(ROOT, "SCALING_r13.json")
     spark = get_spark("scale_scaling")
     queries = entry_mod.queries()
     keys = _resolve_keys(queries, shorts or SCALING_KEYS)
@@ -482,7 +487,7 @@ def report() -> None:
         "  and clustering declarations are single metadata commits;",
         "  the rename path rewrites zero files by construction.",
     ]
-    with open("/root/repo/SCALE_SWEEP.md", "w", encoding="utf-8") as fh:
+    with open(os.path.join(ROOT, "SCALE_SWEEP.md"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote SCALE_SWEEP.md")
 
