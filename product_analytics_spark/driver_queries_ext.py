@@ -587,8 +587,9 @@ def q111_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store.merge("cust", batch, key="c_custkey")
 
-    v1 = store.read("cust", version=0)
-    v2 = store.read("cust", version=-1)
+    vs = store.versions("cust")
+    v1 = store.read("cust", version=vs[0])
+    v2 = store.read("cust", version=vs[-1])
     assert v1 is not None and v2 is not None
     tagged = v1.withColumn("version", F.lit("v1")).unionByName(
         v2.withColumn("version", F.lit("v2"))

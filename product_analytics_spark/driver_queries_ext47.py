@@ -69,9 +69,10 @@ def q306_snapshot_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.overwrite("churn_tbl", v2)
 
     out = []
+    vs = store.versions("churn_tbl")
     for step in (1, 2):
-        prev = store.read("churn_tbl", version=step - 1)
-        cur = store.read("churn_tbl", version=step)
+        prev = store.read("churn_tbl", version=vs[step - 1])
+        cur = store.read("churn_tbl", version=vs[step])
         j = cur.alias("c").join(
             prev.alias("p"),
             F.col("c.o_custkey") == F.col("p.o_custkey"),

@@ -230,11 +230,8 @@ def q324_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch 8, guide §1.2 — was three separate counts).
     before_df = store.read("orders_y")
 
-    data_dir = store.current_data_dir("orders_y")
     total = sum(
-        os.path.getsize(os.path.join(data_dir, f))
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+        int(a["size"]) for a in store.delta_snapshot("orders_y").files.values()
     )
     target = total // 3 + 1  # aim for ~3 output files
     plan = store.plan_compaction("orders_y", target_bytes=target)
@@ -244,7 +241,7 @@ def q324_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.read("orders_y").agg(
             F.count(F.lit(1)).alias("__rows_after")
         ),
-        store.read("orders_y", version=0).agg(
+        store.read("orders_y", version=store.versions("orders_y")[0]).agg(
             F.count(F.lit(1)).alias("__prior_rows")
         ),
     ).collect()[0]

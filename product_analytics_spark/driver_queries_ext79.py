@@ -223,7 +223,7 @@ def q394_advised_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     In-row certificates the oracle asserts:
       * n_type_dirs — the snapshot physically holds one hive dir per
         event type (== count distinct event_type, from the store's
-        real manifest, the same walker plan_compaction bin-packs);
+        log snapshot, the same manifest plan_compaction bin-packs);
       * partition_pruned — the read-back plan carries the filter as a
         PartitionFilter on the scan (directory pruning: the purchase
         report lists ONE of the five dirs, reading ~1/5 of the bytes);
@@ -250,7 +250,7 @@ def q394_advised_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = bool(
         re.search(r"PartitionFilters: \[[^\]]*purchase[^\]]*\]", plan)
     )
-    n_type_dirs = len(store._partition_dirs(store.current_data_dir(name)))
+    n_type_dirs = len(store._partitions(store.delta_snapshot(name)))
     return daily.select(
         "day",
         F.col("n_events").cast("bigint").alias("n_events"),

@@ -27,15 +27,15 @@ def q410_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     … WHERE`` semantics on the SnapshotStore): events snapshotted with
     event_type hive partitions (q394's advised layout), then every
     third user's clicks are deleted. The kernel rewrites ONLY files
-    containing a matching row — the four non-click partition dirs
-    survive as HARDLINKS (zero data movement; the in-row cert counts
-    them) — and commits atomically through the log's putIfAbsent; the
+    containing a matching row — the four non-click partitions' files
+    keep their adds (zero data movement, nothing logged; the in-row
+    cert counts them) — and commits atomically through the log's putIfAbsent; the
     pre-delete version
     stays time-travelable (rows_before re-read from it).
 
     Compared values: per-type survivor counts + cents sums (the DuckDB
     oracle applies the same anti-predicate), rows deleted, and the
-    file-granularity certs (links >= untouched dirs, rewrites confined
+    file-granularity certs (kept >= untouched dirs, rewrites confined
     to the click partition).
 
     Scale: touched-file discovery is ONE filtered scan projecting
@@ -54,11 +54,11 @@ def q410_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         _money_cents("value").alias("cents"),
     )
     store.overwrite("ev", ev, partition_by=["event_type"])
-    n_dirs = len(store._partition_dirs(store.current_data_dir("ev")))
+    n_dirs = len(store._partitions(store.delta_snapshot("ev")))
 
     stats = store.delete_where("ev", "event_type = 'click' AND user_id % 3 = 0")
 
-    prior_rows = store.read("ev", version=0).count()
+    prior_rows = store.read("ev", version=store.versions("ev")[0]).count()
     per_type = (
         store.read("ev")
         .groupBy("event_type")
@@ -74,10 +74,10 @@ def q410_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(stats["rows_before"] - stats["rows_after"])
         .cast("bigint")
         .alias("n_deleted"),
-        F.lit(stats["files_linked"] >= n_dirs - 1).alias("untouched_dirs_linked"),
+        F.lit(stats["files_kept"] >= n_dirs - 1).alias("untouched_dirs_linked"),
         F.lit(
             stats["files_rewritten"]
-            <= stats["files_total"] - stats["files_linked"]
+            <= stats["files_total"] - stats["files_kept"]
         ).alias("rewrite_confined"),
         F.lit(prior_rows == stats["rows_before"]).alias("time_travel_ok"),
     ).orderBy("event_type")
@@ -116,10 +116,10 @@ def q411_cow_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-range predicate (top decile) gets a surcharge applied to its
     cents. Because files are range-clustered, parquet min/max stats
     confine the touched-file set to the tail file(s) — the cert pins
-    files_rewritten <= 2 of 8, everything else hardlinked. Type
+    files_rewritten <= 2 of 8, every other file kept. Type
     preservation is part of the contract: the assignment result is
     cast back to the column's original type, or the rewritten file's
-    schema would drift from the linked files' (caught by a test the
+    schema would drift from the kept files' (caught by a test the
     hard way). The pre-update version remains time-travelable; its
     total must equal the original sum.
 
@@ -145,7 +145,7 @@ def q411_cow_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE fused probe action (round-12 batch 8, guide §1.2 — was two
     # separate sum() collects of the v0 snapshot and the base).
     pr = combine_single_rows(
-        store.read("ord", version=0).agg(
+        store.read("ord", version=store.versions("ord")[0]).agg(
             F.sum("cents").alias("__prior_sum")
         ),
         o.agg(F.sum("cents").alias("__orig_sum")),
@@ -168,7 +168,7 @@ def q411_cow_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rows_preserved"
         ),
         F.lit(stats["files_rewritten"] <= 2).alias("range_pruned_rewrite"),
-        F.lit(stats["files_linked"] >= 6).alias("untouched_linked"),
+        F.lit(stats["files_kept"] >= 6).alias("untouched_linked"),
         F.lit(prior_sum == orig_sum).alias("time_travel_ok"),
         F.lit(cut).cast("bigint").alias("cut_key"),
     ).orderBy("o_orderstatus")

@@ -32,6 +32,17 @@ from product_analytics_spark.qcommon import (
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+
+def _live_files(store, name: str) -> list[str]:
+    """The live data files of store table ``name``: its log snapshot's
+    adds, as absolute paths in path order."""
+    from product_analytics_spark.sources import delta_log as dl
+
+    return [
+        dl.resolve_path(store.path(name), rel)
+        for rel in sorted(store.delta_snapshot(name).files)
+    ]
+
 # ------------------------------------------------------------- q413
 
 Q413_WH = os.path.join(_REPO, ".fixtures", ".q413_warehouse")
@@ -438,7 +449,6 @@ def q416_zorder_write_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max normalization is one metadata aggregate per write. At
     100 TB the equal-width bucketization swaps for sampled range ids
     (equal-depth) if keys skew — interleave unchanged."""
-    import glob as _glob
 
     import pyarrow.parquet as _pq
 
@@ -461,9 +471,7 @@ def q416_zorder_write_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = o.agg(F.max("o_custkey")).collect()[0][0] // 16  # bottom 1/16
 
     def skip_fraction(table: str) -> float:
-        files = sorted(
-            _glob.glob(os.path.join(store.current_data_dir(table), "*.parquet"))
-        )
+        files = _live_files(store, table)
         skipped = 0
         for f in files:
             md = _pq.ParquetFile(f).metadata
@@ -544,7 +552,6 @@ def q417_optimize_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle of the rewritten bytes on the cluster key. The
     _LAYOUT record is what lets the job run table-blind — exactly why
     Delta keeps clustering columns in table metadata."""
-    import glob as _glob
 
     import pyarrow.parquet as _pq
 
@@ -565,11 +572,7 @@ def q417_optimize_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = max_c // 16
 
     def skip_fraction() -> float:
-        files = sorted(
-            _glob.glob(
-                os.path.join(store.current_data_dir("ord"), "*.parquet")
-            )
-        )
+        files = _live_files(store, "ord")
         skipped = 0
         for f in files:
             md = _pq.ParquetFile(f).metadata
@@ -587,12 +590,7 @@ def q417_optimize_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra = o.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(max_k))
     store.append("ord", extra.repartition(16))
     f_degraded = skip_fraction()
-    total_bytes = sum(
-        os.path.getsize(f)
-        for f in _glob.glob(
-            os.path.join(store.current_data_dir("ord"), "*.parquet")
-        )
-    )
+    total_bytes = sum(os.path.getsize(f) for f in _live_files(store, "ord"))
     # target ~16 output files: file-level stats need multiple files to
     # have anything to skip (the default 128 MB target would coalesce
     # this gate-SF table to one file, where skipping is undefined)
@@ -775,7 +773,6 @@ def q419_advised_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the advisor's filter-column histogram is exactly the input
     Delta users eyeball before OPTIMIZE ZORDER BY; wiring it to the
     write path makes the layout a derived artifact of the workload."""
-    import glob as _glob
 
     import pyarrow.parquet as _pq
 
@@ -810,11 +807,7 @@ def q419_advised_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut_d = lo_d + (hi_d - lo_d) / 16
 
     def skip_fraction(col, overlap_fn) -> float:
-        files = sorted(
-            _glob.glob(
-                os.path.join(store.current_data_dir("ord"), "*.parquet")
-            )
-        )
+        files = _live_files(store, "ord")
         skipped = 0
         for f in files:
             md = _pq.ParquetFile(f).metadata

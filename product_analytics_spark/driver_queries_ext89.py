@@ -57,7 +57,7 @@ def q421_delta_log_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A delta-enabled SnapshotStore runs the full write lifecycle —
     overwrite (protocol+metaData+adds), MERGE (remove+add), COW DELETE
-    (hardlinked files keep their add stats, touched files re-add),
+    (untouched files keep their adds, touched files re-add),
     OPTIMIZE (recluster rewrite) — then BOTH engines parse the
     resulting ``_delta_log`` JSON independently: Spark through the
     engine's DeltaLog reader (checkpoint-aware replay), DuckDB through

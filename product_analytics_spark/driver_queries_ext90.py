@@ -701,10 +701,13 @@ def q428_delta_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q428_WH, ignore_errors=True)
-    # retain_versions=2 keeps the superseded version dir on disk, so
-    # VACUUM has real tombstoned files to delete — exactly the v9 live
-    # set (v10's COW rewrite re-adds every path under its own dir),
-    # which the oracle recomputes as the checkpoint's file count.
+    # retain_versions=2 keeps v9's files on disk, so VACUUM has real
+    # tombstoned files to delete — exactly the v9 live set (v10's COW
+    # rewrite touches every live file: each delete's key class spans
+    # the whole key range), which the oracle recomputes as the
+    # checkpoint's file count. Every delete matches rows at every
+    # scale factor, so each one is a commit (a DML that changes
+    # nothing commits nothing).
     store = SnapshotStore(spark, Q428_WH, retain_versions=2, delta_log=True)
     base = (
         _t(spark, sf_dir, "customer")
@@ -716,7 +719,7 @@ def q428_delta_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store.overwrite("t", base, cluster_by=("k",), n_files=2)  # v0
     for i in range(1, 11):  # v1..v10 (checkpoint at v9)
-        store.delete_where("t", f"k % 97 = {i}")
+        store.delete_where("t", f"(k div 3) % 11 = {i}")
 
     log = DeltaLog(store.path("t"))
     before = log.snapshot()
@@ -786,7 +789,7 @@ src AS (
   FROM (
     SELECT c_custkey AS k FROM customer WHERE c_custkey % 3 = 0
   )
-  WHERE NOT (k % 97 BETWEEN 1 AND 10)
+  WHERE NOT ((k // 3) % 11 BETWEEN 1 AND 10)
 )
 SELECT (SELECT CAST(hv AS BIGINT) FROM head) AS head_version,
        live_files, live_rows, table_rows,
@@ -984,7 +987,7 @@ def q430_mor_delete_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE via deletion vectors, end to end
     (sinks.delete_where_mor) — the q290 MoR-vs-CoW cost model's MoR
     half IMPLEMENTED: two successive deletes rewrite ZERO data files
-    (every file hardlinked; tombstoned (file, row_index) positions
+    (every file keeps its path; tombstoned (file, row_index) positions
     land in the log's deletion vectors and readers apply them as a
     broadcast anti-join on ``_metadata.row_index``), then OPTIMIZE
     materializes the outstanding DV (purges it, rewrites clustered)
@@ -1093,8 +1096,8 @@ def q431_mor_update_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read UPDATE via deletion vectors
     (sinks.update_where_mor — Delta's DV UPDATE shape): matching live
     rows are tombstoned into the DV and their UPDATED versions written
-    as NEW files into the same hive-partitioned version — every
-    pre-existing file hardlinked, write amplification O(matched rows)
+    as NEW files of the same hive-partitioned version — every
+    pre-existing file keeps its add, write amplification O(matched rows)
     instead of O(touched files). A second MoR update composes on the
     first (re-reads through the DV), then a COW delete must
     materialize both layers before rewriting (no resurrection), after

@@ -50,7 +50,7 @@ def q432_mor_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets wrong:
 
     * COMPOSITION — merge 2 matches rows REPLACED by merge 1 (their
-      live positions are in merge 1's new files, not the hardlinked
+      live positions are in merge 1's new files, not the kept
       originals), so the DV must tombstone positions in files the
       previous MoR op itself wrote;
     * PARTITION MOVE — merge 2 re-homes previously-inserted rows into

@@ -2,7 +2,7 @@
 consumer-facing protocol features.
 
 * q434 — Change Data Feed (cdc actions + ``table_changes``)
-* q435 — RESTORE as a hardlink-only new commit
+* q435 — RESTORE as a new commit that re-adds the target's files
 * q436 — SHALLOW CLONE via absolute-URI adds
 * q437 — streaming from the log tail (``delta_tail`` source)
 * q438 — CHECK constraints enforced across the DML surface
@@ -251,14 +251,13 @@ def q435_restore_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
       restored table matches the store's own read, and the log's
       latest version counts the restore as one more commit
       (``log_latest``);
-    * the restore moved ZERO data bytes — every file of the target
-      version was HARDLINKED into the new version
-      (``files_linked`` > 0 and ``files_rewritten`` = 0 by
-      construction; the column carries the link count).
+    * the restore moved ZERO data bytes — the commit re-adds the
+      target version's files by path (``files_kept`` > 0, the
+      target's file count; ``files_rewritten`` = 0 by construction).
 
-    Scale: restoring a 100 TB table is O(|files|) metadata ops —
-    the "roll back yesterday's bad deploy" operation costs hardlinks
-    and one log commit, not a rewrite. Reference: Delta's RESTORE
+    Scale: restoring a 100 TB table is O(|files|) log actions —
+    the "roll back yesterday's bad deploy" operation costs one log
+    commit, not a rewrite. Reference: Delta's RESTORE
     semantics on the reference's ``file_format: delta`` tables
     (dbt_project.yml:39) — the operational escape hatch every
     incremental warehouse needs."""
@@ -309,7 +308,9 @@ def q435_restore_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__log_bad",
         ),
         pre_restore_df.agg(F.count(F.lit(1)).alias("__pre_n")),
-        store.read("acct", -2).agg(F.count(F.lit(1)).alias("__hist_n")),
+        store.read("acct", store.versions("acct")[-2]).agg(
+            F.count(F.lit(1)).alias("__hist_n")
+        ),
     ).collect()[0]
     restore_equals_target = pr["__restore_bad"] is None
     history_preserved = int(pr["__hist_n"]) == int(pr["__pre_n"])
@@ -329,7 +330,7 @@ def q435_restore_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(bool(history_preserved)).alias("history_preserved"),
             F.lit(bool(log_consistent)).alias("log_consistent"),
             F.lit(int(log_latest)).cast("long").alias("log_latest"),
-            F.lit(int(r["files_linked"]) > 0).alias("zero_copy_restore"),
+            F.lit(int(r["files_kept"]) > 0).alias("zero_copy_restore"),
         )
         .orderBy("seg")
     )

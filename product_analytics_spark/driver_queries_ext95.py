@@ -129,7 +129,7 @@ def q459_append_only_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        {"cents": "cents + 1"}),
         lambda: store.merge_mor("audit", batch, "k"),
         lambda: store.overwrite("audit", base.limit(5)),
-        lambda: store.restore("audit", 0),
+        lambda: store.restore("audit", store.versions("audit")[0]),
     )
     for op in attempts:
         try:
@@ -1291,9 +1291,11 @@ def q476_round12_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrote parquet into the current data dir BEFORE the log commit,
     so a coordinator-refused append left orphaned files the next
     writer's disk-minus-log reconcile silently ADOPTED — committing
-    rows a writer was just told it could not commit. The append
-    path now fail-fasts on the coordinator declaration before any
-    byte lands (``_assert_coordinator_routed``).
+    rows a writer was just told it could not commit. An append now
+    stages its files in its own ``v_`` dir and commits them through
+    the store's one transaction, whose commit names only those
+    files: a coordinator-refused commit removes the staging dir, and
+    no later commit adopts a file its writer did not name.
 
     Scale: this is the production stack — a catalog-owned,
     append-only, generated-partitioned fact table with declared
@@ -1637,7 +1639,7 @@ def q474_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     * **autoCompact** — ``minNumFiles = 4``: three 1-file-per-
       partition appends take each partition to 4 files, which
       triggers INLINE partition-scoped compaction (through q472's
-      ``optimize(where=...)`` — cold partitions ride by hardlink)
+      ``optimize(where=...)`` — cold partitions keep their adds)
       with NO explicit maintenance call. Pinned:
       ``auto_compacted`` (counts drop below the threshold),
       ``rearrange_only`` (every compaction add carries
@@ -1671,13 +1673,9 @@ def q474_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _per_part_counts(name: str) -> dict[str, int]:
         out: dict[str, int] = {}
-        data = store.current_data_dir(name)
-        for root, _dirs, files in os.walk(data):
-            n = sum(1 for f in files if f.endswith(".parquet"))
-            if n:
-                out[os.path.relpath(root, data)] = (
-                    out.get(os.path.relpath(root, data), 0) + n
-                )
+        for rel in store.delta_snapshot(name).files:
+            part = os.path.dirname(rel.split("/", 1)[1]) or "."
+            out[part] = out.get(part, 0) + 1
         return out
 
     # ---- arm 1: optimizeWrite vs control, identical 6-task appends
@@ -1797,9 +1795,9 @@ def q472_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``OPTIMIZE t WHERE part = v``): q417 certified the full-table
     recluster; at 100 TB nobody compacts the table — maintenance
     targets the hot day's partition. ``store.optimize(where=...)``
-    rewrites ONLY the matching hive partition dirs; every other
-    partition is carried into the new version by HARDLINK — zero
-    bytes moved, byte-identical files, same inodes.
+    rewrites ONLY the matching hive partitions; every other
+    partition's files keep their adds — zero bytes moved, nothing
+    logged, the same files.
 
     Lifecycle: ``customer`` partitioned by ``seg``
     (5 partitions), clustered by ``k``, fragmented by 1 overwrite +
@@ -1810,18 +1808,18 @@ def q472_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     * ``target_compacted`` — the BUILDING partition collapses to
       fewer files than before (one, at this target size);
-    * ``untouched_zero_copy`` — every OTHER partition's file set
-      after the optimize has exactly the same INODES as before (the
-      files were hardlinked, not rewritten — the filesystem proof
-      that zero bytes moved);
+    * ``untouched_zero_copy`` — every OTHER partition's live file set
+      after the optimize is exactly the same (path, inode) pairs as
+      before: the commit kept their adds and no file was rewritten,
+      copied or linked — the filesystem proof that zero bytes moved;
     * ``read_intact`` — the full table reads back with every row
       (the output aggregation IS that read).
 
     Scale: partition-scoped maintenance is what makes OPTIMIZE
     schedulable at all — cost is one shuffle of the HOT partition's
-    bytes; the cold 99.9% of the table costs one metadata op per
-    file. The hardlink carry is the single-filesystem analog of
-    Delta's skip-untouched-partitions rule.
+    bytes; the cold 99.9% of the table costs nothing: its adds stay
+    in the log as they are (Delta's skip-untouched-partitions
+    rule).
 
     Reference: dbt_project.yml:46 partition hooks + ZORDER
     post-hooks — the reference's tables are exactly this
@@ -1848,22 +1846,24 @@ def q472_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             partition_by=("seg",),
         )
 
-    def _inodes(data: str) -> dict[str, frozenset]:
+    def _inodes() -> dict[str, frozenset]:
+        """hive partition -> (path, inode) of its live files."""
+        from product_analytics_spark.sources import delta_log as dl
+
         out: dict[str, set] = {}
-        for root, _dirs, files in os.walk(data):
-            for f in files:
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(root, data)
-                    out.setdefault(rel, set()).add(
-                        os.stat(os.path.join(root, f)).st_ino
-                    )
+        tdir = store.path("t")
+        for rel in store.delta_snapshot("t").files:
+            p = dl.resolve_path(tdir, rel)
+            out.setdefault(os.path.basename(os.path.dirname(p)), set()).add(
+                (rel, os.stat(p).st_ino)
+            )
         return {r: frozenset(s) for r, s in out.items()}
 
-    before = _inodes(store.current_data_dir("t"))
+    before = _inodes()
     n_before_target = len(before.get("seg=BUILDING", ()))
     res = store.optimize("t", target_bytes=1 << 30,
                          where={"seg": "BUILDING"})
-    after = _inodes(store.current_data_dir("t"))
+    after = _inodes()
 
     target_compacted = (
         res.get("reclustered") is True

@@ -2633,16 +2633,16 @@ class DeltaLog:
             int(now_ms if now_ms is not None else _time.time() * 1000)
             - log_retention_ms
         )
-        first_retained = None
+        oldest_kept = None
         for v, _path in self._commits():
             if v >= cutoff:
                 break
             ict = self._prev_ict(v + 1)  # commit v's own timestamp
             if ict is not None and ict > horizon:
-                first_retained = v
+                oldest_kept = v
                 break
-        if first_retained is not None and first_retained < cutoff:
-            at_or_below = [v for v, _k, _p in cps if v <= first_retained]
+        if oldest_kept is not None and oldest_kept < cutoff:
+            at_or_below = [v for v, _k, _p in cps if v <= oldest_kept]
             if not at_or_below:
                 # no checkpoint at or below the first retained commit:
                 # its reconstruction needs the tail from version 0 —
@@ -3153,20 +3153,21 @@ def _dv_tag(df):
     )
 
 
-def _dv_anti_join(tagged, pos_df):
+def _dv_anti_join(tagged, pos_df, keep_tags: bool = False):
     """One broadcast anti-join of ``_dv_tag``-tagged rows against a
-    ``dv_positions_df`` relation; drops the tag columns. The partitioned
-    ``read_delta`` tags each branch and joins once above the union, so
-    the positions are broadcast once per read, not once per branch."""
+    ``dv_positions_df`` relation; drops the tag columns unless
+    ``keep_tags``. The partitioned readers tag each branch and join
+    once above the union, so the positions are broadcast once per
+    read, not once per branch."""
     from pyspark.sql import functions as F
 
-    cols = [c for c in tagged.columns if c not in ("__dv_f", "__dv_ri")]
-    return tagged.join(
+    out = tagged.join(
         F.broadcast(pos_df),
         (F.col("__dv_f") == pos_df["path"])
         & (F.col("__dv_ri") == pos_df["row_index"]),
         "left_anti",
-    ).select(*cols)
+    )
+    return out if keep_tags else out.drop("__dv_f", "__dv_ri")
 
 
 def apply_dv_filter(df, pos_df):
@@ -3210,7 +3211,14 @@ def read_delta(spark, table_dir: str, version: int | None = None):
     part_cols = (snap.metadata or {}).get("partitionColumns") or []
     paths = sorted(snap.files)
     if not paths:
-        raise DeltaProtocolError(f"empty table at {table_dir}")
+        # a version with no file (every row deleted): empty, typed
+        # from the logged schema
+        from pyspark.sql.types import StructType
+
+        schema = (snap.metadata or {}).get("schemaString")
+        if not schema:
+            raise DeltaProtocolError(f"empty table at {table_dir}")
+        return spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
     pos_df = dv_positions_df(spark, table_dir, snap.dv_positions(table_dir))
     conf = (snap.metadata or {}).get("configuration") or {}
     widened = conf.get("delta.enableTypeWidening") == "true"
@@ -4037,6 +4045,28 @@ def enable_row_tracking(table_dir: str) -> int:
     return log.commit(actions, version=version, operation="UPGRADE")
 
 
+def row_id_base_df(spark, table_dir: str, snap):
+    """The broadcastable (``__rt_p`` = ``_metadata.file_path``,
+    ``__rt_base`` = baseRowId, ``__rt_cv`` = defaultRowCommitVersion)
+    map of snapshot ``snap``'s live files — the O(|files|) side of the
+    virtual row-id computation ``baseRowId + row_index``."""
+    rows = []
+    for rel in sorted(snap.files):
+        add = snap.files[rel]
+        if add.get("baseRowId") is None:
+            raise DeltaProtocolError(
+                f"live file {rel!r} has no baseRowId (written by a "
+                "non-row-tracking writer after enablement?)"
+            )
+        rows.append(
+            (file_uri(resolve_path(table_dir, rel)), int(add["baseRowId"]),
+             int(add.get("defaultRowCommitVersion") or 0))
+        )
+    return _positions_df(
+        spark, rows, "__rt_p string, __rt_base bigint, __rt_cv bigint"
+    )
+
+
 def read_row_ids(spark, table_dir: str, version: int | None = None):
     """Read a row-tracked table WITH its stable row identity: the
     logical columns plus ``_row_id`` and ``_row_commit_version``.
@@ -4057,22 +4087,7 @@ def read_row_ids(spark, table_dir: str, version: int | None = None):
             f"row tracking not enabled on {table_dir} — call "
             "enable_row_tracking first"
         )
-    base_rows = []
-    for rel in sorted(snap.files):
-        add = snap.files[rel]
-        if add.get("baseRowId") is None:
-            raise DeltaProtocolError(
-                f"live file {rel!r} has no baseRowId (written by a "
-                "non-row-tracking writer after enablement?)"
-            )
-        base_rows.append(
-            (file_uri(resolve_path(table_dir, rel)), int(add["baseRowId"]),
-             int(add.get("defaultRowCommitVersion") or 0))
-        )
-    base_df = _positions_df(
-        spark, base_rows,
-        "__rt_p string, __rt_base bigint, __rt_cv bigint",
-    )
+    base_df = row_id_base_df(spark, table_dir, snap)
     pos_df = dv_positions_df(spark, table_dir, snap.dv_positions(table_dir))
     part_cols = (snap.metadata or {}).get("partitionColumns") or []
     part_types = _part_types_of(snap.metadata)

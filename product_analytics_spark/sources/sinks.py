@@ -11,23 +11,24 @@ Reference mapping (SURVEY.md §2.1):
   S8 schema evolution    on_schema_change='sync_all_columns'
 
 Commit protocol: the table's Delta log (``<table>/_delta_log/``,
-sources/delta_log.py) is its one commit record. Every writer writes a
-fresh immutable version directory ``<table>/v_<uuid>/`` and then
-commits one log entry whose adds name that directory's files and whose
-removes name the previous version's; the log's putIfAbsent of the
-next entry is the commit point. A crash at ANY point before it leaves
-the log on the prior version; after it, readers see the new one. The
-committed version, the retained version list, time travel and GC are
-all derived from the log. Superseded versions are garbage-collected on
-the next successful commit.
+sources/delta_log.py) is its one commit record, and a table version is
+a log version. Every writer stages the files it creates in a fresh
+``<table>/v_<uuid>/`` and commits one log entry naming only what
+changed: adds for the staged files, removes for the live files it
+replaced, and for a merge-on-read DML a remove and an add of the same
+path carrying the file's new deletion vector. An untouched file keeps
+its add, so one version's files may sit in several ``v_`` dirs. The
+log's putIfAbsent of the next entry is the commit point: a crash
+before it leaves the log on the prior version. Reads, the retained
+version list, time travel, the conflict check and GC all take the log
+version and its snapshot.
 
 Every writer runs through one optimistic transaction,
-``SnapshotStore._transact``: snapshot read, version-dir allocation,
+``SnapshotStore._transact``: snapshot read, staging-dir allocation,
 settling the overlapped cdc/validation jobs, the commit, telling a
 conflict from a failure, cleanup and retry live there once. Inside
-the commit lock the order is: OCC check, log commit, the retained
-list for GC — so a refused log commit leaves the table exactly as it
-was.
+the commit lock the order is: OCC check, log commit — so a refused
+log commit leaves the table exactly as it was.
 
 The ZORDER analog is repartitionByRange + sortWithinPartitions: same
 data-skipping effect (clustered min/max ranges per file) from OSS
@@ -63,30 +64,43 @@ UNCHECKED = object()
 #: ``_transact``'s default expectation: read ``current_version`` at
 #: the start of every attempt.
 _READ = object()
+#: ``_Attempt.removes`` for a full replace: the commit removes every
+#: file live when it lands.
+_REPLACE_ALL = object()
+#: the ``_metadata.file_path`` / ``row_index`` columns ``dl._dv_tag``
+#: adds to a scan
+_DV_TAGS = ("__dv_f", "__dv_ri")
 
 
 def _logged_schema(meta: dict):
-    """The Spark schema a log metaData action records for its files,
-    without the field metadata the log adds (``delta.*`` keys:
-    generation expressions, invariants, identity specs), which the
-    files' own footers never carry. None — read the footers instead —
-    where the log does not describe the files' physical columns:
+    """The Spark schema a log metaData action records for its files
+    (``_table_schema``). None — read the footers instead — where the
+    log does not describe the files' physical columns:
 
     * row-tracked tables: rewritten files carry the materialized
       row-id columns;
     * column-mapping tables: the files carry physical names;
     * type-widening tables: the files carry mixed physical widths."""
+    conf = meta.get("configuration") or {}
+    if (
+        conf.get("delta.columnMapping.mode") in ("name", "id")
+        or conf.get("delta.enableTypeWidening") == "true"
+        or conf.get("delta.enableRowTracking") == "true"
+    ):
+        return None
+    return _table_schema(meta)
+
+
+def _table_schema(meta: dict):
+    """The logical Spark schema of a log metaData action, without the
+    field metadata the log adds (``delta.*`` keys: generation
+    expressions, invariants, identity specs, column mapping), which
+    the files' own footers never carry. None without a schemaString."""
     import json
 
     from pyspark.sql.types import StructType
 
-    conf = meta.get("configuration") or {}
-    if (
-        not meta.get("schemaString")
-        or conf.get("delta.columnMapping.mode") in ("name", "id")
-        or conf.get("delta.enableTypeWidening") == "true"
-        or conf.get("delta.enableRowTracking") == "true"
-    ):
+    if not meta.get("schemaString"):
         return None
 
     def strip(t):
@@ -110,6 +124,67 @@ def _logged_schema(meta: dict):
     return StructType.fromJson(strip(json.loads(meta["schemaString"])))
 
 
+def _base_dir(table: str, rel: str, add: dict) -> str:
+    """The directory a live file's hive path starts from — its ``v_``
+    staging dir, the table root, or (an absolute-URI add of a shallow
+    clone) the source's: the file's dir above its partition segments."""
+    from product_analytics_spark.sources import delta_log as dl
+
+    d = os.path.dirname(dl.resolve_path(table, rel))
+    for _ in add.get("partitionValues") or ():
+        d = os.path.dirname(d)
+    return d
+
+
+#: the hive directory value of a null partition value
+_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _wider_part_type(a, b):
+    """The one type Spark's partition inference gives a column whose
+    values it types ``a`` and ``b`` (``findWiderTypeForPartitionColumn``):
+    integral numbers widen to long or decimal, with a double to double,
+    a date with a timestamp to the timestamp; anything else (a decimal
+    with a double included) is a string."""
+    from pyspark.sql import types as T
+
+    if a == b:
+        return a
+    num = (T.IntegerType, T.LongType, T.DecimalType, T.DoubleType)
+    if isinstance(a, num) and isinstance(b, num):
+        dec = [t for t in (a, b) if isinstance(t, T.DecimalType)]
+        if T.DoubleType() in (a, b):
+            return T.StringType() if dec else T.DoubleType()
+        if dec:
+            digits = max(
+                t.precision if t in dec else 10 if t == T.IntegerType() else 20
+                for t in (a, b)
+            )
+            return T.DecimalType(min(38, digits), 0)
+        return T.LongType()
+    times = (T.DateType, T.TimestampType, T.TimestampNTZType)
+    if isinstance(a, times) and isinstance(b, times):
+        return b if isinstance(a, T.DateType) else a
+    return T.StringType()
+
+
+def _typed(spark: SparkSession, reader, schema):
+    """``reader.schema(schema)`` in two py4j calls: PySpark's own first
+    resolves the active session, four calls more on every store read."""
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    reader._jreader = reader._jreader.schema(jschema)
+    return reader
+
+
+def _renamed(df: DataFrame, names: dict) -> DataFrame:
+    """``df`` with each column ``c`` renamed to ``names.get(c, c)``."""
+    if not names or all(names.get(c, c) == c for c in df.columns):
+        return df
+    return df.select(
+        *[F.col(f"`{c}`").alias(names.get(c, c)) for c in df.columns]
+    )
+
+
 def _nullable(t):
     """``t`` with every field, array element and map value nullable —
     the schema a parquet read reports for files written from ``t``."""
@@ -124,30 +199,6 @@ def _nullable(t):
     if isinstance(t, MapType):
         return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
     return t
-
-
-def _dir_signature(d: str) -> tuple:
-    """Content signature of a store directory's data files: sorted
-    (relative path, size, mtime_ns) per parquet file, skipping
-    hidden/metadata entries — cheap driver metadata (~1 ms for
-    cert-sized dirs), no Spark involvement."""
-    sig = []
-    for root, dirs, files in os.walk(d):
-        dirs[:] = sorted(
-            x for x in dirs if not x.startswith((".", "_"))
-        )
-        for f in sorted(files):
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            p = os.path.join(root, f)
-            try:
-                st = os.stat(p)
-            except OSError:
-                continue
-            sig.append(
-                (os.path.relpath(p, d), st.st_size, st.st_mtime_ns)
-            )
-    return tuple(sig)
 
 
 def _submit_inheritable(fn, *args):
@@ -194,15 +245,19 @@ class ConstraintViolationError(RuntimeError):
 
 
 class _Attempt:
-    """One attempt of :meth:`SnapshotStore._transact`: the snapshot
-    version it presents at commit, the version dir it writes, and the
-    work the loop settles on every exit."""
+    """One attempt of :meth:`SnapshotStore._transact`: the log snapshot
+    it reads, the version it presents at commit, the staging dir it
+    writes, the actions it asks the commit for and the work the loop
+    settles on every exit."""
 
-    def __init__(self, table: str, expected):
+    def __init__(self, table: str, expected=UNCHECKED, snap=None):
         self.table = table
         self.expected = expected
-        #: the version dir the attempt commits; a writer that lets
-        #: ``_write_version`` allocate stores that name here instead
+        #: the log snapshot the attempt plans against (None before the
+        #: first commit)
+        self.snap = snap
+        #: the staging dir whose files the commit adds; a writer that
+        #: lets ``_write_version`` allocate stores that name here
         self.version: str | None = f"v_{uuid.uuid4().hex[:12]}"
         #: overlapped cdc stage (``_stage_cdc_async``): adopted by the
         #: commit, discarded on every other exit
@@ -217,13 +272,18 @@ class _Attempt:
         #: metaData of a new table whose empty first write left no file
         self.written: DataFrame | None = None
         #: a MoR DML's newly deleted row indexes by scanned file
-        #: (``_metadata.file_path``): the commit adds them to the
-        #: deletion vector of the add that hardlinks that file
+        #: (``_metadata.file_path``): the commit re-adds each such file
+        #: with its old positions ∪ these in a new deletion vector
         self.deleted: dict[str, list[int]] = {}
-        #: a log snapshot whose adds the commit reuses, ahead of the
-        #: live snapshot's, for the files it hardlinks (``restore``'s
-        #: target version, with its deletion vectors)
+        #: live paths the commit removes, or ``_REPLACE_ALL``
+        self.removes = ()
+        #: add actions the commit re-adds unchanged (``restore``'s)
+        self.adds: list[dict] = []
+        #: ``restore``'s target snapshot: its metaData comes back too
         self.source = None
+        #: set once the log commit landed; then the live files after it
+        self.committed = False
+        self.live: dict[str, dict] = {}
 
     @property
     def vdir(self) -> str:
@@ -254,35 +314,26 @@ class SnapshotStore:
         cdf: bool = False,
         commit_owner=None,
     ):
-        """``retain_versions`` — how many committed versions to keep on
-        disk (≥1). With >1, superseded versions stay readable via
-        ``read(name, version=...)`` — Delta time travel within the
-        window; GC drops versions that fall off the retention window
-        at the next commit (VACUUM analog).
+        """``retain_versions`` — how many data versions (log versions
+        whose commit adds or removes files) stay readable (≥1) through
+        ``read(name, version=...)``, Delta time travel within the
+        window; each commit deletes the files only versions that fell
+        off the window reference (VACUUM analog).
 
         Every commit is one protocol-conformant Delta Lake
-        ``_delta_log/`` entry (sources/delta_log.py), written inside
-        the commit's locked section: JSON commits with protocol/
-        metaData/add/remove actions and per-file ``stats``
-        (numRecords + min/max/nullCount collected once from the
-        parquet footer at write time). Readers — including scan
-        planning via ``scan_files``/``read_pruned`` and any
-        independent protocol parser — plan from the log with ZERO
-        parquet footer opens. Files a COW rewrite hardlinks into the
-        new version reuse their previous add action's stats (same
-        inode, same content — no footer re-read). History older than
-        the retention window references GC'd files, exactly like
-        Delta history after VACUUM. ``delta_log`` is accepted for
-        older callers; ``False`` raises, since the log is the store's
-        only commit record.
+        ``_delta_log/`` entry (sources/delta_log.py) with per-file
+        ``stats`` collected from the footer at write time, so readers
+        and scan planning (``scan_files``/``read_pruned``) open no
+        parquet footer. A commit names only the files it changes: an
+        untouched file keeps its add and stats. ``delta_log`` is
+        accepted for older callers; ``False`` raises, since the log is
+        the store's only commit record.
 
         ``cdf=True`` enables the Change Data Feed: every DML path
-        (merge / delete / update, COW and MoR alike) writes its
-        row-level changes to ``_change_data/cdc-*.parquet`` and
-        references them with ``cdc`` actions in the same commit, per
-        Delta's ``delta.enableChangeDataFeed`` contract;
-        ``delta_log.table_changes`` reads them back with
-        ``_change_type``/``_commit_version`` columns."""
+        (COW and MoR) writes its row-level changes to
+        ``_change_data/cdc-*.parquet`` and references them with ``cdc``
+        actions in the same commit (``delta.enableChangeDataFeed``);
+        ``delta_log.table_changes`` reads them back."""
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.retain_versions = max(1, retain_versions)
@@ -341,9 +392,7 @@ class SnapshotStore:
         ALTER TABLE); nothing to do before the table's first commit."""
         if self.exists(name):
             with self._commit_lock(name):
-                self._delta_commit(
-                    name, self.current_data_dir(name), operation=operation
-                )
+                self._delta_commit(name, operation=operation)
 
     # ---------------------------------------------- layout metadata
 
@@ -403,11 +452,9 @@ class SnapshotStore:
           enforce or refuse.
 
         RESTORE is exempt: a restored version was validated under
-        the constraints in force when it committed.
-
-        Scale: enforcement is one codegen'd predicate fused into the
-        write's existing scan — no extra shuffle; the validating
-        ALTER scan is the one unavoidable full pass, same as Delta."""
+        the constraints in force when it committed. Enforcement is one
+        predicate fused into the write's scan; the validating ALTER
+        scan is the one full pass, same as Delta."""
         df = self.read(name)
         if df is None:
             raise ValueError(f"unknown table {name!r}")
@@ -881,176 +928,117 @@ class SnapshotStore:
         )
         return existing.unionByName(fresh.select(*existing.columns))
 
-    @staticmethod
-    def _version_of(rel: str) -> str | None:
-        """The version dir a table-relative log path sits in (None for
-        a file at the table root or in a root hive dir — a table whose
-        first write was an ``append``)."""
-        head = rel.split("/", 1)[0]
-        return head if head.startswith("v_") and "=" not in head else None
-
-    def versions(self, name: str) -> list[str]:
-        """Committed version dirs still on disk, oldest→newest: the
-        dirs the log's data commits name, back to the first one GC
-        dropped (the retention window)."""
-        return [v for v, _lv in self._retained(self.path(name))]
-
-    def _retained(self, table: str) -> list[tuple[str, int]]:
-        """(version dir, log version of the newest commit naming it)
-        for ``versions()``, oldest→newest. Carried forward per table
-        through ``cache.py``'s ``retained`` namespace: each call opens
-        only the commits after the last one it saw (one per commit),
-        not every commit back to the first GC'd dir. The carried list
-        is rebuilt when the last seen commit file changed (a table
-        recreated at the same path)."""
-        import json
-
+    def versions(self, name: str) -> list[int]:
+        """The retained versions, oldest→newest: the log versions of
+        the last ``retain_versions`` data commits (commits that add or
+        remove files; a metaData-only commit changes no rows). Each is
+        a valid ``read(name, version=...)`` / ``restore`` target."""
         from product_analytics_spark.sources import delta_log as dl
 
-        commits = dl.DeltaLog(table)._commits()
+        return self._window(dl.DeltaLog(self.path(name))._commits())[0]
 
-        def ident(path: str):
-            st = os.stat(path)
-            return st.st_ino, st.st_mtime_ns, st.st_size
+    def _window(self, commits, head=None):
+        """(retained data versions oldest→newest, the remove actions of
+        each one's commit), reading the commits of ``commits`` (a
+        ``DeltaLog._commits`` listing) newest first until
+        ``retain_versions`` data commits are found. ``head`` is the
+        (version, actions) of a commit the caller holds: not re-read."""
+        import json
 
-        def step(prior):
-            if not commits:
-                return (None, None, ())
-            head_v, head_p = commits[-1]
-            seen, seen_id, runs = prior or (None, None, ())
-            try:
-                if seen is None or ident(dict(commits)[seen]) != seen_id:
-                    seen, runs = None, ()
-            except (KeyError, OSError):
-                seen, runs = None, ()
-            runs = list(runs)
-            for lv, path in commits:
-                if seen is not None and lv <= seen:
-                    continue
+        kept: list[int] = []
+        removes: dict[int, list[dict]] = {}
+        for v, path in reversed(commits):
+            if head is not None and v == head[0]:
+                actions = head[1]
+            else:
                 with open(path, encoding="utf-8") as fh:
-                    adds = (
-                        a["add"]["path"]
-                        for a in map(json.loads, filter(str.strip, fh))
-                        if a.get("add")
-                    )
-                    v = self._version_of(next(adds, ""))
-                if v is None:
-                    continue  # metadata-only, append, or root-dir commit
-                if runs and runs[-1][0] == v:
-                    runs[-1] = (v, lv)
-                else:
-                    runs.append((v, lv))
-            # the window: newest dirs back to the first one GC dropped
-            # (or whose commits log cleanup already removed)
-            first = commits[0][0]
-            for i in range(len(runs) - 1, -1, -1):
-                v, lv = runs[i]
-                if lv < first or not os.path.isdir(os.path.join(table, v)):
-                    runs = runs[i + 1 :]
-                    break
-            out = (head_v, ident(head_p), tuple(runs))
-            return prior if out == prior else out
+                    actions = [json.loads(ln) for ln in fh if ln.strip()]
+            if not any(a.get("add") or a.get("remove") for a in actions):
+                continue
+            kept.append(v)
+            removes[v] = [a["remove"] for a in actions if a.get("remove")]
+            if len(kept) == self.retain_versions:
+                break
+        return kept[::-1], removes
 
-        return list(
-            cache.carry("retained", os.path.abspath(table), step)[2]
-        )
-
-    def current_data_dir(self, name: str) -> str | None:
-        """Directory of the committed version, from the log's current
-        snapshot; None before the first commit. Every committed
-        version's live files sit under one ``v_<uuid>`` dir, so any
-        one of them names it. A table whose first write was an
-        ``append`` keeps its files at the table root until a rewrite."""
-        return self._current(name)[0]
-
-    def _current(self, name: str):
-        """(``current_data_dir``, the log snapshot it was read from);
-        (None, None) before the first commit."""
+    def _snapshot(self, name: str, version: int | None = None):
+        """The log snapshot of ``name`` at ``version`` (default: the
+        latest); None before the first commit."""
         from product_analytics_spark.sources import delta_log as dl
 
         log = dl.DeltaLog(self.path(name))
-        try:
-            snap = log.snapshot()
-        except dl.DeltaProtocolError:
-            if log.latest_version() is None:
-                return None, None  # no commit yet
-            raise
-        if not snap.files:
-            return None, None
-        v = self._version_of(next(iter(snap.files)))
-        return (os.path.join(self.path(name), v) if v else self.path(name)), snap
+        commits = log._commits()
+        return log.snapshot(version, commits=commits) if commits else None
 
-    def current_version(self, name: str) -> str | None:
-        """The committed version dir name — the snapshot identity an
-        optimistic transaction reads and later presents as
-        ``expected_version`` at commit. None before the first commit
-        (and for a table whose files sit at its root)."""
-        data = self.current_data_dir(name)
-        return data and self._version_of(os.path.relpath(data, self.path(name)))
+    def current_version(self, name: str) -> int | None:
+        """The latest log version — the snapshot identity an optimistic
+        transaction reads and later presents as ``expected_version``
+        at commit, so ANY concurrent commit conflicts with it. None
+        before the first commit."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        return dl.DeltaLog(self.path(name)).latest_version()
 
     def exists(self, name: str) -> bool:
-        return self.current_data_dir(name) is not None
+        return self.current_version(name) is not None
 
-    def read(self, name: str, version: int | str | None = None) -> DataFrame | None:
+    def read(self, name: str, version: int | None = None) -> DataFrame | None:
         """Prior snapshot ({{ this }}) or None on first run.
 
-        ``version`` time-travels within the retention window: an int
-        indexes ``versions()`` (0 = oldest retained, -1 = current), a
-        str names a retained version directory; None for anything
-        else (a GC'd version, or a dir no commit named). Requires the
-        store to have been created with ``retain_versions > 1`` for
-        anything but the current version to still exist.
+        ``version`` time-travels within the retention window (Delta's
+        ``VERSION AS OF``): one of :meth:`versions`; None for anything
+        else (a GC'd or metaData-only version). Requires the store to
+        have been created with ``retain_versions > 1`` for anything
+        but the current version to still exist.
 
         Rows the version's log snapshot marks deleted (the deletion
         vectors the MoR DMLs commit) are filtered out by a broadcast
         anti-join on (``_metadata.file_path``, ``_metadata.row_index``)
         — the merge-on-read half of the DELETE cost model (q290)."""
-        rt = self._row_tracking(name)
-
-        def _hide_rt(df: DataFrame) -> DataFrame:
-            # the materialized row-id columns are PHYSICAL, not
-            # logical — plain reads never expose them (Delta hides
-            # them the same way); read_row_ids is the id-aware reader
-            if not rt:
-                return df
-            from product_analytics_spark.sources import delta_log as dl
-
-            return df.drop(
-                dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL
-            )
-
-        if version is None:
-            data, snap = self._current(name)
-            if data is None:
-                return None
-            return _hide_rt(self._apply_dv(data, merge_schema=rt, snap=snap))
-        vs = self.versions(name)
-        if isinstance(version, int):
-            if not vs:
-                return None
-            version = vs[version]
-        elif version not in vs:
+        if version is not None and version not in self.versions(name):
             return None
-        vdir = os.path.join(self.path(name), version)
-        return _hide_rt(self._apply_dv(vdir, merge_schema=rt))
+        return self._live(name, self._snapshot(name, version))
+
+    def _live(self, name: str, snap) -> DataFrame | None:
+        """``read`` of the log snapshot ``snap`` (None: no table). The
+        materialized row-id columns are PHYSICAL, not logical — plain
+        reads never expose them (Delta hides them the same way);
+        ``read_row_ids`` is the id-aware reader."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        if snap is None:
+            return None
+        rt = self._row_tracking(name)
+        df = self._scan(name, snap, merge_schema=rt)
+        if not rt:
+            return df
+        return df.drop(dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL)
 
     # ------------------------------------------ deletion vectors (MoR)
 
-    def _has_dv(self, name: str) -> bool:
-        """Whether a live file of ``name`` carries a deletion vector."""
-        snap = self._current(name)[1]
+    def _has_dv(self, name: str, snap=None) -> bool:
+        """Whether a live file of ``name`` carries a deletion vector:
+        in log snapshot ``snap`` when the caller holds it, else in the
+        latest one."""
+        if snap is None:
+            snap = self._snapshot(name)
         return snap is not None and any(
             a.get("deletionVector") for a in snap.files.values()
         )
 
-    def _dv_rows(self, data_dir: str) -> int:
-        """Deleted rows the deletion vectors of version dir
-        ``data_dir``'s log snapshot record."""
-        snap = self._dir_snapshot(data_dir)[1]
-        return sum(
-            int((a.get("deletionVector") or {}).get("cardinality") or 0)
-            for a in snap.files.values()
-        )
+    @staticmethod
+    def _mor_result(txn: _Attempt) -> dict:
+        """A committed MoR DML's result: no file rewritten, every file
+        of its snapshot kept, and the deleted rows the live deletion
+        vectors record."""
+        return {
+            "files_kept": len(txn.snap.files),
+            "files_rewritten": 0,
+            "dv_rows": sum(
+                int((a.get("deletionVector") or {}).get("cardinality") or 0)
+                for a in txn.live.values()
+            ),
+        }
 
     def _row_tracking(self, name: str) -> bool:
         """O(1) row-tracking check (marker file written by
@@ -1074,49 +1062,21 @@ class SnapshotStore:
             fh.write("enabled\n")
         return v
 
-    def _rt_base_df(self, name: str):
-        """Broadcastable (``_metadata.file_path``, baseRowId,
-        defaultRowCommitVersion) map of the CURRENT snapshot — the
-        O(|files|) side of the virtual-row-id computation."""
-        from product_analytics_spark.sources import delta_log as dl
-
-        table = self.path(name)
-        snap = dl.DeltaLog(table).snapshot()
-        rows = []
-        for rel in sorted(snap.files):
-            add = snap.files[rel]
-            if add.get("baseRowId") is None:
-                raise dl.DeltaProtocolError(
-                    f"row-tracked table {name!r}: live file {rel!r} "
-                    "has no baseRowId"
-                )
-            rows.append(
-                (
-                    dl.file_uri(dl.resolve_path(table, rel)),
-                    int(add["baseRowId"]),
-                    int(add.get("defaultRowCommitVersion") or 0),
-                )
-            )
-        return dl._positions_df(
-            self.spark, rows,
-            "__rt_p string, __rt_base bigint, __rt_cv bigint",
-        )
-
-    def _rt_attach_ids(self, name: str, scan: DataFrame, base_df=None):
-        """Tag a raw scan with the stable ``_pa_row_id_m`` /
-        ``_pa_row_commit_m`` columns (see ``_rt_ids``). Must be applied
-        directly on the scan (``_metadata`` is a scan pseudo-column).
-        Pass a precomputed ``base_df`` when calling in a loop — it
-        costs one log-snapshot replay per build."""
+    def _rt_attach_ids(self, name: str, tagged: DataFrame, snap):
+        """Add the stable ``_pa_row_id_m`` / ``_pa_row_commit_m``
+        columns (see ``_rt_ids``) to a ``dl._dv_tag``-tagged scan of
+        ``snap``'s files, dropping the tags."""
         from product_analytics_spark.sources import delta_log as dl
 
         logical = [
             c
-            for c in scan.columns
+            for c in tagged.columns
             if c not in (dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL)
+            and c not in _DV_TAGS
         ]
         return self._rt_ids(
-            name, self._tag_positions(scan), logical, scan.columns, base_df
+            tagged, logical, tagged.columns,
+            dl.row_id_base_df(self.spark, self.path(name), snap),
         )
 
     @staticmethod
@@ -1133,28 +1093,26 @@ class SnapshotStore:
         )
         return rt_cols, [c for c in live.columns if c not in rt_cols]
 
+    @staticmethod
     def _rt_ids(
-        self,
-        name: str,
         tagged: DataFrame,
         cols: Sequence[str],
         source_cols: Sequence[str],
-        base_df=None,
+        base_df: DataFrame,
     ) -> DataFrame:
-        """``cols`` of a ``_tag_positions``-tagged relation plus its
-        stable row ids: materialized values (from a prior rewrite;
-        present when ``source_cols``, the untagged relation's columns,
-        carry them) win; otherwise ``baseRowId + row_index`` from the
-        snapshot's broadcast file map. The one id-inheritance join the
-        scan tagger and the MoR DMLs share."""
+        """``cols`` of a ``dl._dv_tag``-tagged relation plus its stable
+        row ids: materialized values (from a prior rewrite; present
+        when ``source_cols``, the untagged relation's columns, carry
+        them) win; otherwise ``baseRowId + row_index`` from the
+        snapshot's broadcast file map ``base_df``
+        (``dl.row_id_base_df``). The one id-inheritance join the scan
+        tagger and the MoR DMLs share."""
         from product_analytics_spark.sources import delta_log as dl
 
         rt_id, rt_cv = (
             dl.MATERIALIZED_ROW_ID_COL,
             dl.MATERIALIZED_ROW_COMMIT_COL,
         )
-        if base_df is None:
-            base_df = self._rt_base_df(name)
 
         def materialized(c: str):
             return (
@@ -1163,11 +1121,11 @@ class SnapshotStore:
 
         return tagged.join(
             F.broadcast(base_df),
-            F.col("__pos_f") == F.col("__rt_p"),
+            F.col("__dv_f") == F.col("__rt_p"),
             "left",
         ).select(
             *cols,
-            F.coalesce(materialized(rt_id), F.col("__rt_base") + F.col("__pos_ri"))
+            F.coalesce(materialized(rt_id), F.col("__rt_base") + F.col("__dv_ri"))
             .cast("long")
             .alias(rt_id),
             F.coalesce(materialized(rt_cv), F.col("__rt_cv"))
@@ -1213,97 +1171,164 @@ class SnapshotStore:
         return max(floor, min(conf_parts, int(n)))
 
     def _existing_dir_floor(self, name: str) -> int:
-        """Floor for a partitioned write's task count: the committed
-        version's hive-directory count (driver metadata, no job), so
-        a many-directory table never collapses to one task writing
-        every directory serially (measured 1.1 s/write at ~80 dirs);
-        8 for a fresh table (no dirs to count yet)."""
-        try:
-            cur = self.current_version(name)
-            if cur:
-                return max(
-                    1,
-                    len(
-                        self._partition_dirs(
-                            os.path.join(self.path(name), cur)
-                        )
-                    ),
-                )
-        except Exception:  # noqa: BLE001 — metadata probe only
-            pass
-        return 8
+        """Floor for a partitioned write's task count: the live
+        partition count (log metadata), so a many-partition table never
+        collapses to one task writing every directory serially
+        (1.1 s/write at ~80 dirs); 8 for a fresh table."""
+        snap = self._snapshot(name)
+        if snap is None or not snap.files:
+            return 8
+        return len(self._partitions(snap))
 
-    def _read_version_dir(
-        self, data_dir: str, merge_schema: bool = False, snap=None
+    @staticmethod
+    def _partitions(snap) -> dict[tuple, list[str]]:
+        """The live adds' paths by partition (sorted (column, value)
+        pairs of ``partitionValues``; one ``()`` group for a flat
+        table), in sorted order — every file layout pass (compaction,
+        OPTIMIZE, the write-task floor, auto-compaction) plans from
+        these, never from a directory listing."""
+        out: dict[tuple, list[str]] = {}
+        for rel in sorted(snap.files):
+            pv = snap.files[rel].get("partitionValues") or {}
+            out.setdefault(tuple(sorted(pv.items())), []).append(rel)
+        return dict(sorted(out.items()))
+
+    @staticmethod
+    def _part_cols(snap) -> list[str]:
+        """Partition columns of log snapshot ``snap``: the live adds'
+        ``partitionValues`` keys, else the metaData's ([] when flat)."""
+        if snap is None:
+            return []
+        for add in snap.files.values():
+            return list(add.get("partitionValues") or {})
+        return list((snap.metadata or {}).get("partitionColumns") or [])
+
+    def _scan(
+        self, name: str, snap, merge_schema: bool = False, tagged: bool = False
     ) -> DataFrame:
-        """Parquet read of a store directory, its resolved lazy plan
-        memoized per (dir, mergeSchema, content signature): the DML
-        certs re-read one version many times per op (q428: 66×, ~90
-        ms each). The signature catches in-place changes (an append
-        into the live data dir). Deleted rows are not filtered here
-        (``_apply_dv``).
-
-        The read is typed, not inferred: with the data columns the
-        dir's commit logged (``_data_schema``). Footer inference runs
-        a one-task Spark job per dir; it stays where the log does not
-        describe the files' physical columns: row-tracked
-        ``mergeSchema`` reads (rewritten files carry materialized
-        row-id columns the logical schema omits) and the dirs
-        ``_data_schema`` leaves to it. ``snap``, the log snapshot the
-        caller resolved ``data_dir`` from, saves ``_data_schema`` a
-        second listing of the log."""
-
-        def read():
-            reader = self.spark.read
-            if merge_schema:
-                return reader.option("mergeSchema", "true").parquet(data_dir)
-            schema = self._data_schema(data_dir, snap)
-            if schema is not None:
-                reader = reader.schema(schema)
-            return reader.parquet(data_dir)
-
-        sig = _dir_signature(data_dir)
-        key = (os.path.abspath(data_dir), bool(merge_schema), sig)
-        return cache.memo("version_dirs", key, read, spark=self.spark)
-
-    def _dir_snapshot(self, data_dir: str, snap=None):
-        """(table dir, the log snapshot at the newest commit at which
-        the version dir ``data_dir`` — or, for a table whose first
-        write was an ``append``, the table root — was live). The
-        snapshot is None for a dir no retained commit names (outside
-        any table, or not committed). ``snap`` is the table's current
-        snapshot when the caller already holds it."""
+        """The rows of log snapshot ``snap``: ``_grouped_read`` of its
+        adds, typed with the data columns the log records
+        (``_data_schema``; footer inference, a one-task job per scan,
+        stays for row-tracked ``mergeSchema`` reads and the tables
+        ``_data_schema`` leaves to it), then one anti-join of the
+        deletion-vector positions above the union, under the logical
+        column names. A version with no file reads as an empty frame
+        typed from the logged schema. Plans are memoized per (table,
+        log version, ``merge_schema``, ``tagged``): the DML certs
+        re-read one version many times per op (q428: 66×). ``tagged``
+        keeps each row's ``__dv_f`` / ``__dv_ri`` (``dl._dv_tag``) —
+        the positions a MoR DML hands its commit."""
         from product_analytics_spark.sources import delta_log as dl
 
-        data_dir = os.path.normpath(data_dir)
-        v = os.path.basename(data_dir)
-        table = os.path.dirname(data_dir) if v.startswith("v_") else data_dir
-        log = dl.DeltaLog(table)
-        if snap is None:
-            try:
-                snap = log.snapshot()
-            except dl.DeltaProtocolError:
-                return table, None  # not a logged table
-        live = self._version_of(next(iter(snap.files), ""))
-        if not snap.files or (os.path.join(table, live) if live else table) != data_dir:
-            lv = dict(self._retained(table)).get(v)  # time travel
-            snap = None if lv is None else log.snapshot(lv)
-        return table, snap
+        table = self.path(name)
 
-    def _data_schema(self, data_dir: str, snap=None):
-        """The data columns ``data_dir`` was committed with:
-        ``_logged_schema`` of its ``_dir_snapshot``'s metaData.
-        Partition columns are left out: Spark's path discovery (a
-        listing, no Spark job) types them from the dir's hive values
-        exactly as an inferred read does, and an append can add values
-        the logged type would not parse. None — infer from the footers
-        — where ``_logged_schema`` is None and for dirs no retained
-        commit names."""
+        def build():
+            if not snap.files:
+                return self.spark.createDataFrame(
+                    [], _table_schema(snap.metadata or {})
+                )
+            schema = None if merge_schema else self._data_schema(snap)
+
+            def configure(reader):
+                if merge_schema:
+                    return reader.option("mergeSchema", "true")
+                return reader if schema is None else _typed(self.spark, reader, schema)
+
+            has_dv = self._has_dv(name, snap)
+            out = self._grouped_read(
+                table, snap, sorted(snap.files), configure, has_dv or tagged
+            )
+            if has_dv:
+                out = dl._dv_anti_join(
+                    out, self._dv_positions(table, snap)[1], keep_tags=tagged
+                )
+            return _renamed(
+                out, {p: c for c, p in snap.column_mapping().items()}
+            )
+
+        key = (
+            "scan", os.path.abspath(table), (snap.metadata or {}).get("id"),
+            snap.version, bool(merge_schema), bool(tagged),
+        )
+        return cache.memo("version_dirs", key, build, spark=self.spark)
+
+    def _grouped_read(
+        self, table: str, snap, rels, configure, tag: bool = False, raw: bool = False
+    ):
+        """The files ``rels`` of log snapshot ``snap``, grouped by the
+        dir their hive path starts from (``_base_dir``): one scan per
+        group of its file list (``configure(reader)`` sets schema or
+        options) with ``basePath`` set to that dir, so the partition
+        columns come from the paths; a flat table's files are one scan
+        whatever dirs they sit in. A partition column gets one type
+        across the groups — the wider of the types path discovery gives
+        each (``_wider_part_type``: how one inferred read of all the
+        values types it), or the raw hive strings with ``raw`` — and a
+        group typed otherwise is re-read with the column as its raw
+        strings, then cast. ``tag`` adds each scan's ``dl._dv_tag``
+        columns (``_metadata`` does not survive a union). The groups
+        are unioned by name."""
+        import functools
+
+        from pyspark.sql import types as T
+
+        from product_analytics_spark.sources import delta_log as dl
+
+        groups: dict[str, list[str]] = {}
+        valued: dict[str, set] = {}  # partition columns with a non-null value
+        for rel in rels:
+            pv = snap.files[rel].get("partitionValues") or {}
+            key = _base_dir(table, rel, snap.files[rel]) if pv else ""
+            groups.setdefault(key, []).append(dl.resolve_path(table, rel))
+            valued.setdefault(key, set()).update(
+                c for c, v in pv.items() if v not in (None, _NULL_PART)
+            )
+        frames = {}
+        for base in sorted(groups):
+            reader = configure(self.spark.read)
+            if base:
+                reader = reader.option("basePath", base)
+            frames[base] = reader.parquet(*groups[base])
+        want, schemas = {}, {}
+        if raw or len(frames) > 1:
+            schemas = {b: df.schema for b, df in frames.items()}
+            for c in self._part_cols(snap):
+                typed = [schemas[b][c].dataType for b in frames if c in valued[b]]
+                want[c] = (
+                    functools.reduce(_wider_part_type, typed)
+                    if typed and not raw
+                    else T.StringType()
+                )
+        out = None
+        for base, df in frames.items():
+            stale = {c: t for c, t in want.items() if schemas[base][c].dataType != t}
+            if stale:
+                raw_schema = T.StructType(
+                    [
+                        T.StructField(f.name, T.StringType()) if f.name in stale else f
+                        for f in schemas[base]
+                    ]
+                )
+                df = (
+                    _typed(self.spark, self.spark.read, raw_schema)
+                    .option("basePath", base)
+                    .parquet(*groups[base])
+                    .withColumns({c: F.col(c).cast(t) for c, t in stale.items()})
+                )
+            if tag:
+                df = dl._dv_tag(df)
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+        return out
+
+    def _data_schema(self, snap):
+        """The data columns log snapshot ``snap`` records:
+        ``_logged_schema`` of its metaData. Partition columns are left
+        out: Spark's path discovery (no Spark job) types them from the
+        hive values exactly as an inferred read does, and an append can
+        add values the logged type would not parse. None — infer from
+        the footers — where ``_logged_schema`` is None."""
         from pyspark.sql.types import StructType
 
-        snap = self._dir_snapshot(data_dir, snap)[1]
-        if snap is None:
-            return None
         meta = snap.metadata or {}
         schema = _logged_schema(meta)
         if schema is None:
@@ -1311,24 +1336,12 @@ class SnapshotStore:
         parts = set(meta.get("partitionColumns") or ())
         return StructType([f for f in schema.fields if f.name not in parts])
 
-    def _apply_dv(
-        self, data_dir: str, merge_schema: bool = False, snap=None
-    ) -> DataFrame:
-        """Read a version dir without the rows its log snapshot marks
-        deleted (``dl.apply_dv_filter``, the reader ``read_delta`` and
-        ``read_pruned`` use). ``merge_schema`` is set by row-tracked
-        tables, whose rewritten files carry the materialized row-id
-        columns the hardlinked ones lack; ``snap`` as for
-        ``_read_version_dir``."""
-        from product_analytics_spark.sources import delta_log as dl
-
-        base = self._read_version_dir(data_dir, merge_schema=merge_schema, snap=snap)
-        table, snap = self._dir_snapshot(data_dir, snap)
-        if snap is None or not any(
-            a.get("deletionVector") for a in snap.files.values()
-        ):
-            return base  # no memo lookup: its session scope costs py4j calls
-        return dl.apply_dv_filter(base, self._dv_positions(table, snap)[1])
+    @staticmethod
+    def _to_physical(snap, df: DataFrame) -> DataFrame:
+        """``df`` with its logical column names replaced by the physical
+        ones log snapshot ``snap`` maps them to (column mapping): what a
+        writer puts in the files."""
+        return df if snap is None else _renamed(df, snap.column_mapping())
 
     def _dv_positions(self, table: str, snap):
         """(row indexes by add path, their ``dl.dv_positions_df``
@@ -1350,23 +1363,12 @@ class SnapshotStore:
         return cache.memo("version_dirs", key, build, spark=self.spark)
 
     @staticmethod
-    def _tag_positions(df: DataFrame) -> DataFrame:
-        """``df`` (a file scan) plus each row's deletion-vector key:
-        ``__pos_f`` (``_metadata.file_path``) and ``__pos_ri`` (row
-        index)."""
-        return df.select(
-            "*",
-            F.col("_metadata.file_path").alias("__pos_f"),
-            F.col("_metadata.row_index").alias("__pos_ri"),
-        )
-
-    @staticmethod
     def _positions(matched: DataFrame) -> dict[str, list[int]]:
-        """Row indexes of ``_tag_positions``-tagged rows by scanned
-        file: the positions a MoR DML hands its commit (``txn.deleted``).
+        """Row indexes of ``dl._dv_tag``-tagged rows by scanned file:
+        the positions a MoR DML hands its commit (``txn.deleted``).
         O(matched) rows reach the driver."""
         out: dict[str, list[int]] = {}
-        for f, ri in matched.select("__pos_f", "__pos_ri").collect():
+        for f, ri in matched.select(*_DV_TAGS).collect():
             out.setdefault(f, []).append(ri)
         return out
 
@@ -1378,10 +1380,11 @@ class SnapshotStore:
         post_scan=None,
     ) -> dict:
         """Merge-on-read DELETE (Delta deletion vectors' semantics):
-        NO data file is rewritten — every data file is hardlinked into
-        the new version, and the commit adds the matching LIVE rows'
-        (file, row_index) positions to those files' deletion vectors,
-        which every reader applies as a broadcast anti-join. This is
+        NO data file is rewritten or copied — the commit re-adds each
+        file holding a matching LIVE row with that row's (file,
+        row_index) position added to its deletion vector, which every
+        reader applies as a broadcast anti-join; every other file keeps
+        its add. This is
         the low-write-amplification half of the q290 cost model:
         deleting 3 rows from a 128 MB file costs a few DV bytes, not
         a 128 MB rewrite; reads pay one broadcast anti-join until the
@@ -1399,8 +1402,8 @@ class SnapshotStore:
         self._assert_appendable(name, "DELETE (merge-on-read)")
 
         def attempt(txn: _Attempt):
-            data, snap = self._current(name)
-            if data is None:
+            snap = txn.snap
+            if snap is None:
                 raise ValueError(f"unknown table {name!r}")
             # positions of matching rows among LIVE rows only.
             # With CDF on, the matched rows feed BOTH the change
@@ -1408,9 +1411,7 @@ class SnapshotStore:
             # intermediate instead of two full scans of the live
             # relation (round-12 optimization, guide §1.2: every
             # extra consumer re-ran the scan + DV anti-join).
-            matched = self._tag_positions(
-                self._apply_dv(data, snap=snap).where(predicate)
-            )
+            matched = self._scan(name, snap, tagged=True).where(predicate)
             if self.cdf:
                 matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
                 txn.releases.append(lambda: matched.unpersist(False))
@@ -1419,24 +1420,19 @@ class SnapshotStore:
             # Materialize-then-fork (round-13, VERDICT r12 item 2,
             # guide §2.6): collecting the positions fills the
             # persisted `matched` cache, so the cdc stage then
-            # overlaps the hardlink pass as a pure cache reader.
+            # overlaps the commit as a pure cache reader.
             txn.deleted = self._positions(matched)
             if self.cdf:
                 txn.cdc = self._stage_cdc_async(
                     name,
-                    matched.drop("__pos_f", "__pos_ri").withColumn(
-                        "_change_type", F.lit("delete")
+                    self._to_physical(
+                        txn.snap,
+                        matched.drop(*_DV_TAGS).withColumn(
+                            "_change_type", F.lit("delete")
+                        ),
                     ),
                 )
-            n_link = sum(
-                self._link_files(txn.vdir, rel, files)
-                for rel, files in self._partition_dirs(data)
-            )
-            return lambda: {
-                "files_linked": n_link,
-                "files_rewritten": 0,
-                "dv_rows": self._dv_rows(txn.vdir),
-            }
+            return lambda: self._mor_result(txn)
 
         return self._transact(
             name, attempt, "MoR delete", "DELETE", max_retries
@@ -1453,35 +1449,33 @@ class SnapshotStore:
         """Merge-on-read UPDATE (Delta's deletion-vector UPDATE shape):
         matching LIVE rows' positions go to the commit's deletion
         vectors and their UPDATED versions are written as new data
-        files into the same version — every pre-existing file is
-        hardlinked, so write amplification is O(matched rows), not
-        O(touched files).
+        files — every pre-existing file keeps its add, so write
+        amplification is O(matched rows), not O(touched files).
         ``assignments`` maps column -> SQL expression (cast back to the
         column's original type, same schema-enforcement rule as the
         COW update). Partition-column reassignment is refused (it
         would move rows across hive directories). The commit carries
         protocol-v3 ``deletionVector`` descriptors like
         ``delete_where_mor``."""
-        data0 = self.current_data_dir(name)
-        if data0 is not None:
-            bad = set(
-                self._partition_cols(self._partition_dirs(data0))
-            ) & set(assignments)
-            if bad:
-                raise ValueError(
-                    f"update_where_mor cannot reassign partition columns "
-                    f"{sorted(bad)}"
-                )
+        bad = set(self._part_cols(self._snapshot(name))) & set(assignments)
+        if bad:
+            raise ValueError(
+                f"update_where_mor cannot reassign partition columns "
+                f"{sorted(bad)}"
+            )
         self._assert_appendable(name, "UPDATE (merge-on-read)")
 
+        from product_analytics_spark.sources import delta_log as dl
+
         def attempt(txn: _Attempt):
-            data, snap = self._current(name)
-            if data is None:
+            snap = txn.snap
+            if snap is None:
                 raise ValueError(f"unknown table {name!r}")
             rt = self._row_tracking(name)
-            live = self._apply_dv(data, merge_schema=rt, snap=snap)
+            tagged = self._scan(name, snap, merge_schema=rt, tagged=True)
+            live = tagged.drop(*_DV_TAGS)
             rt_cols, logical_cols = self._rt_split(live, rt)
-            part_cols = self._partition_cols(self._partition_dirs(data))
+            part_cols = self._part_cols(snap)
             # ONE scan finds the matched rows WITH their positions;
             # everything downstream (deleted positions, rewritten
             # rows, constraint validation, CDF pre/post images)
@@ -1489,7 +1483,7 @@ class SnapshotStore:
             # The per-consumer form re-ran the live scan + DV
             # anti-join up to 4x per UPDATE (round-12 optimization,
             # guide §1.2).
-            matched = self._tag_positions(live.where(predicate)).persist(
+            matched = tagged.where(predicate).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
             txn.releases.append(lambda: matched.unpersist(False))
@@ -1499,9 +1493,12 @@ class SnapshotStore:
             # position tags double as the row-id join key — no second
             # scan.
             if rt:
-                updated = self._rt_ids(name, matched, logical_cols, live.columns)
+                updated = self._rt_ids(
+                    matched, logical_cols, live.columns,
+                    dl.row_id_base_df(self.spark, self.path(name), snap),
+                )
             else:
-                updated = matched.drop("__pos_f", "__pos_ri")
+                updated = matched.drop(*_DV_TAGS)
             for col, expr_sql in assignments.items():
                 updated = updated.withColumn(
                     col,
@@ -1512,8 +1509,8 @@ class SnapshotStore:
             # guide §2.6): collecting the positions fills the shared
             # `matched` cache — the scan its first consumer was paying
             # anyway — then the validation probe and the cdc stage
-            # run as overlapped cache readers alongside the hardlink
-            # pass and the rewrite write. The round-12
+            # run as overlapped cache readers alongside the rewrite
+            # write. The round-12
             # fork-without-materialize attempt lost exactly because
             # the forks raced to fill this cache.
             txn.deleted = self._positions(matched)
@@ -1525,24 +1522,19 @@ class SnapshotStore:
             if self.cdf:
                 txn.cdc = self._stage_cdc_async(
                     name,
-                    matched.select(*logical_cols)
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                    .unionByName(
-                        updated.select(*logical_cols).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
+                    self._to_physical(
+                        txn.snap,
+                        matched.select(*logical_cols)
+                        .withColumn("_change_type", F.lit("update_preimage"))
+                        .unionByName(
+                            updated.select(*logical_cols).withColumn(
+                                "_change_type", F.lit("update_postimage")
+                            )
+                        ),
                     ),
                 )
-            n_link = sum(
-                self._link_files(txn.vdir, rel, files)
-                for rel, files in self._partition_dirs(data)
-            )
-            self._write_appended(txn.vdir, updated, part_cols)
-            return lambda: {
-                "files_linked": n_link,
-                "files_rewritten": 0,
-                "dv_rows": self._dv_rows(txn.vdir),
-            }
+            self._write_appended(txn.vdir, self._to_physical(snap, updated), part_cols)
+            return lambda: self._mor_result(txn)
 
         return self._transact(
             name, attempt, "MoR update", "UPDATE", max_retries
@@ -1557,39 +1549,32 @@ class SnapshotStore:
         post_scan=None,
     ) -> dict:
         """Merge-on-read MERGE via deletion vectors (Delta's low-shuffle
-        MERGE shape, completing the DV DML trio with
-        :meth:`delete_where_mor` / :meth:`update_where_mor`): the
-        positions of live rows whose key appears in ``batch`` go to the
-        commit's deletion vectors and ALL batch rows (matched
-        replacements + inserts) are written as NEW files into the same
-        version — every pre-existing file is hardlinked, so write
-        amplification is O(batch rows), never O(touched files).
-        Semantically identical to
-        :meth:`merge` / ``merge_upsert`` (``prev ANTI batch-keys UNION
-        batch``), but a 100-row upsert against a 100 TB table writes
-        100 rows + DV bytes instead of rewriting every touched file.
-
-        Unlike ``update_where_mor``, a matched row MAY move partitions:
-        the old position is tombstoned in its hive dir and the
-        replacement lands in the batch row's dir — a partition move
-        without any rewrite. Batch columns must equal the table's
-        (MoR appends raw files next to hardlinked old ones, so the
-        on-disk schemas must agree — use :meth:`merge` for
-        ``sync_all_columns`` schema evolution); values are cast to the
-        table's column types. OCC transaction with the same
-        ``post_scan`` fault-injection window as the other DML paths.
-        The commit carries protocol-v3 ``deletionVector`` descriptors
-        like the other MoR ops."""
+        MERGE shape, with :meth:`delete_where_mor` /
+        :meth:`update_where_mor`): the positions of live rows whose key
+        appears in ``batch`` go to the commit's deletion vectors and
+        ALL batch rows are written as NEW files — every pre-existing
+        file keeps its add, so write amplification is O(batch rows).
+        Semantically identical to :meth:`merge` (``prev ANTI batch-keys
+        UNION batch``). A matched row MAY move partitions: the old
+        position is tombstoned and the replacement lands in the batch
+        row's dir. Batch columns must equal the table's (the new files
+        sit beside the old ones; use :meth:`merge` for
+        ``sync_all_columns``); values are cast to the table's types.
+        OCC transaction with the same ``post_scan`` window as the other
+        DML paths."""
         self._assert_appendable(name, "MERGE (merge-on-read)")
         keys = [key] if isinstance(key, str) else list(key)
         batch = self._apply_generated(name, batch)
 
+        from product_analytics_spark.sources import delta_log as dl
+
         def attempt(txn: _Attempt):
-            data, snap = self._current(name)
-            if data is None:
+            snap = txn.snap
+            if snap is None:
                 raise ValueError(f"unknown table {name!r}")
             rt = self._row_tracking(name)
-            live = self._apply_dv(data, merge_schema=rt, snap=snap)
+            tagged = self._scan(name, snap, merge_schema=rt, tagged=True)
+            live = tagged.drop(*_DV_TAGS)
             rt_cols, logical_cols = self._rt_split(live, rt)
             batch_eff = (
                 self._identity_merge_batch(name, live, batch, keys)
@@ -1611,7 +1596,7 @@ class SnapshotStore:
                     for c in logical_cols
                 ]
             )
-            part_cols = self._partition_cols(self._partition_dirs(data))
+            part_cols = self._part_cols(snap)
             # ONE live scan: the semi-join against the batch keys
             # finds every matched row WITH its position, the logical
             # columns (CDF preimages) and — on row-tracked tables —
@@ -1625,7 +1610,7 @@ class SnapshotStore:
             # broadcast, the CDF post/insert images and the data
             # write.
             aligned = aligned.persist(StorageLevel.MEMORY_AND_DISK)
-            matched = self._tag_positions(live).join(
+            matched = tagged.join(
                 F.broadcast(aligned.select(*keys).distinct()),
                 on=keys,
                 how="left_semi",
@@ -1639,9 +1624,9 @@ class SnapshotStore:
             # (computing `matched` builds the broadcast over
             # `aligned`, so the batch cache fills as a side effect);
             # the validation probe and cdc stage then overlap the
-            # hardlink pass and the data write as pure cache readers.
+            # data write as pure cache readers.
             # CHECK constraints gate the NEW rows only — the
-            # hardlinked side was validated when it committed.
+            # kept side was validated when it committed.
             txn.deleted = self._positions(matched)
             txn.jobs.append(self._validate_async(name, aligned))
             if post_scan is not None:
@@ -1655,17 +1640,20 @@ class SnapshotStore:
                 ct = "_change_type"
                 txn.cdc = self._stage_cdc_async(
                     name,
-                    matched.select(*logical_cols)
-                    .withColumn(ct, F.lit("update_preimage"))
-                    .unionByName(
-                        aligned.join(
-                            F.broadcast(mkeys), keys, "left_semi"
-                        ).withColumn(ct, F.lit("update_postimage"))
-                    )
-                    .unionByName(
-                        aligned.join(
-                            F.broadcast(mkeys), keys, "left_anti"
-                        ).withColumn(ct, F.lit("insert"))
+                    self._to_physical(
+                        txn.snap,
+                        matched.select(*logical_cols)
+                        .withColumn(ct, F.lit("update_preimage"))
+                        .unionByName(
+                            aligned.join(
+                                F.broadcast(mkeys), keys, "left_semi"
+                            ).withColumn(ct, F.lit("update_postimage"))
+                        )
+                        .unionByName(
+                            aligned.join(
+                                F.broadcast(mkeys), keys, "left_anti"
+                            ).withColumn(ct, F.lit("insert"))
+                        ),
                     ),
                 )
             # Row tracking: matched batch rows INHERIT the live row's
@@ -1680,7 +1668,10 @@ class SnapshotStore:
                 # replacement row inherits the smallest (oldest)
                 # matched row id, deterministically.
                 matched_ids = (
-                    self._rt_ids(name, matched, keys, live.columns)
+                    self._rt_ids(
+                        matched, keys, live.columns,
+                        dl.row_id_base_df(self.spark, self.path(name), snap),
+                    )
                     .groupBy(*keys)
                     .agg(*[F.min(F.col(c)).alias(c) for c in rt_cols])
                 )
@@ -1689,16 +1680,8 @@ class SnapshotStore:
                 ).select(*logical_cols, *rt_cols)
             else:
                 to_write = aligned
-            n_link = sum(
-                self._link_files(txn.vdir, rel, files)
-                for rel, files in self._partition_dirs(data)
-            )
-            self._write_appended(txn.vdir, to_write, part_cols)
-            return lambda: {
-                "files_linked": n_link,
-                "files_rewritten": 0,
-                "dv_rows": self._dv_rows(txn.vdir),
-            }
+            self._write_appended(txn.vdir, self._to_physical(snap, to_write), part_cols)
+            return lambda: self._mor_result(txn)
 
         return self._transact(
             name, attempt, "MoR merge", "MERGE", max_retries
@@ -1713,7 +1696,7 @@ class SnapshotStore:
         OCC with retry."""
 
         def attempt(txn: _Attempt):
-            if not self._has_dv(name):
+            if not self._has_dv(name, txn.snap):
                 return txn.no_commit(False)
             layout = self.layout(name)
             if self._row_tracking(name):
@@ -1722,13 +1705,13 @@ class SnapshotStore:
                 # materialized-or-virtual), or the fresh baseRowId
                 # ranges of the rewritten files would re-mint ids —
                 # Delta preserves ids through OPTIMIZE the same way.
-                data, snap = self._current(name)
                 df = self._rt_attach_ids(
-                    name, self._apply_dv(data, merge_schema=True, snap=snap)
+                    name,
+                    self._scan(name, txn.snap, merge_schema=True, tagged=True),
+                    txn.snap,
                 )
             else:
-                df = self.read(name)
-            assert df is not None
+                df = self._live(name, txn.snap)
             finish = self._stage_overwrite(
                 txn,
                 name,
@@ -1755,62 +1738,47 @@ class SnapshotStore:
         )
 
     def restore(
-        self, name: str, version: int | str, max_retries: int = 3
+        self, name: str, version: int, max_retries: int = 3
     ) -> dict:
         """Delta ``RESTORE TABLE t TO VERSION AS OF v``: make the
         table's content equal an EARLIER committed version's, via a
-        NEW commit — history above the restore point is preserved
-        (the restore is itself just another version; time travel to
-        the pre-restore state still works within retention), which is
-        what distinguishes RESTORE from rolling back the log.
+        NEW commit — history above the restore point is preserved (the
+        pre-restore state stays time-travelable within retention).
 
-        ``version`` is a retained version dir name (``v_...``, one of
-        :meth:`versions`) or an index into :meth:`versions` (negative
-        = from the end, like ``read``); anything else raises
-        ValueError. Every file of the target version (data files and
-        hive subdirs) is HARDLINKED into the new version dir: zero
-        data movement, cost O(|files|) metadata ops, exactly how
-        Delta's RESTORE re-adds the old snapshot's files by reference.
-        The log reconciles automatically: the restored files are
-        re-added with the target version's adds (stats and deletion
-        vectors reused by inode — no footer re-reads) and the
-        abandoned version's files removed, with ``dataChange: true``
-        (rows DID change — streams and the change feed correctly see
-        the restore as delete-all + insert-all of the delta, Delta's
-        own RESTORE semantics).
+        ``version`` is a retained log version (one of
+        :meth:`versions`); anything else raises ValueError. The commit
+        re-adds the target snapshot's adds that are not live (same
+        paths, stats, deletion vectors and row ids — the retention
+        window keeps their files) and removes the live paths the
+        target lacks, both with ``dataChange: true``; the target's
+        metaData comes back when its schema differs. Zero data bytes
+        move: O(|files|) log actions, exactly how Delta's RESTORE
+        re-adds the old snapshot's files by reference.
 
         OCC transaction: presents the version current at its start;
         a concurrent commit in the window conflicts and the restore
-        re-reads and retries (the target is named, so retry is safe).
-
-        Scale: restoring a 100 TB table touches ZERO data bytes —
-        |files| hardlinks/manifest entries. The expensive mistake
-        this removes at scale is "full-refresh back to yesterday":
-        RESTORE is a metadata operation, the refresh is a rewrite."""
+        re-reads and retries (the target is named, so retry is safe)."""
         self._assert_appendable(name, "RESTORE")
-        vs = self.versions(name)
-        if isinstance(version, int):
-            if not vs:
-                raise ValueError(f"unknown table {name!r}")
-            version = vs[version]
-        if version not in vs:
-            raise ValueError(
-                f"table {name!r}: unknown version {version!r} (never "
-                "committed, or GC'd past the retention window)"
-            )
-        src = os.path.join(self.path(name), version)
 
         def attempt(txn: _Attempt):
-            txn.source = self._dir_snapshot(src)[1]
-            n_link = 0
-            for root, _dirs, files in os.walk(src):
-                rel = os.path.relpath(root, src)
-                out = txn.vdir if rel == "." else os.path.join(txn.vdir, rel)
-                os.makedirs(out, exist_ok=True)
-                for f in files:
-                    os.link(os.path.join(root, f), os.path.join(out, f))
-                    n_link += 1
-            return lambda: {"restored_to": version, "files_linked": n_link}
+            if version not in self.versions(name):
+                raise ValueError(
+                    f"table {name!r}: unknown version {version!r} (never "
+                    "committed, metaData-only, or GC'd past the retention "
+                    "window)"
+                )
+            target = self._snapshot(name, version)
+            live = txn.snap.files
+            readd = {
+                p: a
+                for p, a in target.files.items()
+                if p not in live
+                or live[p].get("deletionVector") != a.get("deletionVector")
+            }
+            txn.removes = sorted((set(live) - set(target.files)) | (set(readd) & set(live)))
+            txn.adds = [dict(readd[p], dataChange=True) for p in sorted(readd)]
+            txn.source = target
+            return lambda: {"restored_to": version, "files_kept": len(target.files)}
 
         return self._transact(
             name, attempt, "restore", "RESTORE", max_retries
@@ -1828,30 +1796,21 @@ class SnapshotStore:
         n_files: int | None = None,
         zorder_depth: bool = False,
     ) -> str:
-        """Write a new UNCOMMITTED version directory; return its name.
+        """Write a new UNCOMMITTED staging directory; return its name.
 
         ``cluster_by`` is the single-key clustering pass (S7):
         range-partition + sort-within-partitions on the cluster keys,
-        so parquet min/max stats give data skipping on the FIRST key
-        (later keys span nearly their full range in every file).
-
-        ``zorder_by`` is true multi-column Z-ORDER (reference
-        ``OPTIMIZE ... ZORDER BY (order_id, customer_id, order_date)``,
-        orders_cleaned.sql:15): rows are range-partitioned and sorted
-        on the interleaved Morton z-value of ALL the named columns
-        (functions/zorder.py), so every file is a locality
-        hyper-rectangle and min/max skipping works on each column —
-        the q416 cert measures 2nd-key pruning beating the composite
-        sort. Mutually exclusive with cluster_by.
+        so parquet min/max stats skip on the FIRST key. ``zorder_by``
+        is multi-column Z-ORDER (reference ``OPTIMIZE ... ZORDER BY``,
+        orders_cleaned.sql:15): rows are range-partitioned and sorted on
+        the Morton z-value of ALL the named columns
+        (functions/zorder.py), so min/max skipping works on each column
+        (q416). Mutually exclusive with cluster_by.
 
         Partitioned writes first hash-repartition on the partition
-        columns so each hive partition directory is written by one
-        task (one well-sized file per directory instead of
-        tasks x partitions small files), then sort within by the
-        cluster keys (or z-value) for row-group stat skipping inside
-        each partition. ``n_files`` pins the file count for layout
-        tests; production leaves it None (AQE-sized).
-        """
+        columns (one well-sized file per partition directory), then
+        sort within by the cluster keys (or z-value). ``n_files`` pins
+        the file count for layout tests; None is AQE-sized."""
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are exclusive")
         zcol = "__zval"
@@ -1957,112 +1916,115 @@ class SnapshotStore:
     def _commit(
         self,
         name: str,
-        version: str,
+        version: str | None = None,
         expected_version=UNCHECKED,
         operation: str = "WRITE",
         txn: _Attempt | None = None,
-    ) -> None:
-        """Commit the written version dir ``version``, then
-        garbage-collect versions that fell off the retention window
-        and the deletion-vector files only they referenced.
-        Inside the commit lock the order is: OCC check, the log commit
-        (``_delta_commit``, reconciled against ``version``'s dir — its
-        putIfAbsent is the commit point; ``txn``, the attempt that
-        wrote it, if any), the retained list. A refused log commit
-        therefore leaves the table as it was.
+    ):
+        """Commit the attempt ``txn`` — or, without one, the staged dir
+        ``version`` as a full replace — then ``_gc``. Inside the commit
+        lock: the OCC check, then the log commit (``_delta_commit``;
+        its putIfAbsent is the commit point, so a refused log commit
+        leaves the table as it was). Returns the committed (version,
+        actions), None when there was nothing to commit.
 
-        Optimistic concurrency: with ``expected_version`` set (the
-        version the transaction READ — ``current_version()`` at its
-        start, None for first-write), the log must still name it
-        inside the locked section, or ConcurrentWriteError is raised
-        and NOTHING commits — the Delta/Iceberg conflict check. The
-        default stays last-writer-wins (dbt full-refresh semantics)."""
+        With ``expected_version`` set (the log version the transaction
+        READ, None for first-write) the log must still be at it inside
+        the lock, or ConcurrentWriteError is raised and NOTHING commits
+        — the Delta/Iceberg conflict check. The default stays
+        last-writer-wins (dbt full-refresh semantics)."""
+        from product_analytics_spark.sources import delta_log as dl
+
         table = self.path(name)
+        if txn is None:
+            txn = _Attempt(table)
+            txn.version, txn.removes = version, _REPLACE_ALL
         with self._commit_lock(name):
+            commits = dl.DeltaLog(table)._commits()
             if expected_version is not UNCHECKED:
-                cur = self.current_version(name)
+                cur = commits[-1][0] if commits else None
                 if cur != expected_version:
                     raise ConcurrentWriteError(
                         f"table {name!r}: committed version moved "
                         f"{expected_version!r} -> {cur!r} since this "
                         "transaction's snapshot read; re-read and retry"
                     )
-            self._delta_commit(
-                name, os.path.join(table, version), operation=operation, txn=txn
+            head = self._delta_commit(
+                name, txn, operation=operation, commits=commits
             )
-            # Read under the lock, so the list ends with this commit.
-            committed = self._retained(table)
-        # GC deletes ONLY previously COMMITTED versions that fell off
-        # the retention window. A bare "every v_ dir not retained"
-        # sweep (the old rule) could destroy a CONCURRENT writer's
-        # uncommitted version dir — under last-writer-wins that writer
-        # then commits a log entry naming a deleted directory (data
-        # loss). Uncommitted dirs belong to in-flight writers; crashed
-        # writers' orphans are vacuumed by age instead (not
-        # ``DeltaLog.vacuum``, which deletes untracked files at once).
-        retained = committed[-self.retain_versions :]
-        gone = committed[: -self.retain_versions]
-        for v, _lv in gone:
-            shutil.rmtree(os.path.join(table, v), ignore_errors=True)
-        entries = os.listdir(table)
-        self._vacuum_orphans(table, {v for v, _lv in retained}, entries)
-        if gone and any(e.startswith("deletion_vector_") for e in entries):
-            self._gc_dv_files(table, gone, retained)
+        if head is not None:
+            self._gc(table, commits + [(head[0], None)], head, txn.live)
+        return head
 
-    #: age after which an uncommitted version dir is presumed to belong
-    #: to a CRASHED writer and may be vacuumed (in-flight writers finish
-    #: in seconds-to-minutes; Delta's VACUUM uses hours for the same
-    #: reason — err far on the side of not touching live work).
+    #: age after which an uncommitted staging dir is presumed to belong
+    #: to a CRASHED writer and may be swept (in-flight writers finish in
+    #: minutes; Delta's VACUUM waits hours for the same reason).
     ORPHAN_TTL_S = 3600.0
 
-    def _vacuum_orphans(
-        self, table: str, retained: set[str], entries: list[str]
-    ) -> None:
-        """Delete version dirs among ``entries`` (the table dir's
-        listing) that are neither retained nor recently modified — the
-        leftovers of writers that crashed between _write_version and
-        _commit. Age-gated so a concurrent IN-FLIGHT writer's
-        uncommitted dir is never swept."""
+    def _gc(self, table: str, commits, head, live: dict) -> None:
+        """File-level GC after the commit ``head`` ((version, actions),
+        the last of ``commits``; ``live`` its live adds), from the log.
+        A data commit moves the retention window (``_window``) by one
+        data version, so the files only versions older than the window
+        reference are those the window's first commit removed, less
+        what a retained version still names (live now, or removed by a
+        later retained commit). Those data files and the deletion-vector
+        files only their removes name are deleted, then the ``v_`` dirs
+        no retained file is left in. A ``v_`` dir no retained version
+        references and older than ``ORPHAN_TTL_S`` — a writer that
+        crashed before its commit — is swept too; the age gate keeps a
+        concurrent IN-FLIGHT writer's staged dir. Only table-relative
+        paths are deleted: an absolute-URI add (a shallow clone)
+        references another table's file."""
         import time
 
-        now = time.time()
-        for entry in entries:
-            if not entry.startswith("v_") or entry in retained:
-                continue
-            p = os.path.join(table, entry)
-            try:
-                if now - os.path.getmtime(p) > self.ORPHAN_TTL_S:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-
-    @staticmethod
-    def _gc_dv_files(table: str, gone, retained) -> None:
-        """Delete the deletion-vector files the log snapshots of the
-        GC'd versions ``gone`` reference and no ``retained`` version's
-        snapshot does (both (version dir, log version) pairs from
-        ``_retained``). A file no commit has named is never touched:
-        an in-flight writer may be about to commit it."""
         from product_analytics_spark.sources import delta_log as dl
         from product_analytics_spark.sources import deletion_vectors as dvs
 
-        log = dl.DeltaLog(table)
+        def top(rel: str) -> str | None:
+            d = rel.split("/", 1)[0]
+            return d if d.startswith("v_") and "/" in rel else None
 
-        def referenced(runs) -> set[str]:
-            return {
-                dvs.dv_file_path(table, a["deletionVector"])
-                for _v, lv in runs
-                for a in log.snapshot(lv).files.values()
-                if (a.get("deletionVector") or {}).get("storageType") == "u"
-            }
+        def dv_file(action) -> str | None:
+            dv = action.get("deletionVector") or {}
+            return dvs.dv_file_path(table, dv) if dv.get("storageType") == "u" else None
 
-        try:
-            stale = referenced(gone)
-            if stale:
-                stale -= referenced(retained)
-        except dl.DeltaProtocolError:
-            return  # a snapshot the log can no longer rebuild: keep all
-        for p in stale:
+        live_dirs, now, sweep = {top(p) for p in live}, time.time(), set()
+        for entry in os.listdir(table):
+            try:
+                if entry.startswith("v_") and entry not in live_dirs and (
+                    now - os.path.getmtime(os.path.join(table, entry))
+                    > self.ORPHAN_TTL_S
+                ):
+                    sweep.add(entry)
+            except OSError:
+                pass
+        data_commit = any(a.get("add") or a.get("remove") for a in head[1])
+        if not (data_commit or sweep):
+            return
+        kept, removes = self._window(commits, head=head)
+        # every action, not one per path: a path's DV may differ
+        # between retained versions, and one DV file holds many paths'
+        retained = [*live.values(), *(rm for v in kept[1:] for rm in removes[v])]
+        refs = {a["path"] for a in retained}
+        ref_dvs = {dv_file(a) for a in retained}
+        for rm in removes[kept[0]] if data_commit else ():
+            p = rm["path"]
+            if dl.resolve_path(table, p) != os.path.join(table, p):
+                continue  # absolute URI: another table's file
+            dv = dv_file(rm)
+            if dv is not None and dv not in ref_dvs:
+                self._unlink(dv)
+            if p not in refs:
+                d, f = os.path.split(os.path.join(table, p))
+                self._unlink(os.path.join(d, f), os.path.join(d, f".{f}.crc"))
+                sweep.add(top(p))
+        for d in sweep - {top(p) for p in refs} - {None}:
+            shutil.rmtree(os.path.join(table, d), ignore_errors=True)
+
+    @staticmethod
+    def _unlink(*paths: str) -> None:
+        for p in paths:
             try:
                 os.unlink(p)
             except OSError:
@@ -2080,23 +2042,23 @@ class SnapshotStore:
     ):
         """The one optimistic transaction every writer commits through
         (Delta's one transaction around one log commit). Per attempt
-        the loop reads the snapshot version the commit will present
-        (``expected``: read fresh by default; ``overwrite`` passes its
-        caller's, ``UNCHECKED`` is last-writer-wins), allocates a
-        fresh ``v_<uuid>`` (``txn.vdir``) and calls ``attempt(txn)``.
-        The attempt plans against the snapshot, writes the version
-        dir, registers its overlapped futures and cache releases on
-        ``txn`` and returns a zero-arg callable that yields the
-        writer's result once the commit landed (or ends through
-        ``txn.no_commit``). The loop then joins the futures, adopts
-        the cdc stage and commits ``operation``.
+        the loop reads the log snapshot (``txn.snap``) and the version
+        the commit presents (``expected``: that snapshot's by default,
+        ``UNCHECKED`` is last-writer-wins), allocates a staging dir
+        ``v_<uuid>`` (``txn.vdir``) and calls ``attempt(txn)``, which
+        stages its new files, names the live files it replaces
+        (``txn.removes``), registers its futures and cache releases on
+        ``txn`` and returns a zero-arg callable yielding the writer's
+        result once the commit landed (or ends through
+        ``txn.no_commit``). The loop joins the futures, adopts the cdc
+        stage and commits ``operation``.
 
         Every failure first settles the futures and discards staged
         change files; the releases run last on every exit. Then:
 
-        * an attempt whose version the log already names has
-          committed — it is never deleted or retried;
-        * otherwise its uncommitted dir is removed, and
+        * an attempt whose log commit landed (``txn.committed``) is
+          never deleted or retried;
+        * otherwise its staging dir is removed, and
           ConstraintViolationError re-raises unchanged;
         * ConcurrentWriteError, or any failure while the log moved
           off the snapshot (a concurrent commit may have GC'd the
@@ -2105,29 +2067,40 @@ class SnapshotStore:
         * anything else is a genuine error and re-raises unchanged.
 
         ``materialize_dv`` (the raw-file rewriters): purge outstanding
-        deletion vectors before each attempt — those paths read data
-        files directly, so committing without applying the DVs would
+        deletion vectors before each attempt, or the rewrite would
         resurrect MoR-deleted rows."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        table = self.path(name)
+        log = dl.DeltaLog(table)
         last_err: ConcurrentWriteError | None = None
         for _ in range(max_retries):
-            if materialize_dv and self._has_dv(name):
+            commits = log._commits()
+            snap = log.snapshot(commits=commits) if commits else None
+            if materialize_dv and self._has_dv(name, snap):
                 self.purge_dv(name)
+                commits = log._commits()
+                snap = log.snapshot(commits=commits)
             txn = _Attempt(
-                self.path(name),
-                self.current_version(name) if expected is _READ else expected,
+                table, snap and snap.version if expected is _READ else expected, snap
             )
             try:
                 done = attempt(txn)
+                head = None
                 if txn.version is not None:
                     for fut in filter(None, txn.jobs):
                         fut.result()
                     self._adopt_cdc(name, txn.cdc)
-                    self._commit(
-                        name, txn.version,
+                    head = self._commit(
+                        name,
+                        txn.version,
                         expected_version=txn.expected,
                         operation=operation,
                         txn=txn,
                     )
+                    if head is None:  # nothing changed: nothing to keep
+                        shutil.rmtree(txn.vdir, ignore_errors=True)
+                        txn.live = dict(snap.files) if snap else {}
             except Exception as exc:
                 # Settle every overlapped job first (ADVICE r12): none
                 # may run on beside the cleanup or the retry, and their
@@ -2138,10 +2111,9 @@ class SnapshotStore:
                         fut.result()
                     except Exception:  # noqa: BLE001 — the primary error wins
                         pass
-                cur = self.current_version(name)
+                if txn.committed:
+                    raise
                 if txn.version is not None:
-                    if cur == txn.version:
-                        raise
                     shutil.rmtree(txn.vdir, ignore_errors=True)
                 if isinstance(exc, ConcurrentWriteError):
                     last_err = exc
@@ -2149,7 +2121,7 @@ class SnapshotStore:
                 if (
                     isinstance(exc, ConstraintViolationError)
                     or txn.expected is UNCHECKED
-                    or cur == txn.expected
+                    or self.current_version(name) == txn.expected
                 ):
                     raise
                 last_err = ConcurrentWriteError(
@@ -2298,138 +2270,92 @@ class SnapshotStore:
     def _delta_commit(
         self,
         name: str,
-        data: str,
-        operation: str = "WRITE",
         txn: _Attempt | None = None,
-    ) -> None:
-        """Emit one protocol-conformant ``_delta_log`` commit
-        reconciling the log's live file set against the data dir
-        ``data`` — the version being committed, or the current one for
-        appends and metadata-only commits. Called inside the commit
-        lock; the log's putIfAbsent is the commit point, so a refused
-        log commit moves nothing:
+        operation: str = "WRITE",
+        commits=None,
+    ):
+        """Emit one protocol-conformant ``_delta_log`` commit of the
+        attempt ``txn`` (None: a metaData-only commit) on top of the
+        log's latest version (``commits``: the caller's listing of the
+        log). Called inside the commit lock; the log's putIfAbsent is
+        the commit point, so a refused log commit moves nothing. The
+        commit names only what changed:
 
-        * adds    = files on disk the log doesn't know (stats from one
-                    footer read each — or REUSED, deletion vector
-                    included, from the prior add when the file is a
-                    hardlink of a live file (or of a file of
-                    ``txn.source``): same inode ⇒ same content ⇒ same
-                    stats, zero re-reads for the untouched side of a
-                    DML);
-        * removes = live log paths no longer in the data dir (the old
-                    version's files — still on disk for time travel
-                    until GC, exactly Delta's remove-then-VACUUM).
-
-        ``txn.deleted`` (a MoR DML's new positions by scanned file)
-        moves to the adds that hardlink those files: one new
-        deletion-vector file holds each such file's old positions ∪
-        its new ones; every other add keeps its descriptor.
+        * adds    = the files the attempt staged in ``txn.vdir`` (stats
+                    from one footer read each), plus ``txn.adds`` as
+                    they are (``restore``'s re-adds);
+        * removes = ``txn.removes``: every live file for a full
+                    replace (``_REPLACE_ALL``), else the named paths;
+        * ``txn.deleted`` (a MoR DML's new positions by scanned file):
+                    each such file is removed and re-added under the
+                    same path, stats and row ids copied, with one new
+                    deletion-vector file holding its old positions ∪
+                    its new ones. Every other live file keeps its add.
 
         metaData (Spark schemaString + partitionColumns) is emitted on
-        the first commit and re-emitted when the data files' arrow
-        schema fingerprint changes (schema evolution).
-
-        A version that lost every row (a COW delete of all rows of a
-        partitioned table, whose empty partitioned write leaves no
-        file) gets one zero-row file shaped like the table's first
-        live file, in the same hive dir — the zero-row file Spark
-        itself writes for an empty flat table. So every committed
-        version keeps a live add that names its dir. A new table's
-        empty partitioned first write (Spark writes no file for it)
-        gets one zero-row file of ``txn.written``, the DataFrame
-        written, at the version root, and its metaData schema from it
-        rather than from the files."""
+        the first commit and re-emitted when the staged files' arrow
+        schema fingerprint changes (schema evolution) or ``restore``
+        brings an earlier schema back. A new table whose first write
+        staged no file (an empty partitioned write) takes its schema
+        from ``txn.written``, the DataFrame written. Returns the
+        committed (version, actions) and sets ``txn.committed`` and
+        ``txn.live``; None when nothing changed."""
         import hashlib
         import json
 
         from product_analytics_spark.sources import delta_log as dl
 
         table = self.path(name)
-        txn = txn or _Attempt(table, UNCHECKED)  # an append or metadata commit
+        if txn is None:  # a metaData-only commit stages nothing
+            txn = _Attempt(table)
+            txn.version = None
         written = txn.written
         log = dl.DeltaLog(table, owner=self.commit_owner)
-        latest = log.latest_version()
-        prev = log.snapshot(latest) if latest is not None else None
+        if commits is None:
+            commits = log._commits()
+        latest = commits[-1][0] if commits else None
+        prev = log.snapshot(latest, commits=commits) if latest is not None else None
+        live = prev.files if prev is not None else {}
 
-        parts = self._partition_dirs(data)
-        empty_first = not parts and prev is None and written is not None
-        if empty_first:
-            written.limit(0).coalesce(1).write.mode("append").parquet(data)
-            parts = self._partition_dirs(data)
-        elif not parts and prev is not None and prev.files:
-            import pyarrow.parquet as pq
-
-            src = min(prev.files)
-            sub = os.path.dirname(
-                src.split("/", 1)[1] if self._version_of(src) else src
-            )
-            os.makedirs(os.path.join(data, sub), exist_ok=True)
-            pq.write_table(
-                pq.read_schema(os.path.join(table, src)).empty_table(),
-                os.path.join(data, sub, "part-00000-empty.parquet"),
-            )
-            parts = self._partition_dirs(data)
-        part_cols = self._partition_cols(parts)
-        disk: dict[str, str] = {}  # rel path from TABLE root -> abs
-        for _rel, files in parts:
-            for f in files:
-                disk[os.path.relpath(f, table).replace(os.sep, "/")] = f
-
-        old_by_ino: dict[int, dict] = {}
-        for snap in [s for s in (prev, txn.source) if s is not None]:
-            for rel, add in snap.files.items():
-                try:
-                    old_by_ino[os.stat(os.path.join(table, rel)).st_ino] = add
-                except OSError:
-                    pass
-        deleted_by_ino = {
-            os.stat(dl.resolve_path(table, f)).st_ino: ris
-            for f, ris in txn.deleted.items()
-        }
-
-        actions: list[dict] = []
-        new_adds: list[dict] = []
-        gained: dict[str, tuple] = {}  # rel -> (add, its old rel, new positions)
-        first_abs = next(iter(disk.values()), None)
-        for rel in sorted(disk):
-            if prev is not None and rel in prev.files:
-                continue  # already live (append case)
-            abs_p = disk[rel]
-            try:
-                ino = os.stat(abs_p).st_ino
-            except OSError:
-                ino = None
-            old = old_by_ino.get(ino)
-            if old is not None and "stats" in old:
-                add = dict(old)
-                add["path"] = rel
-                add["partitionValues"] = dl._partition_values(rel)
-            else:
-                add = dl.make_add(table, abs_p)
-            if ino in deleted_by_ino:
-                gained[rel] = (add, (old or {}).get("path"), deleted_by_ino.pop(ino))
-            new_adds.append(add)
-        if deleted_by_ino:
+        staged: list[str] = []
+        if txn.version is not None:
+            for root, dirs, files in os.walk(txn.vdir):
+                dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+                staged += (
+                    os.path.join(root, f)
+                    for f in sorted(files)
+                    if f.endswith(".parquet") and not f.startswith((".", "_"))
+                )
+        new_adds = [dl.make_add(table, f) for f in staged]
+        removed = set(live) if txn.removes is _REPLACE_ALL else set(txn.removes)
+        if removed - set(live):
             raise dl.DeltaProtocolError(
-                f"table {name!r}: deleted rows of {len(deleted_by_ino)} "
+                f"table {name!r}: commit removes {len(removed - set(live))} "
                 "file(s) not in the committed version"
             )
+        new_adds += (dict(a) for a in txn.adds)
 
-        if gained:
+        gained: dict[str, list[int]] = {}
+        if txn.deleted:
             from product_analytics_spark.sources import (
                 deletion_vectors as dvs,
             )
 
+            by_uri = {dl.file_uri(dl.resolve_path(table, rel)): rel for rel in live}
+            unknown = set(txn.deleted) - set(by_uri)
+            if unknown:
+                raise dl.DeltaProtocolError(
+                    f"table {name!r}: deleted rows of {len(unknown)} "
+                    "file(s) not in the committed version"
+                )
             # the old positions as the DML's scan decoded them
             old_positions = self._dv_positions(table, prev)[0]
-            descriptors = dvs.write_dv_file(
-                table,
-                {
-                    rel: sorted(set(new).union(old_positions.get(old_rel, ())))
-                    for rel, (_add, old_rel, new) in gained.items()
-                },
-            )
-            for rel, (add, _old_rel, _new) in gained.items():
+            for f, ris in txn.deleted.items():
+                rel = by_uri[f]
+                gained[rel] = sorted(set(ris).union(old_positions.get(rel, ())))
+            descriptors = dvs.write_dv_file(table, gained)
+            for rel in sorted(gained):
+                add = dict(live[rel], dataChange=True)
                 add["deletionVector"] = descriptors[rel]
                 # stats still describe the PHYSICAL file, so bounds
                 # are wide over the live rows: declare tightBounds
@@ -2441,12 +2367,25 @@ class SnapshotStore:
                     add["stats"] = json.dumps(
                         st, separators=(",", ":"), sort_keys=True
                     )
+                new_adds.append(add)
+            removed |= set(gained)
+        new_adds.sort(key=lambda a: a["path"])
+        source_meta = txn.source.metadata if txn.source is not None else None
+        if staged:
+            part_cols = list(new_adds[0].get("partitionValues") or {})
+        else:
+            part_cols = list(
+                ((source_meta or (prev.metadata if prev else None)) or {}).get(
+                    "partitionColumns"
+                )
+                or ()
+            )
+        actions: list[dict] = []
 
         # Row tracking: allocate fresh baseRowId ranges for files the
-        # snapshot hasn't seen. Hardlinked COW/MoR copies INHERIT
-        # their range via the inode-reuse add copy above (same inode
-        # ⇒ same rows ⇒ same ids); only genuinely new files draw from
-        # the high-water mark, which advances in the same commit's
+        # snapshot hasn't seen. Re-added files (a MoR DML's new
+        # deletion vector, restore) carry their old add's range; only
+        # genuinely new files draw from the high-water mark, which advances in the same commit's
         # domainMetadata action (Delta PROTOCOL.md "Row Tracking").
         rt_enabled = prev is not None and prev.row_tracking_enabled()
         rt_domain_action = None
@@ -2489,7 +2428,11 @@ class SnapshotStore:
                 dl.MATERIALIZED_ROW_COMMIT_COL,
             )
         schema_hash = None
-        if first_abs is not None:
+        if source_meta is not None:
+            schema_hash = (source_meta.get("configuration") or {}).get(
+                "engine.arrowSchemaHash"
+            )
+        elif staged:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
@@ -2498,7 +2441,7 @@ class SnapshotStore:
             # — only names/types should fingerprint the schema. The
             # materialized row-id columns are PHYSICAL, not logical —
             # excluded, or the fingerprint would flap per-file.
-            sch_obj = pq.read_schema(first_abs).remove_metadata()
+            sch_obj = pq.read_schema(staged[0]).remove_metadata()
             if rt_phys_cols:
                 sch_obj = pa.schema(
                     [f for f in sch_obj if f.name not in rt_phys_cols]
@@ -2551,14 +2494,15 @@ class SnapshotStore:
                             "delta.identity.highWaterMark"
                         ),
                     }
+        reshaped = prev is None or not prev.metadata or (
+            schema_hash is not None
+            and prev_conf.get("engine.arrowSchemaHash") not in (None, schema_hash)
+        ) or bool(
+            staged
+            and part_cols != list(prev.metadata.get("partitionColumns") or ())
+        )
         need_meta = (
-            prev is None
-            or not prev.metadata
-            or (
-                schema_hash is not None
-                and prev_conf.get("engine.arrowSchemaHash")
-                not in (None, schema_hash)
-            )
+            reshaped
             or (
                 dv_enabled
                 and prev_conf.get("delta.enableDeletionVectors") != "true"
@@ -2640,24 +2584,26 @@ class SnapshotStore:
                 # changes on such tables need explicit DDL (Delta's
                 # rule too) — keep the previous logical schemaString.
                 schema_json = prev.metadata["schemaString"]
+            elif source_meta is not None:
+                # restore: the target version's schema comes back
+                schema_json = _table_schema(source_meta).json()
+            elif not reshaped:
+                # the files' schema is unchanged: the logged one, less
+                # the field metadata re-derived below
+                schema_json = _table_schema(prev.metadata).json()
+            elif not staged:
+                # a new table whose first write staged no file: the
+                # files' schema is the written one, made nullable as a
+                # parquet read makes it
+                schema_json = _nullable(written.schema).json()
             else:
-                # NOT routed through the _read_version_dir memo
-                # (round-13, examined and left): this branch runs
-                # exactly when the files' schema may have CHANGED
-                # (fingerprint drift), and append writes into the
-                # live data dir in place — a memoized schema here
-                # could be the pre-append one. Fresh inference is the
-                # correct ~80 ms.
+                # this branch runs exactly when the files' schema may
+                # have CHANGED (fingerprint drift): infer it from the
+                # staged files
                 reader = self.spark.read
                 if rt_marker:
                     reader = reader.option("mergeSchema", "true")
-                if empty_first:
-                    # the zero-row first version (above): the files'
-                    # schema is the written one, made nullable as a
-                    # parquet read makes it
-                    schema_json = _nullable(written.schema).json()
-                else:
-                    schema_json = reader.parquet(data).schema.json()
+                schema_json = reader.parquet(txn.vdir).schema.json()
             if rt_phys_cols:
                 # the materialized row-id columns live in the FILES,
                 # never in the logical schema (Delta hides them too)
@@ -2738,12 +2684,15 @@ class SnapshotStore:
         if rearrange_only:
             for a in new_adds:
                 a["dataChange"] = False
-        if prev is not None:
-            for rel in sorted(set(prev.files) - set(disk)):
-                rm = dl.make_remove(rel)
-                if rearrange_only:
-                    rm["dataChange"] = False
-                actions.append({"remove": rm})
+        for rel in sorted(removed):
+            rm = dl.make_remove(rel)
+            if live[rel].get("deletionVector"):
+                # (path, deletion vector) names a file's state: the
+                # remove retires this one, GC frees its DV file
+                rm["deletionVector"] = live[rel]["deletionVector"]
+            if rearrange_only:
+                rm["dataChange"] = False
+            actions.append({"remove": rm})
         actions.extend({"add": a} for a in new_adds)
         if rt_domain_action is not None:
             actions.append(rt_domain_action)
@@ -2784,16 +2733,20 @@ class SnapshotStore:
         if prev is not None and not any(
             k in a for a in actions for k in ("add", "remove", "metaData", "cdc")
         ):
-            return  # nothing changed — no empty commits
-        log.commit(
+            return None  # nothing changed — no empty commits
+        version = log.commit(
             actions,
             version=0 if latest is None else latest + 1,
             operation=operation,
         )
+        txn.committed = True
+        txn.live = {p: a for p, a in live.items() if p not in removed}
+        txn.live.update((a["path"], a) for a in new_adds)
         # Only a landed commit adopts the staged change files: after a
         # refused one they stay pending, so the writer's abort unlinks
         # them instead of leaving orphans for VACUUM.
         self._cdc_pending(name).clear()
+        return version, actions
 
     def delta_snapshot(self, name: str, version: int | None = None):
         """The table's Delta snapshot (live file set + metadata) at a
@@ -2827,44 +2780,24 @@ class SnapshotStore:
         data-skipping scan): prune via ``scan_files``, then load
         exactly those files. The caller still applies the row-level
         filter — file pruning is a superset guarantee, same contract
-        as Delta/Iceberg. Partition columns come back as string
-        literals from the log's partitionValues. Files with
-        ``deletionVector`` descriptors have their tombstoned
-        positions anti-joined out (``dl.apply_dv_filter``, decoded
-        from the roaring-bitmap files), so pruned reads never
-        resurrect MoR-deleted rows."""
+        as Delta/Iceberg. The kept files are read as ``_grouped_read``
+        groups, partition columns as the raw strings of their hive
+        values. Files with ``deletionVector`` descriptors have their
+        tombstoned positions anti-joined out once above the groups'
+        union (``dl._dv_anti_join``), so pruned reads never resurrect
+        MoR-deleted rows."""
         from product_analytics_spark.sources import delta_log as dl
 
         snap = self.delta_snapshot(name, version)
         kept = snap.plan_files(list(conjuncts))
-        table = self.path(name)
-        part_cols = (snap.metadata or {}).get("partitionColumns") or []
         if not kept:
-            schema = _logged_schema(snap.metadata or {}) or self.spark.read.parquet(
-                self.current_data_dir(name)
-            ).schema
+            schema = _logged_schema(snap.metadata or {}) or self._scan(name, snap).schema
             return self.spark.createDataFrame([], schema)
-        pos_df = dl.dv_positions_df(self.spark, table, snap.dv_positions(table))
-        if not part_cols:
-            df = self.spark.read.parquet(
-                *[os.path.join(table, p) for p in kept]
-            )
-            return dl.apply_dv_filter(df, pos_df)
-        groups: dict[tuple, list[str]] = {}
-        for p in kept:
-            pv = snap.files[p].get("partitionValues") or {}
-            key = tuple(pv.get(c) for c in part_cols)
-            groups.setdefault(key, []).append(p)
-        out = None
-        for key in sorted(groups, key=lambda k: tuple(str(x) for x in k)):
-            df = self.spark.read.parquet(
-                *[os.path.join(table, p) for p in groups[key]]
-            )
-            df = dl.apply_dv_filter(df, pos_df)
-            for c, v in zip(part_cols, key):
-                df = df.withColumn(c, F.lit(v).cast("string"))
-            out = df if out is None else out.unionByName(df)
-        return out
+        table, has_dv = self.path(name), self._has_dv(name, snap)
+        out = self._grouped_read(table, snap, kept, lambda r: r, has_dv, raw=True)
+        if not has_dv:
+            return out
+        return dl._dv_anti_join(out, self._dv_positions(table, snap)[1])
 
     # ---------------------------------------------------------- sinks
 
@@ -2882,7 +2815,7 @@ class SnapshotStore:
         _validate: bool = True,
         _generated_applied: bool = False,
     ) -> None:
-        """Atomic full replace: write a version dir, commit it to the log.
+        """Atomic full replace: stage the files, commit them to the log.
 
         ``zorder_by`` lays the files out on the multi-column Morton
         curve (see ``_write_version``) — the ``OPTIMIZE ZORDER BY``
@@ -2938,7 +2871,7 @@ class SnapshotStore:
         overlapped on ``txn``); returns the post-commit step that
         records the layout and advances the identity high-water
         mark."""
-        if operation != "OPTIMIZE" and self.current_data_dir(name) is not None:
+        if operation != "OPTIMIZE" and txn.snap is not None:
             # Replacing an EXISTING table's rows removes data —
             # forbidden on an append-only table (PROTOCOL.md). The
             # initial write and rearrange-only rewrites (purge_dv's
@@ -2975,9 +2908,10 @@ class SnapshotStore:
 
             zorder_depth = choose_equal_depth(df, list(zorder_by))
         txn.written = df
+        txn.removes = _REPLACE_ALL
         txn.version = self._write_version(
             name,
-            df,
+            self._to_physical(txn.snap, df),
             partition_by=partition_by,
             cluster_by=cluster_by,
             zorder_by=zorder_by,
@@ -3006,12 +2940,11 @@ class SnapshotStore:
     def append(self, name: str, df: DataFrame, partition_by: Sequence[str] = ()) -> None:
         """S5: plain append materialization.
 
-        Appends land in the current committed data dir (or the plain
-        table dir on first write). Appends are NOT atomic — matching
-        dbt's default incremental behavior; use merge/overwrite for
-        transactional semantics.
-        """
-        self._assert_coordinator_routed(name)
+        The new rows are staged in their own ``v_`` dir and committed
+        through :meth:`_transact` as adds only (last-writer-wins: an
+        append conflicts with nobody), so an append is atomic — a
+        refused log commit leaves no row readable and no file on
+        disk."""
         df = self._apply_identity(name, df)
         df = self._apply_generated(name, df)
         self._validate_constraints(name, df)
@@ -3032,55 +2965,27 @@ class SnapshotStore:
                 if partition_by
                 else df.coalesce(1)
             )
-        data = self.current_data_dir(name) or self.path(name)
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data)
-        # An append IS a commit in Delta terms: add actions for the
-        # new files (reconciled: disk minus log-live), no removes.
-        with self._commit_lock(name):
-            self._delta_commit(
-                name, self.current_data_dir(name) or data, operation="WRITE"
-            )
+
+        def attempt(txn: _Attempt):
+            # a partitioned table's appends take its partitioning
+            parts = list(partition_by) or self._part_cols(txn.snap)
+            writer = self._to_physical(txn.snap, df).write.mode("append")
+            if parts:
+                writer = writer.partitionBy(*parts)
+            writer.parquet(txn.vdir)
+            txn.written = df
+            return lambda: None
+
+        self._transact(name, attempt, "append", "WRITE", 1, expected=UNCHECKED)
         self._maybe_auto_compact(name)
-
-    def _assert_coordinator_routed(self, name: str) -> None:
-        """Coordinated-commits FAIL-FAST for the in-place append
-        path (found by the q476 composition capstone): ``append``
-        writes parquet into the CURRENT data dir before the log
-        commit, so letting ``DeltaLog.commit`` refuse afterwards
-        leaves orphaned data files that the next writer's
-        disk-minus-log reconcile silently ADOPTS — committing rows a
-        writer was just told it could not commit. Check the table's
-        coordinator declaration BEFORE any byte lands."""
-        from product_analytics_spark.sources import delta_log as dl
-
-        try:
-            conf = (
-                self.delta_snapshot(name).metadata or {}
-            ).get("configuration") or {}
-        except Exception:  # noqa: BLE001 — no log yet: nothing declared
-            return
-        declared = conf.get(dl.COMMIT_COORDINATOR_PROP)
-        if declared and (
-            getattr(self.commit_owner, "coordinator_name", None)
-            != declared
-        ):
-            raise dl.DeltaProtocolError(
-                f"table {name!r} commits are owned by coordinator "
-                f"{declared!r} ({dl.COMMIT_COORDINATOR_PROP}): "
-                "configure SnapshotStore(commit_owner=...) with that "
-                "coordinator; nothing written"
-            )
 
     def _maybe_auto_compact(self, name: str) -> None:
         """``delta.autoOptimize.autoCompact`` (delta.io auto
         optimize): after an append, any partition that accumulated
         ``engine.autoCompact.minNumFiles`` (default 8) or more files
         is compacted INLINE through the partition-scoped
-        :meth:`optimize` — the cold partitions ride along by
-        hardlink, and the compaction commit is rearrange-only
+        :meth:`optimize` — the cold partitions keep their adds, and
+        the compaction commit is rearrange-only
         (``dataChange: false``), so change feeds and streams see
         nothing. This is the writer-side half of small-file hygiene:
         the scheduled OPTIMIZE job stops being load-bearing for
@@ -3094,20 +2999,20 @@ class SnapshotStore:
             )
         except (TypeError, ValueError):
             min_files = 8
-        data = self.current_data_dir(name)
-        if data is None:
+        snap = self._snapshot(name)
+        if snap is None:
             return
-        parts = self._partition_dirs(data)
-        hot = [rel for rel, fs in parts if len(fs) >= max(2, min_files)]
+        hot = [
+            pv for pv, fs in self._partitions(snap).items()
+            if len(fs) >= max(2, min_files)
+        ]
         if not hot:
             return
-        if "." in hot:
+        if hot == [()]:
             self.optimize(name)  # flat table: whole-table compaction
             return
-        for rel in hot:
-            self.optimize(
-                name, where=dict(self._partition_literals(rel))
-            )
+        for pv in hot:
+            self.optimize(name, where=dict(pv))
 
     def merge(
         self,
@@ -3151,7 +3056,7 @@ class SnapshotStore:
         keys_l = [key] if isinstance(key, str) else list(key)
 
         def attempt(txn: _Attempt):
-            prev = self.read(name)
+            prev = self._live(name, txn.snap)
             batch_eff = (
                 self._identity_merge_batch(name, prev, batch, keys_l)
                 if self.identity_columns(name)
@@ -3200,19 +3105,22 @@ class SnapshotStore:
                 # files.
                 txn.cdc = self._stage_cdc_async(
                     name,
-                    prev.join(bkeys, keys_l, "left_semi")
-                    .withColumn(ct, F.lit("update_preimage"))
-                    .unionByName(
-                        batch_eff.join(pkeys, keys_l, "left_semi").withColumn(
-                            ct, F.lit("update_postimage")
+                    self._to_physical(
+                        txn.snap,
+                        prev.join(bkeys, keys_l, "left_semi")
+                        .withColumn(ct, F.lit("update_preimage"))
+                        .unionByName(
+                            batch_eff.join(pkeys, keys_l, "left_semi").withColumn(
+                                ct, F.lit("update_postimage")
+                            ),
+                            allowMissingColumns=True,
+                        )
+                        .unionByName(
+                            batch_eff.join(pkeys, keys_l, "left_anti").withColumn(
+                                ct, F.lit("insert")
+                            ),
+                            allowMissingColumns=True,
                         ),
-                        allowMissingColumns=True,
-                    )
-                    .unionByName(
-                        batch_eff.join(pkeys, keys_l, "left_anti").withColumn(
-                            ct, F.lit("insert")
-                        ),
-                        allowMissingColumns=True,
                     ),
                 )
             finish = self._stage_overwrite(
@@ -3261,52 +3169,53 @@ class SnapshotStore:
 
     # ----------------------------------------------------- compaction
 
-    def _partition_dirs(self, data: str) -> list[tuple[str, list[str]]]:
-        """Every directory under ``data`` that holds parquet files, as
-        (relative subdir, sorted file paths) pairs in deterministic
-        order. Flat tables yield one ``(".", files)`` pair; hive-
-        partitioned tables yield one pair per leaf partition directory
-        (``order_year=1996/order_month=3``). Hidden/metadata entries
-        (``_SUCCESS``, ``.crc``, sidecars) are skipped."""
-        out: list[tuple[str, list[str]]] = []
-        for root, dirs, files in os.walk(data):
-            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
-            pq = sorted(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            if pq:
-                out.append((os.path.relpath(root, data), pq))
-        return sorted(out)
-
     def plan_compaction(
         self, name: str, target_bytes: int = 128 << 20
     ) -> list[list[str]]:
-        """Bin-pack the current version's parquet files into
-        target-size rewrite groups — the q199 planner applied to the
-        REAL file manifest: files in deterministic (path) order,
-        group = cumulative-size-before div target (≤2x worst-case
-        overshoot, the bound file compactors accept). Pure metadata:
-        |files| rows, no data read.
+        """Bin-pack the current version's files into target-size
+        rewrite groups (absolute paths) — the q199 planner over the
+        log's adds: files in path order, group = cumulative size
+        before div target (≤2x worst-case overshoot), from the adds'
+        ``size`` alone (no data read, no listing). A group never mixes
+        two hive partitions: their values live in the directory name,
+        so a cross-partition rewrite would lose them (Delta OPTIMIZE
+        is within-partition too)."""
+        from product_analytics_spark.sources import delta_log as dl
 
-        Partitioned tables are planned PER PARTITION DIRECTORY — a
-        group never mixes files from two hive partitions, because the
-        partition-column values live in the directory name, not the
-        files, so a cross-partition rewrite would lose them (exactly
-        what Delta OPTIMIZE does: compaction is within-partition)."""
-        data = self.current_data_dir(name)
-        if data is None:
-            return []
+        snap = self._snapshot(name)
+        table = self.path(name)
+        return [
+            [dl.resolve_path(table, rel) for rel in group]
+            for group in self._bin_pack(snap, target_bytes)
+        ]
+
+    @classmethod
+    def _bin_pack(cls, snap, target_bytes: int) -> list[list[str]]:
+        """``plan_compaction``'s groups, as add paths of ``snap``."""
         plan: list[list[str]] = []
-        for _rel, files in self._partition_dirs(data):
+        if snap is None:
+            return plan
+        for rels in cls._partitions(snap).values():
             groups: dict[int, list[str]] = {}
             before = 0
-            for f in files:
-                groups.setdefault(before // target_bytes, []).append(f)
-                before += os.path.getsize(f)
+            for rel in rels:
+                groups.setdefault(before // target_bytes, []).append(rel)
+                before += int(snap.files[rel].get("size") or 0)
             plan.extend(groups[g] for g in sorted(groups))
         return plan
+
+    @staticmethod
+    def _hive_dir(vdir: str, table: str, rel: str, add: dict) -> str:
+        """Where a rewrite of the live file ``rel`` lands in the staging
+        dir ``vdir``: the same hive subdir it sits in (the dir-encoded
+        partition values survive the rewrite)."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        sub = os.path.relpath(
+            os.path.dirname(dl.resolve_path(table, rel)),
+            _base_dir(table, rel, add),
+        )
+        return vdir if sub == "." else os.path.join(vdir, sub)
 
     @staticmethod
     def _parallel_jobs(thunks, max_workers: int = 4) -> None:
@@ -3319,7 +3228,7 @@ class SnapshotStore:
         thunk writes a distinct output directory of the same
         uncommitted version. On failure every in-flight thunk still
         completes before the first exception propagates, so the
-        caller's cleanup (rmtree of the version dir) never races a
+        caller's cleanup (rmtree of the staging dir) never races a
         live write task."""
         thunks = list(thunks)
         if len(thunks) <= 1:
@@ -3350,6 +3259,22 @@ class SnapshotStore:
             for f in futs:
                 f.result()
 
+    def _raw_read(self, name: str, snap, rels: list[str]) -> DataFrame:
+        """The files ``rels`` of ``snap`` as they are on disk (no
+        deletion vector applied: the rewriters purge them first), one
+        scan. On a row-tracked table each row's id is materialized, so
+        a rewrite keeps it (a fresh baseRowId on the new file loses to
+        the materialized column at read) — Delta preserves ids through
+        OPTIMIZE the same way."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        table = self.path(name)
+        paths = [dl.resolve_path(table, rel) for rel in rels]
+        if not self._row_tracking(name):
+            return self.spark.read.parquet(*paths)
+        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._rt_attach_ids(name, dl._dv_tag(df), snap)
+
     def compact(
         self,
         name: str,
@@ -3358,67 +3283,37 @@ class SnapshotStore:
         post_scan=None,
     ) -> dict:
         """Execute the compaction plan (OPTIMIZE's rewrite half): each
-        planned group is rewritten as ONE file into a fresh version
-        dir, then the log commits it atomically — readers switch from
-        N small files to |groups| files in one rename, with the prior
-        version retained per the retention window (time travel to the
-        pre-compaction layout still works).
+        planned group is rewritten as ONE file into the attempt's
+        staging dir (a hive-partitioned group into its own partition
+        subdir, so the dir-encoded values survive), and the log commit
+        removes the group's files and adds the rewrites atomically; the
+        retention window keeps the pre-compaction version readable.
+        Contents are identical by construction: the groups partition
+        the file list and each rewrite is scan → coalesce(1) → write.
+        Returns {files_before, files_after, groups}.
 
-        Contents are hash-identical by construction: the groups
-        partition the file list, and each rewrite is a plain scan →
-        coalesce(1) → write of exactly those files. For hive-
-        partitioned tables each group is rewritten into the SAME
-        relative partition subdirectory inside the new version, so the
-        directory-encoded partition columns survive the rewrite and
-        read-back re-infers them unchanged. Returns
-        {files_before, files_after, groups} so callers can assert the
-        file-count drop.
-
-        Optimistic transaction: the commit presents the version whose
-        file manifest was planned; if a writer (merge/overwrite/DML)
-        committed in between, the stale rewrite is discarded and the
-        compaction REPLANS against the new manifest (up to
-        ``max_retries``) — blind commit would resurrect rows the
-        concurrent writer deleted or drop rows it merged (lost
-        update). Delta's OPTIMIZE resolves the same conflict the same
-        way: rewrite-only transactions retry cheaply.
-
-        ``post_scan`` (optional zero-arg callable) is a fault-injection
-        point fired after each attempt's manifest plan and before its
-        commit — interleaving tests use it to land a concurrent commit
-        inside the window the OCC check must catch."""
+        Optimistic transaction: if a writer committed after the plan,
+        the rewrite is discarded and compaction REPLANS against the new
+        manifest (up to ``max_retries``) — a blind commit would
+        resurrect rows that writer deleted or drop rows it merged;
+        Delta's OPTIMIZE retries the same way. ``post_scan`` fires
+        after each attempt's plan, before its commit, so tests can land
+        a concurrent commit inside the window the check must catch."""
 
         def attempt(txn: _Attempt):
-            # The attempt covers the SCAN phase too (plan_compaction's
-            # getsize walk), not just the rewrite: with a small
-            # retention window a concurrent commit can GC the scanned
-            # version mid-plan, and that must surface as a conflict
-            # retry, not a raw OSError (ADVICE r8).
-            plan = self.plan_compaction(name, target_bytes)
+            snap, table = txn.snap, self.path(name)
+            plan = self._bin_pack(snap, target_bytes)
             if post_scan is not None:
                 post_scan()
             if not plan:
                 return txn.no_commit(
                     {"files_before": 0, "files_after": 0, "groups": 0}
                 )
-            data = self.current_data_dir(name)
-            assert data is not None  # plan non-empty ⇒ data exists
-            rt = self._row_tracking(name)
-            rt_base = self._rt_base_df(name) if rt else None
             vdir = txn.vdir
 
             def _rewrite_group(group: list[str]) -> None:
-                rel = os.path.relpath(os.path.dirname(group[0]), data)
-                out_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                reader = self.spark.read
-                if rt:
-                    reader = reader.option("mergeSchema", "true")
-                df = reader.parquet(*group)
-                if rt:
-                    # materialize ids so the merged file keeps them
-                    # (fresh baseRowIds on the new file lose to the
-                    # materialized column via coalesce at read)
-                    df = self._rt_attach_ids(name, df, base_df=rt_base)
+                out_dir = self._hive_dir(vdir, table, group[0], snap.files[group[0]])
+                df = self._raw_read(name, snap, group)
                 # Groups of one directory share out_dir, and two
                 # concurrent append jobs into one directory race on
                 # the commit protocol's shared _temporary/0 staging
@@ -3439,11 +3334,10 @@ class SnapshotStore:
             self._parallel_jobs(
                 [(lambda g: lambda: _rewrite_group(g))(group) for group in plan]
             )
+            txn.removes = [rel for group in plan for rel in group]
             return lambda: {
-                "files_before": sum(len(g) for g in plan),
-                "files_after": sum(
-                    len(fs) for _r, fs in self._partition_dirs(vdir)
-                ),
+                "files_before": len(txn.removes),
+                "files_after": sum(p.startswith(txn.version + "/") for p in txn.live),
                 "groups": len(plan),
             }
 
@@ -3460,33 +3354,19 @@ class SnapshotStore:
         where: dict | None = None,
     ) -> dict:
         """Delta's ``OPTIMIZE [ZORDER BY …]`` proper: compaction that
-        RESTORES the table's declared clustering. Appends and COW
-        rewrites degrade a clustered layout over time (new files carry
-        arbitrary key ranges, so footer-stat skipping decays);
-        ``compact`` alone bin-packs file bytes but concatenates key
-        ranges. optimize() instead rewrites each partition directory
-        as a whole: re-sorts on the recorded layout keys
-        (``zorder_by`` → recomputed Morton z-value; else
-        ``cluster_by``), range-partitioned into ceil(bytes/target)
-        files — tight per-file min/max again. Falls back to plain
+        RESTORES the table's declared clustering (appends and COW
+        rewrites add files with arbitrary key ranges, so stat skipping
+        decays; ``compact`` alone concatenates key ranges). Each
+        partition is rewritten as a whole, re-sorted on the layout keys
+        (``zorder_by`` → Morton z-value, else ``cluster_by``) and
+        range-partitioned into ceil(bytes/target) files. Falls back to
         ``compact`` when the table never declared clustering.
-
-        Optimistic transaction like compact: the commit presents the
-        scanned version; a concurrent writer forces a re-scan.
-        Returns {files_before, files_after, reclustered}.
+        Optimistic like compact. Returns {files_before, files_after,
+        reclustered}.
 
         ``where`` ({partition col -> value}) is ``OPTIMIZE t WHERE
-        p = v``: only matching hive partition dirs are rewritten;
-        everything else is carried into the new version by HARDLINK
-        (zero bytes moved, same inodes) — at 100 TB you compact the
-        hot day's partition, never the table.
-
-        Scale: this is the maintenance job real lakehouses schedule —
-        cost is one shuffle of the rewritten partitions' bytes on the
-        cluster key; without ``where``, untouched partition dirs
-        rewrite too, where Delta would skip dirs already within
-        tolerance (the planner hook to add when partition counts make
-        it matter)."""
+        p = v``: only matching hive partitions are rewritten; every
+        other file keeps its add (zero bytes moved, nothing logged)."""
         # Liquid clustering: keys declared IN THE LOG
         # (``delta.clustering`` domainMetadata, set_clustering) take
         # precedence over the engine-local _LAYOUT declaration — any
@@ -3515,35 +3395,23 @@ class SnapshotStore:
         zdepth = bool(layout.get("zorder_depth"))
 
         def attempt(txn: _Attempt):
-            # Scan phase inside the attempt: getsize/walk over a
-            # snapshot a concurrent commit may GC mid-scan must become
-            # a conflict retry, not a raw OSError (ADVICE r8).
-            data = self.current_data_dir(name)
-            if data is None:
+            snap, table = txn.snap, self.path(name)
+            if snap is None:
                 raise ValueError(f"unknown table {name!r}")
-            parts = self._partition_dirs(data)
-            if not parts:
+            if not snap.files:
                 return txn.no_commit(
                     {"files_before": 0, "files_after": 0, "reclustered": False}
                 )
-            rt = self._row_tracking(name)
-            rt_base = self._rt_base_df(name) if rt else None
             vdir = txn.vdir
 
-            def _recluster_dir(rel: str, files: list[str]) -> None:
-                out_dir = vdir if rel == "." else os.path.join(vdir, rel)
+            def _recluster(rels: list[str]) -> None:
+                out_dir = self._hive_dir(vdir, table, rels[0], snap.files[rels[0]])
                 n_files = max(
                     1,
-                    -(-sum(os.path.getsize(f) for f in files) // target_bytes),
+                    -(-sum(int(snap.files[r].get("size") or 0) for r in rels)
+                      // target_bytes),
                 )
-                reader = self.spark.read
-                if rt:
-                    reader = reader.option("mergeSchema", "true")
-                df = reader.parquet(*files)
-                if rt:
-                    # recluster preserves row identity by
-                    # materializing ids into the rewritten files
-                    df = self._rt_attach_ids(name, df, base_df=rt_base)
+                df = self._raw_read(name, snap, rels)
                 if zorder:
                     from product_analytics_spark.functions.zorder import (
                         morton_zvalue,
@@ -3568,34 +3436,27 @@ class SnapshotStore:
                     df = df.drop("__zval")
                 df.write.mode("append").parquet(out_dir)
 
-            rewrites = []
-            for rel, files in parts:
-                if where is not None and not all(
-                    (k, str(v)) in self._partition_literals(rel)
-                    for k, v in where.items()
-                ):
-                    # OPTIMIZE ... WHERE: partitions outside the
-                    # predicate are carried by HARDLINK — zero bytes
-                    # moved, same inodes (Delta skips untouched
-                    # partitions the same way; at 100 TB you compact
-                    # the hot day's partition, never the table)
-                    self._link_files(vdir, rel, files)
-                    continue
-                rewrites.append(
-                    (lambda r, fs: lambda: _recluster_dir(r, fs))(
-                        rel, list(files)
-                    )
-                )
-            # per-directory stats pass + sorted rewrite are independent
-            # jobs — overlap them (guide §2.6); the per-directory
+            # OPTIMIZE ... WHERE: partitions outside the predicate keep
+            # their adds — zero bytes moved, nothing logged (Delta skips
+            # untouched partitions the same way; at 100 TB you compact
+            # the hot day's partition, never the table)
+            parts = [
+                rels
+                for pv, rels in self._partitions(snap).items()
+                if where is None
+                or all((k, str(v)) in pv for k, v in where.items())
+            ]
+            # per-partition stats pass + sorted rewrite are independent
+            # jobs — overlap them (guide §2.6); the per-partition
             # z-value/lane stats are unchanged, so file layouts and
             # skipping stats stay identical.
-            self._parallel_jobs(rewrites)
+            self._parallel_jobs(
+                [(lambda rs: lambda: _recluster(rs))(rels) for rels in parts]
+            )
+            txn.removes = [rel for rels in parts for rel in rels]
             return lambda: {
-                "files_before": sum(len(fs) for _r, fs in parts),
-                "files_after": sum(
-                    len(fs) for _r, fs in self._partition_dirs(vdir)
-                ),
+                "files_before": len(snap.files),
+                "files_after": len(txn.live),
                 "reclustered": bool(keys),
             }
 
@@ -3606,32 +3467,10 @@ class SnapshotStore:
 
     # ------------------------------------------- copy-on-write DML
 
-    @classmethod
-    def _partition_cols(cls, parts) -> list[str]:
-        """Hive partition columns of a ``_partition_dirs`` listing, in
-        first-seen order ([] for a flat table)."""
-        return list(
-            dict.fromkeys(
-                c for rel, _fs in parts for c, _v in cls._partition_literals(rel)
-            )
-        )
-
-    @staticmethod
-    def _link_files(vdir: str, rel: str, files: Sequence[str]) -> int:
-        """Hardlink ``files`` (same basenames) into the ``rel`` subdir
-        of version dir ``vdir``, creating it even when ``files`` is
-        empty: an untouched data file carried into a new version costs
-        one metadata op, zero bytes. Returns the link count."""
-        out_dir = vdir if rel == "." else os.path.join(vdir, rel)
-        os.makedirs(out_dir, exist_ok=True)
-        for f in files:
-            os.link(f, os.path.join(out_dir, os.path.basename(f)))
-        return len(files)
-
     def _write_appended(
         self, vdir: str, df: DataFrame, part_cols: Sequence[str]
     ) -> None:
-        """Append ``df`` as new files of version dir ``vdir``
+        """Append ``df`` as new files of staging dir ``vdir``
         (hive-partitioned by ``part_cols`` when given) — the MoR DMLs'
         O(changed rows) data write."""
         if part_cols:
@@ -3645,18 +3484,6 @@ class SnapshotStore:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(vdir)
 
-    @staticmethod
-    def _partition_literals(rel: str) -> list[tuple[str, str]]:
-        """Decode a hive-relative path ('event_type=click/…') into
-        (column, string-value) pairs; flat tables ('.') decode to []."""
-        if rel == ".":
-            return []
-        out = []
-        for seg in rel.split(os.sep):
-            col, _, val = seg.partition("=")
-            out.append((col, val))
-        return out
-
     def _rewrite_where(
         self,
         name: str,
@@ -3668,72 +3495,64 @@ class SnapshotStore:
     ) -> dict:
         """Copy-on-write rewrite — the kernel under DELETE and UPDATE
         (Delta/Iceberg COW semantics): only files that CONTAIN a
-        matching row are rewritten; every untouched file is HARDLINKED
-        into the new version (zero data movement), and the log commit
-        flips readers atomically.
+        matching row are rewritten; every untouched file keeps its add
+        (zero data movement, nothing logged), and the log commit
+        removes the touched files and adds their rewrites atomically.
 
         Touched files are discovered by Spark itself: one filtered
-        scan projecting input_file_name() — partition pruning and
-        parquet row-group stats make this the cheap metadata-shaped
-        pass it is at any scale, and the driver receives a FILE
-        MANIFEST (|files| rows), not data (the documented
-        driver-scalar collect pattern). Each touched hive directory is
-        rewritten with its partition values injected as literals (the
-        dir name carries them, so predicates over partition columns
-        work), transformed, then written back into the same relative
-        subdir with the partition columns dropped again.
+        scan projecting input_file_name() that also counts the rows —
+        partition pruning and row-group stats keep it cheap, and the
+        driver receives a FILE MANIFEST (|files| rows), never data.
+        The touched files are read back in one hive-aware read (their
+        partition values as the STRINGS the hive dirs hold),
+        transformed, validated and written in one partitioned write
+        into the staging dir.
 
         ``transform(df, pred_col)`` receives the file's rows plus the
         evaluated predicate column and returns the replacement rows.
-        Returns {files_total, files_rewritten, files_linked,
+        Returns {files_total, files_rewritten, files_kept,
         rows_before, rows_after}.
 
-        Optimistic transaction: the commit presents the version whose
-        files were scanned and hardlinked; if a writer committed in
-        between (merge/overwrite/compact), this rewrite is discarded
-        and the DML re-scans the NEW version (up to ``max_retries``) —
-        committing blind would resurrect that writer's deleted rows or
-        drop its merged ones (the lost-update VERDICT r7 flagged).
-
-        ``post_scan`` (optional zero-arg callable) is a fault-injection
-        point fired after each attempt's touched-file scan and before
-        its commit — interleaving certs (q413) land a concurrent merge
-        there to exercise the conflict-and-retry path deterministically.
-        """
+        Optimistic transaction: the commit presents the log version
+        whose files were scanned; if a writer committed in between,
+        this rewrite is discarded and the DML re-scans the NEW version
+        (up to ``max_retries``) — committing blind would resurrect
+        that writer's deleted rows or drop its merged ones.
+        ``post_scan`` (optional zero-arg callable) fires after each
+        attempt's touched-file scan and before its commit — the
+        interleaving certs (q413) land a concurrent merge there."""
         self._assert_appendable(name, "DELETE/UPDATE (COW rewrite)")
 
+        import json
+        from urllib.parse import unquote, urlparse
+
+        from pyspark.sql import types as T
+
+        from product_analytics_spark.sources import delta_log as dl
+
+        def local(uri: str) -> str:
+            # input_file_name() yields a percent-encoded file: URI;
+            # undecoded, hive values with encoded chars (space, %, #,
+            # non-ASCII) would escape the rewrite
+            parsed = urlparse(uri)
+            return os.path.normpath(unquote(parsed.path if parsed.scheme else uri))
+
         def attempt(txn: _Attempt):
-            # Scan phase inside the attempt (ADVICE r8): the
-            # full.count() and input_file_name() collect read a
-            # snapshot a concurrent commit can GC mid-scan under a
-            # small retention window — that must take the
-            # version-moved ⇒ retry path, not surface as a raw
-            # Spark/OS error.
-            vdir = txn.vdir
-            data = self.current_data_dir(name)
-            if data is None:
+            # The scan runs inside the attempt: a concurrent commit may
+            # GC the snapshot mid-scan, which must retry (ADVICE r8).
+            snap, table = txn.snap, self.path(name)
+            if snap is None:
                 raise ValueError(f"unknown table {name!r}")
-            parts = self._partition_dirs(data)
-            all_files = [f for _rel, fs in parts for f in fs]
-            manifest_local = {os.path.normpath(f) for f in all_files}
-            # basePath == the dir itself ⇒ identical to a plain
-            # dir read; route through the schema memo.
-            full = self._read_version_dir(data)
-            # ONE scan yields both the row count and the touched-
-            # file manifest (round-12 optimization, guide §1.2:
-            # these were two full passes). collect_set over the
-            # conditional file name is |touched files|-sized —
-            # still the documented driver-scalar manifest collect,
-            # never data. input_file_name() is PROJECTED first:
-            # the analyzer refuses non-deterministic expressions
-            # as direct aggregate arguments
-            # (AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION);
-            # over the projected attribute the aggregate is legal.
+            manifest = {
+                os.path.normpath(dl.resolve_path(table, rel)): rel
+                for rel in snap.files
+            }
+            full = self._scan(name, snap)
+            # input_file_name() is projected first: the analyzer
+            # refuses it as a direct aggregate argument
             agg_row = (
                 full.select(
-                    F.when(
-                        F.expr(predicate), F.input_file_name()
-                    ).alias("__f")
+                    F.when(F.expr(predicate), F.input_file_name()).alias("__f")
                 )
                 .select(
                     F.count(F.lit(1)).alias("__n"),
@@ -3741,152 +3560,87 @@ class SnapshotStore:
                 )
                 .collect()[0]
             )
-            rows_before = agg_row["__n"]
-            touched = set(agg_row["__files"])
-
-            def _local(p: str) -> str:
-                # input_file_name() yields a percent-encoded file:
-                # URI; decode it or paths/hive values with encoded
-                # chars (space, %, #, non-ASCII) never match the
-                # os.walk manifest and their files silently escape
-                # the rewrite.
-                from urllib.parse import unquote, urlparse
-
-                parsed = urlparse(p)
-                return unquote(parsed.path) if parsed.scheme else unquote(p)
-
-            touched_local = {os.path.normpath(_local(p)) for p in touched}
+            scanned = {local(u) for u in agg_row["__files"]}
             if post_scan is not None:
                 post_scan()
-            stray = touched_local - manifest_local
-            if stray:
-                raise RuntimeError(
-                    f"COW rewrite of {name!r}: {len(stray)} scanned "
-                    f"file(s) missing from the on-disk manifest (URI "
-                    f"decode mismatch?): {sorted(stray)[:3]}"
-                )
-            if cdc_build is not None and self.cdf:
-                # Change feed BEFORE the rewrite: ``cdc_build`` reads
-                # the matching rows of THIS attempt's snapshot
-                # (``full`` carries the hive partition columns via
-                # basePath), so the staged change files pair with
-                # this attempt's commit; a lost race discards them.
-                # Overlapped with the hardlink pass + rewrite write
-                # below (guide §2.6) — both read the same immutable
-                # snapshot files; joined before the commit.
-                txn.cdc = self._stage_cdc_async(
-                    name, cdc_build(full, F.expr(predicate))
-                )
-            touched_by_rel: list[tuple[str, list[str]]] = []
-            n_link = n_rewrite = 0
-            for rel, files in parts:
-                dir_touched = [
-                    f for f in files if os.path.normpath(f) in touched_local
-                ]
-                n_link += self._link_files(
-                    vdir,
-                    rel,
-                    [f for f in files if os.path.normpath(f) not in touched_local],
-                )
-                if dir_touched:
-                    touched_by_rel.append((rel, dir_touched))
-                    n_rewrite += len(dir_touched)
-            # ONE rewrite pass over every touched file (round-12,
-            # guide §1.2/§6): the per-directory loop paid one
-            # schema resolution, one constraint probe and one
-            # write JOB per touched hive dir, serially — a
-            # partitioned table whose predicate touched every
-            # partition serialized 3×|dirs| tiny jobs. One
-            # hive-aware read (partition columns attached by the
-            # scan; type inference disabled so they arrive as the
-            # same STRINGS the literal injection produced), one
-            # transform, one validation probe, one partitioned
-            # write clustered by the partition key (1 file per
-            # touched dir, matching the old per-dir output).
-            if touched_by_rel and touched_by_rel[0][0] == ".":
-                df = self.spark.read.parquet(*touched_by_rel[0][1])
-                replaced = transform(df, F.expr(predicate))
-                # COW UPDATE can mint violating rows — gate the
-                # rewritten rows (DELETE only removes, but the
-                # check is one fused predicate either way).
-                # Overlapped with the rewrite write (guide §2.6);
-                # joined before the commit below.
-                txn.jobs.append(self._validate_async(name, replaced))
-                replaced.write.mode("append").parquet(vdir)
-            elif touched_by_rel:
-                part_cols = [
-                    c
-                    for c, _v in self._partition_literals(
-                        touched_by_rel[0][0]
-                    )
-                ]
-                all_touched = sorted(
-                    f for _rel, fs in touched_by_rel for f in fs
-                )
-                # Partition values must arrive as the same STRINGS
-                # the literal injection produced ("03" stays "03",
-                # never int 3). The old form toggled the session
-                # conf partitionColumnTypeInference.enabled, a
-                # cross-thread mutation of shared SQLConf while
-                # the overlapped cdc job may still run (ADVICE
-                # r12). An explicit read schema with STRING
-                # partition columns is the per-reader equivalent:
-                # user-specified partition types take the raw
-                # unescaped directory value (verified identical
-                # rows + schema to the conf-off read).
-                from pyspark.sql import types as T
 
-                part_set = set(part_cols)
-                rd_schema = T.StructType(
-                    [
-                        T.StructField(f.name, T.StringType(), True)
-                        if f.name in part_set
-                        else f
-                        for f in full.schema.fields
-                    ]
-                )
-                df = (
-                    self.spark.read.schema(rd_schema)
-                    .option("basePath", data)
-                    .parquet(*all_touched)
-                )
-                replaced = transform(df, F.expr(predicate))
-                # Overlapped validation (guide §2.6), joined
-                # before the commit.
-                txn.jobs.append(self._validate_async(name, replaced))
-                (
-                    replaced.repartition(
-                        max(len(touched_by_rel), 1), *part_cols
-                    )
-                    .write.mode("append")
-                    .partitionBy(*part_cols)
-                    .parquet(vdir)
-                )
-
-            def done() -> dict:
-                # rows_after from the committed version's parquet
-                # footers (round-13, guide §1.2): this was a full
-                # count JOB per DML (`self.read(name).count()`). The
-                # committed version is exactly ``vdir`` (hardlinks +
-                # rewritten files, no deletion vector — outstanding ones
-                # were purged before the scan), so the footers'
-                # num_rows sum IS the live row count — O(|files|)
-                # driver metadata reads, zero jobs.
-                import pyarrow.parquet as pq
-
-                rows_after = 0
-                for _rel, fs in self._partition_dirs(vdir):
-                    for f in fs:
-                        rows_after += pq.ParquetFile(f).metadata.num_rows
+            def result(rows_after: int) -> dict:
+                n = len(snap.files)
                 return {
-                    "files_total": len(all_files),
-                    "files_rewritten": n_rewrite,
-                    "files_linked": n_link,
-                    "rows_before": rows_before,
+                    "files_total": n,
+                    "files_rewritten": len(scanned),
+                    "files_kept": n - len(scanned),
+                    "rows_before": agg_row["__n"],
                     "rows_after": rows_after,
                 }
 
-            return done
+            if not scanned:
+                # no row matches: nothing to write, but the commit still
+                # checks that no writer committed rows under the scan
+                return lambda: result(agg_row["__n"])
+            stray = scanned - set(manifest)
+            if stray:
+                raise RuntimeError(
+                    f"COW rewrite of {name!r}: {len(stray)} scanned "
+                    f"file(s) missing from the snapshot's manifest (URI "
+                    f"decode mismatch?): {sorted(stray)[:3]}"
+                )
+            if cdc_build is not None and self.cdf:
+                # the change feed of THIS attempt's snapshot, staged
+                # beside the rewrite (guide §2.6); a lost race discards
+                # it with the attempt
+                txn.cdc = self._stage_cdc_async(
+                    name,
+                    self._to_physical(txn.snap, cdc_build(full, F.expr(predicate))),
+                )
+            txn.removes = touched = sorted(manifest[f] for f in scanned)
+            part_cols = self._part_cols(snap)
+            physical = snap.column_mapping()
+            rd_schema = None  # flat: the footers' schema
+            if part_cols:
+                # partition values as the STRINGS the hive dirs hold
+                # ("03" stays "03"): a string type takes the raw value
+                rd_schema = T.StructType(
+                    [
+                        T.StructField(f.name, T.StringType(), True)
+                        if f.name in part_cols
+                        else T.StructField(
+                            physical.get(f.name, f.name), f.dataType, f.nullable
+                        )
+                        for f in full.schema.fields
+                    ]
+                )
+            df = self._grouped_read(
+                table, snap, touched,
+                lambda r: r if rd_schema is None else _typed(self.spark, r, rd_schema),
+            )
+            replaced = transform(
+                _renamed(df, {p: c for c, p in physical.items()}),
+                F.expr(predicate),
+            )
+            # COW UPDATE can mint violating rows: validate them
+            # beside the write; joined before the commit
+            txn.jobs.append(self._validate_async(name, replaced))
+            out = self._to_physical(snap, replaced)
+            if part_cols:
+                n_parts = len(
+                    {
+                        tuple(sorted(snap.files[r]["partitionValues"].items()))
+                        for r in touched
+                    }
+                )
+                out = out.repartition(n_parts, *part_cols).write.partitionBy(
+                    *part_cols
+                )
+            else:
+                out = out.write
+            out.mode("append").parquet(txn.vdir)
+
+            # rows_after from the committed adds' log stats: no live file
+            # carries a deletion vector (purged before the scan)
+            return lambda: result(
+                sum(json.loads(a["stats"])["numRecords"] for a in txn.live.values())
+            )
 
         return self._transact(
             name, attempt, "COW rewrite", "DML", max_retries,
@@ -3897,8 +3651,8 @@ class SnapshotStore:
         """Copy-on-write DELETE (Delta ``DELETE FROM t WHERE``): drop
         matching rows, rewriting ONLY the files that contain one —
         with a partition-column predicate the scan prunes to the
-        matching hive dirs, so whole untouched partitions survive as
-        hardlinks. Time travel to the pre-delete version still works
+        matching hive dirs, so whole untouched partitions keep their
+        adds. Time travel to the pre-delete version still works
         within the retention window. Commits are optimistic (see
         ``_rewrite_where``); ``post_scan`` is the fault-injection hook."""
         return self._rewrite_where(
@@ -3925,23 +3679,19 @@ class SnapshotStore:
         move rows across directories — raise loudly rather than
         silently corrupting the layout (Delta requires a
         delete+insert for that too)."""
-        data = self.current_data_dir(name)
-        if data is not None:
-            bad = set(
-                self._partition_cols(self._partition_dirs(data))
-            ) & set(assignments)
-            if bad:
-                raise ValueError(
-                    f"update_where cannot reassign partition columns {sorted(bad)}; "
-                    "delete + re-append moves rows across partitions"
-                )
+        bad = set(self._part_cols(self._snapshot(name))) & set(assignments)
+        if bad:
+            raise ValueError(
+                f"update_where cannot reassign partition columns {sorted(bad)}; "
+                "delete + re-append moves rows across partitions"
+            )
 
         def _apply(df: DataFrame, pred) -> DataFrame:
             for col, expr_sql in assignments.items():
                 # Cast back to the column's ORIGINAL type: SQL literal
                 # arithmetic widens (double + 1000.0 -> wider DECIMAL),
                 # and a rewritten file whose column type drifted from
-                # the hardlinked files' would poison every later read
+                # the kept files' would poison every later read
                 # (schema enforcement — Delta does the same cast).
                 df = df.withColumn(
                     col,

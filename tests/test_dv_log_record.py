@@ -157,7 +157,7 @@ def test_gc_drops_dv_files_only_gcd_versions_referenced(spark, tmp_path):
 
     referenced = {
         dvs.dv_file_path(table, a["deletionVector"])
-        for _v, lv in store._retained(table)
+        for lv in store.versions("t")
         for a in dl.DeltaLog(table).snapshot(lv).files.values()
         if a.get("deletionVector")
     }

@@ -3,12 +3,13 @@
 A default store (no flags) derives its committed version, its version
 list and time travel from ``_delta_log``; these tests read the same
 table both ways — through the store and through the log alone — and
-pin the edges: a version dir no commit named is not a version, and a
+pin the edges: a staged dir no commit named is not a version, and a
 version that lost every row is still a readable, empty version.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -28,18 +29,24 @@ def _rows(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _log_dirs(table: str) -> list[str]:
-    """Version dirs of the log's committed versions still on disk,
-    oldest first — from each version's snapshot, independently of
-    ``SnapshotStore.versions``."""
+def _log_versions(table: str, retain: int = 1) -> list[int]:
+    """The newest ``retain`` data versions (commits that add or remove
+    files), oldest first — read from the commit files, independently
+    of ``SnapshotStore.versions``; every file each one names is on
+    disk."""
     log = dl.DeltaLog(table)
-    out: list[str] = []
-    for v in range(log.latest_version() + 1):
-        dirs = {p.split("/", 1)[0] for p in log.snapshot(v).files}
-        assert len(dirs) == 1, f"version {v} spans {sorted(dirs)}"
-        d = dirs.pop()
-        if os.path.isdir(os.path.join(table, d)) and d not in out:
-            out.append(d)
+    out: list[int] = []
+    for v, path in log._commits():
+        with open(path, encoding="utf-8") as fh:
+            actions = [json.loads(ln) for ln in fh if ln.strip()]
+        if any("add" in a or "remove" in a for a in actions):
+            out.append(v)
+    out = out[-retain:]
+    for v in out:
+        assert all(
+            os.path.isfile(dl.resolve_path(table, p))
+            for p in log.snapshot(v).files
+        ), f"version {v} names a GC'd file"
     return out
 
 
@@ -55,7 +62,7 @@ def _op(st, spark, op):
         st.append("t", _df(spark, BATCH), partition_by=["p"])
     elif op == "restore":
         st.merge("t", _df(spark, BATCH), "k", partition_by=["p"])
-        st.restore("t", -1)
+        st.restore("t", st.versions("t")[-1])
     elif op == "delete_where":
         st.delete_where("t", "k < 3")
 
@@ -68,7 +75,7 @@ def test_store_state_equals_the_log(spark, tmp_path, op):
     _op(st, spark, op)
     table = st.path("t")
     assert _rows(dl.read_delta(spark, table)) == _rows(st.read("t"))
-    assert st.versions("t") == _log_dirs(table)
+    assert st.versions("t") == _log_versions(table)
     assert st.versions("t")[-1] == st.current_version("t")
     assert not os.path.exists(os.path.join(table, "_CURRENT"))
     assert not os.path.exists(os.path.join(table, "_LOG"))
@@ -91,8 +98,8 @@ def test_uncommitted_version_dir_is_not_a_version(spark, tmp_path):
 
 def test_version_without_rows_stays_readable(spark, tmp_path):
     """A COW delete of every row of a partitioned table writes no data
-    file; the commit keeps one zero-row file so the version is named
-    by the log and reads back empty with the table's columns."""
+    file: the commit removes every file, and the version reads back
+    empty with the table's columns, typed from the logged schema."""
     st = SnapshotStore(spark, str(tmp_path / "wh"))
     st.overwrite("t", _df(spark, BASE), partition_by=["p"])
     cols = sorted(st.read("t").columns)

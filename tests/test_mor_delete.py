@@ -32,7 +32,7 @@ class TestMorDelete:
         res = mor.delete_where_mor("t", "k % 5 = 0")
         cow.delete_where("t", "k % 5 = 0")
         assert res["files_rewritten"] == 0
-        assert res["files_linked"] == 4
+        assert res["files_kept"] == 4
         assert res["dv_rows"] == 100
         got = sorted(tuple(r) for r in mor.read("t").collect())
         exp = sorted(tuple(r) for r in cow.read("t").collect())
@@ -187,7 +187,7 @@ class TestMorUpdate:
         res = mor.merge_mor("t", batch, "k")
         cow.merge("t", batch, "k")
         assert res["files_rewritten"] == 0
-        assert res["files_linked"] == 4
+        assert res["files_kept"] == 4
         assert res["dv_rows"] == 50  # matched live rows only
         got = sorted(tuple(r) for r in mor.read("t").collect())
         exp = sorted(tuple(r) for r in cow.read("t").collect())

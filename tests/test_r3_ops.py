@@ -125,8 +125,8 @@ class TestSnapshotTimeTravel:
         # merge writes its version then read-back commits nothing extra;
         # at least the two commit points must be retained and readable
         assert len(vs) >= 2
-        v0 = {(r.k, r.v) for r in store.read("t", version=0).collect()}
-        vN = {(r.k, r.v) for r in store.read("t", version=-1).collect()}
+        v0 = {(r.k, r.v) for r in store.read("t", version=vs[0]).collect()}
+        vN = {(r.k, r.v) for r in store.read("t", version=vs[-1]).collect()}
         assert v0 == {(1, "a"), (2, "b")}
         assert vN == {(1, "a"), (2, "B"), (3, "c")}
 
@@ -136,8 +136,8 @@ class TestSnapshotTimeTravel:
             store.overwrite("t", spark.createDataFrame([(i,)], "k long"))
         vs = store.versions("t")
         assert len(vs) == 2  # only the retention window survives GC
-        assert store.read("t", version=-1).collect()[0].k == 3
-        assert store.read("t", version=0).collect()[0].k == 2
+        assert store.read("t", version=vs[-1]).collect()[0].k == 3
+        assert store.read("t", version=vs[0]).collect()[0].k == 2
 
     def test_default_retention_keeps_current_only(self, spark, tmp_path):
         store = SnapshotStore(spark, str(tmp_path))  # retain_versions=1

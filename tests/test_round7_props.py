@@ -275,7 +275,7 @@ class TestCopyOnWriteProperty:
             store.overwrite("t", df.repartition(n_files))
         pred = f"k % {mod} = {res}"
         stats = store.delete_where("t", pred)
-        assert stats["files_linked"] + stats["files_rewritten"] == stats[
+        assert stats["files_kept"] + stats["files_rewritten"] == stats[
             "files_total"
         ]
         expect = {

@@ -9,7 +9,6 @@ partition directory and cluster-key ordering inside each file.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -17,6 +16,27 @@ import pytest
 from pyspark.sql import functions as F
 
 from product_analytics_spark.sources.sinks import SnapshotStore
+
+
+def _live_files(store, name):
+    """The live data files of ``name``: its log snapshot's adds, as
+    absolute paths in path order."""
+    from product_analytics_spark.sources import delta_log as dl
+
+    return [
+        dl.resolve_path(store.path(name), rel)
+        for rel in sorted(store.delta_snapshot(name).files)
+    ]
+
+
+def _by_partition(store, name):
+    """The live data files of ``name`` by hive partition dir name
+    ('part=a'; '.' for a flat table)."""
+    out = {}
+    for f in _live_files(store, name):
+        d = os.path.basename(os.path.dirname(f))
+        out.setdefault(d if "=" in d else ".", []).append(f)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -62,18 +82,15 @@ class TestPhysicalLayout:
     def test_one_file_per_hive_partition(self, spark, store):
         rows = [(i, "p%d" % (i % 3), float(i)) for i in range(300)]
         store.overwrite("t3", _df(spark, rows), partition_by=("part",), cluster_by=("k",))
-        data = store.current_data_dir("t3")
-        part_dirs = sorted(glob.glob(os.path.join(data, "part=*")))
-        assert len(part_dirs) == 3
-        for d in part_dirs:
-            files = [f for f in glob.glob(os.path.join(d, "*.parquet"))]
+        parts = _by_partition(store, "t3")
+        assert len(parts) == 3
+        for d, files in parts.items():
             assert len(files) == 1, f"expected one file in {d}, got {files}"
 
     def test_cluster_keys_sorted_within_files(self, spark, store):
         rows = [(i * 37 % 500, "x", float(i)) for i in range(500)]
         store.overwrite("t4", _df(spark, rows), partition_by=("part",), cluster_by=("k",))
-        data = store.current_data_dir("t4")
-        for f in glob.glob(os.path.join(data, "part=*", "*.parquet")):
+        for f in _live_files(store, "t4"):
             ks = [r.k for r in spark.read.parquet(f).select("k").collect()]
             assert ks == sorted(ks), f"cluster key not sorted in {f}"
 
@@ -149,21 +166,14 @@ class TestCompaction:
         df = spark.range(0, 1000).selectExpr("id AS k", "id * 7 AS v")
         # Land 8 deliberately-small files.
         store.overwrite("t", df.repartition(8))
-        data_dir = store.current_data_dir("t")
-        n_small = len(
-            [f for f in __import__("os").listdir(data_dir) if f.endswith(".parquet")]
-        )
+        n_small = len(_live_files(store, "t"))
         assert n_small == 8
         before_rows = sorted(tuple(r) for r in store.read("t").collect())
 
         # Target ~3 groups: total bytes / 3 (rounded up) per group.
         import os as _os
 
-        total = sum(
-            _os.path.getsize(_os.path.join(data_dir, f))
-            for f in _os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
+        total = sum(_os.path.getsize(f) for f in _live_files(store, "t"))
         target = total // 3 + 1
         plan = store.plan_compaction("t", target_bytes=target)
         stats = store.compact("t", target_bytes=target)
@@ -177,7 +187,7 @@ class TestCompaction:
         # contents identical, prior version still readable (time travel).
         after_rows = sorted(tuple(r) for r in store.read("t").collect())
         assert after_rows == before_rows
-        prior = store.read("t", version=0)
+        prior = store.read("t", version=store.versions("t")[0])
         assert sorted(tuple(r) for r in prior.collect()) == before_rows
 
     def test_compact_partitioned_table(self, spark, tmp_path):
@@ -201,9 +211,8 @@ class TestCompaction:
                 base.withColumn("k", F.col("k") + 1000 * (i + 1)),
                 partition_by=["part"],
             )
-        data = store.current_data_dir("tp")
         per_dir_before = {
-            rel: len(fs) for rel, fs in store._partition_dirs(data)
+            rel: len(fs) for rel, fs in _by_partition(store, "tp").items()
         }
         assert set(per_dir_before) == {"part=0", "part=1", "part=2"}
         assert all(n >= 4 for n in per_dir_before.values())
@@ -213,15 +222,16 @@ class TestCompaction:
         plan = store.plan_compaction("tp", target_bytes=1 << 30)
         assert len(plan) == 3  # loud, not an empty no-op plan
         for group in plan:
-            assert len({os.path.dirname(f) for f in group}) == 1
+            # one partition per group (its files may sit in several
+            # staging dirs: each append staged its own)
+            assert len({os.path.basename(os.path.dirname(f)) for f in group}) == 1
 
         stats = store.compact("tp", target_bytes=1 << 30)
         assert stats["groups"] == len(plan)
         assert stats["files_before"] == sum(per_dir_before.values())
         assert stats["files_after"] == 3 < stats["files_before"]
         per_dir_after = {
-            rel: len(fs)
-            for rel, fs in store._partition_dirs(store.current_data_dir("tp"))
+            rel: len(fs) for rel, fs in _by_partition(store, "tp").items()
         }
         assert per_dir_after == {"part=0": 1, "part=1": 1, "part=2": 1}
         # Contents (incl. the dir-encoded partition column) identical.
@@ -253,8 +263,8 @@ class TestCompaction:
 
 class TestCopyOnWriteDML:
     """Delta-style COW DELETE/UPDATE: only files containing a matching
-    row are rewritten; untouched files are HARDLINKED into the new
-    version (same inode — zero data movement); pointer commit flips
+    row are rewritten; untouched files keep their adds (same path, same
+    inode — zero data movement, nothing logged); the log commit flips
     readers atomically; prior version stays time-travelable."""
 
     def test_delete_where_rewrites_only_touched_files(self, spark, tmp_path):
@@ -262,32 +272,21 @@ class TestCopyOnWriteDML:
         df = spark.range(0, 800).selectExpr("id AS k", "id % 10 AS v")
         # range-partitioned 8 files => the k-range predicate touches 1-2
         store.overwrite("t", df.repartitionByRange(8, "k").sortWithinPartitions("k"))
-        before = store.current_data_dir("t")
-        inodes_before = {
-            os.path.basename(f): os.stat(f).st_ino
-            for _r, fs in store._partition_dirs(before)
-            for f in fs
-        }
+        inodes_before = {f: os.stat(f).st_ino for f in _live_files(store, "t")}
         stats = store.delete_where("t", "k >= 700")
         assert stats["rows_before"] == 800
         assert stats["rows_after"] == 700
         assert stats["files_rewritten"] <= 2
-        assert stats["files_linked"] == stats["files_total"] - stats["files_rewritten"]
-        # linked files are the SAME inodes (no copy)
-        after = store.current_data_dir("t")
-        inodes_after = {
-            os.path.basename(f): os.stat(f).st_ino
-            for _r, fs in store._partition_dirs(after)
-            for f in fs
-        }
+        assert stats["files_kept"] == stats["files_total"] - stats["files_rewritten"]
+        # kept files are the SAME paths and inodes (no copy, no link)
+        inodes_after = {f: os.stat(f).st_ino for f in _live_files(store, "t")}
         shared = set(inodes_before) & set(inodes_after)
-        assert sum(inodes_before[b] == inodes_after[b] for b in shared) >= stats[
-            "files_linked"
-        ]
+        assert len(shared) == stats["files_kept"]
+        assert all(inodes_before[f] == inodes_after[f] for f in shared)
         got = {r.k for r in store.read("t").collect()}
         assert got == set(range(700))
         # pre-delete version still readable
-        prior = store.read("t", version=0)
+        prior = store.read("t", version=store.versions("t")[0])
         assert prior.count() == 800
 
     def test_update_where_partitioned_touches_one_dir(self, spark, tmp_path):
@@ -300,9 +299,9 @@ class TestCopyOnWriteDML:
             "tp", "part = '1' AND k % 2 = 0", {"v": "v + 1000.0"}
         )
         assert stats["rows_before"] == stats["rows_after"] == 300
-        # only part=1's file(s) contain matches; part=0/2 hardlinked
+        # only part=1's file(s) contain matches; part=0/2 kept
         assert stats["files_rewritten"] >= 1
-        assert stats["files_linked"] >= 2
+        assert stats["files_kept"] >= 2
         rows = {(r.k, r.part, r.v) for r in store.read("tp").collect()}
         for k in range(300):
             part = str(k % 3)
@@ -371,30 +370,30 @@ class TestOptimisticConcurrency:
         store.overwrite(
             "t", spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
         )
-        # First snapshot read returns a STALE version (simulating a
-        # concurrent commit between read and commit); later reads are
-        # real, so the retry succeeds.
-        real = store.current_version
-        calls = {"n": 0}
+        # A concurrent append commits between the first attempt's
+        # snapshot read and its commit: the attempt conflicts, the
+        # merge re-reads and retries, and the appended row survives.
+        fired = []
 
-        def stale_once(name):
-            calls["n"] += 1
-            if calls["n"] == 1:
-                return "v_gone_stale"
-            return real(name)
+        def append_once():
+            if not fired:
+                fired.append(1)
+                store.append(
+                    "t", spark.createDataFrame([(4, 40.0)], "k long, v double")
+                )
 
-        monkeypatch.setattr(store, "current_version", stale_once)
         out = store.merge(
             "t",
             spark.createDataFrame([(2, 99.0), (3, 30.0)], "k long, v double"),
             "k",
             isolated=True,
+            post_scan=append_once,
         )
         got = {(r.k, r.v) for r in out.collect()}
-        assert got == {(1, 10.0), (2, 99.0), (3, 30.0)}
-        assert calls["n"] >= 3  # stale read + conflict check + retry
+        assert got == {(1, 10.0), (2, 99.0), (3, 30.0), (4, 40.0)}
+        assert fired == [1]
 
-    def test_isolated_merge_exhausts_retries(self, spark, tmp_path, monkeypatch):
+    def test_isolated_merge_exhausts_retries(self, spark, tmp_path):
         from product_analytics_spark.sources.sinks import (
             ConcurrentWriteError,
             SnapshotStore,
@@ -402,16 +401,7 @@ class TestOptimisticConcurrency:
 
         store = SnapshotStore(spark, str(tmp_path / "occ4"))
         store.overwrite("t", spark.range(3).selectExpr("id AS k"))
-        # Odd calls = the merge's snapshot read (stale), even calls =
-        # the commit's conflict check (real) -> every attempt conflicts.
-        real = store.current_version
-        calls = {"n": 0}
-
-        def alternating(name):
-            calls["n"] += 1
-            return "v_always_stale" if calls["n"] % 2 == 1 else real(name)
-
-        monkeypatch.setattr(store, "current_version", alternating)
+        # a concurrent append lands inside every attempt
         with pytest.raises(ConcurrentWriteError):
             store.merge(
                 "t",
@@ -419,7 +409,11 @@ class TestOptimisticConcurrency:
                 "k",
                 isolated=True,
                 max_retries=2,
+                post_scan=lambda: store.append(
+                    "t", spark.range(100, 101).selectExpr("id AS k")
+                ),
             )
+        assert store.read("t").count() == 5  # both appends, no merge
 
 
 class TestDmlOptimisticConcurrency:
@@ -645,15 +639,12 @@ class TestZorderLayout:
     predicate, with identical data read back."""
 
     @staticmethod
-    def _skip_fraction(data_dir, col, lo, hi):
-        """Fraction of parquet files whose [min,max] footer stats for
-        ``col`` do NOT overlap [lo, hi] — exactly the files a stats-
-        based reader skips."""
+    def _skip_fraction(files, col, lo, hi):
+        """Fraction of parquet ``files`` whose [min,max] footer stats
+        for ``col`` do NOT overlap [lo, hi] — exactly the files a
+        stats-based reader skips."""
         import pyarrow.parquet as pq
 
-        files = sorted(
-            glob.glob(os.path.join(data_dir, "*.parquet"))
-        )
         skipped = 0
         for f in files:
             md = pq.ParquetFile(f).metadata
@@ -681,10 +672,10 @@ class TestZorderLayout:
 
         # predicate on the SECOND key: y in the bottom 1/16 of its range
         f_comp, n_comp = self._skip_fraction(
-            store.current_data_dir("comp"), "y", 0, 15
+            _live_files(store, "comp"), "y", 0, 15
         )
         f_zo, n_zo = self._skip_fraction(
-            store.current_data_dir("zo"), "y", 0, 15
+            _live_files(store, "zo"), "y", 0, 15
         )
         assert n_comp >= 8 and n_zo >= 8  # layout actually split files
         assert f_comp <= 0.2  # composite: y spans ~everything per file
@@ -693,7 +684,7 @@ class TestZorderLayout:
 
         # first key still prunes under zorder too (locality is 2-D)
         f_zo_x, _ = self._skip_fraction(
-            store.current_data_dir("zo"), "x", 0, 15
+            _live_files(store, "zo"), "x", 0, 15
         )
         assert f_zo_x >= 0.5
 
@@ -730,7 +721,7 @@ class TestOptimizeRecluster:
         )
         store.overwrite("t", base, zorder_by=("x", "y"), n_files=16)
         f0, _ = TestZorderLayout._skip_fraction(
-            store.current_data_dir("t"), "y", 0, 15
+            _live_files(store, "t"), "y", 0, 15
         )
         assert f0 >= 0.5
 
@@ -740,23 +731,18 @@ class TestOptimizeRecluster:
         ).repartition(16)
         store.append("t", extra)
         f_degraded, n_deg = TestZorderLayout._skip_fraction(
-            store.current_data_dir("t"), "y", 0, 15
+            _live_files(store, "t"), "y", 0, 15
         )
         assert n_deg >= 30  # appended files landed
         assert f_degraded <= f0 - 0.3  # skipping decayed materially
 
         before = {tuple(r) for r in store.read("t").collect()}
-        total = sum(
-            os.path.getsize(f)
-            for f in glob.glob(
-                os.path.join(store.current_data_dir("t"), "*.parquet")
-            )
-        )
+        total = sum(os.path.getsize(f) for f in _live_files(store, "t"))
         stats = store.optimize("t", target_bytes=max(1, total // 12))
         assert stats["reclustered"] is True
         assert stats["files_after"] < stats["files_before"]
         f_restored, _ = TestZorderLayout._skip_fraction(
-            store.current_data_dir("t"), "y", 0, 15
+            _live_files(store, "t"), "y", 0, 15
         )
         assert f_restored >= 0.5 and f_restored > f_degraded + 0.2
         assert {tuple(r) for r in store.read("t").collect()} == before
@@ -794,11 +780,10 @@ class TestOptimizeRecluster:
         stats = store.optimize("t")
         assert stats["reclustered"] is True
         # hive dirs survive, files sorted by v within each
-        data = store.current_data_dir("t")
-        dirs = sorted(glob.glob(os.path.join(data, "grp=*")))
-        assert len(dirs) == 2
-        for d in dirs:
-            for f in glob.glob(os.path.join(d, "*.parquet")):
+        parts = _by_partition(store, "t")
+        assert len(parts) == 2
+        for files in parts.values():
+            for f in files:
                 vs = [r.v for r in spark.read.parquet(f).select("v").collect()]
                 assert vs == sorted(vs)
         assert {tuple(r) for r in store.read("t").collect()} == before
@@ -830,10 +815,15 @@ class TestCommitLogGc:
         vs = store.versions("t")
         assert len(vs) == 2  # retention window, not 5
         assert vs[-1] == store.current_version("t")
-        # the log keeps all five commits; GC dropped the three older dirs
+        # the log keeps all five commits; GC dropped the three older
+        # versions' files and their dirs
         on_disk = {d for d in os.listdir(store.path("t")) if d.startswith("v_")}
-        assert on_disk == set(vs)
-        assert store.read("t", version=0).count() == 4  # time travel intact
+        assert on_disk == {
+            rel.split("/", 1)[0]
+            for v in vs
+            for rel in store.delta_snapshot("t", v).files
+        }
+        assert store.read("t", version=vs[0]).count() == 4  # time travel intact
 
     def test_inflight_writer_dir_survives_concurrent_commit(
         self, spark, tmp_path
@@ -895,10 +885,10 @@ class TestEqualDepthZorder:
 
         # predicate inside the dense region: x in [2, 3]
         f_width, _ = TestZorderLayout._skip_fraction(
-            store.current_data_dir("w"), "x", 2, 3
+            _live_files(store, "w"), "x", 2, 3
         )
         f_depth, _ = TestZorderLayout._skip_fraction(
-            store.current_data_dir("d"), "x", 2, 3
+            _live_files(store, "d"), "x", 2, 3
         )
         # Structural claim (measured 0.0 vs 0.656): width lanes map the
         # whole dense region to lane 0 — no file can exclude x∈[2,3];
@@ -929,15 +919,11 @@ class TestEqualDepthZorder:
             ).repartition(4),
         )
         before = {tuple(r) for r in store.read("t").collect()}
-        data = store.current_data_dir("t")
-        total = sum(
-            os.path.getsize(f)
-            for f in glob.glob(os.path.join(data, "*.parquet"))
-        )
+        total = sum(os.path.getsize(f) for f in _live_files(store, "t"))
         stats = store.optimize("t", target_bytes=max(1, total // 8))
         assert stats["reclustered"] is True
         f_depth, _ = TestZorderLayout._skip_fraction(
-            store.current_data_dir("t"), "x", 2, 3
+            _live_files(store, "t"), "x", 2, 3
         )
         # ~9 output files ⇒ coarse cells; the bar is that skipping
         # exists at all inside the dense region post-recluster (the

@@ -1,20 +1,26 @@
-"""Typed version-dir reads (``SnapshotStore._read_version_dir``).
+"""Typed store reads (``SnapshotStore._scan``).
 
-A store read takes its schema from the log metaData that committed the
-version dir instead of inferring it from parquet footers (a one-task
-Spark job per dir). Table-driven: for every kind of table the typed
-read must equal the footer-inferred read — same columns, order, types
-and rows — and launch no Spark job. A deletion-vectored read filters
-by the positions of the dir's log snapshot, which launches no job
-either. Row-tracked and column-mapped
-tables keep the inferred read (the log does not describe their files'
-physical columns), so for them only the equality is checked.
+A store read takes its schema from the log metaData of the version it
+reads instead of inferring it from parquet footers (a one-task Spark
+job per scan). Table-driven: for every kind of table the typed read
+must equal the footer-inferred read of the same version's files —
+same columns, order, types and rows — and launch no Spark job. A
+version's files may sit in several ``v_`` staging dirs (a commit names
+only the files it changes), so the inferred read scans each dir's
+files with ``basePath`` set to that dir. A deletion-vectored read
+filters by the positions of the version's log snapshot, which launches
+no job either. Row-tracked and column-mapped tables keep the inferred
+read (the log does not describe their files' physical columns), so for
+them only the equality is checked.
 
-Also: a new table's empty partitioned first write commits a zero-row
-version that reads back with the written schema and takes a merge.
+Also: a new table's empty partitioned first write commits a version
+with no file that reads back with the written schema and takes a
+merge.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,28 +44,28 @@ def _base(spark, n=40):
 
 def _flat(spark, store):
     store.overwrite("t", _base(spark), n_files=2)
-    return {"dir": store.current_data_dir("t")}
+    return {}
 
 
 def _partitioned(spark, store):
     store.overwrite("t", _base(spark), partition_by=["p"])
-    return {"dir": store.current_data_dir("t")}
+    return {}
 
 
 def _dv(spark, store):
     store.overwrite("t", _base(spark), n_files=2)
     store.delete_where_mor("t", "k % 5 = 0")
-    return {"dir": store.current_data_dir("t"), "where": "k % 5 != 0"}
+    return {"where": "k % 5 != 0"}
 
 
 def _dv_time_travel(spark, store):
-    # the deleted rows come from the log snapshot that names the dir,
+    # the deleted rows come from the log snapshot of the version read,
     # not from the current one
     store.overwrite("t", _base(spark), n_files=2)
     store.delete_where_mor("t", "k % 5 = 0")
     old = store.current_version("t")
     store.delete_where_mor("t", "k % 3 = 0")
-    return {"dir": store.path("t") + "/" + old, "version": old, "where": "k % 5 != 0"}
+    return {"version": old, "where": "k % 5 != 0"}
 
 
 def _row_tracked(spark, store):
@@ -67,13 +73,13 @@ def _row_tracked(spark, store):
     store.enable_row_tracking("t")
     # a copy-on-write rewrite materializes row ids into the new files
     store.update_where("t", "k < 10", {"amount": "amount + 1"})
-    return {"dir": store.current_data_dir("t"), "merge_schema": True, "typed": False}
+    return {"merge_schema": True, "typed": False}
 
 
 def _column_mapped(spark, store):
     store.overwrite("t", _base(spark), n_files=2)
     dl.enable_column_mapping(store.path("t"))
-    return {"dir": store.current_data_dir("t"), "typed": False}
+    return {"typed": False}
 
 
 def _evolved_time_travel(spark, store):
@@ -81,15 +87,41 @@ def _evolved_time_travel(spark, store):
     old = store.current_version("t")
     store.overwrite("t", _base(spark, 50).withColumn("extra", F.lit("x")), partition_by=["p"])
     assert store.current_version("t") != old
-    return {"dir": store.path("t") + "/" + old, "version": old}
+    return {"version": old}
 
 
 def _append_first(spark, store):
     store.append("t", _base(spark))
     store.append("t", _base(spark, 10))
-    d = store.current_data_dir("t")
-    assert d == store.path("t")  # files at the table root
-    return {"dir": d}
+    return {}
+
+
+def _appended_partitioned(spark, store):
+    # the version's files sit in two staging dirs: one scan per dir
+    store.overwrite("t", _base(spark), partition_by=["p"])
+    store.append("t", _base(spark, 10), partition_by=["p"])
+    return {}
+
+
+def _inferred(spark, store, version, merge_schema):
+    """Footer-inferred read of ``version``'s files: one scan per
+    ``v_`` dir (``basePath`` set to it when partitioned)."""
+    table = store.path("t")
+    snap = store.delta_snapshot("t", version)
+    groups: dict[str, list[str]] = {}
+    for rel, add in sorted(snap.files.items()):
+        top = rel.split("/", 1)[0] if add.get("partitionValues") else ""
+        groups.setdefault(top, []).append(os.path.join(table, rel))
+    out = None
+    for top in sorted(groups):
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        if top:
+            reader = reader.option("basePath", os.path.join(table, top))
+        df = reader.parquet(*groups[top])
+        out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+    return out
 
 
 CASES = {
@@ -101,6 +133,7 @@ CASES = {
     "column_mapped": _column_mapped,
     "schema_evolved_time_travel": _evolved_time_travel,
     "append_first": _append_first,
+    "appended_partitioned": _appended_partitioned,
 }
 
 
@@ -112,10 +145,9 @@ def _rows(df):
 def test_typed_read_equals_inferred_read(spark, tmp_path, case):
     store = SnapshotStore(spark, str(tmp_path / "wh"), retain_versions=3)
     spec = CASES[case](spark, store)
-    reader = spark.read
-    if spec.get("merge_schema"):
-        reader = reader.option("mergeSchema", "true")
-    inferred = reader.parquet(spec["dir"]).drop(*_RT_COLS)
+    inferred = _inferred(
+        spark, store, spec.get("version"), spec.get("merge_schema")
+    ).drop(*_RT_COLS)
     if "where" in spec:
         inferred = inferred.where(spec["where"])
 
